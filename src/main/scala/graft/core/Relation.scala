@@ -13,31 +13,6 @@ final case class Relation(database: String, schema: String, identifier: String) 
   def suffixed(suffix: String): Relation = copy(identifier = identifier + suffix)
 }
 
-/** How a [[Warehouse]] makes a write visible to readers.
-  *
-  * `Rename` is the classic HDFS/POSIX protocol: write to a tmp dir, swap
-  * via two atomic directory renames. Object stores (S3-class) have no
-  * atomic rename — "rename" is a copy+delete with a visible window — so
-  * `Manifest` writes IMMUTABLE versioned data directories and commits by
-  * atomically creating the next numbered manifest file (create-if-absent
-  * is the claim; readers resolve the highest complete manifest). This is
-  * the public transaction-log pattern of Delta Lake / Iceberg's
-  * version-hint, re-expressed over plain parquet: data is never renamed
-  * or mutated, a crash before the manifest lands leaves an invisible
-  * orphan directory, and a reader always sees exactly one committed
-  * version.
-  */
-sealed trait CommitMode
-object CommitMode {
-  case object Rename extends CommitMode
-  case object Manifest extends CommitMode
-  /** Manifest when the warehouse root lives on an object-store scheme
-    * (s3/s3a/s3n/gs/oss/wasb/abfs/cos/swift), rename otherwise; the
-    * `GRAFT_COMMIT_MODE` env var (`manifest` | `rename`) overrides.
-    */
-  case object Auto extends CommitMode
-}
-
 /** Incremental strategies (reference
   * `dbt_bigquery_validate_get_incremental_strategy` @33792: merge |
   * insert_overwrite; common `delete+insert` @93622).

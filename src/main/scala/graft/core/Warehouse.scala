@@ -6,28 +6,28 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{concat, expr, lit, raise_error, when}
 import org.apache.spark.sql.types.StructType
 
-/** Path-addressed parquet warehouse with pluggable commit protocol.
+/** Path-addressed parquet warehouse with a manifest commit protocol.
   *
   * Replaces the reference's BigQuery dataset catalog: a relation is a
-  * parquet directory `root/database/schema/identifier`. Writes follow the
-  * reference's table materialization protocol
-  * (`materialization_table_default` @125935) under one of two commit
-  * strategies ([[CommitMode]]):
+  * directory `root/database/schema/identifier`. The reference's table
+  * materialization (`materialization_table_default` @125935) commits by
+  * swapping `__dbt_tmp`/`__dbt_backup` relations; here every write lands
+  * in an IMMUTABLE versioned data directory under the relation's
+  * `_graft/` subdirectory, and the commit is the atomic creation of the
+  * next numbered manifest file mapping each partition path to the
+  * version directory holding its rows. Readers resolve the highest
+  * complete manifest — there is no rename, no in-place mutation, and no
+  * window where the table is absent, on a local disk, HDFS or an object
+  * store alike. A crash before the manifest lands leaves an invisible
+  * orphan directory. A partition-scoped merge commits a manifest whose
+  * untouched entries still point at their old version directories, so a
+  * daily merge never copies years of history.
   *
-  *  - '''Rename''' (HDFS/POSIX): write to `__dbt_tmp`, swap the old
-  *    target to `__dbt_backup`, rename tmp into place, drop backup. Each
-  *    Hadoop `FileSystem.rename` is atomic, so readers never observe a
-  *    half-written table; a crash inside the brief swap window is
-  *    repaired by the restore-from-backup preamble on the next write.
-  *  - '''Manifest''' (object stores, where rename is copy+delete): data
-  *    lands in immutable versioned directories under `_graft/`; commit is
-  *    the atomic creation of the next numbered manifest file mapping each
-  *    partition path to the version directory holding its rows. Readers
-  *    resolve the highest complete manifest — there is no rename, no
-  *    in-place mutation, and no window where the table is absent. A
-  *    partition-scoped merge commits a manifest whose untouched entries
-  *    still point at their old version directories, so a daily merge
-  *    never copies years of history.
+  * Relations written by older releases as plain parquet directories (no
+  * `_graft/`) stay readable: reads fall back to the directory itself
+  * until the first write commits a manifest, which readers see from then
+  * on. That first write must be a full rebuild; any other write refuses
+  * rather than hide the legacy rows.
   *
   * Concurrency: every mutating operation takes a per-relation lock file
   * (atomic create-if-absent, stale-broken by age), and manifest commits
@@ -40,45 +40,18 @@ import org.apache.spark.sql.types.StructType
   * map to directory partitioning + `sortWithinPartitions` so downstream
   * reads get partition pruning and row-group skipping.
   */
-final class Warehouse(val spark: SparkSession, val root: String,
-                      val commitMode: CommitMode = CommitMode.Auto) {
+final class Warehouse(val spark: SparkSession, val root: String) {
 
   private def fs = new Path(root).getFileSystem(
     spark.sparkContext.hadoopConfiguration)
 
-  /** Resolved commit strategy (see [[CommitMode.Auto]]). */
-  val usesManifest: Boolean = commitMode match {
-    case CommitMode.Manifest => true
-    case CommitMode.Rename => false
-    case CommitMode.Auto =>
-      // system property first (settable in-process — the manifest-mode CI
-      // lane), then the environment, then the filesystem scheme
-      sys.props.get("graft.commit.mode")
-        .orElse(sys.env.get("GRAFT_COMMIT_MODE")) match {
-        case Some("manifest") => true
-        case Some("rename") => false
-        case Some(other) =>
-          // an explicit-but-invalid value must not silently fall through
-          // to scheme detection — the operator forced a mode for a reason
-          throw new IllegalArgumentException(
-            "graft.commit.mode / GRAFT_COMMIT_MODE must be 'manifest' or " +
-              s"'rename', got '$other'")
-        case None =>
-          val scheme = Option(new Path(root).toUri.getScheme).getOrElse("file")
-          Warehouse.ObjectStoreSchemes.contains(scheme.toLowerCase)
-      }
-  }
-
   def path(rel: Relation): String = rel.pathUnder(root)
 
-  def exists(rel: Relation): Boolean = {
-    val p = new Path(path(rel))
-    if (!fs.exists(p)) false
-    else if (!usesManifest) true
+  def exists(rel: Relation): Boolean =
     // a dir holding only uncommitted version dirs (crashed write) is NOT
-    // a table; a committed manifest or legacy rename-layout data is
-    else latestManifest(rel).isDefined || legacyHasData(rel)
-  }
+    // a table; a committed manifest or legacy plain-layout data is
+    fs.exists(new Path(path(rel))) &&
+      (latestManifest(rel).isDefined || legacyHasData(rel))
 
   /** Committed manifest data is IMMUTABLE per manifest, so the
     * constructed read DataFrame (file listings + partition parsing +
@@ -113,7 +86,7 @@ final class Warehouse(val spark: SparkSession, val root: String,
   }
 
   def read(rel: Relation): DataFrame =
-    if (usesManifest) latestManifest(rel) match {
+    latestManifest(rel) match {
       case Some((seq, entries)) if dataEntries(entries).nonEmpty =>
         val key = path(rel)
         val id = manifestIdentity(seq, entries)
@@ -144,9 +117,8 @@ final class Warehouse(val spark: SparkSession, val root: String,
                 "unrecoverable. Rebuild the relation (or read a version " +
                 "via readAt before the expiry commit aged out).")
           }
-      case None => spark.read.parquet(path(rel)) // legacy rename-layout dir
+      case None => spark.read.parquet(path(rel)) // legacy plain-layout dir
     }
-    else spark.read.parquet(path(rel))
 
   def schemaOf(rel: Relation): StructType = read(rel).schema
 
@@ -154,7 +126,7 @@ final class Warehouse(val spark: SparkSession, val root: String,
     * relation's CURRENT data entries — `Some(filters)` only when EVERY
     * contributing version dir carries a bloom for the column (an
     * absence proof over a partial set proves nothing), `Some(Nil)` for
-    * an empty table, `None` otherwise (rename mode, pre-bloom writes).
+    * an empty table, `None` otherwise (legacy layout, pre-bloom writes).
     * A value absent from every filter is PROVABLY not stored; a hit is
     * only a candidate (delete entries and bloom fpp both
     * over-approximate) — verify candidates with an exact probe. Used by
@@ -163,8 +135,7 @@ final class Warehouse(val spark: SparkSession, val root: String,
     */
   def bloomsFor(rel: Relation, colName: String)
       : Option[Seq[org.apache.spark.util.sketch.BloomFilter]] =
-    if (!usesManifest) None
-    else latestManifest(rel).flatMap { case (_, entries) =>
+    latestManifest(rel).flatMap { case (_, entries) =>
       val data = dataEntries(entries)
       if (data.isEmpty) Some(Nil)
       else {
@@ -331,20 +302,19 @@ final class Warehouse(val spark: SparkSession, val root: String,
 
   /** Committed (versionDir, partitionPath) entries of the current
     * manifest — observability for tests and ops tooling; None for a
-    * rename-mode warehouse or a legacy/absent relation.
+    * legacy or absent relation.
     */
   def manifestEntries(rel: Relation): Option[Seq[(String, String)]] =
-    if (usesManifest) latestManifest(rel).map(_._2) else None
+    latestManifest(rel).map(_._2)
 
-  /** Time travel (manifest mode): the retained, complete commits of a
-    * relation, oldest first — each is a seq a [[readAt]] can resolve.
-    * Retention is [[KeepManifests]] deep (commit-time GC prunes beyond
-    * it), so this is a bounded undo window, not unbounded history.
-    * Rename mode keeps no history: empty.
+  /** Time travel: the retained, complete commits of a relation, oldest
+    * first — each is a seq a [[readAt]] can resolve. Retention is
+    * [[KeepManifests]] deep (commit-time GC prunes beyond it), so this is
+    * a bounded undo window, not unbounded history. A legacy relation has
+    * no history: empty.
     */
   def listVersions(rel: Relation): Seq[Long] =
-    if (!usesManifest) Nil
-    else manifestsDescending(rel)
+    manifestsDescending(rel)
       .flatMap { case (seq, p) => parseManifest(p).map(_ => seq) }
       .sorted
 
@@ -356,9 +326,6 @@ final class Warehouse(val spark: SparkSession, val root: String,
     * correctness trap in an audit/rollback workflow.
     */
   def readAt(rel: Relation, seq: Long): DataFrame = {
-    require(usesManifest,
-      s"time travel needs the manifest protocol; ${rel.fqName} is " +
-        "rename-mode (no retained history)")
     val entries = entriesAt(rel, seq)
     if (dataEntries(entries).isEmpty) read(rel).limit(0)
     else readEntries(rel, entries)
@@ -387,8 +354,6 @@ final class Warehouse(val spark: SparkSession, val root: String,
     * this method never silently drops a change.
     */
   def readAppendedBetween(rel: Relation, fromSeq: Long, toSeq: Long): DataFrame = {
-    require(usesManifest,
-      s"changelog reads need the manifest protocol; ${rel.fqName} is rename-mode")
     require(fromSeq < toSeq,
       s"readAppendedBetween wants fromSeq < toSeq, got $fromSeq >= $toSeq")
     val before = entriesAt(rel, fromSeq).toSet
@@ -411,7 +376,7 @@ final class Warehouse(val spark: SparkSession, val root: String,
     */
   private[graft] def appendOnlyDelta(rel: Relation, fromSeq: Long,
                                      toSeq: Long): Option[DataFrame] = {
-    if (!usesManifest || fromSeq >= toSeq) return None
+    if (fromSeq >= toSeq) return None
     // one directory listing, one parse per seq: this runs inside the
     // optimizer rule on every candidate aggregate, so the metadata cost
     // must stay at its floor
@@ -456,8 +421,6 @@ final class Warehouse(val spark: SparkSession, val root: String,
     * semantics.
     */
   def rollbackTo(rel: Relation, seq: Long): Unit = withRelationLock(rel) {
-    require(usesManifest,
-      s"rollback needs the manifest protocol; ${rel.fqName} is rename-mode")
     val entries = entriesAt(rel, seq)
     commitEntries(rel)(_ => entries)
   }
@@ -482,21 +445,21 @@ final class Warehouse(val spark: SparkSession, val root: String,
     *    `VACUUM`-breaks-shallow-clones caveat Delta has. Re-clone or
     *    deep-copy (`writeAtomic(read)`) to outlive the source.
     *
-    * Rename-mode warehouses (either side) have no manifest to point
-    * through — falls back to a deep copy, still atomic.
+    * A legacy plain-layout source has no manifest to point through —
+    * falls back to a deep copy, still atomic.
     */
   def cloneFrom(srcWh: Warehouse, src: Relation, dst: Relation): Unit =
     withRelationLock(dst) {
       require(srcWh.exists(src), s"clone source ${src.fqName} does not exist")
-      if (usesManifest && srcWh.usesManifest &&
-          srcWh.latestManifest(src).isDefined) {
-        val entries = srcWh.latestManifest(src).get._2
-        val absolute = entries.map { case (v, p) =>
-          (new Path(srcWh.mfDir(src), v).toString, p)
-        }
-        commitEntries(dst)(_ => absolute)
-        invalidateRead(dst)
-      } else writeAtomic(srcWh.read(src), dst)
+      srcWh.latestManifest(src) match {
+        case Some((_, entries)) =>
+          val absolute = entries.map { case (v, p) =>
+            (new Path(srcWh.mfDir(src), v).toString, p)
+          }
+          commitEntries(dst, rebuild = true)(_ => absolute)
+          invalidateRead(dst)
+        case None => writeAtomic(srcWh.read(src), dst)
+      }
     }
 
   /** Newest COMPLETE manifest: (seq, entries). */
@@ -631,17 +594,21 @@ final class Warehouse(val spark: SparkSession, val root: String,
     * `metaF`, which transforms the carried-forward metadata map) must be
     * pure functions of the previous state. Metadata is carried forward
     * by DEFAULT: a plain data commit must never drop another writer's
-    * stream watermarks.
+    * stream watermarks. `rebuild` marks a commit whose entries replace
+    * the relation's whole content (full overwrite, clone).
     */
   private def commitEntries(rel: Relation,
                             metaF: Map[String, String] => Map[String, String] =
-                              identity)
+                              identity,
+                            rebuild: Boolean = false)
                            (f: Seq[(String, String)] => Seq[(String, String)]): Unit = {
     var attempts = 0
     while (attempts < 50) {
       assertLockIntact(path(rel)) // zombie-writer fence (stale-broken lock)
       val maxSeen = manifestsDescending(rel).headOption.map(_._1).getOrElse(0L)
-      val cur = latestManifest(rel).map(_._2).getOrElse(Nil)
+      val latest = latestManifest(rel)
+      if (latest.isEmpty) refuseHidingLegacyRows(rel, rebuild)
+      val cur = latest.map(_._2).getOrElse(Nil)
       val next = maxSeen + 1
       Warehouse.faultPoint("commit.claim")
       if (writeManifestIfAbsent(rel, next, normalizeEntries(f(cur)),
@@ -654,6 +621,30 @@ final class Warehouse(val spark: SparkSession, val root: String,
     throw new IllegalStateException(
       s"manifest commit on ${rel.fqName}: lost ${attempts} CAS races — " +
         "pathological writer contention")
+  }
+
+  /** Guard for the FIRST commit of a relation, which builds on an empty
+    * entry list. Older releases wrote plain parquet dirs and committed by
+    * swapping `<rel>__dbt_tmp`/`<rel>__dbt_backup`/`<rel>__dbt_pbackup`
+    * siblings. A commit that keeps prior entries (append, merge, delete,
+    * metadata) would publish a manifest without the legacy rows and hide
+    * them from every reader; only a full rebuild may upgrade such a
+    * relation. A swap sibling left by an interrupted older-release write
+    * may hold the only copy of some rows, so it blocks every commit until
+    * someone moves it back or deletes it.
+    */
+  private def refuseHidingLegacyRows(rel: Relation, rebuild: Boolean): Unit = {
+    val leftovers = Seq("__dbt_backup", "__dbt_pbackup")
+      .map(s => path(rel.suffixed(s))).filter(p => fs.exists(new Path(p)))
+    if (leftovers.nonEmpty) throw new IllegalStateException(
+      s"${rel.fqName}: ${leftovers.mkString(" and ")}, left by an " +
+        "interrupted swap of an older release, may hold the only copy of " +
+        s"some rows; move them back into ${path(rel)} or delete the " +
+        "leftover, then retry")
+    if (!rebuild && legacyHasData(rel)) throw new IllegalStateException(
+      s"${rel.fqName} holds plain-layout data written by an older release " +
+        "and no manifest; this write would hide those rows. Rebuild it " +
+        "once with --full-refresh, which upgrades it to the manifest layout")
   }
 
   /** New immutable data dir for a write that intends to commit at about
@@ -706,8 +697,8 @@ final class Warehouse(val spark: SparkSession, val root: String,
     * years-old daily-merge table. The file index hands Spark every leaf
     * file in a single `HadoopFsRelation` with partition values parsed by
     * Spark's own multi-basePath discovery, so partition pruning and file
-    * skipping behave exactly like a rename-layout read no matter how many
-    * versions the data straddles.
+    * skipping behave exactly like a plain directory read no matter how
+    * many versions the data straddles.
     *
     * Fallback (no readable parquet footer anywhere — cannot happen for
     * data committed by this warehouse, which always writes ≥1 footer):
@@ -972,8 +963,8 @@ final class Warehouse(val spark: SparkSession, val root: String,
     }.reduce(_.unionByName(_, allowMissingColumns = true))
   }
 
-  /** Rename-layout data present at the relation root (pre-manifest table
-    * adopted read-only by a manifest-mode warehouse).
+  /** Legacy plain-layout data present at the relation root (a table
+    * written before the manifest protocol, read until its next write).
     */
   private def legacyHasData(rel: Relation): Boolean = {
     val p = new Path(path(rel))
@@ -994,8 +985,7 @@ final class Warehouse(val spark: SparkSession, val root: String,
     * stale-break only ever fires on a holder whose heartbeat stopped
     * (crashed process / dead JVM). The lock serializes read-modify-write
     * cycles (merge reads the target it is about to replace); physical
-    * commit atomicity never depends on it — rename mode has the swap
-    * protocol, manifest mode the CAS.
+    * commit atomicity never depends on it — the manifest CAS provides it.
     */
   def withRelationLock[T](rel: Relation)(body: => T): T = {
     val key = path(rel)
@@ -1020,7 +1010,7 @@ final class Warehouse(val spark: SparkSession, val root: String,
     * long GC/VM pause, or heartbeat writes failing long enough for a
     * waiter to break in). Best-effort FENCE: the commit paths consult
     * this before publishing, so a zombie writer aborts loudly instead of
-    * racing the new holder's swap. */
+    * racing the new holder's commit. */
   private val lostLocks =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
@@ -1318,89 +1308,22 @@ final class Warehouse(val spark: SparkSession, val root: String,
     }
   }
 
-  /** Recovery preamble shared by the rename-mode write paths: restore any
-    * partition caught between the two swap renames of a crashed
-    * [[replacePartitions]] (its data sits under `__dbt_pbackup` with no
-    * live dir), then clear the backup area. Running this from
-    * [[writeAtomic]] and the other writers too — not just the next
-    * partitioned merge — means a full refresh can't leave a stale pbackup
-    * behind that would later "restore" (resurrect) a partition the
-    * refresh legitimately dropped. A failed restore must ABORT: dropping
-    * the backup would delete the only surviving copy of that partition.
-    */
-  private def restorePartitionBackup(rel: Relation): Unit = {
-    val backup = rel.suffixed("__dbt_pbackup")
-    if (!exists(backup)) return
-    // walk the backup tree: a backed-up partition dir (at any nesting
-    // level of a multi-column layout) whose live counterpart vanished is
-    // renamed back wholesale; if the live dir exists, recurse — a deeper
-    // sub-partition may still be missing
-    def walk(sub: String): Unit = {
-      val src = if (sub.isEmpty) new Path(path(backup)) else new Path(path(backup), sub)
-      fs.listStatus(src).foreach { st =>
-        if (st.isDirectory && st.getPath.getName.contains("=")) {
-          val rsub = if (sub.isEmpty) st.getPath.getName
-                     else sub + "/" + st.getPath.getName
-          val tgtDir = new Path(path(rel), rsub)
-          if (!fs.exists(tgtDir)) {
-            fs.mkdirs(tgtDir.getParent)
-            if (!fs.rename(st.getPath, tgtDir))
-              throw new IllegalStateException(
-                s"partition restore $rsub -> ${rel.fqName} failed; " +
-                  s"backup left at ${path(backup)}")
-            Warehouse.faultPoint("restore.leaf-restored")
-          } else walk(rsub)
-        }
-      }
-    }
-    walk("")
-    drop(backup)
-  }
-
-  /** CTAS + atomic swap (`materialization_table_default` @125935).
+  /** CTAS + atomic commit (`materialization_table_default` @125935).
     *
     * The dataframe may READ FROM `rel` itself (incremental/snapshot
-    * rewrites): the plan materializes fully into the new version / tmp
-    * dir before the commit, so read-modify-write on one relation is safe.
+    * rewrites): the plan materializes fully into the new version dir
+    * before the commit, so read-modify-write on one relation is safe.
     */
   def writeAtomic(df: DataFrame, rel: Relation,
                   partitionCols: Seq[String] = Nil,
                   clusterCols: Seq[String] = Nil,
                   zorderCols: Seq[String] = Nil,
                   bloomCols: Seq[String] = Nil): Unit = withRelationLock(rel) {
-    if (usesManifest) {
-      overwriteManifest(df, rel, partitionCols, clusterCols, zorderCols,
-        identity, bloomCols)
-    } else {
-      val tmp = rel.suffixed("__dbt_tmp")
-      val backup = rel.suffixed("__dbt_backup")
-      // crash recovery: a previous run that died between the two swap
-      // renames leaves the data under __dbt_backup and no live target —
-      // restore it before doing anything else (likewise any partition left
-      // in pbackup by a crashed partitioned merge: the df may read `rel`)
-      if (!exists(rel) && exists(backup)) rename(backup, rel)
-      restorePartitionBackup(rel)
-      drop(tmp)
-      val writer = clusteredWriter(df, partitionCols, clusterCols, zorderCols)
-        .write.mode("overwrite")
-      val w2 = if (partitionCols.nonEmpty) writer.partitionBy(partitionCols: _*)
-               else writer
-      w2.parquet(path(tmp))
-      Warehouse.faultPoint("swap.tmp-written")
-      assertLockIntact(path(rel)) // zombie-writer fence before the swap
-      drop(backup)
-      Warehouse.faultPoint("swap.backup-cleared")
-      if (exists(rel)) {
-        rename(rel, backup)
-        Warehouse.faultPoint("swap.live-backed-up")
-      }
-      rename(tmp, rel)
-      Warehouse.faultPoint("swap.new-live")
-      drop(backup)
-    }
+    overwriteManifest(df, rel, partitionCols, clusterCols, zorderCols,
+      identity, bloomCols)
   }
 
-  /** Manifest-mode full overwrite with a metadata transform applied in
+  /** Full overwrite with a metadata transform applied in
     * the SAME commit — the primitive behind [[writeAtomic]] (identity
     * meta) and [[maintainAggView]] (checkpoint rides the rewrite).
     * Caller holds the relation lock. The plan materializes fully into
@@ -1432,49 +1355,20 @@ final class Warehouse(val spark: SparkSession, val root: String,
     // later append/expiry commit would reset the clock via manifest
     // mtime and a table with regular appends could never expire
     commitEntries(rel, metaF.andThen(
-      _ + ("built_at_ms" -> System.currentTimeMillis().toString)))(_ => entries)
-  }
-
-  /** Partition-scoped replacement: only the partitions present in `df` are
-    * rewritten (reference `bq_insert_overwrite` dynamic mode @34992 /
-    * `default__get_insert_overwrite_merge_sql` @90709). Maps directly to
-    * Spark's dynamic partitionOverwriteMode — the exact Spark-native
-    * equivalent, no full-table rewrite.
-    */
-  def overwritePartitions(df: DataFrame, rel: Relation,
-                          partitionCols: Seq[String]): Unit = withRelationLock(rel) {
-    require(partitionCols.nonEmpty, "insert_overwrite requires partition_by")
-    if (usesManifest) replacePartitionsImpl(df, rel, partitionCols, Nil, Nil, Nil)
-    else {
-      restorePartitionBackup(rel)
-      partitionAligned(df, partitionCols).write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(partitionCols: _*)
-        .parquet(path(rel))
-    }
+      _ + ("built_at_ms" -> System.currentTimeMillis().toString)),
+      rebuild = true)(_ => entries)
   }
 
   /** Append without touching existing files (merge `ON FALSE` append-only
-    * path, reference `default__get_merge_sql` @89014 when no unique_key).
-    * Manifest mode appends a new version dir and a manifest whose prior
-    * entries are untouched — a partition's rows may span several version
-    * dirs until [[compactPartitions]] consolidates them.
+    * path, reference `default__get_merge_sql` @89014 when no unique_key):
+    * a new version dir and a manifest whose prior entries are untouched —
+    * a partition's rows may span several version dirs until
+    * [[compactPartitions]] consolidates them.
     */
   def append(df: DataFrame, rel: Relation, partitionCols: Seq[String] = Nil,
              bloomCols: Seq[String] = Nil): Unit =
     withRelationLock(rel) {
-      if (usesManifest) appendVersionDir(df, rel, partitionCols,
-        bloomCols = bloomCols)
-      else {
-        restorePartitionBackup(rel)
-        val sized =
-          if (partitionCols.isEmpty) sizedForWrite(df)
-          else partitionAligned(df, partitionCols)
-        val writer = sized.write.mode("append")
-        val w2 = if (partitionCols.nonEmpty) writer.partitionBy(partitionCols: _*)
-                 else writer
-        w2.parquet(path(rel))
-      }
+      appendVersionDir(df, rel, partitionCols, bloomCols = bloomCols)
     }
 
   /** Exactly-once streaming ingestion watermark: the highest batch id of
@@ -1506,8 +1400,6 @@ final class Warehouse(val spark: SparkSession, val root: String,
     */
   def carryStreamWatermarks(rel: Relation, marks: Map[String, Long]): Unit =
     withRelationLock(rel) {
-      require(usesManifest,
-        "stream watermarks need the manifest protocol")
       if (marks.nonEmpty)
         commitEntries(rel, m => marks.foldLeft(m) { case (acc, (s, b)) =>
           val key = s"stream.$s"
@@ -1518,7 +1410,7 @@ final class Warehouse(val spark: SparkSession, val root: String,
     }
 
   /** Idempotent micro-batch append — the `foreachBatch` sink body for
-    * Structured Streaming ingestion into a manifest-mode table. Returns
+    * Structured Streaming ingestion. Returns
     * false (and writes NOTHING) when `batchId` is at or below the
     * committed watermark: after a crash-and-restart, Spark re-delivers
     * the last batch from the checkpoint, and this is what makes the
@@ -1532,9 +1424,6 @@ final class Warehouse(val spark: SparkSession, val root: String,
                         batchId: Long,
                         partitionCols: Seq[String] = Nil): Boolean =
     withRelationLock(rel) {
-      require(usesManifest,
-        "exactly-once stream append requires manifest commit mode " +
-          "(rename mode has no atomic data+marker commit)")
       require(!sourceId.contains("\t") && !sourceId.contains("\n"),
         s"stream source id must be line-safe: $sourceId")
       if (streamWatermark(rel, sourceId).exists(_ >= batchId)) false
@@ -1545,7 +1434,7 @@ final class Warehouse(val spark: SparkSession, val root: String,
       }
     }
 
-  /** Shared manifest-mode append body: write `df` into a fresh version
+  /** Shared append body: write `df` into a fresh version
     * dir, then CAS-commit its entries appended to the previous list,
     * with `metaF` applied to the carried-forward metadata in the SAME
     * commit. Caller holds the relation lock.
@@ -1627,9 +1516,6 @@ final class Warehouse(val spark: SparkSession, val root: String,
                        partitionCols: Seq[String] = Nil)
                       (transform: DataFrame => DataFrame): Option[Long] =
     withRelationLock(dst) {
-      require(usesManifest,
-        "exactly-once incremental consumption requires manifest commit " +
-          "mode (rename mode has no atomic data+checkpoint commit)")
       require(!consumerId.contains("\t") && !consumerId.contains("\n"),
         s"consumer id must be line-safe: $consumerId")
       // pin src's head ONCE: everything below reads the entries of this
@@ -1686,9 +1572,6 @@ final class Warehouse(val spark: SparkSession, val root: String,
                       aggs: Seq[(String, String, String)],
                       partitionCols: Seq[String] = Nil): Option[Long] =
     withRelationLock(dst) {
-      require(usesManifest,
-        "exactly-once view maintenance requires manifest commit mode " +
-          "(rename mode has no atomic data+checkpoint commit)")
       require(!consumerId.contains("\t") && !consumerId.contains("\n"),
         s"consumer id must be line-safe: $consumerId")
       require(keyCols.nonEmpty, "maintainAggView requires group keys")
@@ -1764,8 +1647,6 @@ final class Warehouse(val spark: SparkSession, val root: String,
     */
   def commitMeta(rel: Relation, kvs: Map[String, String]): Unit =
     withRelationLock(rel) {
-      require(usesManifest,
-        s"manifest metadata needs manifest commit mode; ${rel.fqName} is rename-mode")
       commitEntries(rel, m => m ++ kvs)(identity)
     }
 
@@ -1787,9 +1668,6 @@ final class Warehouse(val spark: SparkSession, val root: String,
     * deletion must run compaction + [[expireSnapshots]] afterwards.
     */
   def deleteKeys(rel: Relation, keys: DataFrame): Long = withRelationLock(rel) {
-    require(usesManifest,
-      s"row-level deletes need the manifest protocol; ${rel.fqName} is " +
-        "rename-mode (use a filtered rewrite instead)")
     val schema = schemaOf(rel).fieldNames.toSet
     val missing = keys.columns.filterNot(schema.contains)
     require(keys.columns.nonEmpty && missing.isEmpty,
@@ -1843,8 +1721,6 @@ final class Warehouse(val spark: SparkSession, val root: String,
   def compactTable(rel: Relation, maxEntries: Int = 8,
                    zorderCols: Seq[String] = Nil): Boolean =
     withRelationLock(rel) {
-      require(usesManifest,
-        s"compactTable is manifest-mode only; ${rel.fqName} is rename-mode")
       val cur = latestManifest(rel).map(_._2).getOrElse(Nil)
       // delete entries force a rewrite regardless of dir count: compaction
       // is also how equality deletes get physically materialized
@@ -1882,12 +1758,12 @@ final class Warehouse(val spark: SparkSession, val root: String,
     if (!fs.exists(p)) Nil
     else fs.listStatus(p).toSeq.filter(_.isDirectory)
       .map(st => Relation(database, schema, st.getPath.getName))
+      // swap scratch dirs of the retired rename protocol: a crashed run
+      // of an older release can leave them behind, and surfacing one as
+      // a relation would let a pattern-driven cleanup drop the only
+      // surviving copy of a crashed partition
       .filterNot(r => r.identifier.endsWith("__dbt_tmp") ||
         r.identifier.endsWith("__dbt_backup") ||
-        // partition-backup dirs exist during every rename-mode merge (and
-        // after a crash, until the restore preamble runs) — surfacing one
-        // as a relation would let a pattern-driven cleanup drop the only
-        // surviving copy of a crashed partition
         r.identifier.endsWith("__dbt_pbackup"))
   }
 
@@ -1909,11 +1785,11 @@ final class Warehouse(val spark: SparkSession, val root: String,
   /** The relation's CURRENT committed state as external-reader slices:
     * `Right(Seq((dir, partitionKVs)))` — plain parquet dirs whose union
     * (with the partition values re-attached, since an entry dir sits
-    * BELOW its partition path) IS the table as graft reads it. Rename
-    * mode: the single live table dir. Manifest mode: the current
-    * manifest's data entries — replaced partitions and multi-version
-    * appends resolve exactly like [[read]]. `Left(reason)` when no path
-    * union can represent the state: pending row-delete entries mask
+    * BELOW its partition path) IS the table as graft reads it: the
+    * current manifest's data entries — replaced partitions and
+    * multi-version appends resolve exactly like [[read]]. `Left(reason)`
+    * when no path union can represent the state: pending row-delete
+    * entries mask
     * rows positionally, so external readers must go through graft until
     * a [[compactPartitions]] pass retires them. Feeds
     * [[graft.run.Engine.catalogDdl]] — the point-in-time export for
@@ -1921,8 +1797,7 @@ final class Warehouse(val spark: SparkSession, val root: String,
     */
   def externalSlices(rel: Relation)
       : Either[String, Seq[(String, Seq[(String, String)])]] =
-    if (!usesManifest) Right(Seq((path(rel), Nil)))
-    else latestManifest(rel) match {
+    latestManifest(rel) match {
       case None => Left(s"${rel.fqName}: no committed manifest")
       case Some((_, entries)) if entries.exists(isDeleteEntry) =>
         Left(s"${rel.fqName}: pending row-delete entries — compact first")
@@ -1954,47 +1829,66 @@ final class Warehouse(val spark: SparkSession, val root: String,
   }
 
   /** Reconstruct a durable view as a DataFrame (compiled SQL references
-    * warehouse paths, so it resolves in any session; manifest-mode paths
-    * resolve through [[resolveSql]] to the current committed version).
+    * warehouse paths, so it resolves in any session; the paths resolve
+    * through [[resolveSql]] to the current committed version).
     */
   def readView(rel: Relation): Option[DataFrame] =
     readViewDef(rel).map(s => spark.sql(resolveSql(s)))
 
-  /** Rewrite `parquet.`/path`` table references that point at THIS
-    * warehouse's manifest-committed relations into pointer-resolved temp
-    * views; non-warehouse paths (sources, legacy rename-layout dirs) pass
-    * through untouched. Compiled SQL stays path-addressed on disk — the
-    * stable, engine-agnostic form — and the pointer is chased at
-    * EXECUTION time, so a view compiled yesterday reads today's committed
-    * version instead of a GC'd version dir. Rename mode is the identity:
-    * the path IS the data there.
+  /** Rewrite `parquet.`root/db/schema/id`` table references into
+    * pointer-resolved temp views: a manifest-committed relation under ANY
+    * warehouse root (this one, a --defer state root, a cross-project
+    * upstream) reads its current committed version, and a durable view
+    * of another root reads its definition. Other paths (sources, legacy
+    * plain-layout dirs, missing relations) pass through untouched.
+    * Compiled SQL stays path-addressed on disk — the stable,
+    * engine-agnostic form — and the pointer is chased at EXECUTION time,
+    * in the executing session, so a view compiled yesterday reads today's
+    * committed version instead of a GC'd version dir.
     */
   def resolveSql(sqlText: String): String =
-    if (!usesManifest) sqlText
-    else {
-      val re = ("parquet\\.`" +
-        java.util.regex.Pattern.quote(root) + "/([^`]+)`").r
-      re.replaceAllIn(sqlText, m => {
-        val relPath = m.group(1)
-        scala.util.matching.Regex.quoteReplacement(relPath.split("/") match {
-          case Array(db, sch, id) =>
-            val rel = Relation(db, sch, id)
-            if (latestManifest(rel).isDefined) {
-              // digest suffix: the character squash alone can collide two
-              // DISTINCT relations ('my-model' vs 'my_model') onto one
-              // temp-view name, silently reading the wrong table
-              val digest = java.security.MessageDigest.getInstance("MD5")
-                .digest(relPath.getBytes("UTF-8")).take(4)
-                .map("%02x".format(_)).mkString
-              val vn = s"graft_mf_${db}_${sch}_$id"
-                .replaceAll("[^A-Za-z0-9_]", "_") + "_" + digest
-              read(rel).createOrReplaceTempView(vn)
-              "`" + vn + "`"
-            } else m.matched
-          case _ => m.matched
-        })
-      })
+    Warehouse.PathRelation.replaceAllIn(sqlText, m =>
+      scala.util.matching.Regex.quoteReplacement(
+        relationAt(m.group(1)).flatMap { case (w, rel) =>
+          w.tempViewOf(rel, viewsToo = w ne this)
+        }.getOrElse(m.matched)))
+
+  /** The warehouse and relation a `root/db/schema/id` path names. */
+  private def relationAt(p: String): Option[(Warehouse, Relation)] =
+    p.split("/", -1) match {
+      case segs if segs.length >= 4 && !segs.takeRight(3).exists(_.isEmpty) =>
+        val Array(db, sch, id) = segs.takeRight(3)
+        val r = segs.dropRight(3).mkString("/")
+        Some((if (r == root) this else at(r), Relation(db, sch, id)))
+      case _ => None
     }
+
+  /** `rel`'s current committed version (or, with `viewsToo`, its durable
+    * view) registered as a temp view named by its path; None otherwise.
+    */
+  private def tempViewOf(rel: Relation, viewsToo: Boolean): Option[String] = {
+    val df =
+      if (latestManifest(rel).isDefined) Some(read(rel))
+      else if (viewsToo) readView(rel)
+      else None
+    df.map { d =>
+      val vn = Warehouse.tempViewName(
+        s"graft_mf_${rel.database}_${rel.schema}_${rel.identifier}", path(rel))
+      d.createOrReplaceTempView(vn)
+      "`" + vn + "`"
+    }
+  }
+
+  /** The warehouse at another root (a --defer/clone state root, a
+    * cross-project upstream) on this session — one per root, so each
+    * keeps its read cache across the references that reach it.
+    */
+  def at(otherRoot: String): Warehouse =
+    if (otherRoot == root) this
+    else others.computeIfAbsent(otherRoot, r => new Warehouse(spark, r))
+
+  private val others =
+    new java.util.concurrent.ConcurrentHashMap[String, Warehouse]()
 
   def dropView(rel: Relation): Unit = {
     val p = new Path(path(rel) + ".view.sql")
@@ -2029,16 +1923,16 @@ final class Warehouse(val spark: SparkSession, val root: String,
     * count comes from each file's footer record count, so NO Spark job
     * scans table data (the reference reads `__TABLES__` stats for the
     * same reason: a catalog listing must not cost a full scan per table).
-    * Manifest mode counts only the CURRENT version's files.
+    * Only the CURRENT version's files count.
     */
   def catalogInfo(database: String, schema: String)
       : Seq[(Relation, Long, Long, Seq[String])] =
     listRelations(database, schema).map { rel =>
-      val files =
-        if (usesManifest && latestManifest(rel).isDefined)
-          dataEntries(latestManifest(rel).get._2)
-            .flatMap(e => filesUnder(entryPath(rel, e)))
-        else filesUnder(new Path(path(rel)))
+      val files = latestManifest(rel) match {
+        case Some((_, entries)) =>
+          dataEntries(entries).flatMap(e => filesUnder(entryPath(rel, e)))
+        case None => filesUnder(new Path(path(rel)))
+      }
       (rel, footerRowsOf(files), files.map(_.getLen).sum, listPartitions(rel))
     }
 
@@ -2097,28 +1991,24 @@ final class Warehouse(val spark: SparkSession, val root: String,
     * count() scan.
     */
   def footerRows(rel: Relation, subdir: String = ""): Long =
-    if (usesManifest) latestManifest(rel) match {
+    latestManifest(rel) match {
       case Some((_, entries)) =>
         footerRowsOf(dataEntries(entries) // delete-key rows are not data
           .filter(e => subdir.isEmpty || e._2 == subdir ||
             e._2.startsWith(subdir + "/"))
           .flatMap(e => filesUnder(entryPath(rel, e))))
-      case None => footerRowsOf(filesUnder(subPath(rel, subdir)))
+      case None => footerRowsOf(filesUnder(
+        if (subdir.isEmpty) new Path(path(rel)) else new Path(path(rel), subdir)))
     }
-    else footerRowsOf(filesUnder(subPath(rel, subdir)))
-
-  private def subPath(rel: Relation, subdir: String): Path =
-    if (subdir.isEmpty) new Path(path(rel)) else new Path(path(rel), subdir)
 
   /** True when the relation holds flat (non-partition-dir) parquet data —
     * i.e. it was written unpartitioned.
     */
   def hasFlatFiles(rel: Relation): Boolean =
-    if (usesManifest) latestManifest(rel) match {
+    latestManifest(rel) match {
       case Some((_, entries)) => entries.exists(_._2.isEmpty)
       case None => rawHasFlatFiles(rel)
     }
-    else rawHasFlatFiles(rel)
 
   private def rawHasFlatFiles(rel: Relation): Boolean = {
     val p = new Path(path(rel))
@@ -2131,8 +2021,8 @@ final class Warehouse(val spark: SparkSession, val root: String,
     * partitions are replaced even when the increment holds no rows for
     * them. Matches on the PARSED value (Spark %-escapes special chars
     * in partition dir names, e.g. `:` → `%3A`), so callers pass plain
-    * rendered values. Manifest mode: a metadata-only commit dropping the
-    * matching entries.
+    * rendered values. A metadata-only commit dropping the matching
+    * entries.
     */
   def dropPartitions(rel: Relation, partitionCol: String,
                      values: Seq[String]): Unit = withRelationLock(rel) {
@@ -2143,11 +2033,7 @@ final class Warehouse(val spark: SparkSession, val root: String,
       eq > 0 && first.substring(0, eq) == partitionCol &&
         want.contains(Warehouse.unescapePathName(first.substring(eq + 1)))
     }
-    if (usesManifest)
-      commitEntries(rel)(_.filterNot(e => matches(e._2)))
-    else listPartitions(rel).foreach { dir =>
-      if (matches(dir)) { fs.delete(new Path(path(rel), dir), true); () }
-    }
+    commitEntries(rel)(_.filterNot(e => matches(e._2)))
   }
 
   /** Per-partition atomic replacement: only the partitions written by
@@ -2157,12 +2043,10 @@ final class Warehouse(val spark: SparkSession, val root: String,
     * files stay byte-identical, which is the whole point at scale: a
     * daily merge must not rewrite years of untouched history.
     *
-    * Rename mode materializes into a tmp relation first, then swaps each
-    * written leaf dir behind a backup rename (crash window repaired by
-    * the next write's recovery preamble). Manifest mode writes one new
-    * version dir and commits a manifest where replaced/dropped entries
-    * are substituted and untouched entries still point at their old
-    * version dirs — the commit itself is atomic, there is no window.
+    * One new version dir is written, then one manifest commit where
+    * replaced/dropped entries are substituted and untouched entries still
+    * point at their old version dirs — the commit itself is atomic, there
+    * is no window.
     */
   def replacePartitions(df: DataFrame, rel: Relation, pcols: Seq[String],
                         alsoDropValues: Seq[String] = Nil,
@@ -2174,74 +2058,6 @@ final class Warehouse(val spark: SparkSession, val root: String,
     require(pcols.nonEmpty, "replacePartitions requires partition columns")
     require(alsoDropValues.isEmpty || pcols.size == 1,
       "alsoDropValues (static insert_overwrite) is single-column")
-    if (usesManifest)
-      replacePartitionsImpl(df, rel, pcols, alsoDropValues, clusterCols,
-        alsoDropPaths, zorderCols, bloomCols, layoutWhen)
-    else {
-      val tmp = rel.suffixed("__dbt_tmp")
-      val backup = rel.suffixed("__dbt_pbackup")
-      restorePartitionBackup(rel)
-      drop(tmp)
-      clusteredWriter(df, pcols, clusterCols, zorderCols, layoutWhen)
-        .write.mode("overwrite").partitionBy(pcols: _*).parquet(path(tmp))
-      fs.mkdirs(new Path(path(backup)))
-      // swap at LEAF granularity: with a multi-column layout only the
-      // deepest written dirs move, so sibling sub-partitions survive
-      val written = listPartitionPaths(tmp, pcols.length)
-      Warehouse.faultPoint("pswap.tmp-written")
-      written.foreach { dir =>
-        val tgtDir = new Path(path(rel), dir)
-        // the backup rename must be CHECKED: if it fails and tgtDir still
-        // exists, renaming tmp onto an existing dir would nest it inside
-        // (POSIX-fs Hadoop rename moves INTO an existing directory)
-        val bdir = new Path(path(backup), dir)
-        fs.mkdirs(bdir.getParent)
-        if (fs.exists(tgtDir)) {
-          if (!fs.rename(tgtDir, bdir))
-            throw new IllegalStateException(
-              s"partition backup $dir of ${rel.fqName} failed")
-          Warehouse.faultPoint("pswap.leaf-backed-up")
-        }
-        fs.mkdirs(tgtDir.getParent)
-        if (!fs.rename(new Path(path(tmp), dir), tgtDir))
-          throw new IllegalStateException(
-            s"partition swap $dir -> ${rel.fqName} failed")
-        Warehouse.faultPoint("pswap.leaf-swapped")
-      }
-      // pinned partitions with NO replacement rows: deletion is the
-      // SEMANTIC intent (the increment is already safe on disk above, so
-      // this is not the drop-then-append data-loss window). Values just
-      // swapped in must not be dropped again.
-      val writtenVals = written
-        .map(d => Warehouse.unescapePathName(d.substring(d.indexOf('=') + 1)))
-        .toSet
-      Warehouse.faultPoint("pswap.all-swapped")
-      val toDrop = alsoDropValues.filterNot(writtenVals.contains)
-      if (toDrop.nonEmpty) dropPartitions(rel, pcols.head, toDrop)
-      // leaf dirs the caller KNOWS hold no surviving rows (e.g. a snapshot
-      // sub-bucket whose every current row closed): the payload wrote
-      // nothing there, so the swap never touched them — drop explicitly,
-      // unless this run did write a replacement
-      alsoDropPaths.filterNot(written.contains).foreach { dir =>
-        val p = new Path(path(rel), dir)
-        if (fs.exists(p)) { fs.delete(p, true); () }
-      }
-      drop(backup)
-      drop(tmp)
-    }
-  }
-
-  /** Manifest-mode partition replacement: one version-dir write, one
-    * manifest commit. Callers hold the relation lock.
-    */
-  private def replacePartitionsImpl(df: DataFrame, rel: Relation,
-                                    pcols: Seq[String],
-                                    alsoDropValues: Seq[String],
-                                    clusterCols: Seq[String],
-                                    alsoDropPaths: Seq[String],
-                                    zorderCols: Seq[String] = Nil,
-                                    bloomCols: Seq[String] = Nil,
-                                    layoutWhen: Option[Column] = None): Unit = {
     val vdir = newVersionDir(rel,
       manifestsDescending(rel).headOption.map(_._1).getOrElse(0L) + 1)
     clusteredWriter(df, pcols, clusterCols, zorderCols, layoutWhen)
@@ -2270,11 +2086,11 @@ final class Warehouse(val spark: SparkSession, val root: String,
   }
 
   /** Small-file compaction: leaf partitions holding more than `maxFiles`
-    * parquet files (or, manifest mode, rows spread over multiple version
-    * dirs) are rewritten as one file each through the same protected
-    * replacement the merge family uses; leaves under the threshold are
-    * never opened. Incremental merges/appends accumulate a file (and in
-    * manifest mode a version-dir entry) per run in hot leaves — at scale
+    * parquet files (or rows spread over multiple version dirs) are
+    * rewritten as one file each through the same protected replacement
+    * the merge family uses; leaves under the threshold are never opened.
+    * Incremental merges/appends accumulate a file and a version-dir entry
+    * per run in hot leaves — at scale
     * the periodic compaction pass is what keeps scan task counts, footer
     * overhead, and manifest union width bounded (the OPTIMIZE of
     * transactional formats, expressed over plain parquet). File discovery
@@ -2294,8 +2110,7 @@ final class Warehouse(val spark: SparkSession, val root: String,
       }
       c > maxFiles
     }
-    val hasDeletes = usesManifest &&
-      latestManifest(rel).exists(_._2.exists(isDeleteEntry))
+    val hasDeletes = latestManifest(rel).exists(_._2.exists(isDeleteEntry))
     // delete entries force every leaf into the rewrite set: a leaf whose
     // rows the deletes touch must not be rebuilt around them piecemeal,
     // and rewriting all leaves is what lets normalizeEntries retire the
@@ -2371,72 +2186,66 @@ final class Warehouse(val spark: SparkSession, val root: String,
       }
     }
 
-  /** Physical directories holding a leaf partition's rows: the single
-    * in-place dir (rename mode) or every version dir the manifest maps
-    * the leaf to (manifest mode; >1 after appends).
+  /** Physical directories holding a leaf partition's rows: every version
+    * dir the manifest maps the leaf to (>1 after appends), or the single
+    * in-place dir of a legacy plain-layout relation.
     */
   private def physicalPartDirs(rel: Relation, part: String): Seq[Path] =
-    if (usesManifest) latestManifest(rel) match {
+    latestManifest(rel) match {
       case Some((_, entries)) =>
         entries.filter(_._2 == part).map(e => entryPath(rel, e))
       case None => Seq(new Path(path(rel), part))
     }
-    else Seq(new Path(path(rel), part))
 
   /** Partition directory names of a partitioned relation (reference
     * `get_partitions_metadata` @12518).
     */
   def listPartitions(rel: Relation): Seq[String] =
-    if (usesManifest && latestManifest(rel).isDefined)
-      latestManifest(rel).get._2.map(_._2.takeWhile(_ != '/'))
-        .filter(_.contains("=")).distinct.sorted
-    else {
-      val p = new Path(path(rel))
-      if (!fs.exists(p)) Nil
-      else fs.listStatus(p).toSeq.filter(_.isDirectory).map(_.getPath.getName)
-        .filter(_.contains("="))
+    latestManifest(rel) match {
+      case Some((_, entries)) =>
+        entries.map(_._2.takeWhile(_ != '/')).filter(_.contains("=")).distinct.sorted
+      case None =>
+        val p = new Path(path(rel))
+        if (!fs.exists(p)) Nil
+        else fs.listStatus(p).toSeq.filter(_.isDirectory).map(_.getPath.getName)
+          .filter(_.contains("="))
     }
 
   /** Epoch ms of the relation's last REBUILD — the timestamp table TTLs
-    * (`hours_to_expiration`) measure from. Manifest mode prefers the
+    * (`hours_to_expiration`) measure from. Prefers the
     * `built_at_ms` metadata line stamped by every full overwrite and
     * carried forward by appends/expiry/meta commits (BigQuery resets
     * expiration_timestamp on CREATE OR REPLACE; DML never extends it —
     * using the newest manifest's mtime here would let a daily vacuum or
     * stream append keep an expired table alive forever). Pre-stamp
-    * manifests fall back to the newest manifest file's mtime; rename
-    * mode to the relation dir's mtime.
+    * manifests fall back to the newest manifest file's mtime, legacy
+    * relations to the relation dir's mtime.
     */
-  def lastCommitMs(rel: Relation): Option[Long] = {
-    val stamped =
-      if (usesManifest) latestMeta(rel).get("built_at_ms").flatMap(_.toLongOption)
-      else None
-    if (stamped.isDefined) stamped
-    else if (usesManifest) {
+  def lastCommitMs(rel: Relation): Option[Long] =
+    latestMeta(rel).get("built_at_ms").flatMap(_.toLongOption).orElse {
       val newest = manifestsDescending(rel)
         .collectFirst { case (_, p) if parseManifest(p).isDefined => p }
-      newest.map(p => fs.getFileStatus(p).getModificationTime)
-        .orElse(Some(new Path(path(rel))).filter(fs.exists)
-          .map(p => fs.getFileStatus(p).getModificationTime))
-    } else Some(new Path(path(rel))).filter(fs.exists)
-      .map(p => fs.getFileStatus(p).getModificationTime)
-  }
+      newest.orElse(Some(new Path(path(rel))).filter(fs.exists))
+        .map(p => fs.getFileStatus(p).getModificationTime)
+    }
 
   /** Partition TTL sweep (`partition_expiration_days`, reference
     * bigquery_options @15210): drop every partition whose NEWEST covering
     * data version is older than `asOfMs - ttlMs`. A partition still
     * receiving appends is never expired — its newest version is young.
     *
-    * Manifest mode commits a manifest WITHOUT the expired partitions'
-    * data entries: carried-forward metadata means stream watermarks and
+    * The sweep commits a manifest WITHOUT the expired partitions' data
+    * entries: carried-forward metadata means stream watermarks and
     * checkpoints survive, [[normalizeEntries]] retires delete entries the
     * drop leaves dead, and commit-time GC ages out the unreferenced
-    * version dirs. Rename mode deletes the leaf partition dirs by dir
-    * mtime. Returns the dropped partition paths.
+    * version dirs. A legacy plain-layout relation has no per-version
+    * timestamps and expires nothing until its next write commits a
+    * manifest. Returns the dropped partition paths.
     */
-  def expirePartitions(rel: Relation, ttlMs: Long, asOfMs: Long): Seq[String] = {
-    val cutoff = asOfMs - ttlMs
-    if (usesManifest && latestManifest(rel).isDefined) withRelationLock(rel) {
+  def expirePartitions(rel: Relation, ttlMs: Long, asOfMs: Long): Seq[String] =
+    if (latestManifest(rel).isEmpty) Nil
+    else withRelationLock(rel) {
+      val cutoff = asOfMs - ttlMs
       // under the relation lock, AND recomputed inside the commit lambda:
       // a precomputed expired set re-applied on a CAS retry would unlink
       // a FRESH entry a racing writer just committed for the same
@@ -2450,7 +2259,7 @@ final class Warehouse(val spark: SparkSession, val root: String,
             part -> es.map(e => fs.getFileStatus(entryPath(rel, e))
               .getModificationTime).max
           }.filter(_._2 < cutoff).keySet
-      var expired = expiredOf(latestManifest(rel).get._2)
+      var expired = expiredOf(latestManifest(rel).map(_._2).getOrElse(Nil))
       if (expired.nonEmpty) {
         Warehouse.faultPoint("ttl.pre-commit")
         commitEntries(rel) { cur =>
@@ -2460,48 +2269,19 @@ final class Warehouse(val spark: SparkSession, val root: String,
         invalidateRead(rel)
       }
       expired.toSeq.sorted
-    } else {
-      // rename mode: walk the k=v tree to leaf dirs, drop by dir mtime
-      def leaves(p: Path, prefix: String): Seq[(String, Path)] = {
-        val kids =
-          if (!fs.exists(p)) Nil
-          else fs.listStatus(p).toSeq.filter(st =>
-            st.isDirectory && st.getPath.getName.contains("="))
-        if (kids.isEmpty) {
-          if (prefix.isEmpty) Nil else Seq(prefix -> p)
-        } else kids.flatMap { st =>
-          val next =
-            if (prefix.isEmpty) st.getPath.getName
-            else prefix + "/" + st.getPath.getName
-          leaves(st.getPath, next)
-        }
-      }
-      val expired = leaves(new Path(path(rel)), "").filter { case (_, p) =>
-        fs.getFileStatus(p).getModificationTime < cutoff
-      }
-      if (expired.nonEmpty) {
-        expired.foreach { case (_, p) =>
-          Warehouse.faultPoint("ttl.leaf-delete")
-          fs.delete(p, true)
-        }
-        invalidateRead(rel)
-      }
-      expired.map(_._1).sorted
     }
-  }
 
   /** All partition key columns of a relation in layout order, derived
     * from FULL leaf paths — every `k=v` segment, not just the first
     * directory level, so multi-column layouts (`dt=…/region=…`) report
-    * every key. Manifest layouts read the manifest's partition paths;
-    * rename layouts walk the `k=v` directory tree.
+    * every key. Committed relations read the manifest's partition paths;
+    * legacy plain layouts walk the `k=v` directory tree.
     */
   def partitionColumns(rel: Relation): Seq[String] = {
-    val leafPaths: Seq[String] =
-      if (usesManifest && latestManifest(rel).isDefined)
-        dataEntries(latestManifest(rel).get._2).map(_._2)
-          .filter(_.contains("="))
-      else {
+    val leafPaths: Seq[String] = latestManifest(rel) match {
+      case Some((_, entries)) =>
+        dataEntries(entries).map(_._2).filter(_.contains("="))
+      case None =>
         def go(p: Path, prefix: String): Seq[String] = {
           val kids =
             if (!fs.exists(p)) Nil
@@ -2516,7 +2296,7 @@ final class Warehouse(val spark: SparkSession, val root: String,
           }
         }
         go(new Path(path(rel)), "")
-      }
+    }
     leafPaths.flatMap(_.split("/").toSeq.filter(_.contains("="))
       .map(_.takeWhile(_ != '='))).distinct
   }
@@ -2526,11 +2306,13 @@ final class Warehouse(val spark: SparkSession, val root: String,
     * partitioned layout.
     */
   def listPartitionPaths(rel: Relation, depth: Int): Seq[String] =
-    if (usesManifest && latestManifest(rel).isDefined)
-      dataEntries(latestManifest(rel).get._2).map(_._2)
-        .filter(p => p.nonEmpty && p.split("/").length == depth)
-        .distinct.sorted
-    else leafDirs(new Path(path(rel)), depth)
+    latestManifest(rel) match {
+      case Some((_, entries)) =>
+        dataEntries(entries).map(_._2)
+          .filter(p => p.nonEmpty && p.split("/").length == depth)
+          .distinct.sorted
+      case None => leafDirs(new Path(path(rel)), depth)
+    }
 
   private def leafDirs(rootDir: Path, depth: Int): Seq[String] = {
     def go(p: Path, d: Int): Seq[String] =
@@ -2546,10 +2328,23 @@ final class Warehouse(val spark: SparkSession, val root: String,
 }
 
 object Warehouse {
+  /** A path-addressed parquet relation in SQL text: parquet.`path`. */
+  private val PathRelation = "parquet\\.`([^`]+)`".r
+
+  /** Collision-proof temp-view name: sanitization alone can collapse
+    * distinct names ('team-a'/'x' and 'team'/'a_x' both flatten to
+    * team_a_x) — the md5 suffix over the raw `key` disambiguates.
+    */
+  def tempViewName(name: String, key: String): String =
+    name.replaceAll("[^A-Za-z0-9_]", "_") + "_" +
+      java.security.MessageDigest.getInstance("MD5")
+        .digest(key.getBytes("UTF-8")).take(4)
+        .map("%02x".format(_)).mkString
+
   /** Crash-consistency fault-injection seam. Every mutation path of the
     * commit protocol announces a named point here at each externally
-    * visible filesystem transition (data written / backup cleared / live
-    * renamed away / manifest claimed / GC delete / …).
+    * visible filesystem transition (data written / manifest claimed / GC
+    * delete / …).
     * FaultInjectionSpec installs a handler that throws at the N-th
     * firing to simulate a process crash at exactly that point, then
     * re-opens the warehouse cold and asserts no torn reads, retry
@@ -2565,13 +2360,6 @@ object Warehouse {
     val h = faultHandler
     if (h ne NoFault) h(name)
   }
-
-  /** Filesystem schemes with no atomic directory rename — [[CommitMode.Auto]]
-    * selects the manifest protocol for these.
-    */
-  val ObjectStoreSchemes: Set[String] =
-    Set("s3", "s3a", "s3n", "gs", "oss", "wasb", "wasbs", "abfs", "abfss",
-      "cos", "cosn", "swift")
 
   /** Relation-path → lock token held by the current thread (reentrancy:
     * compaction calls replacePartitions under the same lock).

@@ -421,7 +421,7 @@ final class Materializer(wh: Warehouse) {
             wh.replacePartitions(tgt.filter(keepPred).unionByName(inc), rel,
               Seq(pcol), alsoDropValues = cfg.partitions,
               clusterCols = cfg.clusterBy)
-          } else wh.overwritePartitions(inc, rel, Seq(pcol))
+          } else wh.replacePartitions(inc, rel, Seq(pcol))
         }
       case Merge if cfg.uniqueKey.isEmpty =>
         // append-only merge (`ON FALSE`, @89014). When the schema evolved
@@ -833,8 +833,6 @@ final class Materializer(wh: Warehouse) {
                           sourceId: String, batchId: Long,
                           opCol: String = "_op", ordCol: String = "_seq"): Boolean =
     wh.withRelationLock(rel) {
-      require(wh.usesManifest,
-        "exactly-once CDC ingestion requires manifest commit mode")
       if (wh.streamWatermark(rel, sourceId).exists(_ >= batchId)) false
       else {
         applyCdc(changes, rel, cfg, opCol, ordCol)

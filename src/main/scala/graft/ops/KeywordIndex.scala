@@ -150,8 +150,8 @@ final class KeywordIndex(wh: Warehouse, name: String, buckets: Int = 16) {
     * filters, NO corpus scan — and exact-verify the (rare,
     * fpp-bounded) candidates with a literal `isin` probe the sidecars
     * themselves prune down to the files that could hold them. When any
-    * dl version dir lacks a bloom (rename-mode warehouse, pre-guard
-    * index), fall back to an exact semi-join probe: correctness of the
+    * dl version dir lacks a bloom (legacy relation, pre-guard index),
+    * fall back to an exact semi-join probe: correctness of the
     * guard never depends on the sidecars, only its cost does.
     */
   private def requireNewDocIds(docs: DataFrame): Unit = {
@@ -389,7 +389,7 @@ object KeywordQueries {
     indexes.computeIfAbsent(s"${s.hashCode()}:$d", key => {
       val dir = java.nio.file.Files.createTempDirectory("graft_kw_idx")
       trackDir(s, key, dir)
-      val wh = new Warehouse(s, dir.toString, graft.core.CommitMode.Manifest)
+      val wh = new Warehouse(s, dir.toString)
       val i = new KeywordIndex(wh, "docs")
       i.build(documents(s, d))
       i
@@ -402,7 +402,7 @@ object KeywordQueries {
     annIndexes.computeIfAbsent(s"${s.hashCode()}:$d", key => {
       val dir = java.nio.file.Files.createTempDirectory("graft_ann_idx")
       trackDir(s, key, dir)
-      val wh = new Warehouse(s, dir.toString, graft.core.CommitMode.Manifest)
+      val wh = new Warehouse(s, dir.toString)
       // wider probe ring than the knn entries: the fused-top-10 recall
       // gate (>= 0.9 vs the brute fusion) must hold on the SYNTHETIC
       // corpus, whose embeddings are near-random — measured leg recall

@@ -15,12 +15,8 @@ import graft.materialize._
 object MatQueries {
   import TData._
 
-  // Manifest commit mode: the whole oracle-checked materialization family
-  // exercises the object-store-safe pointer-resolving read/write path (the
-  // rename protocol keeps its own coverage in MaterializeSpec).
   private def freshWarehouse(s: SparkSession): Warehouse =
-    new Warehouse(s, Files.createTempDirectory("graft_wh").toString,
-      CommitMode.Manifest)
+    new Warehouse(s, Files.createTempDirectory("graft_wh").toString)
   private def rel(name: String) = Relation("wh", "main", name)
 
   // ---------------------------------------------------------------- B1 table

@@ -1202,7 +1202,7 @@ object OrchestratorQueries {
       |FROM customer""".stripMargin
 
   /** External-engine DDL export, ROUND-TRIPPED through the oracle: the
-    * engine builds a table + view project into a rename-mode warehouse
+    * engine builds a table + view project into a fresh warehouse
     * at a DETERMINISTIC (sf-suffixed) root, exports `catalogDdl()`, and
     * then (a) executes the exported Spark-dialect statements VERBATIM
     * via `spark.sql` and returns the view's rows, while (b) rewriting
@@ -1278,7 +1278,7 @@ object OrchestratorQueries {
             "SELECT n_regionkey, n_nations FROM {{ ref('nr_counts') }} " +
             "WHERE n_nations > 0")))
     val engine = new Engine(s, project,
-      Target(target, threads = 1, commitMode = graft.core.CommitMode.Rename))
+      Target(target, threads = 1))
     require(engine.build()._1.forall(_.status == "success"))
     val (stmts0, skipped) = engine.catalogDdl()
     require(skipped.isEmpty, s"nothing may be skipped here: $skipped")
@@ -1305,7 +1305,11 @@ object OrchestratorQueries {
     // (a) the Spark side consumes its own export (via the stable path)
     stmts.foreach(s.sql(_))
     // (b) the DuckDB rewrite must match the pinned template exactly
+    // the table's one version dir has a per-write random name: the
+    // pinned form (and the oracle) globs it — a fresh build dir holds
+    // exactly one, so the glob reads the same files as the export
     val duck = ddlExportToDuck(stmts)
+      .replaceAll("/_graft/v[0-9]{12}-[0-9a-f]{8}/", "/_graft/*/")
     val expected = ddlRoundtripTemplate.replace("{ROOT}", root)
     require(duck == expected,
       s"DDL export drifted from the pinned round-trip form:\n$duck\n--- expected:\n$expected")
@@ -1336,7 +1340,7 @@ object OrchestratorQueries {
 
   private val ddlRoundtripTemplate: String =
     "WITH nr_counts AS (SELECT * FROM " +
-      "read_parquet('{ROOT}/analytics/main/nr_counts/*.parquet')), " +
+      "read_parquet('{ROOT}/analytics/main/nr_counts/_graft/*/*.parquet')), " +
       "nr_view AS (SELECT n_regionkey, n_nations FROM nr_counts " +
       "WHERE n_nations > 0) " +
       "SELECT n_regionkey, n_nations FROM nr_view"
@@ -1416,12 +1420,10 @@ object OrchestratorQueries {
           """SELECT o_orderstatus, n_orders, round(avg_cents, 4) AS avg_r
             |FROM {{ ref('orders_avg_mv') }}""".stripMargin)))
     val run1 = new Engine(s, project, Target(root,
-      env = Map("MAX_ID" -> "10000"), threads = 1,
-      commitMode = graft.core.CommitMode.Manifest))
+      env = Map("MAX_ID" -> "10000"), threads = 1))
     require(run1.build()._1.forall(_.status == "success"))
     val run2 = new Engine(s, project, Target(root,
-      env = Map("MAX_ID" -> "999999999"), threads = 1,
-      commitMode = graft.core.CommitMode.Manifest))
+      env = Map("MAX_ID" -> "999999999"), threads = 1))
     require(run2.build()._1.forall(_.status == "success"))
     run2.readModel("mv_report")
   }
@@ -1450,10 +1452,9 @@ object OrchestratorQueries {
             |SELECT o_custkey, count(*) AS n_orders
             |FROM {{ ref('orders_base') }} GROUP BY o_custkey""".stripMargin)
       ) ++ extra)
-    val mf = graft.core.CommitMode.Manifest
     // prod @ cutoff 5000
     val prod = new Engine(s, project(Nil), Target(prodRoot,
-      env = Map("MAX_ID" -> "5000"), threads = 1, commitMode = mf))
+      env = Map("MAX_ID" -> "5000"), threads = 1))
     require(prod.build()._1.forall(_.status == "success"))
     // PR target clones, then builds only the new downstream model
     val downstream = ModelDef("heavy_custs",
@@ -1464,14 +1465,14 @@ object OrchestratorQueries {
         |WHERE v.n_orders >= 3
         |GROUP BY v.o_custkey, v.n_orders""".stripMargin)
     val pr = new Engine(s, project(Seq(downstream)), Target(prRoot,
-      env = Map("MAX_ID" -> "0"), threads = 1, commitMode = mf))
+      env = Map("MAX_ID" -> "0"), threads = 1))
     val outcomes = pr.cloneFromState("orders_base orders_view", prodRoot).toMap
     require(outcomes == Map("orders_base" -> "cloned",
       "orders_view" -> "cloned_view"), s"clone outcomes: $outcomes")
     // prod moves on AFTER the clone — must not leak into the PR target
     // (MAX_ID=0 would also poison the result if the PR rebuilt the base)
     val prod2 = new Engine(s, project(Nil), Target(prodRoot,
-      env = Map("MAX_ID" -> "99"), threads = 1, commitMode = mf))
+      env = Map("MAX_ID" -> "99"), threads = 1))
     require(prod2.build()._1.forall(_.status == "success"))
     require(pr.buildSelected("heavy_custs")._1
       .forall(_.status == "success"))
@@ -1529,12 +1530,10 @@ object OrchestratorQueries {
     * 'orders_curated')` — read-only, no shared project, no shared DAG.
     * The consumer runs AFTER the platform moved its cutoff, proving the
     * consumer reads the upstream's CURRENT deployment (unlike clone's
-    * pinning). Manifest commit mode on the upstream exercises the
-    * cross-warehouse temp-view resolution path.
+    * pinning), through the cross-warehouse temp-view resolution path.
     */
   def crossProjectRef(s: SparkSession, d: String): DataFrame = {
     val platRoot = freshRoot(); val consRoot = freshRoot()
-    val mf = graft.core.CommitMode.Manifest
     val platform = Project(name = "platform",
       sources = Seq(SourceDef("tpch", "orders", s"$d/orders.parquet")),
       models = Seq(ModelDef("orders_curated",
@@ -1544,10 +1543,10 @@ object OrchestratorQueries {
           |WHERE o_orderkey <= {{ env_var('MAX_ID') }}""".stripMargin)))
     // deploy @ 5000, then move on to 8000 — the consumer must see 8000
     require(new Engine(s, platform, Target(platRoot,
-      env = Map("MAX_ID" -> "5000"), threads = 1, commitMode = mf))
+      env = Map("MAX_ID" -> "5000"), threads = 1))
       .build()._1.forall(_.status == "success"))
     require(new Engine(s, platform, Target(platRoot,
-      env = Map("MAX_ID" -> "8000"), threads = 1, commitMode = mf))
+      env = Map("MAX_ID" -> "8000"), threads = 1))
       .build()._1.forall(_.status == "success"))
     val consumer = Project(name = "consumer",
       models = Seq(ModelDef("status_spend",
@@ -1555,12 +1554,8 @@ object OrchestratorQueries {
           |       round(sum(o_totalprice), 2) AS spend
           |FROM {{ ref('platform', 'orders_curated') }}
           |GROUP BY o_orderstatus""".stripMargin)),
-      // the dependency declares the UPSTREAM's commit mode — its own
-      // deployment coordinate, not inherited from the consumer
-      dependencies = Seq(DependencyDef("platform", platRoot,
-        commitMode = mf)))
-    val cons = new Engine(s, consumer, Target(consRoot, threads = 1,
-      commitMode = mf))
+      dependencies = Seq(DependencyDef("platform", platRoot)))
+    val cons = new Engine(s, consumer, Target(consRoot, threads = 1))
     require(cons.build()._1.forall(_.status == "success"))
     cons.readModel("status_spend")
   }

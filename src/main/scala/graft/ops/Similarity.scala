@@ -716,8 +716,7 @@ object Similarity {
       * replay stays a no-op across the swap. The PREVIOUS generation's
       * relations are retired on the NEXT refit (in-flight readers of the
       * old generation keep their files until then). Delta replay rides
-      * the manifest seq — in rename mode refit still swaps atomically
-      * but must not race concurrent appends.
+      * the manifest seq.
       *
       * `onBeforeFlip` is a TEST SEAM: it runs after the heavy phase,
       * before the flip lock — where a racing append would land — so the

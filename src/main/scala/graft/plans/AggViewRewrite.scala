@@ -107,7 +107,7 @@ object AggViewRewrite {
         def bottoms(p: LogicalPlan): Boolean = p match {
           case s: SubqueryAlias => bottoms(s.child)
           // analyzed (pre-optimizer) plans keep temp-view wrappers — the
-          // manifest-mode ref() resolution reads through one
+          // manifest-resolving ref() reads through one
           case v: org.apache.spark.sql.catalyst.plans.logical.View =>
             bottoms(v.child)
           case pr: Project

@@ -73,16 +73,7 @@ final case class SelectorDef(name: String, include: String,
   */
 final case class DependencyDef(name: String, warehouseRoot: String,
                                database: String = "analytics",
-                               schema: String = "main",
-                               // the UPSTREAM deployment's commit mode —
-                               // its own coordinate, NOT inherited from
-                               // the consumer: a manifest-deployed
-                               // upstream read through a rename-mode
-                               // lens would miss the manifest entirely.
-                               // Auto resolves by sys-prop/env/scheme,
-                               // the same rules the upstream itself used.
-                               commitMode: graft.core.CommitMode =
-                                 graft.core.CommitMode.Auto)
+                               schema: String = "main")
 
 /** A declared metric (the dbt metrics / semantic-layer shape: a named
   * aggregation over one model with a time dimension and allowed group-by
@@ -287,8 +278,7 @@ final case class Target(warehouseRoot: String,
                         // relative to the run start (unit: hour|day|
                         // month|year). Relations without event_time pass
                         // through whole, exactly as in dbt.
-                        sample: Option[String] = None,
-                        commitMode: graft.core.CommitMode = graft.core.CommitMode.Auto) {
+                        sample: Option[String] = None) {
   def resolvedSchema: String = {
     // generate_schema_name_for_env equivalent: allow env-templated schemas.
     // An unset env var THROWS (matching Compiler's env_var): silently
@@ -330,7 +320,7 @@ final class Engine(spark: SparkSession, project0: Project, target: Target) {
       onRunEnd = project0.onRunEnd
         .map(Compiler.expandMacros(_, project0.macros)))
 
-  val warehouse = new Warehouse(spark, target.warehouseRoot, target.commitMode)
+  val warehouse = new Warehouse(spark, target.warehouseRoot)
   private val mat = new Materializer(warehouse)
   private val snap = new Snapshotter(warehouse)
 
@@ -361,35 +351,27 @@ final class Engine(spark: SparkSession, project0: Project, target: Target) {
     if (sd.format == "parquet" && sd.options.isEmpty)
       Compiler.pathRelation(sd.path)
     else {
-      val vn = safeViewName("graft_src", s, t)
+      val vn = Warehouse.tempViewName(s"graft_src_${s}_$t", s"$s $t")
       readSource(sd).createOrReplaceTempView(vn)
       "`" + vn + "`"
     }
   }
 
-  /** Collision-proof temp-view name: sanitization alone can collapse
-    * distinct (a, b) pairs ('team-a'/'x' and 'team'/'a_x' both flatten
-    * to team_a_x) — the md5 suffix over the raw pair disambiguates.
-    */
-  private def safeViewName(prefix: String, a: String, b: String): String =
-    s"${prefix}_${a}_$b".replaceAll("[^A-Za-z0-9_]", "_") + "_" +
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(s"$a $b".getBytes("UTF-8")).take(4)
-        .map("%02x".format(_)).mkString
-
   /** Where a ref() resolves: normally this target; under --defer, models
     * NOT selected in this run read from the deferred (prod) root when the
-    * local relation doesn't exist (SURVEY §3.2 step 3).
+    * local relation doesn't exist (SURVEY §3.2 step 3). Either way the
+    * SQL names a warehouse path; [[Warehouse.resolveSql]] chases it to
+    * the committed version when the SQL runs.
     */
   private def refText(model: String, selected: Set[String],
                       deferRoot: Option[String]): String = {
     val local = relationFor(model)
-    val path = deferRoot match {
+    val root = deferRoot match {
       case Some(prod) if !selected.contains(model) && !warehouse.exists(local) =>
-        local.pathUnder(prod)
-      case _ => local.pathUnder(target.warehouseRoot)
+        prod
+      case _ => target.warehouseRoot
     }
-    val base = Compiler.pathRelation(path)
+    val base = Compiler.pathRelation(local.pathUnder(root))
     // a materialized_view whose definition decomposed (avg → sum+count
     // partials) stores the physical partial table; refs read the
     // DECLARED shape back through the projection subquery
@@ -397,37 +379,17 @@ final class Engine(spark: SparkSession, project0: Project, target: Target) {
   }
 
   /** Cross-project ref resolution (dbt mesh): read the upstream
-    * deployment's relation. A manifest-mode upstream is registered as a
-    * temp view through its OWN warehouse (this engine's `resolveSql`
-    * only rewrites its own root); rename-mode upstreams read as direct
-    * parquet paths. Always read-only — a cross-project ref never adds a
-    * build edge here, exactly like dbt (the upstream runs on its own
-    * schedule).
+    * deployment's relation. Always read-only — a cross-project ref never
+    * adds a build edge here, exactly like dbt (the upstream runs on its
+    * own schedule).
     */
-  private val depWarehouses =
-    new java.util.concurrent.ConcurrentHashMap[String, Warehouse]()
   private def crossRefText(proj: String, model: String): String = {
     val dep = project.dependencies.find(_.name == proj).getOrElse(
       throw new IllegalArgumentException(
         s"cross-project ref('$proj', '$model'): no dependency named " +
           s"'$proj' (registered: ${project.dependencies.map(_.name).mkString(", ")})"))
-    val rel = Relation(dep.database, dep.schema, model)
-    val w = depWarehouses.computeIfAbsent(dep.warehouseRoot,
-      r => new Warehouse(spark, r, dep.commitMode))
-    // a view-deployed upstream has no table dir — resolve its durable
-    // compiled definition through the UPSTREAM's own warehouse (pointer
-    // chasing included), same mechanism readModel uses locally
-    w.readView(rel) match {
-      case Some(df) =>
-        val vn = safeViewName("graft_dep", proj, model)
-        df.createOrReplaceTempView(vn)
-        "`" + vn + "`"
-      case None if w.usesManifest && w.exists(rel) =>
-        val vn = safeViewName("graft_dep", proj, model)
-        w.read(rel).createOrReplaceTempView(vn)
-        "`" + vn + "`"
-      case None => Compiler.pathRelation(rel.pathUnder(dep.warehouseRoot))
-    }
+    Compiler.pathRelation(
+      Relation(dep.database, dep.schema, model).pathUnder(dep.warehouseRoot))
   }
 
   /** The declared-shape SELECT list of a `materialized_view` model whose
@@ -737,16 +699,8 @@ final class Engine(spark: SparkSession, project0: Project, target: Target) {
                 // where ref() itself resolves, or the canonical
                 // `load_relation(ref(x)) is not none` guard takes the
                 // missing-branch while the ref would read prod data
-                // existence probed through Hadoop FS, not java.io.File:
-                // the defer root may be an object store (s3/gs/abfs —
-                // schemes the Warehouse supports), where a local-File
-                // probe is always false and the guard would take the
-                // missing branch while ref() resolves to prod
-                case Some(prod) if !selected.contains(a) && {
-                  val p = new org.apache.hadoop.fs.Path(r.pathUnder(prod))
-                  p.getFileSystem(spark.sessionState.newHadoopConf())
-                    .exists(p)
-                } =>
+                case Some(prod) if !selected.contains(a) &&
+                    warehouse.at(prod).exists(r) =>
                   Some(Compiler.pathRelation(r.pathUnder(prod)))
                 case _ => None
               }
@@ -1212,9 +1166,6 @@ final class Engine(spark: SparkSession, project0: Project, target: Target) {
           // Here: extract the (keys, aggs) spec back out of the model's
           // analyzed plan, fold deltas via maintainAggView (self-healing
           // on non-append sources), and register the serving rewrite.
-          require(warehouse.usesManifest,
-            s"${m.name}: materialized_view needs the manifest commit mode " +
-              "(incremental maintenance checkpoints ride manifest metadata)")
           if (fullRefresh) warehouse.drop(relationFor(m.name))
           val (refs, _) = Compiler.dependencies(m.rawSql)
           // the source must be WAREHOUSE-TABLE-backed: maintenance reads
@@ -1449,8 +1400,8 @@ final class Engine(spark: SparkSession, project0: Project, target: Target) {
       case other =>
         // a WRITE shape the router did not recognize must never execute
         // verbatim: Spark would write directly into the live relation
-        // directory, bypassing the warehouse's atomic machinery (and in
-        // manifest mode fail cryptically against a read-only view) —
+        // directory, bypassing the warehouse's atomic machinery (or fail
+        // cryptically against a read-only view) —
         // refuse loudly naming the supported shapes. Session-scoped
         // metadata DDL writes NO storage and stays legal: temp views
         // (the standard dbt-spark materialization idiom) and their drops.
@@ -1712,15 +1663,8 @@ final class Engine(spark: SparkSession, project0: Project, target: Target) {
     * `cloned`, `cloned_view`, or `missing` (no prod relation — dbt
     * skips those too).
     */
-  def cloneFromState(selector: String, fromRoot: String,
-                     fromCommitMode: Option[graft.core.CommitMode] = None)
-      : Seq[(String, String)] = {
-    // the state root is a sibling deployment of this project — default
-    // to this target's commit-mode resolution, overridable when the
-    // prod deployment's mode differs (zero-copy needs both sides on the
-    // manifest protocol; mixed modes degrade to a deep copy)
-    val srcWh = new graft.core.Warehouse(spark, fromRoot,
-      fromCommitMode.getOrElse(target.commitMode))
+  def cloneFromState(selector: String, fromRoot: String): Seq[(String, String)] = {
+    val srcWh = warehouse.at(fromRoot)
     val buildable = (project.models.map(_.name) ++ project.seeds.map(_.name) ++
       project.snapshots.map(_.name)).toSet
     selectNodes(selector).intersect(buildable).toSeq.sorted.map { n =>
@@ -2221,8 +2165,7 @@ final class Engine(spark: SparkSession, project0: Project, target: Target) {
     * VIEW` statements (ANSI-ish Spark SQL) over the CURRENT committed
     * state, so any Spark session (or an engine with parquet path
     * tables) registers the warehouse without knowing graft's layout.
-    * Rename-mode tables are single live dirs; manifest-mode tables
-    * expand to their committed (version, partition) slices with
+    * Tables expand to their committed (version, partition) slices with
     * partition values re-attached as literals CAST to the reader
     * schema's types — replaced partitions and multi-version appends
     * read exactly like graft's own reader. Durable view models re-emit

@@ -252,22 +252,15 @@ object ProjectLoader {
 
     // dependencies.conf: `name warehouse_root [database] [schema]` per
     // line (dbt mesh dependencies.yml + deployment coordinates) — the
-    // upstream projects two-arg ref('name', 'model') calls resolve into
+    // upstream projects two-arg ref('name', 'model') calls resolve into.
+    // Later tokens are ignored (older files carry a commit-mode token).
     val dependencies = readLines(root.resolve("dependencies.conf")).map { l =>
       val parts = tokenize(l)
       require(parts.length >= 2,
         s"dependencies.conf: need name warehouse_root, got: $l")
       DependencyDef(parts(0), parts(1),
         if (parts.length > 2) parts(2) else "analytics",
-        if (parts.length > 3) parts(3) else "main",
-        // 5th token: the UPSTREAM deployment's commit mode
-        parts.lift(4) match {
-          case Some("manifest") => graft.core.CommitMode.Manifest
-          case Some("rename") => graft.core.CommitMode.Rename
-          case Some(other) => throw new IllegalArgumentException(
-            s"dependencies.conf: commit mode must be manifest|rename, got '$other'")
-          case None => graft.core.CommitMode.Auto
-        })
+        if (parts.length > 3) parts(3) else "main")
     }
 
     // metrics.conf: `name model calculation expr time_dim [dim1,dim2]

@@ -328,7 +328,7 @@ object StreamingJobs {
   }
 
   /** Exactly-once warehouse sink for `writeStream.foreachBatch`: each
-    * micro-batch appends to a manifest-mode table with its batch id
+    * micro-batch appends to a warehouse table with its batch id
     * committed ATOMICALLY alongside the data
     * ([[graft.core.Warehouse.appendStreamBatch]]), so the replayed batch
     * after a checkpoint restart is a detected no-op — the end-to-end

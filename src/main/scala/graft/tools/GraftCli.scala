@@ -42,7 +42,7 @@ import graft.run.{Engine, ProjectLoader, StateSelector, Target}
   *                    an unpartitioned table on the interleaved key)
   *   expire-snapshots drop closed history months < --keep-from yyyy-MM
   *   gc               sweep crashed writers' orphaned uncommitted version
-  *                    dirs (--older-than 7d / 12h / 90m; manifest mode)
+  *                    dirs (--older-than 7d / 12h / 90m)
   *   vacuum           enforce declared bigquery_options TTLs: drop tables
   *                    past hours_to_expiration (clock resets per rebuild)
   *                    and partitions past partition_expiration_days
@@ -52,7 +52,7 @@ import graft.run.{Engine, ProjectLoader, StateSelector, Target}
   *                    reap retired generations (--grace <N>{d|h|m} delays
   *                    file drops for in-flight readers; --dry-run reports
   *                    without acting)
-  *   versions         retained commit history per table (manifest mode)
+  *   versions         retained commit history per table
   *   rollback         re-point a table at an old commit (--table t --to N;
   *                    metadata-only, history stays linear for audit)
   *   delete           row-level equality delete, no rewrite (--table t
@@ -164,15 +164,7 @@ object GraftCli {
       // join ALL collected tokens (like --select): `--sample 30 days`
       // arrives as two values; headOption would silently keep '30' and
       // surface as a confusing parse error downstream
-      sample = flags.get("sample").filter(_.nonEmpty).map(_.mkString(" ")),
-      // project.conf `commit_mode=manifest|rename` (materialized_view
-      // models need manifest — their maintenance checkpoints ride
-      // manifest metadata)
-      commitMode = conf.get("commit_mode") match {
-        case Some("manifest") => graft.core.CommitMode.Manifest
-        case Some("rename") => graft.core.CommitMode.Rename
-        case _ => graft.core.CommitMode.Auto
-      })
+      sample = flags.get("sample").filter(_.nonEmpty).map(_.mkString(" ")))
     val engine = new Engine(spark, project, target)
 
     val select: Option[Set[String]] =
@@ -347,7 +339,7 @@ object GraftCli {
         // (source paths readable, warehouse root writable, project
         // parse already succeeded by reaching here). Exit 1 on any FAIL.
         println(s"project:   ${project.name} ($projectDir)")
-        println(s"warehouse: $whRoot (commit_mode=${target.commitMode})")
+        println(s"warehouse: $whRoot")
         println(s"target:    database=${target.database} " +
           s"schema=${target.resolvedSchema} threads=${target.threads}")
         println(s"nodes:     ${project.models.size} models, " +
@@ -466,8 +458,7 @@ object GraftCli {
             val done = engine.warehouse.compactPartitions(rel, cols, maxFiles)
             if (done.nonEmpty)
               println(s"COMPACT  ${rel.identifier}: ${done.size} leaves rewritten")
-          } else if (engine.warehouse.usesManifest &&
-                     engine.warehouse.compactTable(rel, maxFiles,
+          } else if (engine.warehouse.compactTable(rel, maxFiles,
                        flags.get("zorder").flatMap(_.headOption)
                          .map(_.split(",").toIndexedSeq).getOrElse(Nil)))
             // unpartitioned manifest table whose appended/streamed version

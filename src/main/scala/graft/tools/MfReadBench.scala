@@ -2,7 +2,7 @@ package graft.tools
 
 import java.nio.file.Files
 import org.apache.spark.sql.SparkSession
-import graft.core.{CommitMode, ModelConfig, Relation, Warehouse}
+import graft.core.{ModelConfig, Relation, Warehouse}
 import graft.materialize.Materializer
 
 /** Dev measurement (not library surface): how manifest-read cost scales
@@ -26,7 +26,7 @@ object MfReadBench {
     import spark.implicits._
 
     val wh = new Warehouse(spark,
-      Files.createTempDirectory("graft_mfbench").toString, CommitMode.Manifest)
+      Files.createTempDirectory("graft_mfbench").toString)
     val m = new Materializer(wh)
     val r = Relation("db", "sch", "t_daily")
     val cfg = ModelConfig(materialized = "incremental", uniqueKey = Seq("id"),
@@ -97,7 +97,7 @@ object MfReadBench {
     val (skipFiles, skipRead) = time(
       plannedFiles(wh.read(r).filter($"id" === mid)))
     spark.conf.set("graft.stats.enabled", "false")
-    val whBlind = new Warehouse(spark, wh.root, CommitMode.Manifest)
+    val whBlind = new Warehouse(spark, wh.root)
     val (blindFiles, blindRead) = time(
       plannedFiles(whBlind.read(r).filter($"id" === mid)))
     spark.conf.unset("graft.stats.enabled")
@@ -118,7 +118,7 @@ object MfReadBench {
     val (bloomFiles, bloomRead) = time(
       plannedFiles(wh.read(rb).filter($"id" === probe)))
     spark.conf.set("graft.bloom.enabled", "false")
-    val whNb = new Warehouse(spark, wh.root, CommitMode.Manifest)
+    val whNb = new Warehouse(spark, wh.root)
     val (nbFiles, nbRead) = time(
       plannedFiles(whNb.read(rb).filter($"id" === probe)))
     spark.conf.unset("graft.bloom.enabled")

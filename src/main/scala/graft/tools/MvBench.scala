@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.core.{CommitMode, Relation, Warehouse}
+import graft.core.{Relation, Warehouse}
 import graft.plans.AggViewRewrite
 
 /** Measures the serving value of the maintained-view rewrite: the same
@@ -31,7 +31,7 @@ object MvBench {
     spark.sparkContext.setLogLevel("ERROR")
 
     val wh = new Warehouse(spark,
-      Files.createTempDirectory("graft_mvbench").toString, CommitMode.Manifest)
+      Files.createTempDirectory("graft_mvbench").toString)
     val src = Relation("db", "sch", "facts")
     val v = Relation("db", "sch", "facts_by_k")
     // ~60-byte rows, 64 groups, deterministic

@@ -106,9 +106,9 @@ object ProfileR18 {
           case (k, v) => f"$k=$v%.2f" }.mkString(", "))
     }
     if (on("builds")) {
-      import graft.core.{CommitMode, Relation, Warehouse}
+      import graft.core.{Relation, Warehouse}
       val wh = new Warehouse(spark, java.nio.file.Files
-        .createTempDirectory("prof_builds").toString, CommitMode.Manifest)
+        .createTempDirectory("prof_builds").toString)
       val docs = graft.ops.TData.documents(spark, d)
       // two builds each: #1 carries the JVM's cold codegen/committer
       // cost, #2 is the warm build cost

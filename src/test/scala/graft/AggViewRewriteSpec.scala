@@ -23,8 +23,7 @@ class AggViewRewriteSpec extends AnyFunSuite {
     .getOrCreate()
 
   def freshWh(): Warehouse =
-    new Warehouse(spark, Files.createTempDirectory("graft_mvr").toString,
-      CommitMode.Manifest)
+    new Warehouse(spark, Files.createTempDirectory("graft_mvr").toString)
   def rel(n: String): Relation = Relation("db", "sch", n)
 
   private val aggs = Seq(("n", "count", "*"), ("total", "sum", "v"),

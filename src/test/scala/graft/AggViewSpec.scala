@@ -22,8 +22,7 @@ class AggViewSpec extends AnyFunSuite {
     .getOrCreate()
 
   def freshWh(): Warehouse =
-    new Warehouse(spark, Files.createTempDirectory("graft_aggv").toString,
-      CommitMode.Manifest)
+    new Warehouse(spark, Files.createTempDirectory("graft_aggv").toString)
   def rel(n: String): Relation = Relation("db", "sch", n)
 
   private val aggs = Seq(("n", "count", "*"), ("total", "sum", "v"),

@@ -89,7 +89,7 @@ class BloomSpec extends AnyFunSuite {
     spark.conf.set("graft.bloom.cols", "id,name")
     spark.conf.set("graft.bloom.fpp", "0.001")
     try {
-      val wh = new Warehouse(spark, root, CommitMode.Manifest)
+      val wh = new Warehouse(spark, root)
       val r = Relation("db", "sch", "t_bloom")
       // dir k holds ids ≡ k (mod 5) over 0..499: every dir spans ~the
       // whole [k, 495+k] range — min/max stats are structurally blind
@@ -116,7 +116,7 @@ class BloomSpec extends AnyFunSuite {
       // kill switch: full scan, same rows
       spark.conf.set("graft.bloom.enabled", "false")
       try {
-        val wh2 = new Warehouse(spark, root, CommitMode.Manifest)
+        val wh2 = new Warehouse(spark, root)
         val off = scanOf(wh2.read(r).filter($"id" === 7L))
         assert(off.metrics("numFiles").value == 5)
         assert(wh2.read(r).filter($"id" === 7L).count() == 1)
@@ -134,7 +134,7 @@ class BloomSpec extends AnyFunSuite {
     val s = spark; import s.implicits._
     spark.conf.set("graft.bloom.cols", "id")
     try {
-      val wh = new Warehouse(spark, root, CommitMode.Manifest)
+      val wh = new Warehouse(spark, root)
       val r = Relation("db", "sch", "t_bloom_cmp")
       (0 to 4).foreach { k =>
         wh.append((0L to 99L).filter(_ % 5 == k).map(i => (i, i)).toDF("id", "v"), r)

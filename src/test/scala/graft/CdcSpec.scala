@@ -22,8 +22,8 @@ class CdcSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  def freshWh(mode: CommitMode = CommitMode.Manifest): Warehouse =
-    new Warehouse(spark, Files.createTempDirectory("graft_cdc_wh").toString, mode)
+  def freshWh(): Warehouse =
+    new Warehouse(spark, Files.createTempDirectory("graft_cdc_wh").toString)
   def rel(n: String): Relation = Relation("db", "sch", n)
 
   def df(rows: Seq[(Long, String, Double)]) = {
@@ -102,7 +102,7 @@ class CdcSpec extends AnyFunSuite {
       "the old p1 row of the moved key must not survive")
   }
 
-  test("stream sink: replays skip, marker survives, rename mode refused") {
+  test("stream sink: replays skip, marker survives") {
     val wh = freshWh(); val m = new Materializer(wh); val r = rel("t_cdc_str")
     val cfg = ModelConfig(materialized = "incremental", uniqueKey = Seq("id"))
     assert(m.applyCdcStreamBatch(cdc(Seq((1L, "a", 1.0, "I", 1L))), r, cfg, "repl", 0L))
@@ -112,14 +112,5 @@ class CdcSpec extends AnyFunSuite {
     assert(m.applyCdcStreamBatch(cdc(Seq((1L, "a", 2.0, "U", 1L))), r, cfg, "repl", 1L))
     assert(snap(wh, r) == Set((1L, "a", 2.0)))
     assert(wh.streamWatermark(r, "repl").contains(1L))
-
-    val rn = freshWh(CommitMode.Rename); val mrn = new Materializer(rn)
-    intercept[IllegalArgumentException] {
-      mrn.applyCdcStreamBatch(cdc(Seq((1L, "a", 1.0, "I", 1L))),
-        rel("t_rn"), cfg, "repl", 0L)
-    }
-    // plain (batch) applyCdc is mode-agnostic: works under rename too
-    mrn.applyCdc(cdc(Seq((5L, "e", 5.0, "I", 1L))), rel("t_rn2"), cfg)
-    assert(snap(rn, rel("t_rn2")) == Set((5L, "e", 5.0)))
   }
 }

@@ -8,8 +8,8 @@ import graft.core._
 /** Zero-copy clone (`dbt clone` / Delta shallow clone): the manifest-
   * pointer mechanics the o_clone lifecycle query can't isolate —
   * zero data files written, pinning against later source commits,
-  * independent evolution, clone-of-clone, and the rename-mode deep-copy
-  * fallback.
+  * independent evolution, clone-of-clone, and the deep-copy fallback
+  * for a legacy plain-layout source.
   */
 class CloneSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSession.builder()
@@ -20,8 +20,8 @@ class CloneSpec extends AnyFunSuite {
     .getOrCreate()
   import spark.implicits._
 
-  private def wh(mode: CommitMode) =
-    new Warehouse(spark, Files.createTempDirectory("graft_clone").toString, mode)
+  private def wh() =
+    new Warehouse(spark, Files.createTempDirectory("graft_clone").toString)
 
   private def parquetFilesUnder(root: String): Seq[String] = {
     def walk(f: java.io.File): Seq[java.io.File] =
@@ -31,7 +31,7 @@ class CloneSpec extends AnyFunSuite {
   }
 
   test("manifest clone writes no data files; reads match; later source commits don't leak") {
-    val src = wh(CommitMode.Manifest); val dst = wh(CommitMode.Manifest)
+    val src = wh(); val dst = wh()
     val r = Relation("wh", "main", "t")
     src.writeAtomic(Seq((1L, "a"), (2L, "b")).toDF("id", "s"), r)
     dst.cloneFrom(src, r, r)
@@ -47,7 +47,7 @@ class CloneSpec extends AnyFunSuite {
   }
 
   test("clone evolves independently; source never sees clone writes") {
-    val src = wh(CommitMode.Manifest); val dst = wh(CommitMode.Manifest)
+    val src = wh(); val dst = wh()
     val r = Relation("wh", "main", "t")
     src.writeAtomic(Seq((1L, "a")).toDF("id", "s"), r)
     dst.cloneFrom(src, r, r)
@@ -61,8 +61,7 @@ class CloneSpec extends AnyFunSuite {
   }
 
   test("clone of a clone; partitioned source keeps partition entries") {
-    val a = wh(CommitMode.Manifest); val b = wh(CommitMode.Manifest)
-    val c = wh(CommitMode.Manifest)
+    val a = wh(); val b = wh(); val c = wh()
     val r = Relation("wh", "main", "p")
     a.writeAtomic(Seq((1L, "x"), (2L, "y"), (3L, "x")).toDF("id", "k"),
       r, partitionCols = Seq("k"))
@@ -75,10 +74,11 @@ class CloneSpec extends AnyFunSuite {
     assert(c.read(r).filter($"k" === "x").count() == 2)
   }
 
-  test("rename-mode fallback deep-copies (and survives a source drop)") {
-    val src = wh(CommitMode.Rename); val dst = wh(CommitMode.Rename)
+  test("legacy plain-layout source deep-copies (and survives a source drop)") {
+    val src = wh(); val dst = wh()
     val r = Relation("wh", "main", "t")
-    src.writeAtomic(Seq((1L, "a")).toDF("id", "s"), r)
+    // a relation written before the manifest protocol: bare parquet files
+    Seq((1L, "a")).toDF("id", "s").write.parquet(src.path(r))
     dst.cloneFrom(src, r, r)
     assert(parquetFilesUnder(dst.root).nonEmpty) // a real copy
     src.drop(r)

@@ -24,9 +24,7 @@ import graft.materialize._
   *       - '''no torn read''': a cold re-open (fresh Warehouse instance,
   *         empty caches) reads EXACTLY the pre-state or the post-state
   *         multiset — never a mixture, never a duplicate, never a
-  *         resurrected deleted row (manifest mode; rename mode's
-  *         documented contract is weaker: the table may be mid-swap, but
-  *         retry must still converge losslessly);
+  *         resurrected deleted row;
   *       - '''retry convergence''': re-running the same operation cold
   *         lands the exact post-state;
   *       - '''GC safety''': every version dir the latest manifest
@@ -35,10 +33,10 @@ import graft.materialize._
   *
   * The r17 hand-found race classes ride as explicit regression rows:
   * TTL-expiry CAS-retry unlink (expire-vs-refresh interleaving via the
-  * same seam used as a RACE injector, not a crash), rename-swap backup
-  * destruction (crash at swap.live-backed-up + retry), and the
-  * exactly-once stream watermark (crash anywhere in appendStreamBatch +
-  * replay of the same batch id must never double-append).
+  * same seam used as a RACE injector, not a crash), a retry that
+  * crashes too (double crash), and the exactly-once stream watermark
+  * (crash anywhere in appendStreamBatch + replay of the same batch id
+  * must never double-append).
   */
 class FaultInjectionSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSession.builder()
@@ -104,17 +102,15 @@ class FaultInjectionSpec extends AnyFunSuite {
     */
   private case class Scenario(
       name: String,
-      mode: CommitMode,
       setup: Warehouse => Unit,
       op: Warehouse => Unit,
       before: Seq[Long],
       after: Seq[Long],
-      // manifest mode: the relation must be READABLE at every crash
-      // point (old or new snapshot). Rename mode: mid-swap windows may
-      // leave it absent/partial; only retry convergence is contracted.
-      strictReads: Boolean,
       // pre-state may legitimately not exist (e.g. clone target)
       mayNotExist: Boolean = false,
+      // crash the first retry again at the same point before the clean
+      // retry: the second crash must keep every guarantee of the first
+      crashRetry: Boolean = false,
       // expected retry result when the crash landed AT/AFTER the commit
       // point: a non-idempotent op (plain append) legitimately re-applies
       // — the documented reason the watermarked appendStreamBatch exists
@@ -122,8 +118,7 @@ class FaultInjectionSpec extends AnyFunSuite {
 
   private val R = Relation("db", "s", "t")
 
-  private def mkWh(root: String, mode: CommitMode): Warehouse =
-    new Warehouse(spark, root, mode)
+  private def mkWh(root: String): Warehouse = new Warehouse(spark, root)
 
   private def ids(wh: Warehouse): Seq[Long] =
     wh.read(R).select("id").collect().map(_.getLong(0)).toSeq.sorted
@@ -140,7 +135,7 @@ class FaultInjectionSpec extends AnyFunSuite {
   private def sweep(sc: Scenario): Unit = {
     // -- enumerate the path's fault points on a throwaway fixture
     val root0 = Files.createTempDirectory(s"graft_fi_${sc.name}_t").toString
-    val wh0 = mkWh(root0, sc.mode)
+    val wh0 = mkWh(root0)
     sc.setup(wh0)
     val points = trace { sc.op(wh0) }
     assert(points.nonEmpty, s"${sc.name}: no fault points on path — seam missing")
@@ -149,35 +144,32 @@ class FaultInjectionSpec extends AnyFunSuite {
 
     for (i <- points.indices) {
       val root = Files.createTempDirectory(s"graft_fi_${sc.name}_$i").toString
-      val wh = mkWh(root, sc.mode)
+      val wh = mkWh(root)
       sc.setup(wh)
       val at = crashAt(i, sc.name)(sc.op(wh))
       val label = s"${sc.name} @$at#$i"
-      // -- torn-read check on a COLD instance (no caches)
-      val cold = mkWh(root, sc.mode)
-      if (cold.exists(R)) {
-        val seen = ids(cold)
-        if (sc.strictReads)
+      // -- torn-read check on a COLD instance (no caches): the relation
+      // is READABLE at every crash point, as the old or the new snapshot
+      def assertNotTorn(what: String): Unit = {
+        val cold = mkWh(root)
+        if (cold.exists(R)) {
+          val seen = ids(cold)
           assert(seen == sc.before || seen == sc.after,
-            s"$label: torn read $seen (expected ${sc.before} or ${sc.after})")
-        else {
-          // rename mode's weaker mid-swap contract: a partition may be
-          // transiently absent, but a reader must NEVER see rows that
-          // belong to neither state, nor the same row twice (old+new
-          // copies of one partition visible together)
-          val legal = sc.before.toSet ++ sc.after.toSet
-          assert(seen.toSet.subsetOf(legal) && seen.distinct == seen,
-            s"$label: phantom/duplicate rows $seen")
-        }
-      } else assert(!sc.strictReads || sc.mayNotExist,
-        s"$label: relation unreadable after crash under strict-read contract")
-      assertReferencedExist(cold, s"$label (post-crash)")
+            s"$what: torn read $seen (expected ${sc.before} or ${sc.after})")
+        } else assert(sc.mayNotExist, s"$what: relation unreadable after crash")
+        assertReferencedExist(cold, s"$what (post-crash)")
+      }
+      assertNotTorn(label)
+      if (sc.crashRetry) {
+        crashAt(i, s"$label retry")(sc.op(mkWh(root)))
+        assertNotTorn(s"$label, retry crashed too")
+      }
       // -- retry converges
       val committedIdx = points.indexOf("commit.committed")
       val postCommit = committedIdx >= 0 && i >= committedIdx
       val expectRetry =
         if (postCommit) sc.retryAfterCommit.getOrElse(sc.after) else sc.after
-      val retry = mkWh(root, sc.mode)
+      val retry = mkWh(root)
       sc.op(retry)
       assert(ids(retry) == expectRetry,
         s"$label: retry diverged: ${ids(retry)} (expected $expectRetry)")
@@ -185,36 +177,45 @@ class FaultInjectionSpec extends AnyFunSuite {
     }
   }
 
-  // ===================================================== manifest mode
+  // ========================================================== sweeps
 
   test("manifest: full overwrite survives a crash at every point") {
-    sweep(Scenario("mf-overwrite", CommitMode.Manifest,
+    sweep(Scenario("mf-overwrite",
       setup = wh => wh.writeAtomic(df(1, 2), R),
       op = wh => wh.writeAtomic(df(3, 4), R),
-      before = Seq(1L, 2L), after = Seq(3L, 4L), strictReads = true))
+      before = Seq(1L, 2L), after = Seq(3L, 4L)))
   }
 
   test("manifest: overwrite with retention GC on the path") {
     // 4th overwrite expires manifest 1 and its version dir — the
     // gc.manifest-delete / gc.vdir-delete points must be on this trace
-    val sc = Scenario("mf-overwrite-gc", CommitMode.Manifest,
+    val sc = Scenario("mf-overwrite-gc",
       setup = wh => { wh.writeAtomic(df(1), R); wh.writeAtomic(df(2), R)
         wh.writeAtomic(df(3), R) },
       op = wh => wh.writeAtomic(df(4, 5), R),
-      before = Seq(3L), after = Seq(4L, 5L), strictReads = true)
+      before = Seq(3L), after = Seq(4L, 5L))
     val root0 = Files.createTempDirectory("graft_fi_gcprobe").toString
-    val wh0 = mkWh(root0, sc.mode); sc.setup(wh0)
+    val wh0 = mkWh(root0); sc.setup(wh0)
     val pts = trace { sc.op(wh0) }
     assert(pts.contains("gc.manifest-delete") && pts.contains("gc.vdir-delete"),
       s"retention GC points missing from trace: $pts")
     sweep(sc)
   }
 
+  test("manifest: overwrite whose retry crashes too still converges") {
+    // a retry that dies at the same point as the first run: each crash
+    // leaves at most an orphan version dir, never a torn or lost table
+    sweep(Scenario("mf-overwrite-2x",
+      setup = wh => wh.writeAtomic(df(1, 2), R),
+      op = wh => wh.writeAtomic(df(3, 4), R),
+      before = Seq(1L, 2L), after = Seq(3L, 4L), crashRetry = true))
+  }
+
   test("manifest: append survives a crash at every point") {
-    sweep(Scenario("mf-append", CommitMode.Manifest,
+    sweep(Scenario("mf-append",
       setup = wh => wh.writeAtomic(df(1, 2), R),
       op = wh => wh.append(df(3), R),
-      before = Seq(1L, 2L), after = Seq(1L, 2L, 3L), strictReads = true,
+      before = Seq(1L, 2L), after = Seq(1L, 2L, 3L),
       // plain append is NOT idempotent: a retry of a crash that landed
       // after the commit re-appends (the caller cannot know). That is
       // precisely the gap appendStreamBatch's watermark closes — proven
@@ -223,50 +224,48 @@ class FaultInjectionSpec extends AnyFunSuite {
   }
 
   test("manifest: equality delete survives a crash at every point") {
-    sweep(Scenario("mf-delete", CommitMode.Manifest,
+    sweep(Scenario("mf-delete",
       setup = wh => wh.writeAtomic(df(1, 2, 3), R),
       op = wh => { wh.deleteKeys(R, df(2).select("id")); () },
-      before = Seq(1L, 2L, 3L), after = Seq(1L, 3L), strictReads = true))
+      before = Seq(1L, 2L, 3L), after = Seq(1L, 3L)))
   }
 
   test("manifest: compaction materializing deletes never resurrects rows") {
     // pre-state already has the delete APPLIED (reads are delete-aware),
     // so before == after: every crash point must read exactly this set —
     // a resurrected id=2 or a lost id=5 can never equal it
-    sweep(Scenario("mf-compact", CommitMode.Manifest,
+    sweep(Scenario("mf-compact",
       setup = wh => {
         wh.writeAtomic(df(1, 2, 3, 4), R)
         wh.deleteKeys(R, df(2).select("id"))
         wh.append(df(5), R)
       },
       op = wh => { wh.compactTable(R, maxEntries = 1); () },
-      before = Seq(1L, 3L, 4L, 5L), after = Seq(1L, 3L, 4L, 5L),
-      strictReads = true))
+      before = Seq(1L, 3L, 4L, 5L), after = Seq(1L, 3L, 4L, 5L)))
   }
 
   test("manifest: partition replacement survives a crash at every point") {
-    sweep(Scenario("mf-replace", CommitMode.Manifest,
+    sweep(Scenario("mf-replace",
       setup = wh => wh.writeAtomic(
         pdf((1L, "a"), (2L, "a"), (3L, "b")), R, partitionCols = Seq("dt")),
       op = wh => wh.replacePartitions(pdf((30L, "b"), (31L, "b")), R, Seq("dt")),
-      before = Seq(1L, 2L, 3L), after = Seq(1L, 2L, 30L, 31L),
-      strictReads = true))
+      before = Seq(1L, 2L, 3L), after = Seq(1L, 2L, 30L, 31L)))
   }
 
   test("manifest: rollback survives a crash at every point") {
-    sweep(Scenario("mf-rollback", CommitMode.Manifest,
+    sweep(Scenario("mf-rollback",
       setup = wh => { wh.writeAtomic(df(1, 2), R); wh.writeAtomic(df(3), R) },
       op = wh => wh.rollbackTo(R, wh.listVersions(R).min),
-      before = Seq(3L), after = Seq(1L, 2L), strictReads = true))
+      before = Seq(3L), after = Seq(1L, 2L)))
   }
 
   test("manifest: zero-copy clone survives a crash at every point") {
     val SRC = Relation("db", "s", "src")
-    sweep(Scenario("mf-clone", CommitMode.Manifest,
+    sweep(Scenario("mf-clone",
       setup = wh => wh.writeAtomic(df(1, 2),
         SRC) /* target R starts absent */,
       op = wh => wh.cloneFrom(wh, SRC, R),
-      before = Nil, after = Seq(1L, 2L), strictReads = true,
+      before = Nil, after = Seq(1L, 2L),
       mayNotExist = true))
   }
 
@@ -289,31 +288,31 @@ class FaultInjectionSpec extends AnyFunSuite {
             java.nio.file.attribute.FileTime.fromMillis(1000L))
       }
     }
-    sweep(Scenario("mf-ttl", CommitMode.Manifest,
+    sweep(Scenario("mf-ttl",
       setup = stale,
       op = wh => { wh.expirePartitions(R, ttlMs = 60000L,
         asOfMs = System.currentTimeMillis()); () },
-      before = Seq(1L, 2L), after = Seq(2L), strictReads = true))
+      before = Seq(1L, 2L), after = Seq(2L)))
   }
 
   test("exactly-once: stream batch replay after a crash at every point") {
     // the core exactly-once claim: whatever point the writer dies at,
     // re-delivering the SAME batch id can never double its rows, and the
     // committed watermark always agrees with the committed data
-    val sc = Scenario("mf-stream", CommitMode.Manifest,
+    val sc = Scenario("mf-stream",
       setup = wh => { wh.appendStreamBatch(df(1, 2), R, "src", 0L); () },
       op = wh => { wh.appendStreamBatch(df(3, 4), R, "src", 1L); () },
-      before = Seq(1L, 2L), after = Seq(1L, 2L, 3L, 4L), strictReads = true)
+      before = Seq(1L, 2L), after = Seq(1L, 2L, 3L, 4L))
     sweep(sc)
     // watermark/data agreement at each crash point, checked explicitly
     val root0 = Files.createTempDirectory("graft_fi_stream_t").toString
-    val wh0 = mkWh(root0, sc.mode); sc.setup(wh0)
+    val wh0 = mkWh(root0); sc.setup(wh0)
     val points = trace { sc.op(wh0) }
     for (i <- points.indices) {
       val root = Files.createTempDirectory(s"graft_fi_stream_$i").toString
-      val wh = mkWh(root, sc.mode); sc.setup(wh)
+      val wh = mkWh(root); sc.setup(wh)
       crashAt(i, "mf-stream-wm")(sc.op(wh))
-      val cold = mkWh(root, sc.mode)
+      val cold = mkWh(root)
       val mark = cold.streamWatermark(R, "src")
       val seen = ids(cold)
       if (mark.contains(1L)) assert(seen == sc.after,
@@ -323,71 +322,8 @@ class FaultInjectionSpec extends AnyFunSuite {
       // replay of batch 1 on the cold instance: appended exactly once
       cold.appendStreamBatch(df(3, 4), R, "src", 1L)
       assert(ids(cold) == sc.after, s"replay duplicated rows: ${ids(cold)}")
-      assert(mkWh(root, sc.mode).streamWatermark(R, "src").contains(1L))
+      assert(mkWh(root).streamWatermark(R, "src").contains(1L))
     }
-  }
-
-  // ====================================================== rename mode
-
-  test("rename: atomic swap crash-recovers losslessly at every point") {
-    sweep(Scenario("rn-overwrite", CommitMode.Rename,
-      setup = wh => wh.writeAtomic(df(1, 2), R),
-      op = wh => wh.writeAtomic(df(3, 4), R),
-      before = Seq(1L, 2L), after = Seq(3L, 4L), strictReads = false))
-  }
-
-  test("rename: partition swap (pbackup protocol) recovers at every point") {
-    sweep(Scenario("rn-replace", CommitMode.Rename,
-      setup = wh => wh.writeAtomic(
-        pdf((1L, "a"), (2L, "a"), (3L, "b")), R, partitionCols = Seq("dt")),
-      op = wh => wh.replacePartitions(pdf((30L, "b"), (31L, "b")), R, Seq("dt")),
-      before = Seq(1L, 2L, 3L), after = Seq(1L, 2L, 30L, 31L),
-      strictReads = false))
-  }
-
-  test("rename: TTL leaf expiry recovers at every point") {
-    def stale(wh: Warehouse): Unit = {
-      wh.writeAtomic(pdf((1L, "old"), (2L, "new")), R, partitionCols = Seq("dt"))
-      Files.setLastModifiedTime(
-        java.nio.file.Paths.get(wh.path(R), "dt=old"),
-        java.nio.file.attribute.FileTime.fromMillis(1000L))
-    }
-    sweep(Scenario("rn-ttl", CommitMode.Rename,
-      setup = stale,
-      op = wh => { wh.expirePartitions(R, ttlMs = 60000L,
-        asOfMs = System.currentTimeMillis()); () },
-      before = Seq(1L, 2L), after = Seq(2L), strictReads = false))
-  }
-
-  test("rename: double crash — swap dies mid-window, then retry dies too") {
-    // r17 regression class: the first crash leaves the live dir renamed
-    // away (backup holds the only copy); the RETRY's recovery preamble
-    // must restore BEFORE anything destructive, so a second crash right
-    // after the restore still leaves the data recoverable
-    val root = Files.createTempDirectory("graft_fi_double").toString
-    val wh = mkWh(root, CommitMode.Rename)
-    wh.writeAtomic(df(1, 2), R)
-    // locate the live-backed-up point index on this op's trace
-    val probe = {
-      val r2 = Files.createTempDirectory("graft_fi_double_t").toString
-      val w2 = mkWh(r2, CommitMode.Rename)
-      w2.writeAtomic(df(1, 2), R)
-      trace { w2.writeAtomic(df(3, 4), R) }
-    }
-    val iBack = probe.indexOf("swap.live-backed-up")
-    assert(iBack >= 0, s"swap.live-backed-up not on trace: $probe")
-    crashAt(iBack, "double-1")(wh.writeAtomic(df(3, 4), R))
-    // retry crashes at tmp-written — by then the recovery preamble has
-    // restored the backed-up live copy (crashing at index 0 would land
-    // INSIDE the restore rename, before it executes)
-    val wh2 = mkWh(root, CommitMode.Rename)
-    crashAtPoint("swap.tmp-written", "double-2")(wh2.writeAtomic(df(3, 4), R))
-    val cold = mkWh(root, CommitMode.Rename)
-    assert(cold.exists(R) && ids(cold) == Seq(1L, 2L),
-      "recovery preamble failed to restore the backed-up live copy")
-    val wh3 = mkWh(root, CommitMode.Rename)
-    wh3.writeAtomic(df(3, 4), R)
-    assert(ids(wh3) == Seq(3L, 4L))
   }
 
   test("manifest: orphan-vdir vacuum survives a crash at every point") {
@@ -415,13 +351,13 @@ class FaultInjectionSpec extends AnyFunSuite {
         }
       } finally s.close()
     }
-    sweep(Scenario("mf-orphan-gc", CommitMode.Manifest,
+    sweep(Scenario("mf-orphan-gc",
       setup = setupWithOrphan,
       op = wh => { wh.gcOrphanVersions(R, olderThanMs = 60000L); () },
-      before = Seq(1L, 2L), after = Seq(1L, 2L), strictReads = true))
+      before = Seq(1L, 2L), after = Seq(1L, 2L)))
     // and the reclaim actually happened: no unreferenced vdirs remain
     val root = Files.createTempDirectory("graft_fi_orphan_post").toString
-    val wh = mkWh(root, CommitMode.Manifest)
+    val wh = mkWh(root)
     setupWithOrphan(wh)
     val removed = wh.gcOrphanVersions(R, olderThanMs = 60000L)
     assert(removed.nonEmpty, "vacuum reclaimed nothing — orphan not seen")
@@ -436,7 +372,7 @@ class FaultInjectionSpec extends AnyFunSuite {
     // expired set from the fresh state — the r17 bug re-applied the
     // stale set and silently unlinked the refreshed data.
     val root = Files.createTempDirectory("graft_fi_race").toString
-    val wh = mkWh(root, CommitMode.Manifest)
+    val wh = mkWh(root)
     wh.writeAtomic(pdf((1L, "old"), (2L, "new")), R, partitionCols = Seq("dt"))
     val mf = java.nio.file.Paths.get(wh.path(R), "_graft")
     val s = Files.list(mf)
@@ -450,7 +386,7 @@ class FaultInjectionSpec extends AnyFunSuite {
             java.nio.file.attribute.FileTime.fromMillis(1000L))
       }
     } finally s.close()
-    val other = mkWh(root, CommitMode.Manifest)
+    val other = mkWh(root)
     var injected = false
     Warehouse.faultHandler = n => {
       if (n == "commit.claim" && !injected) {
@@ -464,7 +400,7 @@ class FaultInjectionSpec extends AnyFunSuite {
       asOfMs = System.currentTimeMillis())
     finally Warehouse.faultHandler = Warehouse.NoFault
     assert(injected, "race was never injected — commit.claim not reached")
-    val cold = mkWh(root, CommitMode.Manifest)
+    val cold = mkWh(root)
     assert(ids(cold) == Seq(2L, 10L, 11L),
       s"racing refresh of dt=old was unlinked by the expiry: ${ids(cold)}")
     assertReferencedExist(cold, "ttl-race")
@@ -490,7 +426,7 @@ class FaultInjectionSpec extends AnyFunSuite {
     }
     // no-crash baseline
     val rootB = Files.createTempDirectory("graft_fi_snapb").toString
-    val whB = mkWh(rootB, CommitMode.Manifest)
+    val whB = mkWh(rootB)
     val snapB = new Snapshotter(whB)
     snapB.snapshot(src(v1), R, Seq("id"), strat, now = now)
     val preState = state(whB)
@@ -499,7 +435,7 @@ class FaultInjectionSpec extends AnyFunSuite {
     assert(preState != postState)
     // enumerate points of the 2nd (read-modify-write) snapshot run
     val root0 = Files.createTempDirectory("graft_fi_snapt").toString
-    val wh0 = mkWh(root0, CommitMode.Manifest)
+    val wh0 = mkWh(root0)
     new Snapshotter(wh0).snapshot(src(v1), R, Seq("id"), strat, now = now)
     val points = trace {
       new Snapshotter(wh0).snapshot(src(v2), R, Seq("id"), strat, now = now)
@@ -508,17 +444,17 @@ class FaultInjectionSpec extends AnyFunSuite {
     info(s"snapshot RMW: ${points.length} points [${points.mkString(", ")}]")
     for (i <- points.indices) {
       val root = Files.createTempDirectory(s"graft_fi_snap_$i").toString
-      val wh = mkWh(root, CommitMode.Manifest)
+      val wh = mkWh(root)
       new Snapshotter(wh).snapshot(src(v1), R, Seq("id"), strat, now = now)
       val at = crashAt(i, "snap")(
         new Snapshotter(wh).snapshot(src(v2), R, Seq("id"), strat, now = now))
       // torn-read: the SCD-2 table is a consistent snapshot at all times
-      val cold = mkWh(root, CommitMode.Manifest)
+      val cold = mkWh(root)
       val seen = state(cold)
       assert(seen == preState || seen == postState,
         s"snap @$at#$i: torn SCD-2 state")
       // retry: idempotent re-run of the same source lands the post state
-      val retry = mkWh(root, CommitMode.Manifest)
+      val retry = mkWh(root)
       new Snapshotter(retry).snapshot(src(v2), R, Seq("id"), strat, now = now)
       assert(state(retry) == postState, s"snap @$at#$i: retry diverged")
     }

@@ -141,7 +141,7 @@ class FileStatsSpec extends AnyFunSuite {
 
   test("manifest read plans only in-range files; kill switch restores full scan, same rows") {
     val root = Files.createTempDirectory("graft_stats_wh").toString
-    val wh = new Warehouse(spark, root, CommitMode.Manifest)
+    val wh = new Warehouse(spark, root)
     val r = Relation("db", "sch", "t_skip")
     val s = spark; import s.implicits._
     def batch(lo: Long, hi: Long) =
@@ -175,7 +175,7 @@ class FileStatsSpec extends AnyFunSuite {
     assert(wh.read(r).filter($"id" <= 100L).count() == 100)
     spark.conf.set("graft.stats.enabled", "false")
     try {
-      val wh2 = new Warehouse(spark, root, CommitMode.Manifest)
+      val wh2 = new Warehouse(spark, root)
       val off = scanOf(wh2.read(r).filter($"id" <= 100L))
       assert(off.metrics("numFiles").value == 3,
         "kill switch must disable skipping")
@@ -185,7 +185,7 @@ class FileStatsSpec extends AnyFunSuite {
 
   test("skipping composes with partition pruning across version dirs") {
     val root = Files.createTempDirectory("graft_stats_part").toString
-    val wh = new Warehouse(spark, root, CommitMode.Manifest)
+    val wh = new Warehouse(spark, root)
     val r = Relation("db", "sch", "t_skip_part")
     val s = spark; import s.implicits._
     def batch(lo: Long, hi: Long) =
@@ -210,7 +210,7 @@ class FileStatsSpec extends AnyFunSuite {
     // one leaf's range to the other — wrongly skipping it. The
     // dir-relative compound key must keep both, with pruning still live.
     val root = Files.createTempDirectory("graft_stats_collide").toString
-    val wh = new Warehouse(spark, root, CommitMode.Manifest)
+    val wh = new Warehouse(spark, root)
     val r = Relation("db", "sch", "t_collide")
     val s = spark; import s.implicits._
     val df = ((1L to 50L).map(i => (i, "a")) ++

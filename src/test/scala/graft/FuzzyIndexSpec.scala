@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import graft.core.{CommitMode, Warehouse}
+import graft.core.Warehouse
 import graft.ops.TextOps
 
 /** The persisted MinHash band index behind the fuzzy ingestion gate:
@@ -31,7 +31,7 @@ class FuzzyIndexSpec extends AnyFunSuite {
 
   private def freshIdx(): (Warehouse, TextOps.FuzzyIndex) = {
     val wh = new Warehouse(spark,
-      Files.createTempDirectory("graft_fidx").toString, CommitMode.Manifest)
+      Files.createTempDirectory("graft_fidx").toString)
     (wh, new TextOps.FuzzyIndex(wh, "docs"))
   }
 

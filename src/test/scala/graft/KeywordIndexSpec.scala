@@ -32,7 +32,7 @@ class KeywordIndexSpec extends AnyFunSuite {
 
   private def freshIdx(buckets: Int = 16): (Warehouse, KeywordIndex) = {
     val wh = new Warehouse(spark,
-      Files.createTempDirectory("graft_kw").toString, CommitMode.Manifest)
+      Files.createTempDirectory("graft_kw").toString)
     val idx = new KeywordIndex(wh, "d", buckets)
     idx.build(docs)
     (wh, idx)
@@ -236,8 +236,7 @@ class KeywordIndexSpec extends AnyFunSuite {
     assert(st.getAs[Long]("n_docs") == docs.count() + 1)
     // the folded df table is row-identical to a fresh rebuild's
     val whF = new Warehouse(spark,
-      Files.createTempDirectory("graft_kw_fresh").toString,
-      CommitMode.Manifest)
+      Files.createTempDirectory("graft_kw_fresh").toString)
     val freshI = new KeywordIndex(whF, "d")
     freshI.build(all)
     def dfRows(w: Warehouse) = w.read(Relation("idx", "kw", "d__df"))

@@ -29,8 +29,7 @@ class LockLeaseSpec extends AnyFunSuite {
     .getOrCreate()
 
   def freshWh(): Warehouse =
-    new Warehouse(spark, Files.createTempDirectory("graft_lease_wh").toString,
-      CommitMode.Manifest)
+    new Warehouse(spark, Files.createTempDirectory("graft_lease_wh").toString)
   def rel(n: String): Relation = Relation("db", "sch", n)
 
   def df(rows: Seq[(Long, String, Double)]) = {

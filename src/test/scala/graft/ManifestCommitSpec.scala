@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.core._
 import graft.materialize._
 
-/** The object-store commit protocol (CommitMode.Manifest): versioned data
+/** The warehouse commit protocol: versioned data
   * dirs + numbered manifest files, commit = atomic create-if-absent of the
   * next manifest. Mirrors MaterializeSpec's crash-window battery for the
   * strategy where the crash windows are DIFFERENT: there are no renames,
@@ -24,8 +24,7 @@ class ManifestCommitSpec extends AnyFunSuite {
     .getOrCreate()
 
   def freshWh(): Warehouse =
-    new Warehouse(spark, Files.createTempDirectory("graft_mf_wh").toString,
-      CommitMode.Manifest)
+    new Warehouse(spark, Files.createTempDirectory("graft_mf_wh").toString)
   def rel(n: String): Relation = Relation("db", "sch", n)
 
   def df(rows: Seq[(Long, String, Double)]) = {
@@ -191,13 +190,57 @@ class ManifestCommitSpec extends AnyFunSuite {
 
   test("legacy rename-layout relation is readable by a manifest warehouse") {
     val tmp = Files.createTempDirectory("graft_mf_legacy").toString
-    val renameWh = new Warehouse(spark, tmp, CommitMode.Rename)
     val r = rel("t_leg")
-    renameWh.writeAtomic(df(Seq((1L, "a", 1.0))), r)
-    val mfWh = new Warehouse(spark, tmp, CommitMode.Manifest)
+    // the layout older releases wrote: bare parquet files, no _graft/
+    df(Seq((1L, "a", 1.0))).write.parquet(r.pathUnder(tmp))
+    val mfWh = new Warehouse(spark, tmp)
     assert(mfWh.exists(r))
     assert(mfWh.read(r).count() == 1)
     assert(mfWh.footerRows(r) == 1L)
+  }
+
+  test("first write to a legacy plain-layout relation: only a rebuild commits") {
+    val tmp = Files.createTempDirectory("graft_mf_legacy_w").toString
+    val wh = new Warehouse(spark, tmp); val m = new Materializer(wh)
+    val flat = rel("t_flat"); val parted = rel("t_parted")
+    df(Seq((1L, "a", 1.0), (2L, "b", 2.0))).write.parquet(wh.path(flat))
+    df(Seq((1L, "a", 1.0), (2L, "b", 2.0))).write.partitionBy("name")
+      .parquet(wh.path(parted))
+    def ids(r: Relation) = wh.read(r).collect().map(_.getAs[Long]("id")).toSet
+    def refused(body: => Unit) = {
+      val e = intercept[IllegalStateException](body)
+      assert(e.getMessage.contains("--full-refresh"), e.getMessage)
+    }
+    // append strategy (merge, no unique key) and a partitioned merge would
+    // each commit a manifest without the legacy rows
+    refused(m.incremental(df(Seq((3L, "c", 3.0))), flat, ModelConfig(
+      materialized = "incremental")))
+    refused(m.incremental(df(Seq((3L, "b", 3.0))), parted, ModelConfig(
+      materialized = "incremental", uniqueKey = Seq("id"),
+      partitionBy = Seq("name"), partitionKeysStable = true)))
+    refused(wh.dropPartitions(parted, "name", Seq("a")))
+    refused(wh.deleteKeys(flat, df(Seq((1L, "a", 1.0))).select("id")))
+    assert(ids(flat) == Set(1L, 2L) && ids(parted) == Set(1L, 2L))
+    // a full refresh upgrades the relation; incremental writes then commit
+    m.incremental(wh.read(flat), flat, ModelConfig(materialized = "incremental"),
+      fullRefresh = true)
+    m.incremental(df(Seq((3L, "c", 3.0))), flat,
+      ModelConfig(materialized = "incremental"))
+    assert(ids(flat) == Set(1L, 2L, 3L))
+  }
+
+  test("a swap sibling an older release left behind blocks every write") {
+    val tmp = Files.createTempDirectory("graft_mf_legacy_b").toString
+    val wh = new Warehouse(spark, tmp); val r = rel("t_swapped")
+    // crashed between the rename-away and the rename-in: the rows live
+    // only in <rel>__dbt_backup, and the relation itself is missing
+    df(Seq((1L, "a", 1.0))).write.parquet(wh.path(r.suffixed("__dbt_backup")))
+    assert(!wh.exists(r))
+    val e = intercept[IllegalStateException](
+      wh.writeAtomic(df(Seq((9L, "z", 9.0))), r))
+    assert(e.getMessage.contains("__dbt_backup"), e.getMessage)
+    assert(!wh.exists(r))
+    assert(spark.read.parquet(wh.path(r.suffixed("__dbt_backup"))).count() == 1)
   }
 
   test("manifest read is ONE scan relation, however many version dirs") {
@@ -312,7 +355,7 @@ class ManifestCommitSpec extends AnyFunSuite {
     try {
       // fresh Warehouse: wh's per-seq read cache would otherwise serve
       // the serially-constructed DataFrame and skip the parallel path
-      val wh2 = new Warehouse(spark, wh.root, CommitMode.Manifest)
+      val wh2 = new Warehouse(spark, wh.root)
       val parallel = wh2.read(r).collect()
         .map(x => (x.getAs[Long]("id"), x.getAs[String]("name"))).toSet
       assert(parallel == serial, "parallel listing changed the data")
@@ -420,13 +463,6 @@ class ManifestCommitSpec extends AnyFunSuite {
     assert(wh.streamWatermark(r, "other").contains(0L))
     assert(wh.streamWatermark(r, "src").contains(1L))
     assert(wh.read(r).count() == 5)
-
-    // rename mode has no atomic data+marker commit: refuse loudly
-    val rn = new Warehouse(spark,
-      Files.createTempDirectory("graft_rn_wh").toString, CommitMode.Rename)
-    intercept[IllegalArgumentException] {
-      rn.appendStreamBatch(b0, rel("t_rn"), "src", 0L)
-    }
   }
 
   test("incremental consumer: delta-only reads, exactly-once checkpoint, loud lag failure") {
@@ -468,13 +504,6 @@ class ManifestCommitSpec extends AnyFunSuite {
     // LOUDLY (silently skipping unretained deltas would drop rows)
     (1 to 4).foreach(k => wh.append(df(Seq((100L + k, "x", 1.0))), src))
     intercept[IllegalArgumentException] { step() }
-
-    // rename mode has no atomic data+checkpoint commit: refuse
-    val rn = new Warehouse(spark,
-      Files.createTempDirectory("graft_rn_wh2").toString, CommitMode.Rename)
-    intercept[IllegalArgumentException] {
-      rn.processIncrement(rel("a"), rel("b"), "c")(identity)
-    }
   }
 
   test("compactTable: one entry, same rows, metadata carried, partitioned refused") {
@@ -619,25 +648,11 @@ class ManifestCommitSpec extends AnyFunSuite {
     assert(e.getMessage.contains("unrecoverable"), e.getMessage)
   }
 
-  test("explicit-but-invalid commit mode fails fast; pbackup never lists") {
-    val prev = sys.props.get("graft.commit.mode")
-    sys.props("graft.commit.mode") = "manifests" // typo
-    try {
-      val e = intercept[IllegalArgumentException] {
-        new Warehouse(spark,
-          Files.createTempDirectory("graft_badmode").toString,
-          CommitMode.Auto).usesManifest
-      }
-      assert(e.getMessage.contains("manifests"), e.getMessage)
-    } finally {
-      prev match {
-        case Some(v) => sys.props("graft.commit.mode") = v
-        case None => sys.props.remove("graft.commit.mode")
-      }
-    }
-    // a crashed rename-mode merge leaves <model>__dbt_pbackup on disk: it
-    // must never surface as a relation (a pattern-driven cleanup would
-    // drop the only surviving copy of the crashed partition)
+  test("pbackup dirs left by a crashed older-release merge never list") {
+    // the retired rename protocol parked partitions in <model>__dbt_pbackup
+    // and a crash could leave it on disk: it must never surface as a
+    // relation (a pattern-driven cleanup would drop the only surviving
+    // copy of the crashed partition)
     val wh = freshWh()
     val r = rel("real_model")
     wh.writeAtomic(df(Seq((1L, "a", 1.0))), r)
@@ -646,5 +661,23 @@ class ManifestCommitSpec extends AnyFunSuite {
     val names = wh.listRelations("db", "sch").map(_.identifier)
     assert(names.contains("real_model"), names.toString)
     assert(!names.exists(_.endsWith("__dbt_pbackup")), names.toString)
+  }
+
+  test("src/main carries one commit protocol: no mode switch comes back") {
+    // the retired rename protocol was selected by these names; any of
+    // them reappearing means a second commit protocol is growing back
+    val banned = Seq("CommitMode", "usesManifest", "graft.commit.mode",
+      "GRAFT_COMMIT_MODE")
+    val walk = Files.walk(Paths.get("src/main"))
+    val sources = try walk.iterator().asScala.filter(p =>
+        Files.isRegularFile(p) && p.toString.endsWith(".scala")).toList
+      finally walk.close()
+    assert(sources.nonEmpty, "src/main not found from the test working dir")
+    val hits = for {
+      p <- sources
+      text = new String(Files.readAllBytes(p), "UTF-8")
+      b <- banned if text.contains(b)
+    } yield s"$p: $b"
+    assert(hits.isEmpty, hits.mkString("\n"))
   }
 }

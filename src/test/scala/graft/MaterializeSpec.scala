@@ -20,6 +20,21 @@ class MaterializeSpec extends AnyFunSuite {
   def rel(n: String): Relation = Relation("db", "sch", n)
 
   import scala.jdk.CollectionConverters._
+
+  /** Version dirs of `r` that no manifest on disk references — what a
+    * write that never committed leaves behind.
+    */
+  def uncommittedVersionDirs(wh: Warehouse, r: Relation): Set[String] = {
+    val d = java.nio.file.Paths.get(wh.path(r), "_graft")
+    val ls = Files.list(d)
+    val names = try ls.iterator().asScala.map(_.getFileName.toString).toList
+                finally ls.close()
+    val referenced = names.filter(_.endsWith(".manifest"))
+      .flatMap(m => Files.readAllLines(d.resolve(m)).asScala.map(_.split("\t")(0)))
+      .toSet
+    names.filter(_.matches("v[0-9]{12}-.*")).toSet -- referenced
+  }
+
   def df(rows: Seq[(Long, String, Double)]) = {
     val s = spark
     import s.implicits._
@@ -31,8 +46,7 @@ class MaterializeSpec extends AnyFunSuite {
     m.table(df(Seq((1L, "a", 1.0), (2L, "b", 2.0))), r)
     m.table(df(Seq((3L, "c", 3.0))), r)
     assert(wh.read(r).collect().map(_.getLong(0)).toSet == Set(3L))
-    assert(!wh.exists(r.suffixed("__dbt_tmp")))
-    assert(!wh.exists(r.suffixed("__dbt_backup")))
+    assert(uncommittedVersionDirs(wh, r).isEmpty)
     assert(wh.listRelations("db", "sch").map(_.identifier) == Seq("t1"))
   }
 
@@ -368,13 +382,17 @@ class MaterializeSpec extends AnyFunSuite {
     assert(partFiles(wh, r, "name=p1") == p1Files) // path+len+mtime identical
   }
 
-  /** (path, length, mtime) of every data file under one partition dir. */
+  /** (path, length, mtime) of every data file of one leaf partition,
+    * across every version dir the current manifest maps it to.
+    */
   def partFiles(wh: Warehouse, r: Relation, dir: String): Set[(String, Long, Long)] = {
-    val p = new org.apache.hadoop.fs.Path(wh.path(r), dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Set.empty
-    else fs.listStatus(p).filter(_.isFile)
-      .map(st => (st.getPath.toString, st.getLen, st.getModificationTime)).toSet
+    val base = new org.apache.hadoop.fs.Path(wh.path(r), "_graft")
+    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    wh.manifestEntries(r).getOrElse(Nil).filter(_._2 == dir).flatMap { e =>
+      fs.listStatus(new org.apache.hadoop.fs.Path(
+        new org.apache.hadoop.fs.Path(base, e._1), dir)).filter(_.isFile)
+        .map(st => (st.getPath.toString, st.getLen, st.getModificationTime))
+    }.toSet
   }
 
   test("partitioned merge rewrites only the increment's partitions") {
@@ -394,8 +412,7 @@ class MaterializeSpec extends AnyFunSuite {
     // untouched partitions keep their exact files: no full-table rewrite
     assert(partFiles(wh, r, "name=p1") == p1Files)
     assert(partFiles(wh, r, "name=p3") == p3Files)
-    assert(!wh.exists(r.suffixed("__dbt_tmp")))
-    assert(!wh.exists(r.suffixed("__dbt_pbackup")))
+    assert(uncommittedVersionDirs(wh, r).isEmpty)
   }
 
   test("partitioned merge_update_columns rewrites only touched partitions") {
@@ -432,8 +449,7 @@ class MaterializeSpec extends AnyFunSuite {
     assert(out == Map(1L -> 1.0, 2L -> 22.0, 3L -> 3.0, 20L -> 20.0))
     assert(partFiles(wh, r, "d=d1/h=0") == keepA)
     assert(partFiles(wh, r, "d=d2/h=0") == keepB)
-    assert(!wh.exists(r.suffixed("__dbt_tmp")))
-    assert(!wh.exists(r.suffixed("__dbt_pbackup")))
+    assert(uncommittedVersionDirs(wh, r).isEmpty)
   }
 
   test("merge detects a key that moved partitions and removes its old row") {
@@ -471,29 +487,6 @@ class MaterializeSpec extends AnyFunSuite {
     assert(ids == Set((1L, "p1"), (1L, "p2"), (2L, "p2")))
   }
 
-  test("replacePartitions restores a partition caught in the crash window") {
-    val wh = freshWh(); val m = new Materializer(wh); val r = rel("inc13")
-    val cfg = ModelConfig(materialized = "incremental", uniqueKey = Seq("id"),
-      incrementalStrategy = IncrementalStrategy.DeleteInsert,
-      partitionBy = Seq("name"))
-    m.incremental(df(Seq((1L, "p1", 1.0), (2L, "p2", 2.0))), r, cfg)
-    // simulate a crash between the two swap renames: p1 sits in the
-    // partition backup area, its live dir is gone
-    val backup = r.suffixed("__dbt_pbackup")
-    val fs = new org.apache.hadoop.fs.Path(wh.path(r))
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(new org.apache.hadoop.fs.Path(wh.path(backup)))
-    fs.rename(new org.apache.hadoop.fs.Path(wh.path(r), "name=p1"),
-      new org.apache.hadoop.fs.Path(wh.path(backup), "name=p1"))
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(wh.path(r), "name=p1")))
-    // the next partitioned merge's recovery preamble restores p1 first
-    m.incremental(df(Seq((2L, "p2", 22.0))), r, cfg)
-    val out = wh.read(r).collect()
-      .map(x => (x.getLong(0), x.getAs[Double]("score"))).toMap
-    assert(out == Map(1L -> 1.0, 2L -> 22.0))
-    assert(!wh.exists(backup))
-  }
-
   test("compaction rewrites only crowded leaves, preserving rows and cold leaves") {
     val wh = freshWh(); val r = rel("t_compact")
     // four appends pile four files into each touched partition
@@ -515,55 +508,6 @@ class MaterializeSpec extends AnyFunSuite {
     assert(wh.compactPartitions(r, Seq("name"), maxFiles = 2).isEmpty)
   }
 
-  test("crash after swap, before backup drop: stale pbackup is discarded, not restored") {
-    val wh = freshWh(); val m = new Materializer(wh); val r = rel("inc14")
-    val cfg = ModelConfig(materialized = "incremental", uniqueKey = Seq("id"),
-      incrementalStrategy = IncrementalStrategy.DeleteInsert,
-      partitionBy = Seq("name"))
-    m.incremental(df(Seq((1L, "p1", 1.0), (2L, "p2", 2.0))), r, cfg)
-    // simulate the second crash window: p1 was already swapped to NEW data
-    // (live dir present) but the backup of the OLD copy was never dropped
-    val backup = r.suffixed("__dbt_pbackup")
-    val fs = new org.apache.hadoop.fs.Path(wh.path(r))
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val bdir = new org.apache.hadoop.fs.Path(wh.path(backup), "name=p1")
-    fs.mkdirs(bdir.getParent)
-    // stand-in for the old copy: any files under the backup dir
-    fs.mkdirs(bdir)
-    // next merge must DROP the stale backup (live p1 exists), never
-    // "restore" it over the newer data
-    m.incremental(df(Seq((2L, "p2", 22.0))), r, cfg)
-    assert(!wh.exists(backup))
-    val out = wh.read(r).collect()
-      .map(x => (x.getAs[Long]("id"), x.getAs[Double]("score"))).toMap
-    assert(out == Map(1L -> 1.0, 2L -> 22.0))
-  }
-
-  test("full refresh repairs a crashed partition swap and clears the backup") {
-    val wh = freshWh(); val m = new Materializer(wh); val r = rel("inc15")
-    val cfg = ModelConfig(materialized = "incremental", uniqueKey = Seq("id"),
-      incrementalStrategy = IncrementalStrategy.DeleteInsert,
-      partitionBy = Seq("name"))
-    m.incremental(df(Seq((1L, "p1", 1.0), (2L, "p2", 2.0))), r, cfg)
-    // crash window one: p1 moved to pbackup, live dir gone
-    val backup = r.suffixed("__dbt_pbackup")
-    val fs = new org.apache.hadoop.fs.Path(wh.path(r))
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(new org.apache.hadoop.fs.Path(wh.path(backup)))
-    fs.rename(new org.apache.hadoop.fs.Path(wh.path(r), "name=p1"),
-      new org.apache.hadoop.fs.Path(wh.path(backup), "name=p1"))
-    // a FULL REFRESH through writeAtomic (not the partitioned-merge path)
-    // must consume the pbackup: leaving it stale would let a later
-    // partitioned merge "restore" p1 — data the refresh legitimately
-    // dropped — back into the table
-    m.incremental(df(Seq((3L, "p3", 3.0))), r, cfg, fullRefresh = true)
-    assert(!wh.exists(backup))
-    assert(wh.read(r).collect().map(_.getAs[Long]("id")).toSet == Set(3L))
-    // the next partitioned merge must not resurrect the refreshed-away p1
-    m.incremental(df(Seq((4L, "p4", 4.0))), r, cfg)
-    assert(wh.read(r).collect().map(_.getAs[Long]("id")).toSet == Set(3L, 4L))
-  }
-
   test("dropPartitions matches literal '+' and does not confuse it with space") {
     val s = spark
     import s.implicits._
@@ -576,17 +520,6 @@ class MaterializeSpec extends AnyFunSuite {
     assert(wh.read(r).collect().map(_.getLong(0)).toSet == Set(1L, 3L))
     wh.dropPartitions(r, "name", Seq("a+b"))
     assert(wh.read(r).collect().map(_.getLong(0)).toSet == Set(3L))
-  }
-
-  test("writeAtomic restores from backup after a crash between the swap renames") {
-    val wh = freshWh(); val m = new Materializer(wh); val r = rel("t_crash")
-    m.table(df(Seq((1L, "a", 1.0))), r)
-    // simulate the crash window: target moved to backup, new data never landed
-    wh.rename(r, r.suffixed("__dbt_backup"))
-    assert(!wh.exists(r))
-    m.table(df(Seq((2L, "b", 2.0))), r)
-    assert(wh.read(r).collect().map(_.getLong(0)).toSeq == Seq(2L))
-    assert(!wh.exists(r.suffixed("__dbt_backup")))
   }
 
   test("freshness floors hours_late for a fresh-ahead source") {
@@ -645,8 +578,10 @@ class MaterializeSpec extends AnyFunSuite {
     // scrambled input: (i*37) % 101 is a permutation of 0..100
     val rows = (0L until 101L).map(i => ((i * 37L) % 101L, s"n$i", i.toDouble))
     wh.writeAtomic(df(rows).repartition(4), r, clusterCols = Seq("id"))
-    val files = new java.io.File(wh.path(r)).listFiles()
-      .filter(_.getName.endsWith(".parquet"))
+    val walk = Files.walk(java.nio.file.Paths.get(wh.path(r)))
+    val files = try walk.iterator().asScala.map(_.toFile)
+      .filter(_.getName.endsWith(".parquet")).toList
+      finally walk.close()
     assert(files.nonEmpty)
     files.foreach { f =>
       val ids = spark.read.parquet(f.getAbsolutePath)
@@ -790,15 +725,16 @@ class MaterializeSpec extends AnyFunSuite {
     assert(wh.read(r3).schema("v").dataType.typeName == "long")
   }
 
-  test("expirePartitions: rename mode drops stale leaf dirs by mtime") {
+  test("expirePartitions drops stale leaves by version-dir mtime") {
     val wh = freshWh(); val m = new Materializer(wh); val r = rel("exp1")
     val s = spark; import s.implicits._
     m.table(Seq((1, "a"), (2, "b")).toDF("v", "pk"), r,
       ModelConfig(partitionBy = Seq("pk")))
     val now = System.currentTimeMillis()
     // age one leaf artificially (local FS): pk=a "written" 8 days ago
+    val (vdir, _) = wh.manifestEntries(r).get.find(_._2 == "pk=a").get
     java.nio.file.Files.setLastModifiedTime(
-      java.nio.file.Paths.get(wh.path(r), "pk=a"),
+      java.nio.file.Paths.get(wh.path(r), "_graft", vdir, "pk=a"),
       java.nio.file.attribute.FileTime.fromMillis(now - 8L * 86400000L))
     val dropped = wh.expirePartitions(r, 7L * 86400000L, now)
     assert(dropped == Seq("pk=a"), dropped.toString)

@@ -299,7 +299,7 @@ class OrchestratorSpec extends AnyFunSuite {
         // described but NOT persist_docs'd: must stay catalog-only
         "ddl_incr" -> "Append-only increments"))
     val e = new Engine(spark, p,
-      Target(root(), commitMode = graft.core.CommitMode.Manifest))
+      Target(root()))
     assert(e.build()._1.forall(_.status == "success"))
     assert(e.build()._1.forall(_.status == "success"))
     val (stmts, skipped) = e.catalogDdl()
@@ -731,7 +731,10 @@ class OrchestratorSpec extends AnyFunSuite {
     val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
-      val plan = spark.sql(compiled).queryExecution.executedPlan.toString
+      // executed the way the engine executes it: warehouse paths resolve
+      // to their committed version through resolveSql
+      val plan = spark.sql(e2.warehouse.resolveSql(compiled))
+        .queryExecution.executedPlan.toString
       assert(plan.contains("PartitionFilters") &&
         """PartitionFilters: \[[^\]]*>= 9""".r.findFirstIn(plan).isDefined,
         s"no partition filter in plan:\n$plan")
@@ -797,19 +800,43 @@ class OrchestratorSpec extends AnyFunSuite {
   }
 
   test("defer resolves unselected upstream refs to the prod warehouse") {
+    // the prod TABLE a selected CI model reads lives in prod's manifest
+    // layout (data under _graft/), which a bare path read cannot see: the
+    // deferred ref must resolve through a warehouse on the prod root
+    val p = baseProject.copy(models = baseProject.models ++ Seq(ModelDef(
+      "guarded",
+      """{% if load_relation(ref('nations')) is not none %}
+        |SELECT count(*) AS n FROM {{ ref('nations') }}
+        |{% else %}
+        |SELECT -1 AS n
+        |{% endif %}""".stripMargin),
+      ModelDef("region_keys",
+        "SELECT DISTINCT n_regionkey FROM {{ ref('nations') }}",
+        ModelConfig(materialized = "view"))))
     val prodRoot = root()
-    val prod = new Engine(spark, baseProject, Target(prodRoot))
+    val prod = new Engine(spark, p, Target(prodRoot))
     assert(prod.build()._1.forall(_.status == "success"))
+    assert(prod.warehouse.manifestEntries(prod.relationFor("nations")).nonEmpty)
 
     val ciRoot = root()
-    val ci = new Engine(spark, baseProject, Target(ciRoot))
-    // slim CI: only by_region selected; nations is NOT built in CI and must
-    // be read from prod via defer
-    val (nodes, _) = ci.build(select = Some(Set("by_region")),
+    val ci = new Engine(spark, p, Target(ciRoot))
+    // slim CI: only by_region and guarded selected; nations is NOT built
+    // in CI and must be read from prod via defer — by the ref itself and
+    // by the load_relation existence guard alike
+    val (nodes, _) = ci.build(
+      select = Some(Set("by_region", "guarded", "region_keys")),
       deferRoot = Some(prodRoot))
-    assert(nodes.map(_.status).forall(_ == "success"))
+    assert(nodes.map(_.status).forall(_ == "success"),
+      nodes.map(n => s"${n.name}:${n.status}").mkString(", "))
     assert(ci.readModel("by_region").count() == 5)
+    assert(ci.readModel("guarded").collect().head.getLong(0) == 25L)
     assert(!ci.warehouse.exists(ci.relationFor("nations")))
+    // the CI view's durable definition names the prod path, so another
+    // session (a later command, an external reader) resolves it too
+    val later = new Warehouse(spark.newSession(), ciRoot)
+    assert(later.readViewDef(ci.relationFor("region_keys")).get
+      .contains(ci.relationFor("nations").pathUnder(prodRoot)))
+    assert(later.readView(ci.relationFor("region_keys")).get.count() == 5)
   }
 
   test("per-PR schema namespacing via env-templated schema") {
@@ -1234,7 +1261,7 @@ class OrchestratorSpec extends AnyFunSuite {
 
   test("vacuum enforces bigquery TTLs; metadata survives; properties exported") {
     val dir = root()
-    val tgt = Target(dir, commitMode = CommitMode.Manifest)
+    val tgt = Target(dir)
     val p = baseProject.copy(models = Seq(
       ModelDef("nations_part",
         """{{ config(materialized='table', partition_by='n_regionkey',
@@ -1414,13 +1441,11 @@ class OrchestratorSpec extends AnyFunSuite {
 
   test("two interleaved builds on one warehouse do not corrupt it") {
     // two engines (separate processes in real life) building the same
-    // project into the same root concurrently, on the manifest commit
-    // protocol: the per-relation writer lock serializes each
-    // materialization, and manifest readers see old-or-new but never an
-    // absent table (the rename protocol's swap window would make a reader
-    // mid-swap fail — that window is exactly what Manifest removes)
+    // project into the same root concurrently: the per-relation writer
+    // lock serializes each materialization, and readers see old-or-new
+    // but never an absent table
     val r = root()
-    val tgt = Target(r, commitMode = CommitMode.Manifest)
+    val tgt = Target(r)
     val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
     val threads = (1 to 2).map { _ =>
       new Thread(() => {
@@ -1439,7 +1464,7 @@ class OrchestratorSpec extends AnyFunSuite {
     assert(e.readModel("by_region").count() == 5)
     // no leftover tmp/backup relations or lock files
     val rel0 = e.relationFor("nations")
-    val whRead = new Warehouse(spark, r, CommitMode.Manifest)
+    val whRead = new Warehouse(spark, r)
     assert(whRead.listRelations(rel0.database, rel0.schema).map(_.identifier)
       .forall(n => !n.contains("__dbt_")))
     assert(!java.nio.file.Files.exists(
@@ -1465,8 +1490,7 @@ class OrchestratorSpec extends AnyFunSuite {
         ModelDef("mv_reader",
           """SELECT o_orderstatus, round(mean_cents, 2) AS m2, n
             |FROM {{ ref('orders_avg_mv') }}""".stripMargin)))
-    val e = new Engine(spark, p, Target(root(),
-      commitMode = CommitMode.Manifest))
+    val e = new Engine(spark, p, Target(root()))
     val (nodes, _) = e.build()
     assert(nodes.map(_.status).forall(_ == "success"),
       nodes.map(n => s"${n.name}:${n.status}:${n.error}").mkString(","))
@@ -1516,8 +1540,7 @@ class OrchestratorSpec extends AnyFunSuite {
           """{{ config(materialized='materialized_view') }}
             |SELECT o_orderstatus, count(*) AS n
             |FROM {{ ref('orders_v') }} GROUP BY o_orderstatus""".stripMargin)))
-    val e = new Engine(spark, p, Target(root(),
-      commitMode = CommitMode.Manifest))
+    val e = new Engine(spark, p, Target(root()))
     val (nodes, _) = e.build()
     val mv = nodes.find(_.name == "orders_mv").get
     assert(mv.status == "error",
@@ -1548,8 +1571,7 @@ class OrchestratorSpec extends AnyFunSuite {
             |SELECT o_orderstatus, count(*) AS n, sum(cents) AS total,
             |  max(o_orderkey) AS max_key
             |FROM {{ ref('orders_t') }} GROUP BY o_orderstatus""".stripMargin)))
-    val e = new Engine(spark, p, Target(root(),
-      commitMode = CommitMode.Manifest))
+    val e = new Engine(spark, p, Target(root()))
     val (nodes, _) = e.build()
     assert(nodes.map(_.status).forall(_ == "success"),
       nodes.map(n => s"${n.name}:${n.status}:${n.error}").mkString(","))
@@ -1600,8 +1622,7 @@ class OrchestratorSpec extends AnyFunSuite {
           |WHERE cents > 0 GROUP BY o_orderstatus""".stripMargin)
       case m => m
     })
-    val e2 = new Engine(spark, bad, Target(root(),
-      commitMode = CommitMode.Manifest))
+    val e2 = new Engine(spark, bad, Target(root()))
     val (nodes3, _) = e2.build()
     assert(nodes3.find(_.name == "orders_mv").exists(_.status == "error"),
       "a WHERE'd materialized_view must error, not half-apply")
@@ -1659,7 +1680,7 @@ class OrchestratorSpec extends AnyFunSuite {
     put("descriptions.conf", "doc_nations '{{ doc(''nations_doc'') }}'\n")
     val (p, _) = ProjectLoader.load(proj.toString)
     val e = new Engine(spark, p,
-      Target(root(), commitMode = graft.core.CommitMode.Manifest, threads = 1))
+      Target(root(), threads = 1))
     assert(e.build()._1.forall(_.status == "success"))
     val (stmts, skipped) = e.catalogDdl()
     assert(skipped.isEmpty, skipped.toString)
@@ -1825,22 +1846,28 @@ class OrchestratorSpec extends AnyFunSuite {
     assert(e2.invocationId != e.invocationId)
   }
 
-  test("cross-project ref: unregistered dependency fails loudly; rename-mode upstream reads by path") {
+  test("cross-project ref: unregistered dependency fails; upstream via its warehouse") {
     val upRoot = root()
     val up = Project(name = "up",
       sources = Seq(SourceDef("tpch", "nation", s"$sf/nation.parquet")),
       models = Seq(ModelDef("base",
-        "SELECT n_nationkey, n_regionkey FROM {{ source('tpch','nation') }}")))
+        "SELECT n_nationkey, n_regionkey FROM {{ source('tpch','nation') }}"),
+        ModelDef("base_v", "SELECT n_nationkey FROM {{ ref('base') }}",
+          ModelConfig(materialized = "view"))))
     require(new Engine(spark, up, Target(upRoot)).build()._1
       .forall(_.status == "success"))
     val down = Project(name = "down",
       models = Seq(ModelDef("agg",
         """SELECT n_regionkey, count(*) AS n
-          |FROM {{ ref('up', 'base') }} GROUP BY n_regionkey""".stripMargin)),
+          |FROM {{ ref('up', 'base') }} GROUP BY n_regionkey""".stripMargin),
+        // an upstream VIEW resolves through its durable definition
+        ModelDef("agg_v",
+          "SELECT count(*) AS n FROM {{ ref('up', 'base_v') }}")),
       dependencies = Seq(DependencyDef("up", upRoot)))
     val e = new Engine(spark, down, Target(root()))
     require(e.build()._1.forall(_.status == "success"))
     assert(e.readModel("agg").count() == 5)
+    assert(e.readModel("agg_v").collect().head.getLong(0) == 25L)
     // no dependency registered → loud config error at compile
     val bad = down.copy(dependencies = Nil)
     val (nodes, _) = new Engine(spark, bad, Target(root())).build()

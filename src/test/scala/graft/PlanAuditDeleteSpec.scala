@@ -37,7 +37,7 @@ class PlanAuditDeleteSpec extends AnyFunSuite {
   test("trailing deletes: one scan, broadcast anti-joins, no data shuffle") {
     val s = spark; import s.implicits._
     val wh = new Warehouse(spark,
-      Files.createTempDirectory("graft_delplan").toString, CommitMode.Manifest)
+      Files.createTempDirectory("graft_delplan").toString)
     val r = Relation("db", "sch", "t_plan")
     wh.writeAtomic((1L to 10000L).map(i => (i, i % 7)).toDF("id", "g"), r)
     wh.deleteKeys(r, Seq(5L, 6L).toDF("id"))

@@ -60,8 +60,7 @@ class ProjectLoaderSpec extends AnyFunSuite {
 
     val engine = new Engine(spark, project,
       Target(Files.createTempDirectory("graft_demo").toString,
-        threads = conf("threads").toInt,
-        commitMode = graft.core.CommitMode.Manifest))
+        threads = conf("threads").toInt))
     val (nodes, tests) = engine.build()
     assert(nodes.map(_.status).forall(_ == "success"),
       nodes.filter(_.status != "success").toString)

@@ -26,8 +26,7 @@ class RowDeleteSpec extends AnyFunSuite {
     .getOrCreate()
 
   def freshWh(): Warehouse =
-    new Warehouse(spark, Files.createTempDirectory("graft_del_wh").toString,
-      CommitMode.Manifest)
+    new Warehouse(spark, Files.createTempDirectory("graft_del_wh").toString)
   def rel(n: String): Relation = Relation("db", "sch", n)
 
   def df(rows: Seq[(Long, String, Double)]) = {

@@ -279,8 +279,29 @@ class SnapshotSpec extends AnyFunSuite {
     assert(out.count() == 2)
   }
 
-  test("closed history buckets are never rewritten by later runs") {
+  /** (path → (length, mtime)) of the parquet files under partition
+    * `prefix`, across every version dir the current manifest maps it to.
+    */
+  def partitionFiles(wh: Warehouse, r: Relation,
+                     prefix: String): Map[String, (Long, Long)] = {
     import org.apache.hadoop.fs.Path
+    val base = new Path(wh.path(r), "_graft")
+    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val out = Map.newBuilder[String, (Long, Long)]
+    wh.manifestEntries(r).getOrElse(Nil)
+      .filter(e => e._2 == prefix || e._2.startsWith(prefix + "/"))
+      .foreach { case (v, part) =>
+        val it = fs.listFiles(new Path(new Path(base, v), part), true)
+        while (it.hasNext) {
+          val st = it.next()
+          if (st.getPath.getName.endsWith(".parquet"))
+            out += st.getPath.toString -> (st.getLen, st.getModificationTime)
+        }
+      }
+    out.result()
+  }
+
+  test("closed history buckets are never rewritten by later runs") {
     val wh = freshWh(); val snap = new Snapshotter(wh)
     val r = Relation("db", "s", "snap_hist")
     val strat = SnapshotStrategy.Timestamp("updated_at")
@@ -291,20 +312,8 @@ class SnapshotSpec extends AnyFunSuite {
     snap.snapshot(src(Seq(
       (1L, "a2", ts("2024-02-05 00:00:00")),
       (2L, "b", ts("2024-01-10 00:00:00")))), r, Seq("id"), strat)
-    val fs = new Path(wh.root).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    def filesOf(bucket: String): Map[String, (Long, Long)] = {
-      val dir = new Path(wh.path(r), s"${Snapshotter.BUCKET}=$bucket")
-      assert(fs.exists(dir), s"expected partition dir $dir")
-      val it = fs.listFiles(dir, true)
-      val out = Map.newBuilder[String, (Long, Long)]
-      while (it.hasNext) {
-        val st = it.next()
-        if (st.getPath.getName.endsWith(".parquet"))
-          out += st.getPath.toString -> (st.getLen, st.getModificationTime)
-      }
-      out.result()
-    }
+    def filesOf(bucket: String): Map[String, (Long, Long)] =
+      partitionFiles(wh, r, s"${Snapshotter.BUCKET}=$bucket")
     val before = filesOf("2024-02")
     assert(before.nonEmpty)
     // run 3 closes id=2 with valid_to in 2024-04 → only "current" and
@@ -320,26 +329,14 @@ class SnapshotSpec extends AnyFunSuite {
   }
 
   test("delta-source run rewrites only the touched current sub-buckets") {
-    import org.apache.hadoop.fs.Path
     val wh = freshWh()
     val snap = new Snapshotter(wh, subBuckets = Some(8))
     val r = Relation("db", "s", "snap_sub")
     val strat = SnapshotStrategy.Timestamp("updated_at")
     snap.snapshot(src((1L to 16L).map(i =>
       (i, s"p$i", ts("2024-01-10 00:00:00")))), r, Seq("id"), strat)
-    val fs = new Path(wh.root).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    def currentLeafFiles(): Map[String, (Long, Long)] = {
-      val dir = new Path(wh.path(r), s"${Snapshotter.BUCKET}=${Snapshotter.CURRENT}")
-      val it = fs.listFiles(dir, true)
-      val out = Map.newBuilder[String, (Long, Long)]
-      while (it.hasNext) {
-        val st = it.next()
-        if (st.getPath.getName.endsWith(".parquet"))
-          out += st.getPath.toString -> (st.getLen, st.getModificationTime)
-      }
-      out.result()
-    }
+    def currentLeafFiles(): Map[String, (Long, Long)] =
+      partitionFiles(wh, r, s"${Snapshotter.BUCKET}=${Snapshotter.CURRENT}")
     val before = currentLeafFiles()
     assert(before.keys.map(_.split("/").init.last).toSet.size > 2,
       "16 keys should spread over >2 of the 8 sub-buckets")
@@ -398,7 +395,7 @@ class SnapshotSpec extends AnyFunSuite {
 
   test("as-of-key point lookup plans a fraction of the history files (layout + key sidecars)") {
     val wh = new Warehouse(spark,
-      Files.createTempDirectory("graft_snap_pt").toString, CommitMode.Manifest)
+      Files.createTempDirectory("graft_snap_pt").toString)
     val snap = new Snapshotter(wh, subBuckets = Some(4))
     val r = Relation("db", "s", "snap_pt")
     val strat = SnapshotStrategy.Timestamp("updated_at")
@@ -436,7 +433,7 @@ class SnapshotSpec extends AnyFunSuite {
     // string key pair: ZOrder can't quantize strings — the layout must
     // fall back to the lexicographic cluster sort, not crash the write
     val whS = new Warehouse(spark,
-      Files.createTempDirectory("graft_snap_mk").toString, CommitMode.Manifest)
+      Files.createTempDirectory("graft_snap_mk").toString)
     val snapS = new Snapshotter(whS)
     val rs = Relation("db", "s", "snap_strkeys")
     def srcS(tag: String, t: String) =
@@ -451,7 +448,7 @@ class SnapshotSpec extends AnyFunSuite {
     assert(outS.filter(col("dbt_valid_to").isNull).count() == 2)
     // numeric key pair: the z-order path
     val whN = new Warehouse(spark,
-      Files.createTempDirectory("graft_snap_mkn").toString, CommitMode.Manifest)
+      Files.createTempDirectory("graft_snap_mkn").toString)
     val snapN = new Snapshotter(whN)
     val rn = Relation("db", "s", "snap_numkeys")
     def srcN(tag: String, t: String) =

@@ -207,12 +207,12 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("foreachBatch warehouse sink ingests exactly-once across a restart") {
-    import graft.core.{CommitMode, Relation, Warehouse}
+    import graft.core.{Relation, Warehouse}
     val s = spark; import s.implicits._
     val dir = Files.createTempDirectory("graft_sink_src")
     val ckpt = Files.createTempDirectory("graft_sink_ckpt").toString
     val wh = new Warehouse(spark,
-      Files.createTempDirectory("graft_sink_wh").toString, CommitMode.Manifest)
+      Files.createTempDirectory("graft_sink_wh").toString)
     val r = Relation("db", "sch", "t_ingest")
     def writeFile(name: String, ids: Seq[Long]): Unit = {
       ids.map(i => (i, i)).toDF("id", "v")
@@ -254,13 +254,13 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("fuzzy-gated ingestion: stream gated against the index, exactly-once, crash heals") {
-    import graft.core.{CommitMode, Relation, Warehouse}
+    import graft.core.{Relation, Warehouse}
     import graft.ops.TextOps
     val s = spark; import s.implicits._
     val dir = Files.createTempDirectory("graft_fz_src")
     val ckpt = Files.createTempDirectory("graft_fz_ckpt").toString
     val wh = new Warehouse(spark,
-      Files.createTempDirectory("graft_fz_wh").toString, CommitMode.Manifest)
+      Files.createTempDirectory("graft_fz_wh").toString)
     val rel = Relation("db", "sch", "t_docs")
     val shRel = Relation("idx", "mh", "docs__shingles")
     val bandRel = Relation("idx", "mh", "docs__bands")
@@ -320,13 +320,13 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("streaming CDC pipeline: file-fed change batches fold exactly-once across a restart") {
-    import graft.core.{CommitMode, ModelConfig, Relation, Warehouse}
+    import graft.core.{ModelConfig, Relation, Warehouse}
     import graft.materialize.Materializer
     val s = spark; import s.implicits._
     val dir = Files.createTempDirectory("graft_cdc_src")
     val ckpt = Files.createTempDirectory("graft_cdc_ckpt").toString
     val wh = new Warehouse(spark,
-      Files.createTempDirectory("graft_cdc_whs").toString, CommitMode.Manifest)
+      Files.createTempDirectory("graft_cdc_whs").toString)
     val m = new Materializer(wh)
     val r = Relation("db", "sch", "t_cdc_stream")
     val cfg = ModelConfig(materialized = "incremental", uniqueKey = Seq("id"))

@@ -4,7 +4,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.core.{CommitMode, Relation, Warehouse}
+import graft.core.{Relation, Warehouse}
 import graft.ops.Similarity
 
 /** The persisted IVF vector index: build fits k-means ONCE and writes the
@@ -33,7 +33,7 @@ class VectorIndexSpec extends AnyFunSuite {
 
   test("build once, queries prune to probed cells, recall floor, append visible") {
     val wh = new Warehouse(spark,
-      Files.createTempDirectory("graft_vidx").toString, CommitMode.Manifest)
+      Files.createTempDirectory("graft_vidx").toString)
     val e = Similarity.vecs(spark, sf)
     val idx = new Similarity.VectorIndex(wh, "emb", k = 8, nprobe = 2,
       maxProbe = 4, probeMargin = 0.1)
@@ -99,7 +99,7 @@ class VectorIndexSpec extends AnyFunSuite {
   test("PQ codes path: recall floor, cell-pruned codes scan, appends keep codes in lockstep") {
     val s2 = spark; import s2.implicits._
     val wh = new Warehouse(spark,
-      Files.createTempDirectory("graft_vidx_pq").toString, CommitMode.Manifest)
+      Files.createTempDirectory("graft_vidx_pq").toString)
     val e = Similarity.vecs(spark, sf)
     val idx = new Similarity.VectorIndex(wh, "emb", k = 8, nprobe = 2,
       maxProbe = 4, probeMargin = 0.1)
@@ -150,7 +150,7 @@ class VectorIndexSpec extends AnyFunSuite {
   test("row deletes compose: a deleted vector vanishes without a rebuild") {
     val s2 = spark; import s2.implicits._
     val wh = new Warehouse(spark,
-      Files.createTempDirectory("graft_vidx_del").toString, CommitMode.Manifest)
+      Files.createTempDirectory("graft_vidx_del").toString)
     val e = Similarity.vecs(spark, sf)
     val idx = new Similarity.VectorIndex(wh, "emb", k = 4, nprobe = 2)
     idx.build(e)
@@ -175,7 +175,7 @@ class VectorIndexSpec extends AnyFunSuite {
     val s2 = spark; import s2.implicits._
     import graft.functions.VectorFunctions.cosine_sim
     val wh = new Warehouse(spark,
-      Files.createTempDirectory("graft_vidx_r").toString, CommitMode.Manifest)
+      Files.createTempDirectory("graft_vidx_r").toString)
     val e = Similarity.vecs(spark, sf)
     // wider probe ring than the build-only test: this corpus DOUBLES
     // mid-test (drifted twins), and probe width is the operator's recall
@@ -265,7 +265,7 @@ class VectorIndexSpec extends AnyFunSuite {
   test("maintain: drift-thresholded refit; retired generations reap only after the grace window") {
     val s2 = spark; import s2.implicits._
     val wh = new Warehouse(spark,
-      Files.createTempDirectory("graft_vidx_m").toString, CommitMode.Manifest)
+      Files.createTempDirectory("graft_vidx_m").toString)
     val e = Similarity.vecs(spark, sf)
     val idx = new Similarity.VectorIndex(wh, "mnt", k = 8, nprobe = 3,
       maxProbe = 6, probeMargin = 0.15)
@@ -321,7 +321,7 @@ class VectorIndexSpec extends AnyFunSuite {
     val s2 = spark
     import s2.implicits._
     val wh = new Warehouse(spark,
-      Files.createTempDirectory("graft_vidx_s").toString, CommitMode.Manifest)
+      Files.createTempDirectory("graft_vidx_s").toString)
     val e = Similarity.vecs(spark, sf)
     val idx = new Similarity.VectorIndex(wh, "emb", k = 4, nprobe = 2)
     idx.build(e)

@@ -76,7 +76,7 @@ class ZOrderSpec extends AnyFunSuite {
       .toDF("x", "y")
       .repartition(8, expr("hash(x, y)"))
     val root = Files.createTempDirectory("graft_zorder").toString
-    val wh = new Warehouse(spark, root, CommitMode.Manifest)
+    val wh = new Warehouse(spark, root)
     spark.conf.set("graft.zorder.partitions", "16")
     try {
       val rz = Relation("db", "sch", "t_z")
@@ -115,7 +115,7 @@ class ZOrderSpec extends AnyFunSuite {
     // read leg constant-ish) extrapolate to 100 TB.
     spark.conf.set("graft.zorder.partitions", "16")
     val root = Files.createTempDirectory("graft_zorder10x").toString
-    val wh = new Warehouse(spark, root, CommitMode.Manifest)
+    val wh = new Warehouse(spark, root)
     try {
       for ((side, tag) <- Seq((64, "x1"), (202, "x10"))) {
         val grid = (for (x <- 0 until side; y <- 0 until side)
@@ -138,7 +138,7 @@ class ZOrderSpec extends AnyFunSuite {
   test("compactTable --zorder: appends re-cluster into a skippable layout") {
     val s = spark; import s.implicits._
     val wh = new Warehouse(spark,
-      Files.createTempDirectory("graft_zcompact").toString, CommitMode.Manifest)
+      Files.createTempDirectory("graft_zcompact").toString)
     val r = Relation("db", "sch", "t_stream_z")
     // streamed appends arrive in TIME order: every batch holds the full
     // x/y domain, so pre-compaction nothing can skip on content keys
@@ -181,7 +181,7 @@ class ZOrderSpec extends AnyFunSuite {
 
     // partitioned + zorderCols: partition dirs intact, rows intact
     val root = Files.createTempDirectory("graft_zorder_part").toString
-    val wh = new Warehouse(spark, root, CommitMode.Manifest)
+    val wh = new Warehouse(spark, root)
     val r = Relation("db", "sch", "t_zp")
     val part = df.withColumn("side", when($"a" % 2 === 0, "even").otherwise("odd"))
     wh.writeAtomic(part, r, partitionCols = Seq("side"), zorderCols = Seq("a", "b"))
