@@ -2982,8 +2982,8 @@ object Compiler {
 
   /** Parse a `{% snapshot %}` block's `{{ config(...) }}` into a kv map
     * with list values flattened `|`-separated (`check_cols=['a','b']` →
-    * `"a|b"`) — the dbt-native spelling of the snapshot config the
-    * `.conf` loader takes as `a|b` directly.
+    * `"a|b"`), the form the loader splits into a snapshot's unique
+    * key and check columns.
     */
   def parseSnapshotConfig(rawSql: String): Map[String, String] =
     configRe.findFirstMatchIn(rawSql).map(_.group(1)).map { body =>

@@ -173,7 +173,7 @@ final case class ModelConfig(
     // (the swap/commit never happens).
     notNull: Seq[String] = Nil,
     // B37 persist_docs: when true, the model's descriptions
-    // (descriptions.conf) are emitted as COMMENT clauses in the
+    // (schema.yml `description:`) are emitted as COMMENT clauses in the
     // external DDL export — the dbt `persist_docs: {relation: true,
     // columns: true}` analogue over a catalog-less warehouse (the docs
     // catalog itself always carries descriptions regardless).

@@ -15,6 +15,19 @@ object OrchestratorQueries {
   private def freshRoot(): String =
     Files.createTempDirectory("graft_engine_wh").toString
 
+  /** A `sources.yml` declaring one TPC-H table of corpus `d` as source
+    * `tpch.<table>`.
+    */
+  private def tpchSourceYml(table: String, d: String): String =
+    s"""version: 2
+       |sources:
+       |  - name: tpch
+       |    tables:
+       |      - name: $table
+       |        meta:
+       |          external_location: $d/$table.parquet
+       |""".stripMargin
+
   /** Chained build: two sources → a VIEW model → a TABLE model over
     * `ref()`, compiled, DAG-scheduled, materialized, then read back.
     */
@@ -232,10 +245,10 @@ object OrchestratorQueries {
     */
   def packageMacros(s: SparkSession, d: String): DataFrame = {
     val proj = Files.createTempDirectory("graft_pkg_proj")
-    Files.writeString(proj.resolve("project.conf"), "name=pkg_demo\n")
-    Files.writeString(proj.resolve("sources.conf"),
-      s"tpch part $d/part.parquet\n")
+    Files.writeString(proj.resolve("dbt_project.yml"), "name: pkg_demo\n")
     Files.createDirectories(proj.resolve("models"))
+    Files.writeString(proj.resolve("models").resolve("sources.yml"),
+      tpchSourceYml("part", d))
     Files.writeString(proj.resolve("models").resolve("part_buckets.sql"),
       """SELECT p_partkey,
         |  {{ bucket(p_size, 10) }} AS size_bucket,
@@ -423,10 +436,10 @@ object OrchestratorQueries {
     */
   def adapterDispatch(s: SparkSession, d: String): DataFrame = {
     val proj = Files.createTempDirectory("graft_dispatch_proj")
-    Files.writeString(proj.resolve("project.conf"), "name=dispatch_demo\n")
-    Files.writeString(proj.resolve("sources.conf"),
-      s"tpch orders $d/orders.parquet\n")
+    Files.writeString(proj.resolve("dbt_project.yml"), "name: dispatch_demo\n")
     Files.createDirectories(proj.resolve("models"))
+    Files.writeString(proj.resolve("models").resolve("sources.yml"),
+      tpchSourceYml("orders", d))
     Files.writeString(proj.resolve("models").resolve("priced.sql"),
       """SELECT o_orderkey,
         |  {{ fmt.money(o_totalprice) }} AS price_2dp,
@@ -943,15 +956,7 @@ object OrchestratorQueries {
         |      - v: 2
         |        defined_in: status_rev_next
         |""".stripMargin)
-    put("models/sources.yml",
-      s"""version: 2
-         |sources:
-         |  - name: tpch
-         |    tables:
-         |      - name: orders
-         |        meta:
-         |          external_location: $d/orders.parquet
-         |""".stripMargin)
+    put("models/sources.yml", tpchSourceYml("orders", d))
     val (project, _) = ProjectLoader.load(proj.toString)
     require(project.models.map(_.name).toSet ==
       Set("status_rev_v1", "status_rev_v2", "report"),
@@ -1046,15 +1051,7 @@ object OrchestratorQueries {
         |              severity: warn
         |              store_failures: true
         |""".stripMargin)
-    put("models/sources.yml",
-      s"""version: 2
-         |sources:
-         |  - name: tpch
-         |    tables:
-         |      - name: orders
-         |        meta:
-         |          external_location: $d/orders.parquet
-         |""".stripMargin)
+    put("models/sources.yml", tpchSourceYml("orders", d))
     val (project, _) = ProjectLoader.load(proj.toString)
     val engine = new Engine(s, project, Target(freshRoot(), threads = 2))
     val (nodes, testResults) = engine.build()
@@ -1077,7 +1074,7 @@ object OrchestratorQueries {
     * project with dbt_project.yml (+materialized config tree, vars),
     * version-2 sources.yml (`meta: external_location` — the public
     * dbt-duckdb convention) and schema.yml (per-model config override)
-    * loads through DbtProjectLoader and builds: the staging model
+    * loads through ProjectLoader and builds: the staging model
     * materializes as a table (schema.yml wins), the mart as a view
     * (tree default), refs inline across them.
     */
@@ -1108,15 +1105,7 @@ object OrchestratorQueries {
         |  round(sum(o_totalprice), 2) AS revenue
         |FROM {{ ref('stg_big_orders') }}
         |GROUP BY o_orderstatus""".stripMargin)
-    put("models/sources.yml",
-      s"""version: 2
-         |sources:
-         |  - name: tpch
-         |    tables:
-         |      - name: orders
-         |        meta:
-         |          external_location: $d/orders.parquet
-         |""".stripMargin)
+    put("models/sources.yml", tpchSourceYml("orders", d))
     val (project, _) = ProjectLoader.load(proj.toString)
     require(project.models.find(_.name == "status_revenue")
       .exists(_.config.materialized == "view"), "tree default must apply")

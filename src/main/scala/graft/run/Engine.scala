@@ -105,7 +105,7 @@ final case class SnapshotDef(name: String, rawSql: String, keys: Seq[String],
 /** `relationships` test target (reference schema.yml
   * `relationships: {to: ref('parent'), field: pk}` @199544): the parent is
   * a MODEL NAME resolved at run time through `Engine.readModel`, so
-  * declarative projects (tests.conf) can express referential integrity
+  * declarative projects (schema.yml) can express referential integrity
   * without a DataFrame in hand.
   */
 final case class RelationshipDef(parentModel: String, fk: String, pk: String)
@@ -225,8 +225,8 @@ final case class Project(name: String,
                          // analysis files (compiled, never materialized;
                          // ModelDef reused for its name+rawSql shape)
                          analyses: Seq[ModelDef] = Nil,
-                         // dbt description docs (schema.yml `description:`
-                         // analogue, descriptions.conf): key `model` or
+                         // dbt description docs (schema.yml
+                         // `description:`): key `model` or
                          // `model.column` -> text; always surfaced in the
                          // docs catalog, and emitted as DDL COMMENTs for
                          // models with config persist_docs='true' (B37)
@@ -2122,33 +2122,24 @@ final class Engine(spark: SparkSession, project0: Project, target: Target) {
   }
 
   // --------------------------------------------------------- run artifacts
-  /** `run_results.json` analogue: one entry per node and test with its
-    * status. The artifact is what `dbt retry` keys off — write it after
-    * every [[build]] you may want to resume.
-    */
-  def writeRunResults(path: String, nodes: Seq[Dag.NodeResult],
-                      tests: Seq[TestResult]): Unit = {
-    def q(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-    val entries =
-      nodes.map(n =>
-        s"""{${q("name")}: ${q(n.name)}, ${q("kind")}: ${q("node")}, ${q("status")}: ${q(n.status)}}""") ++
-      tests.map(t =>
-        s"""{${q("name")}: ${q(t.name)}, ${q("kind")}: ${q("test")}, ${q("status")}: ${q(t.status)}, ${q("model")}: ${q(t.model)}}""")
-    Files.writeString(Paths.get(path),
-      s"""{"results": [${entries.mkString(", ")}]}""")
-    ()
-  }
-
-  /** `dbt retry` selection: the nodes a recorded run errored on or
+  /** `dbt retry` selection from a v6 `run_results.json`
+    * ([[writeDbtRunResults]]): the nodes a recorded run errored on or
     * skipped (successes never re-run). Because [[Dag.run]] marks a
     * failed node's blocked children `skipped`, error+skipped IS the
     * failure's downstream cone; a test failure throws inside its model's
-    * node, so the model re-runs — and its tests with it.
+    * node, so the model re-runs — and its tests with it. Each
+    * `unique_id` maps back to a node name through [[uniqueIdOf]]; ids of
+    * tests, and of nodes this project no longer has, select nothing.
     */
   def retrySelection(path: String): Set[String] = {
-    val re = """\{"name": "([^"]+)", "kind": "node", "status": "([^"]+)"""".r
-    re.findAllMatchIn(Files.readString(Paths.get(path)))
-      .collect { case m if m.group(2) != "success" => m.group(1) }.toSet
+    val byId = (project.seeds.map(_.name) ++ project.models.map(_.name) ++
+      project.snapshots.map(_.name)).map(n => uniqueIdOf(n) -> n).toMap
+    val results = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(new java.io.File(path)).path("results")
+    import scala.jdk.CollectionConverters._
+    results.elements().asScala
+      .filter(r => Set("error", "skipped")(r.path("status").asText))
+      .flatMap(r => byId.get(r.path("unique_id").asText)).toSet
   }
 
   /** [[build]] of a failed run's retry set. No-op (empty build) when the
@@ -2244,7 +2235,7 @@ final class Engine(spark: SparkSession, project0: Project, target: Target) {
           }.mkString("\nUNION ALL\n"))
       }
     // B37 persist_docs: a model configured persist_docs='true' carries
-    // its descriptions.conf relation description as a COMMENT clause
+    // its schema.yml relation description as a COMMENT clause
     // (column comments stay in the docs catalog — the export's column
     // order is the slice files', which a column list must not re-pin)
     val persist: Map[String, Boolean] =
@@ -2631,8 +2622,7 @@ final class Engine(spark: SparkSession, project0: Project, target: Target) {
     * unique_id with dbt's status vocabulary (node success/error/skipped;
     * test pass/fail/warn/error), so CI tooling that parses dbt run
     * results (retry filters, status dashboards) reads graft runs
-    * directly. The graft-shaped artifact ([[writeRunResults]]) remains
-    * the `graft retry` state format.
+    * directly; [[retrySelection]] reads it back for `graft retry`.
     */
   def writeDbtRunResults(path: String, nodes: Seq[Dag.NodeResult],
                          tests: Seq[TestResult],

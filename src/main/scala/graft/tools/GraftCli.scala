@@ -9,7 +9,7 @@ import graft.run.{Engine, ProjectLoader, StateSelector, Target}
   * {{{
   * runMain graft.tools.GraftCli <projectDir> <warehouseRoot> <command> [flags]
   *   build            seeds+models+snapshots+tests in DAG order
-  *                    (--run-results p writes the run_results artifact)
+  *                    (--run-results p writes dbt's run_results.json v6)
   *   retry            re-run a recorded run's error+skipped cone
   *                    (--run-results p, written by a prior build)
   *   run-operation    invoke a user macro standalone: run-operation <name>
@@ -64,15 +64,14 @@ import graft.run.{Engine, ProjectLoader, StateSelector, Target}
   *                      +model/model+ closures (optional depth 2+m/m+1);
   *                      space-separated terms union, commas intersect;
   *                      repeatable (repeats union)
-  *   --selector <name>  run a NAMED selector from selectors.conf (dbt
-  *                      selectors.yml); mutually exclusive with --select
-  *   --target <name>    named target from project.conf
-  *                      `target.<name>.<key>=` lines OR a dbt-native
+  *   --selector <name>  run a NAMED selector from selectors.yml;
+  *                      mutually exclusive with --select
+  *   --target <name>    named output of the project's profile in
   *                      profiles.yml (database/schema/threads); default
-  *                      from `target=`
+  *                      from the profile's `target:`
   *   --profiles-dir <d> where to look for profiles.yml first (dbt's
   *                      --profiles-dir; falls back to the project dir)
-  *   --threads <n>      node-pool width override (wins over target/conf)
+  *   --threads <n>      node-pool width override (wins over the target)
   *   --exclude <sel>    subtract these nodes from the selection (same
   *                      grammar; applies to --state selection too)
   *   --state <manifest> slim CI: select state:modified+ vs that manifest
@@ -84,7 +83,7 @@ import graft.run.{Engine, ProjectLoader, StateSelector, Target}
   *   --manifest <path>  where compile writes the manifest
   *   --env K=V          env_var bindings (repeatable)
   *   --vars K=V         var() overrides (repeatable; wins over
-  *                      project.conf `var.<name>=` lines); also accepts
+  *                      dbt_project.yml `vars:`); also accepts
   *                      dbt's dict spelling --vars '{key: value, k: v}'
   * }}}
   */
@@ -108,7 +107,7 @@ object GraftCli {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    val (project, conf0) = ProjectLoader.load(projectDir)
+    val (project, projectConf) = ProjectLoader.load(projectDir)
     val env = flags.getOrElse("env", Nil)
       .map(_.split("=", 2)).collect { case Array(k, v) => k -> v }.toMap
     // --vars accepts both the repeated k=v spelling and dbt's YAML
@@ -139,14 +138,13 @@ object GraftCli {
           s"--vars '$v' must be k=v or a '{key: value}' dict")
       }
     }.toMap
-    // named targets from either surface: project.conf `target.<n>.<k>=`
-    // lines, or a dbt-native profiles.yml (--profiles-dir <dir>, then
-    // the project dir; the reference declares TWO targets — `ci` and
+    // named targets from profiles.yml (--profiles-dir <dir>, then the
+    // project dir; the reference declares TWO targets — `ci` and
     // `ci-with-pr`, test_profiles/profiles.yml:2,16). The active target
-    // is --target, else project.conf/profiles.yml `target=`.
+    // is --target, else the profile's `target:`.
     val conf = profilesConf(projectDir,
       flags.get("profiles-dir").flatMap(_.headOption),
-      conf0.get("profile")) ++ conf0
+      projectConf.get("profile"))
     val tc = resolveTargetConf(conf,
       flags.get("target").flatMap(_.headOption))
     val target = Target(whRoot,
@@ -155,7 +153,7 @@ object GraftCli {
       // {{ target.name }}: the active target's name (dbt's env switch)
       name = flags.get("target").flatMap(_.headOption)
         .orElse(conf.get("target")).getOrElse("default"),
-      // --threads wins over target/flat conf (dbt's global flag)
+      // --threads wins over the target (dbt's global flag)
       threads = flags.get("threads").flatMap(_.headOption)
         .orElse(tc("threads")).getOrElse("4").toInt,
       env = env,
@@ -213,18 +211,11 @@ object GraftCli {
           n.error.map(e => s"  ($e)").getOrElse("")))
       tests.foreach(t => println(
         f"${t.status.toUpperCase}%-8s test:${t.name}%-27s ${t.failures} failures"))
-      // run_results.json analogue (feeds `retry`), plus dbt's published
-      // run-results v6 shape alongside for external CI tooling. Never
-      // overwrite the retry artifact: if the user's own path already IS
-      // the sibling name, pick a distinct one
+      // dbt's run_results.json v6: read by `retry` and by external CI
+      // tooling alike
       flags.get("run-results").flatMap(_.headOption).foreach { p =>
-        engine.writeRunResults(p, nodes, tests)
-        val abs = java.nio.file.Paths.get(p).toAbsolutePath
-        val sibling = abs.getParent.resolve("dbt_run_results.json")
-        val dbtP = (if (sibling == abs)
-          abs.getParent.resolve("dbt_run_results_v6.json") else sibling).toString
-        engine.writeDbtRunResults(dbtP, nodes, tests)
-        println(s"run results written: $p (+ $dbtP)")
+        engine.writeDbtRunResults(p, nodes, tests)
+        println(s"run results written: $p")
       }
       if (nodes.exists(_.status == "error")) sys.exit(1)
     }
@@ -655,27 +646,16 @@ object GraftCli {
     }
   }
 
-  /** profiles.yml-style target resolution: a `target.<name>.<key>=`
-    * line overrides the flat `<key>=` line when `<name>` is the active
-    * target (--target flag, else project.conf `target=`, else none —
-    * flat keys only). An explicitly requested target with no
-    * `target.<name>.*` keys fails loudly (dbt's unknown-target error);
-    * the project-conf default is allowed to be keyless (flat keys ARE
-    * its profile).
-    */
-  /** dbt-native `profiles.yml` ingestion (the reference ships
+  /** dbt `profiles.yml` ingestion (the reference ships
     * `test_profiles/profiles.yml:1` with targets `ci` and `ci-with-pr`):
-    * the selected profile's `outputs` become the same
-    * `target.<name>.<key>` entries project.conf would carry, so
-    * [[resolveTargetConf]] works unchanged. Key mapping:
+    * the selected profile's `outputs` become `target.<name>.<key>`
+    * entries for [[resolveTargetConf]]. Key mapping:
     * `dataset`/`schema` → schema (jinja like
     * `dbt_ci_pr_{{ env_var('PR_NUMBER') }}` stays templated —
     * `Target.resolvedSchema` resolves it against the run env),
     * `project`/`database` → database, `threads` → threads; the
     * profile's `target:` key is the default target name. Searched in
-    * `--profiles-dir`, then the project dir. project.conf entries win
-    * over profiles.yml on a key clash (the engine-native format is the
-    * override surface).
+    * `--profiles-dir`, then the project dir.
     */
   private[graft] def profilesConf(projectDir: String,
       profilesDir: Option[String],
@@ -718,15 +698,21 @@ object GraftCli {
     }
   }
 
+  /** The active target's settings: the `target.<name>.<key>` entry of
+    * [[profilesConf]], where `<name>` is --target, else the profile's
+    * `target:`, else none (every key unset: the engine defaults). An
+    * explicitly requested target the profile does not declare fails
+    * loudly (dbt's unknown-target error).
+    */
   private[graft] def resolveTargetConf(conf: Map[String, String],
                                        requested: Option[String])
       : String => Option[String] = {
     requested.foreach { t =>
       require(conf.keys.exists(_.startsWith(s"target.$t.")),
-        s"unknown target '$t' (no target.$t.* keys in project.conf)")
+        s"unknown target '$t' (profiles.yml declares no output '$t')")
     }
     val name = requested.orElse(conf.get("target"))
-    k => name.flatMap(t => conf.get(s"target.$t.$k")).orElse(conf.get(k))
+    k => name.flatMap(t => conf.get(s"target.$t.$k"))
   }
 
   private def parseArgs(args: List[String])

@@ -290,7 +290,7 @@ class CustomMaterializationSpec extends AnyFunSuite {
          |        meta:
          |          external_location: $sf/nation.parquet
          |""".stripMargin)
-    val (p, _) = DbtProjectLoader.load(dir.toString)
+    val (p, _) = ProjectLoader.load(dir.toString)
     assert(p.materializations.contains("plain_copy"))
     val e = new Engine(spark, p, Target(root()))
     assert(e.build()._1.forall(_.status == "success"))

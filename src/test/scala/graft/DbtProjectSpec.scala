@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.run.{Engine, ProjectLoader, Target}
 
-/** dbt-NATIVE project ingestion ([[graft.run.DbtProjectLoader]]): a
+/** dbt-NATIVE project ingestion ([[graft.run.ProjectLoader]]): a
   * directory with dbt_project.yml loads and BUILDS — including the
   * reference repo's own checkout, whose flagship model runs verbatim
   * against a parquet twin of its BigQuery source.
@@ -910,6 +910,44 @@ class DbtProjectSpec extends AnyFunSuite {
     put(proj, "tests/orphan.sql", "SELECT 1 AS bad WHERE 1 = 0")
     val e3 = intercept[IllegalArgumentException](ProjectLoader.load(proj.toString))
     assert(e3.getMessage.contains("orphan"), e3.getMessage)
+    Files.delete(proj.resolve("tests/orphan.sql"))
+    // a malformed integer refuses, naming its key, instead of silently
+    // dropping the limit / the freshness check / the pinned version
+    def refuses(yml: String, key: String): Unit = {
+      put(proj, "models/schema.yml", "version: 2\n" + yml)
+      val e = intercept[IllegalArgumentException](ProjectLoader.load(proj.toString))
+      assert(e.getMessage.contains(s"'$key'"), e.getMessage)
+    }
+    refuses(
+      """models:
+        |  - name: m
+        |    columns:
+        |      - name: one
+        |        tests:
+        |          - unique:
+        |              limit: ten
+        |""".stripMargin, "limit")
+    refuses(
+      s"""sources:
+         |  - name: tpch
+         |    tables:
+         |      - name: orders
+         |        meta:
+         |          external_location: $sf/orders.parquet
+         |        loaded_at_field: o_orderdate
+         |        freshness:
+         |          warn_after: {count: a day, period: hour}
+         |""".stripMargin, "count")
+    put(proj, "models/m_v2.sql", "SELECT 2 AS one")
+    refuses(
+      """models:
+        |  - name: m
+        |    latest_version: two
+        |    versions:
+        |      - v: 1
+        |        defined_in: m
+        |      - v: 2
+        |""".stripMargin, "latest_version")
   }
 
   test("model hooks load from the +pre-hook tree, schema.yml config, and inline config()") {

@@ -645,7 +645,14 @@ class OrchestratorSpec extends AnyFunSuite {
     assert(n1.find(_.name == "nations").get.status == "error")
     assert(n1.find(_.name == "by_region").get.status == "skipped")
     val rr = java.nio.file.Files.createTempFile("graft_rr", ".json").toString
-    e1.writeRunResults(rr, n1, t1)
+    e1.writeDbtRunResults(rr, n1, t1)
+    // the v6 file names nodes by unique_id and carries dbt's statuses
+    import scala.jdk.CollectionConverters._
+    val recorded = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(new java.io.File(rr)).path("results").elements().asScala
+      .map(r => r.path("unique_id").asText -> r.path("status").asText).toMap
+    assert(recorded("model.p.nations") == "error")
+    assert(recorded("model.p.by_region") == "skipped")
     // the fixed project retries exactly the error+skipped cone
     val e2 = new Engine(spark, baseProject, Target(wh))
     assert(e2.retrySelection(rr) == Set("nations", "by_region"))
@@ -655,7 +662,7 @@ class OrchestratorSpec extends AnyFunSuite {
     assert(e2.readModel("by_region").count() == 5)
     // a fully green run retries nothing
     val rr2 = java.nio.file.Files.createTempFile("graft_rr2", ".json").toString
-    e2.writeRunResults(rr2, n2, Nil)
+    e2.writeDbtRunResults(rr2, n2, Nil)
     assert(e2.retrySelection(rr2).isEmpty)
   }
 
@@ -1670,14 +1677,23 @@ class OrchestratorSpec extends AnyFunSuite {
       Files.createDirectories(p.getParent)
       Files.writeString(p, text); ()
     }
-    put("project.conf", "name=docs_ddl")
-    put("sources.conf", s"tpch nation $sf/nation.parquet")
+    put("dbt_project.yml", "name: docs_ddl\n")
+    put("models/sources.yml",
+      s"""version: 2
+         |sources:
+         |  - name: tpch
+         |    tables:
+         |      - name: nation
+         |        meta:
+         |          external_location: $sf/nation.parquet
+         |""".stripMargin)
     put("models/doc_nations.sql",
       "{{ config(persist_docs='true') }} " +
         "SELECT n_nationkey, n_name FROM {{ source('tpch','nation') }}")
     put("models/doc_nations.md",
       "{% docs nations_doc %}All 25 TPC-H nations{% enddocs %}")
-    put("descriptions.conf", "doc_nations '{{ doc(''nations_doc'') }}'\n")
+    put("models/schema.yml", "version: 2\nmodels:\n  - name: doc_nations\n" +
+      "    description: \"{{ doc('nations_doc') }}\"\n")
     val (p, _) = ProjectLoader.load(proj.toString)
     val e = new Engine(spark, p,
       Target(root(), threads = 1))
@@ -1916,13 +1932,44 @@ class OrchestratorSpec extends AnyFunSuite {
     assert(restricted.contains("\"source:tpch.nation\" -> \"nations\""))
   }
 
-  test("metrics.conf loads through ProjectLoader (demo project)") {
+  test("metrics load from schema.yml with their filters (demo project)") {
     val (p, _) = ProjectLoader.load("examples/demo_project")
     val names = p.metrics.map(_.name).toSet
     assert(names == Set("revenue", "order_count", "big_revenue"))
     val big = p.metrics.find(_.name == "big_revenue").get
-    assert(big.filter.contains("o_totalprice > 100000"))
-    assert(big.calculation == "sum" && big.timeDim == "o_orderdate")
+    assert(big == MetricDef("big_revenue", "orders_incr", "sum",
+      "o_totalprice", "o_orderdate", Nil, Some("o_totalprice > 100000")))
+    assert(p.metrics.find(_.name == "order_count").get.expression == "1")
+    // several filters join with AND; a required key names itself
+    val dir = Files.createTempDirectory("graft_metrics")
+    def metric(extra: String): Unit = {
+      Files.writeString(dir.resolve("dbt_project.yml"), "name: mx\n")
+      Files.createDirectories(dir.resolve("models"))
+      Files.writeString(dir.resolve("models").resolve("metrics.yml"),
+        s"""version: 2
+           |metrics:
+           |  - name: open_revenue
+           |    model: ref('orders')
+           |    calculation_method: sum
+           |    expression: o_totalprice
+           |    dimensions: [o_orderstatus]
+           |    filters:
+           |      - field: o_orderstatus
+           |        operator: '='
+           |        value: "'O'"
+           |      - field: o_totalprice
+           |        operator: '>'
+           |        value: '0'
+           |$extra""".stripMargin)
+      ()
+    }
+    metric("    timestamp: o_orderdate\n")
+    val Seq(m) = ProjectLoader.load(dir.toString)._1.metrics
+    assert(m.model == "orders" && m.dims == Seq("o_orderstatus"))
+    assert(m.filter.contains("o_orderstatus = 'O' AND o_totalprice > 0"))
+    metric("")
+    val err = intercept[IllegalArgumentException](ProjectLoader.load(dir.toString))
+    assert(err.getMessage.contains("'timestamp' is required"), err.getMessage)
   }
 
   test("roundtrip sweep ages out leaked temp symlinks, spares the live state") {

@@ -1,15 +1,19 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import graft.run.{Engine, ProjectLoader, Target}
+import graft.run.{DependencyDef, Engine, ProjectLoader, Target}
+import graft.tools.GraftCli
 
 /** The on-disk demo project must load and build end-to-end — this is the
   * repo's user-facing example (examples/demo_project) and the regression
   * net for the directory loader + CLI path.
   */
 class ProjectLoaderSpec extends AnyFunSuite {
+  val sf = "/root/testdata/sf0.001"
+  val demo = "examples/demo_project"
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
     .config("spark.sql.shuffle.partitions", "4")
@@ -17,8 +21,26 @@ class ProjectLoaderSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
+  private def put(dir: Path, name: String, text: String): Unit = {
+    val p = dir.resolve(name)
+    Files.createDirectories(p.getParent)
+    Files.writeString(p, text); ()
+  }
+
+  private def tpchSources(tables: String*): String =
+    "version: 2\nsources:\n  - name: tpch\n    tables:\n" + tables.map(t =>
+      s"      - name: $t\n        meta:\n" +
+        s"          external_location: $sf/$t.parquet\n").mkString
+
+  /** stdout of one CLI invocation. */
+  private def cli(args: String*): String = {
+    val buf = new java.io.ByteArrayOutputStream()
+    Console.withOut(buf)(GraftCli.main(args.toArray))
+    buf.toString("UTF-8")
+  }
+
   test("demo project loads, builds, and chains view+ephemeral+incremental+snapshot") {
-    val (project, conf) = ProjectLoader.load("examples/demo_project")
+    val (project, conf) = ProjectLoader.load(demo)
     assert(project.name == "demo_ci_spark")
     assert(project.models.map(_.name).toSet ==
       Set("stg_nations", "eph_regions", "nation_region", "orders_incr",
@@ -27,44 +49,50 @@ class ProjectLoaderSpec extends AnyFunSuite {
     // package macros (packages/demo_utils): namespaced + bare aliases
     assert(project.macros.contains("demo_utils.cents"))
     assert(project.macros.contains("cents"))
-    // descriptions.conf docs at relation + column grain
+    // schema.yml descriptions at relation + column grain
     assert(project.descriptions("nation_region.r_name").nonEmpty)
     assert(project.descriptions("region_counts").nonEmpty)
-    // selectors.conf: named compositions of the selector grammar
+    // selectors.yml: named compositions of the selector grammar
     assert(project.selectors.map(_.name) == Seq("mart_closure", "non_staging"))
     assert(project.selectors.head.include == "+tag:mart")
     assert(project.selectors(1).exclude == "tag:staging")
     // analyses load but are NOT models (never scheduled/materialized)
     assert(project.analyses.map(_.name) == Seq("region_share"))
-    // profiles.yml-style named targets resolve with override precedence
-    val tc = graft.tools.GraftCli.resolveTargetConf(conf, Some("ci_pr"))
+    // profiles.yml named targets: the profile's default and ci_pr
+    val profiles = GraftCli.profilesConf(demo, None, conf.get("profile"))
+    val tc = GraftCli.resolveTargetConf(profiles, Some("ci_pr"))
     assert(tc("threads").contains("2"))
     assert(tc("schema").contains("pr_{{ env_var('PR_NUMBER') }}"))
-    assert(tc("database").contains("analytics")) // flat-key fallthrough
-    val tcFlat = graft.tools.GraftCli.resolveTargetConf(conf, None)
-    assert(tcFlat("schema").contains("main"))
+    assert(tc("database").contains("analytics"))
+    val tcDefault = GraftCli.resolveTargetConf(profiles, None)
+    assert(tcDefault("schema").contains("main"))
     intercept[IllegalArgumentException] {
-      graft.tools.GraftCli.resolveTargetConf(conf, Some("nope"))
+      GraftCli.resolveTargetConf(profiles, Some("nope"))
     }
     assert(project.seeds.map(_.name) == Seq("priorities"))
     assert(project.seeds.head.columnTypes == Map("rank" -> "bigint"))
     assert(project.snapshots.map(_.name) == Seq("orders_snapshot"))
     assert(project.tests.size == 12)
     assert(project.tests.exists(_.relationship.isDefined))
-    // project.conf `var.` lines become project vars (used by stg_nations)
+    // dbt_project.yml vars (used by stg_nations)
     assert(project.vars == Map("min_key" -> "0"))
-    // exposures.conf: declared consumer with deps/owner/url
+    // sources.yml: the orders freshness thresholds
+    val orders = project.sources.find(_.tableName == "orders").get
+    assert(orders.loadedAtField.contains("o_orderdate") &&
+      orders.warnAfterH.contains(24) && orders.errorAfterH.contains(72))
+    // exposures: declared consumer with deps/owner/url
     assert(project.exposures.map(_.name) == Seq("region_dashboard"))
     assert(project.exposures.head.dependsOn == Seq("region_counts"))
     assert(project.exposures.head.url == "https://dash.example/regions")
 
     val engine = new Engine(spark, project,
       Target(Files.createTempDirectory("graft_demo").toString,
-        threads = conf("threads").toInt))
+        threads = tcDefault("threads").get.toInt))
     val (nodes, tests) = engine.build()
     assert(nodes.map(_.status).forall(_ == "success"),
       nodes.filter(_.status != "success").toString)
-    assert(tests.map(_.status).forall(_ == "pass"))
+    assert(tests.size == 12 && tests.map(_.status).forall(_ == "pass"),
+      tests.toString)
     // ephemeral inlined + view joined: 25 nations
     assert(engine.readModel("nation_region").count() == 25)
     // the materialized_view model: one row per region, maintained + served
@@ -98,29 +126,39 @@ class ProjectLoaderSpec extends AnyFunSuite {
       engine.readModel("orders_incr").count())
   }
 
-  test("relationships test from tests.conf: pass and fail in one build") {
+  test("relationships test from schema.yml: pass and fail in one build") {
     val dir = Files.createTempDirectory("graft_rel")
-    def put(name: String, text: String): Unit = {
-      val p = dir.resolve(name)
-      Files.createDirectories(p.getParent)
-      Files.writeString(p, text); ()
-    }
-    put("project.conf", "name=reldemo\nthreads=1")
-    put("sources.conf",
-      "tpch nation /root/testdata/sf0.001/nation.parquet\n" +
-        "tpch region /root/testdata/sf0.001/region.parquet")
-    put("models/parents.sql",
+    put(dir, "dbt_project.yml", "name: reldemo\n")
+    put(dir, "models/sources.yml", tpchSources("nation", "region"))
+    put(dir, "models/parents.sql",
       "SELECT r_regionkey FROM {{ source('tpch', 'region') }}")
-    put("models/child_ok.sql",
+    put(dir, "models/child_ok.sql",
       "SELECT n_nationkey, n_regionkey FROM {{ source('tpch', 'nation') }}")
-    put("models/child_bad.sql",
+    put(dir, "models/child_bad.sql",
       "SELECT n_nationkey, n_regionkey + 100 AS fk FROM {{ source('tpch', 'nation') }}")
     // neither child ref()s parents — the ordering edge must come from the
     // relationships declaration itself
-    put("tests.conf",
-      "relationships child_ok n_regionkey parents r_regionkey\n" +
-        "relationships child_bad fk parents r_regionkey\n" +
-        "relationships child_ok n_regionkey source:tpch.region r_regionkey")
+    put(dir, "models/schema.yml",
+      """version: 2
+        |models:
+        |  - name: child_ok
+        |    columns:
+        |      - name: n_regionkey
+        |        tests:
+        |          - relationships:
+        |              to: ref('parents')
+        |              field: r_regionkey
+        |          - relationships:
+        |              to: source('tpch', 'region')
+        |              field: r_regionkey
+        |  - name: child_bad
+        |    columns:
+        |      - name: fk
+        |        tests:
+        |          - relationships:
+        |              to: ref('parents')
+        |              field: r_regionkey
+        |""".stripMargin)
     val (project, _) = ProjectLoader.load(dir.toString)
     val engine = new Engine(spark, project,
       Target(Files.createTempDirectory("graft_rel_wh").toString, threads = 1))
@@ -138,74 +176,134 @@ class ProjectLoaderSpec extends AnyFunSuite {
       bad.head.failures == 25L)
   }
 
-  test("tests.conf trailing k=v tokens become test config") {
+  test("schema.yml test config keys become test config") {
     val dir = Files.createTempDirectory("graft_tcfg")
-    Files.writeString(dir.resolve("project.conf"), "name=tcfg")
-    Files.createDirectories(dir.resolve("models"))
-    Files.writeString(dir.resolve("models").resolve("m.sql"), "SELECT 1 AS a")
-    Files.writeString(dir.resolve("tests.conf"),
-      "unique m a severity=warn where=a~>~0 limit=3 store_failures=true\n" +
-        "not_null m a")
+    put(dir, "dbt_project.yml", "name: tcfg\n")
+    put(dir, "models/m.sql", "SELECT 1 AS a")
+    put(dir, "models/schema.yml",
+      """version: 2
+        |models:
+        |  - name: m
+        |    columns:
+        |      - name: a
+        |        tests:
+        |          - unique:
+        |              severity: warn
+        |              where: a > 0
+        |              limit: 3
+        |              store_failures: true
+        |          - not_null
+        |""".stripMargin)
     val (project, _) = ProjectLoader.load(dir.toString)
-    val t0 = project.tests.head
+    val Seq(t0, t1) = project.tests
     assert(t0.severity == "warn")
     assert(t0.where.contains("a > 0"))
     assert(t0.limit.contains(3))
     assert(t0.storeFailures)
-    val t1 = project.tests(1)
     assert(t1.severity == "error" && t1.where.isEmpty && t1.limit.isEmpty)
   }
 
   test("quoted config values keep spaces, literal '~' and quotes; warn_if parses") {
     val dir = Files.createTempDirectory("graft_quot")
-    Files.writeString(dir.resolve("project.conf"), "name=quot")
-    Files.createDirectories(dir.resolve("models"))
-    Files.writeString(dir.resolve("models").resolve("m.sql"), "SELECT 1 AS a")
-    Files.writeString(dir.resolve("tests.conf"),
-      // the where predicate contains a LITERAL '~' (regex match) and a
-      // quoted string with spaces — the old ~→space shorthand corrupted it
-      "unique m a where='a RLIKE ''x~y z''' warn_if='>10' error_if='>=100'\n")
+    put(dir, "dbt_project.yml", "name: quot\n")
+    put(dir, "models/m.sql", "SELECT 1 AS a")
+    // the where predicate contains a LITERAL '~' (regex match) and a
+    // quoted string with spaces
+    def schema(errorIf: String): Unit = put(dir, "models/schema.yml",
+      s"""version: 2
+         |models:
+         |  - name: m
+         |    columns:
+         |      - name: a
+         |        tests:
+         |          - unique:
+         |              where: "a RLIKE 'x~y z'"
+         |              config:
+         |                warn_if: '>10'
+         |                error_if: '$errorIf'
+         |""".stripMargin)
+    schema(">=100")
     val (project, _) = ProjectLoader.load(dir.toString)
     val t = project.tests.head
     assert(t.where.contains("a RLIKE 'x~y z'"))
     assert(t.warnIf.contains(">10"))
     assert(t.errorIf.contains(">=100"))
-    // malformed threshold fails at LOAD time
-    Files.writeString(dir.resolve("tests.conf"), "unique m a warn_if='pony'\n")
+    // a malformed threshold fails at LOAD time
+    schema("pony")
     assertThrows[IllegalArgumentException](ProjectLoader.load(dir.toString))
   }
 
-  test("sources.conf optional 7th token is a quoted freshness filter") {
-    val dir = Files.createTempDirectory("graft_srcf")
-    Files.writeString(dir.resolve("project.conf"), "name=srcf")
-    Files.writeString(dir.resolve("sources.conf"),
-      "tpch orders /root/testdata/sf0.001/orders.parquet o_orderdate 24 72" +
-        " 'o_orderstatus = ''O'''\n")
-    val (project, _) = ProjectLoader.load(dir.toString)
-    val s = project.sources.head
-    assert(s.loadedAtField.contains("o_orderdate"))
-    assert(s.filter.contains("o_orderstatus = 'O'"))
-  }
-
-  test("sources.conf format= and options= tokens declare non-parquet sources") {
+  test("sources.yml: external file_format and options declare non-parquet sources") {
     val dir = Files.createTempDirectory("graft_srcfmt")
-    Files.writeString(dir.resolve("project.conf"), "name=srcfmt")
-    Files.writeString(dir.resolve("sources.conf"),
-      "ext events /data/events_json format=json\n" +
-        "ext lookup /data/lookup_csv format=csv " +
-        "options=header:true,delimiter:; ts 24 72\n")
+    put(dir, "data/lookup.csv", "k;v\n1;a\n2;b\n")
+    put(dir, "data/events.json", "{\"e\": 1}\n")
+    put(dir, "dbt_project.yml", "name: srcfmt\n")
+    put(dir, "models/sources.yml",
+      s"""version: 2
+         |sources:
+         |  - name: ext
+         |    tables:
+         |      - name: events
+         |        external:
+         |          location: data/events.json
+         |          file_format: json
+         |      - name: lookup
+         |        external:
+         |          location: data/lookup.csv
+         |          file_format: csv
+         |          options:
+         |            header: 'true'
+         |            delimiter: ';'
+         |        loaded_at_field: ts
+         |        freshness:
+         |          warn_after: {count: 24, period: hour}
+         |""".stripMargin)
+    put(dir, "models/m.sql", "SELECT k, v FROM {{ source('ext', 'lookup') }}")
     val (project, _) = ProjectLoader.load(dir.toString)
     val j = project.sources.find(_.tableName == "events").get
     assert(j.format == "json" && j.options.isEmpty)
     val c = project.sources.find(_.tableName == "lookup").get
-    assert(c.format == "csv")
+    assert(c.format == "csv" && c.path == s"$dir/data/lookup.csv")
     assert(c.options == Map("header" -> "true", "delimiter" -> ";"))
-    // positional tokens still land after the k=v extraction
+    // freshness keys still land beside the reader options
     assert(c.loadedAtField.contains("ts") && c.warnAfterH.contains(24))
+    // the options reach the reader: two columns, not one 'k;v' column
+    val engine = new Engine(spark, project,
+      Target(Files.createTempDirectory("graft_srcfmt_wh").toString, threads = 1))
+    assert(engine.build()._1.forall(_.status == "success"))
+    val m = engine.readModel("m")
+    assert(m.columns.toSeq == Seq("k", "v"))
+    assert(m.collect().map(r => r.getString(0) -> r.getString(1)).toSet ==
+      Set("1" -> "a", "2" -> "b"))
+  }
+
+  test("sources.yml: a freshness filter is a quoted where clause") {
+    val dir = Files.createTempDirectory("graft_srcf")
+    put(dir, "dbt_project.yml", "name: srcf\n")
+    put(dir, "models/sources.yml",
+      s"""version: 2
+         |sources:
+         |  - name: tpch
+         |    tables:
+         |      - name: orders
+         |        meta:
+         |          external_location: $sf/orders.parquet
+         |        loaded_at_field: o_orderdate
+         |        freshness:
+         |          warn_after: {count: 24, period: hour}
+         |          error_after: {count: 72, period: hour}
+         |          filter: "o_orderstatus = 'O'"
+         |""".stripMargin)
+    val (project, _) = ProjectLoader.load(dir.toString)
+    val s = project.sources.head
+    assert(s.format == "parquet" && s.options.isEmpty)
+    assert(s.loadedAtField.contains("o_orderdate"))
+    assert(s.warnAfterH.contains(24) && s.errorAfterH.contains(72))
+    assert(s.filter.contains("o_orderstatus = 'O'"))
   }
 
   test("macros load from macros/*.sql and expand in demo models") {
-    val (project, _) = ProjectLoader.load("examples/demo_project")
+    val (project, _) = ProjectLoader.load(demo)
     assert(project.macros.contains("count_by"))
     val engine = new Engine(spark, project,
       Target(Files.createTempDirectory("graft_demo_mac").toString))
@@ -215,28 +313,40 @@ class ProjectLoaderSpec extends AnyFunSuite {
     assert(got.size == 5 && got.values.forall(_ == 5L), s"got $got")
     // duplicate macro names across files fail at load time
     val dir = Files.createTempDirectory("graft_dupm")
-    Files.writeString(dir.resolve("project.conf"), "name=dupm")
-    Files.createDirectories(dir.resolve("macros"))
-    Files.writeString(dir.resolve("macros").resolve("a.sql"),
-      "{% macro m1(x) %}{{ x }}{% endmacro %}")
-    Files.writeString(dir.resolve("macros").resolve("b.sql"),
-      "{% macro m1(x) %}{{ x }}{% endmacro %}")
+    put(dir, "dbt_project.yml", "name: dupm\n")
+    put(dir, "macros/a.sql", "{% macro m1(x) %}{{ x }}{% endmacro %}")
+    put(dir, "macros/b.sql", "{% macro m1(x) %}{{ x }}{% endmacro %}")
     assertThrows[IllegalArgumentException](ProjectLoader.load(dir.toString))
   }
 
-  test("CLI end-to-end: build writes both run-results shapes, docs writes dbt artifacts") {
+  test("CLI end-to-end: v6 run results feed retry; selector, target, docs") {
+    spark // the CLI adopts this session instead of starting its own
     val wh = Files.createTempDirectory("graft_cli_wh").toString
     val rr = s"$wh/run_results.json"
-    graft.tools.GraftCli.main(Array("examples/demo_project", wh, "build",
-      "--run-results", rr))
+    cli(demo, wh, "build", "--run-results", rr)
     val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    assert(Files.exists(java.nio.file.Paths.get(rr)))
-    val dbtRr = om.readTree(new java.io.File(s"$wh/dbt_run_results.json"))
-    assert(dbtRr.path("metadata").path("dbt_schema_version").asText
+    val results = om.readTree(new java.io.File(rr))
+    assert(results.path("metadata").path("dbt_schema_version").asText
       .contains("run-results/v6"))
-    assert(dbtRr.path("results").isArray && dbtRr.path("results").size() > 0)
-    graft.tools.GraftCli.main(Array("examples/demo_project", wh, "docs",
-      "--out", s"$wh/catalog.json"))
+    val statuses = results.path("results").elements().asScala
+      .map(r => r.path("unique_id").asText -> r.path("status").asText).toMap
+    val testStatuses = statuses.filter(_._1.startsWith("test."))
+    assert(testStatuses.size == 12 && testStatuses.values.forall(_ == "pass"),
+      testStatuses.toString)
+    assert(statuses("model.demo_ci_spark.nation_region") == "success")
+    // one artifact: nothing written beside it
+    assert(Files.list(Paths.get(wh)).iterator.asScala
+      .count(_.getFileName.toString.endsWith(".json")) == 1)
+    // retry reads the v6 file; an all-green run re-runs nothing
+    assert(cli(demo, wh, "retry", "--run-results", rr).linesIterator
+      .exists(_.trim == "retrying:"))
+    // the named selector and the PR target resolve through the CLI
+    assert(cli(demo, wh, "list", "--selector", "mart_closure").contains(
+      "selector 'mart_closure': eph_regions, nation_region, order_cents, " +
+        "region_pivot, stg_nations"))
+    assert(cli(demo, wh, "debug", "--target", "ci_pr", "--env", "PR_NUMBER=7")
+      .contains("target:    database=analytics schema=pr_7 threads=2"))
+    cli(demo, wh, "docs", "--out", s"$wh/catalog.json")
     assert(om.readTree(new java.io.File(s"$wh/catalog.json"))
       .path("relations").isArray)
     assert(om.readTree(new java.io.File(s"$wh/dbt_catalog.json"))
@@ -249,21 +359,16 @@ class ProjectLoaderSpec extends AnyFunSuite {
 
   test("package imports: namespacing, bare aliases, shadowing, ambiguity") {
     val dir = Files.createTempDirectory("graft_pkgs")
-    def put(name: String, text: String): Unit = {
-      val p = dir.resolve(name)
-      Files.createDirectories(p.getParent)
-      Files.writeString(p, text); ()
-    }
-    put("project.conf", "name=pkgs")
-    put("models/m.sql",
+    put(dir, "dbt_project.yml", "name: pkgs\n")
+    put(dir, "models/m.sql",
       "SELECT {{ pa.tag() }} AS a, {{ only_a() }} AS b, {{ shadowed() }} AS c")
-    put("macros/local.sql", "{% macro shadowed() %}'project'{% endmacro %}")
-    put("packages/pa/macros/x.sql",
+    put(dir, "macros/local.sql", "{% macro shadowed() %}'project'{% endmacro %}")
+    put(dir, "packages/pa/macros/x.sql",
       "{% macro tag() %}'pa'{% endmacro %}\n" +
         "{% macro only_a() %}'onlyA'{% endmacro %}\n" +
         "{% macro shadowed() %}'pkg_a'{% endmacro %}\n" +
         "{% macro both() %}'a'{% endmacro %}")
-    put("packages/pb/macros/y.sql", "{% macro both() %}'b'{% endmacro %}")
+    put(dir, "packages/pb/macros/y.sql", "{% macro both() %}'b'{% endmacro %}")
     val (project, _) = ProjectLoader.load(dir.toString)
     // namespaced keys always present
     assert(Seq("pa.tag", "pa.only_a", "pa.shadowed", "pa.both", "pb.both")
@@ -290,65 +395,50 @@ class ProjectLoaderSpec extends AnyFunSuite {
     assert(row.getString(0) == "pa" && row.getString(1) == "onlyA" &&
       row.getString(2) == "project")
     // a declared package whose directory is missing fails at LOAD time
-    put("packages.conf", "ghost\n")
+    put(dir, "packages.yml", "packages:\n  - local: packages/ghost\n")
     assertThrows[IllegalArgumentException](ProjectLoader.load(dir.toString))
   }
 
-  test("packages.yml: local entries load, network entries refuse, conf wins on a name clash") {
+  test("packages.yml: local entries load, network entries refuse") {
     val dir = Files.createTempDirectory("graft_pkgyml")
-    def put(name: String, text: String): Unit = {
-      val p = dir.resolve(name)
-      Files.createDirectories(p.getParent)
-      Files.writeString(p, text); ()
-    }
-    put("project.conf", "name=pkgyml")
-    put("models/m.sql", "SELECT {{ vendored.tag() }} AS a, {{ fmt_yml.hi() }} AS b")
+    put(dir, "dbt_project.yml", "name: pkgyml\n")
+    put(dir, "models/m.sql", "SELECT {{ vendored.tag() }} AS a, {{ fmt_yml.hi() }} AS b")
     // a vendored dbt-style package declared the dbt-native way
-    put("vendor/vendored/macros/v.sql", "{% macro tag() %}'yml'{% endmacro %}")
-    put("pkgs/fmt_conf/macros/f.sql", "{% macro hi() %}'conf'{% endmacro %}")
-    put("pkgs/fmt_yml/macros/f.sql", "{% macro hi() %}'yml'{% endmacro %}")
-    put("packages.yml",
+    put(dir, "vendor/vendored/macros/v.sql", "{% macro tag() %}'yml'{% endmacro %}")
+    put(dir, "pkgs/fmt_yml/macros/f.sql", "{% macro hi() %}'yml'{% endmacro %}")
+    put(dir, "packages.yml",
       """packages:
         |  - local: vendor/vendored
         |  - local: pkgs/fmt_yml
         |""".stripMargin)
-    // precedence: declare the SAME package name (fmt_yml) in both files,
-    // pointing packages.conf at a different directory
-    put("packages.conf", "fmt_yml 'pkgs/fmt_conf'\n")
     val (project, _) = ProjectLoader.load(dir.toString)
     assert(project.macros.contains("vendored.tag"))
-    // name clash: packages.conf's directory wins for fmt_yml
-    assert(project.macros("fmt_yml.hi").body == "'conf'")
+    assert(project.macros("fmt_yml.hi").body == "'yml'")
     // a hub/git entry fails loudly instead of silently skipping
-    put("packages.yml",
+    put(dir, "packages.yml",
       """packages:
         |  - package: dbt-labs/dbt_utils
         |    version: 1.1.1
         |""".stripMargin)
     val err = intercept[IllegalArgumentException](ProjectLoader.load(dir.toString))
     assert(err.getMessage.contains("local:"), err.getMessage)
-    put("packages.yml",
+    put(dir, "packages.yml",
       "packages:\n  - git: https://example.com/repo.git\n    revision: main\n")
     assertThrows[IllegalArgumentException](ProjectLoader.load(dir.toString))
     // a local entry pointing nowhere fails at load time
-    put("packages.yml", "packages:\n  - local: nope/missing\n")
+    put(dir, "packages.yml", "packages:\n  - local: nope/missing\n")
     assertThrows[IllegalArgumentException](ProjectLoader.load(dir.toString))
   }
 
   test("packages.yml: hub/git entries load from a vendored packages/ mirror") {
     val dir = Files.createTempDirectory("graft_pkgmirror")
-    def put(name: String, text: String): Unit = {
-      val p = dir.resolve(name)
-      Files.createDirectories(p.getParent)
-      Files.writeString(p, text); ()
-    }
-    put("project.conf", "name=pkgmirror")
-    put("models/m.sql", "SELECT {{ dbt_utils.greet() }} AS a")
+    put(dir, "dbt_project.yml", "name: pkgmirror\n")
+    put(dir, "models/m.sql", "SELECT {{ dbt_utils.greet() }} AS a")
     // the `dbt deps`-output convention: the remote package is checked in
     // under packages/<basename>, so the hub entry resolves OFFLINE
-    put("packages/dbt_utils/macros/g.sql",
+    put(dir, "packages/dbt_utils/macros/g.sql",
       "{% macro greet() %}'hello'{% endmacro %}")
-    put("packages.yml",
+    put(dir, "packages.yml",
       """packages:
         |  - package: dbt-labs/dbt_utils
         |    version: 1.1.1
@@ -357,12 +447,12 @@ class ProjectLoaderSpec extends AnyFunSuite {
     assert(project.macros("dbt_utils.greet").body == "'hello'")
     // the git spelling resolves through the same mirror (basename of the
     // repo URL, .git stripped)
-    put("packages.yml",
+    put(dir, "packages.yml",
       "packages:\n  - git: https://example.com/dbt_utils.git\n")
     assert(ProjectLoader.load(dir.toString)._1.macros
       .contains("dbt_utils.greet"))
     // no mirror -> the refusal names the exact directory that would fix it
-    put("packages.yml", "packages:\n  - package: other-org/other_pkg\n")
+    put(dir, "packages.yml", "packages:\n  - package: other-org/other_pkg\n")
     val err = intercept[IllegalArgumentException](
       ProjectLoader.load(dir.toString))
     assert(err.getMessage.contains("packages/other_pkg"), err.getMessage)
@@ -370,40 +460,170 @@ class ProjectLoaderSpec extends AnyFunSuite {
 
   test("docs blocks: {% docs %} markdown feeds doc() description sites") {
     val dir = Files.createTempDirectory("graft_docs")
-    def put(name: String, text: String): Unit = {
-      val p = dir.resolve(name)
-      Files.createDirectories(p.getParent)
-      Files.writeString(p, text); ()
-    }
-    put("project.conf", "name=docsdemo")
-    put("models/m.sql", "SELECT 1 AS one")
-    put("models/overview.md",
+    put(dir, "dbt_project.yml", "name: docsdemo\n")
+    put(dir, "models/m.sql", "SELECT 1 AS one")
+    put(dir, "models/overview.md",
       """{% docs m_doc %}
         |One row, one column. **markdown** allowed.
         |{% enddocs %}
         |
         |{% docs other %}unused{% enddocs %}
         |""".stripMargin)
-    put("descriptions.conf", "m '{{ doc(''m_doc'') }}'\n")
+    def describe(text: String): Unit = put(dir, "models/schema.yml",
+      s"version: 2\nmodels:\n  - name: m\n    description: \"$text\"\n")
+    describe("{{ doc('m_doc') }}")
     val (project, _) = ProjectLoader.load(dir.toString)
     assert(project.descriptions("m")
       == "One row, one column. **markdown** allowed.")
     // unknown doc name fails at load time
-    put("descriptions.conf", "m '{{ doc(''nope'') }}'\n")
+    describe("{{ doc('nope') }}")
     val err = intercept[IllegalArgumentException](ProjectLoader.load(dir.toString))
     assert(err.getMessage.contains("m_doc"), err.getMessage) // lists defined
     // duplicate docs block names fail at load time
-    put("descriptions.conf", "m 'plain'\n")
-    put("docs/dup.md", "{% docs m_doc %}again{% enddocs %}")
+    describe("plain")
+    put(dir, "docs/dup.md", "{% docs m_doc %}again{% enddocs %}")
     assertThrows[IllegalArgumentException](ProjectLoader.load(dir.toString))
   }
 
   test("ephemeral models never materialize to the warehouse") {
-    val (project, _) = ProjectLoader.load("examples/demo_project")
+    val (project, _) = ProjectLoader.load(demo)
     val engine = new Engine(spark, project,
       Target(Files.createTempDirectory("graft_demo2").toString))
     engine.build()
     assert(!engine.warehouse.exists(engine.relationFor("eph_regions")))
     assert(engine.readModel("eph_regions").count() == 5) // compiled on demand
+  }
+
+  test("dbt_utils battery runs and passes in the demo build; each kind can fail") {
+    val (project, _) = ProjectLoader.load(demo)
+    val kinds = Seq("accepted_range", "unique_combination_of_columns",
+      "expression_is_true", "not_accepted_values", "not_null_proportion",
+      "at_least_one", "not_constant", "sequential_values")
+    val demoEngine = new Engine(spark, project,
+      Target(Files.createTempDirectory("graft_demo_utils").toString))
+    val (_, demoTests) = demoEngine.build(
+      Some(Set("stg_nations", "nation_region", "orders_incr")))
+    val utils = demoTests.filter(_.name.startsWith("dbt_utils_"))
+    assert(kinds.forall(k => utils.exists(_.name.startsWith(s"dbt_utils_$k"))),
+      utils.map(_.name).toString)
+    assert(utils.size == 8 && utils.forall(_.status == "pass"), utils.toString)
+
+    // all nine kinds over rows that break each of them
+    val dir = Files.createTempDirectory("graft_utils_fail")
+    put(dir, "dbt_project.yml", "name: utils_fail\n")
+    put(dir, "models/r.sql",
+      """SELECT * FROM VALUES
+        |  (1, 'a', 0, 10, 5, 1, CAST(NULL AS INT)),
+        |  (2, 'a', 5, 15, NULL, 1, NULL),
+        |  (4, 'a', 20, 30, NULL, 1, NULL)
+        |  AS t(id, grp, lo, hi, v, k, nothing)""".stripMargin)
+    def schema(extraTest: String): Unit = put(dir, "models/schema.yml",
+      s"""version: 2
+         |models:
+         |  - name: r
+         |    tests:
+         |      - dbt_utils.unique_combination_of_columns:
+         |          combination_of_columns: [grp, k]
+         |      - dbt_utils.expression_is_true:
+         |          expression: "lo > 0"
+         |      - dbt_utils.mutually_exclusive_ranges:
+         |          lower_bound_column: lo
+         |          upper_bound_column: hi
+         |          partition_by: grp
+         |    columns:
+         |      - name: id
+         |        tests:
+         |          - dbt_utils.sequential_values
+         |      - name: grp
+         |        tests:
+         |          - dbt_utils.not_accepted_values:
+         |              values: ['a']
+         |      - name: k
+         |        tests:
+         |          - dbt_utils.not_constant
+         |      - name: nothing
+         |        tests:
+         |          - dbt_utils.at_least_one
+         |      - name: v
+         |        tests:
+         |          - dbt_utils.not_null_proportion:
+         |              at_least: 0.9
+         |          - dbt_utils.accepted_range:
+         |              min_value: 0
+         |              max_value: 4
+         |$extraTest""".stripMargin)
+    schema("")
+    val (p, _) = ProjectLoader.load(dir.toString)
+    assert(p.tests.size == 9)
+    val e = new Engine(spark, p,
+      Target(Files.createTempDirectory("graft_utils_fail_wh").toString,
+        threads = 1))
+    // the build materializes r, then stops at its first failing test;
+    // run every test against the built model
+    e.build()
+    val tests = p.tests.map(e.runTest)
+    assert(tests.forall(t => t.status == "error" && t.failures > 0),
+      tests.toString)
+
+    // an argument the engine cannot honour refuses at load, naming it
+    Seq("          - dbt_utils.sequential_values:\n              datepart: day\n"
+        -> "datepart",
+      "          - dbt_utils.accepted_range:\n              min_value: zero\n"
+        -> "min_value",
+      "          - dbt_utils.not_null_proportion:\n              at_least: 1.5\n"
+        -> "at_least").foreach { case (extra, key) =>
+      schema(extra)
+      val err = intercept[IllegalArgumentException](ProjectLoader.load(dir.toString))
+      assert(err.getMessage.contains(key), err.getMessage)
+    }
+  }
+
+  test("dependencies.yml backs a two-arg ref built against an upstream root") {
+    val upRoot = Files.createTempDirectory("graft_dep_up_wh").toString
+    val up = Files.createTempDirectory("graft_dep_up")
+    put(up, "dbt_project.yml", "name: up\n")
+    put(up, "models/sources.yml", tpchSources("nation"))
+    put(up, "models/base.sql",
+      "SELECT n_nationkey, n_regionkey FROM {{ source('tpch', 'nation') }}")
+    val (upProject, _) = ProjectLoader.load(up.toString)
+    require(new Engine(spark, upProject, Target(upRoot)).build()._1
+      .forall(_.status == "success"))
+
+    val down = Files.createTempDirectory("graft_dep_down")
+    put(down, "dbt_project.yml", "name: down\n")
+    put(down, "models/agg.sql",
+      """SELECT n_regionkey, count(*) AS n
+        |FROM {{ ref('up', 'base') }} GROUP BY n_regionkey""".stripMargin)
+    put(down, "dependencies.yml",
+      s"projects:\n  - name: up\n    warehouse_root: $upRoot\n")
+    val (p, _) = ProjectLoader.load(down.toString)
+    assert(p.dependencies == Seq(DependencyDef("up", upRoot, "analytics", "main")))
+    val e = new Engine(spark, p, Target(Files.createTempDirectory(
+      "graft_dep_down_wh").toString))
+    assert(e.build()._1.forall(_.status == "success"))
+    assert(e.readModel("agg").count() == 5)
+    // the upstream's root is required
+    put(down, "dependencies.yml", "projects:\n  - name: up\n")
+    val err = intercept[IllegalArgumentException](ProjectLoader.load(down.toString))
+    assert(err.getMessage.contains("warehouse_root"), err.getMessage)
+  }
+
+  test("src/main loads one project format: no .conf file, no second loader") {
+    // the retired line-based format was spread over these files; any of
+    // them reappearing means a second project loader is growing back
+    val banned = Seq("project", "sources", "tests", "exposures",
+      "dependencies", "metrics", "selectors", "descriptions", "hooks",
+      "packages").map(_ + ".conf") :+ "DbtProjectLoader"
+    val walk = Files.walk(Paths.get("src/main"))
+    val sources = try walk.iterator().asScala.filter(p =>
+        Files.isRegularFile(p) && p.toString.endsWith(".scala")).toList
+      finally walk.close()
+    assert(sources.nonEmpty, "src/main not found from the test working dir")
+    val hits = for {
+      p <- sources
+      text = new String(Files.readAllBytes(p), "UTF-8")
+      b <- banned if text.contains(b)
+    } yield s"$p: $b"
+    assert(hits.isEmpty, hits.mkString("\n"))
   }
 }
