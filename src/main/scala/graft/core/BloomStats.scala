@@ -28,7 +28,9 @@ import org.apache.spark.util.sketch.BloomFilter
   * Sidecar `_graft_bloom` at the version dir root, trailer-guarded like
   * the stats sidecar; torn or missing = no skipping, never wrong
   * results. Build is opt-in per column (`graft.bloom.cols`) because it
-  * costs one extra scan of the just-written data. Supported column
+  * costs one extra scan of the just-written data; that scan is planned
+  * from the files the write step already listed, with no inference job,
+  * and sized from the footers it already read. Supported column
   * types: integral (hashed as long) and string (hashed as UTF-8 bytes)
   * — the probe side hashes Catalyst internal values identically, which
   * is the correctness-critical contract pinned in BloomSpec.

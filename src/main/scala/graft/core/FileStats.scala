@@ -84,25 +84,20 @@ object FileStats {
 
   // ---------------------------------------------------------- collect
 
-  /** Read the footers of freshly written `files` under version dir `base`
-    * and merge per-column row group stats into per-file ranges, keyed by
-    * [[relKey]]. Unsupported or stat-less columns are absent. Never
-    * throws: stats are an optimization, a footer that fails to read just
-    * yields no entry for that file.
+  /** One open of a parquet file's footer: its record count and its
+    * per-column row group stats merged into one range per column (at most
+    * `maxCols` columns, none when it is 0; unsupported or stat-less
+    * columns are absent). Throws when the footer cannot be read.
     */
-  def collect(conf: Configuration, files: Seq[FileStatus],
-              maxCols: Int, base: Path): PerFile = {
+  def footer(conf: Configuration, st: FileStatus,
+             maxCols: Int): (Long, Map[String, Col]) = {
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
-    files.filter(_.getPath.getName.endsWith(".parquet")).flatMap { st =>
-      try {
-        val rd = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
-        try {
-          val cols = collectFooter(rd.getFooter, maxCols)
-          if (cols.isEmpty) None else Some(relKey(base, st.getPath) -> cols)
-        } finally rd.close()
-      } catch { case scala.util.control.NonFatal(_) => None }
-    }.toMap
+    val rd = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+    try (rd.getRecordCount,
+      if (maxCols <= 0) Map.empty[String, Col]
+      else collectFooter(rd.getFooter, maxCols))
+    finally rd.close()
   }
 
   private[core] def collectFooter(

@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference, Expression, Predicate}
 import org.apache.spark.sql.execution.datasources.{FileIndex, GraftPartitionParsing, HadoopFsRelation, PartitionDirectory, PartitionSpec}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.datasources.parquet.{GraftFooterSchema, ParquetFileFormat}
 import org.apache.spark.sql.types.{StringType, StructType}
 
 /** A [[FileIndex]] over a manifest's committed `(versionDir, partitionPath)`
@@ -260,14 +260,17 @@ object ManifestFileIndex {
     * relation into one new version, but a reader must still cope with a
     * retained manifest whose groups straddle the evolution — merging per
     * group keeps every column visible, oldest group's columns first,
-    * mirroring a unionByName(allowMissingColumns) read).
+    * mirroring a unionByName(allowMissingColumns) read). The footers are
+    * read on the driver ([[GraftFooterSchema]]): the samples are one file
+    * per group, so building the relation launches no Spark job — a read
+    * cache miss costs a few footer round trips, not a schema-inference
+    * job.
     */
   def relation(spark: SparkSession,
                leaves: Seq[(Path, Array[FileStatus])],
                basePaths: Set[Path],
                fileStats: FileStats.PerFile = Map.empty): Option[DataFrame] =
     try {
-      val fmt = new ParquetFileFormat()
       val qBases = qualifyAll(spark, basePaths)
       // one non-empty sample file per version group, ascending dir order
       val samples = leaves
@@ -278,12 +281,11 @@ object ManifestFileIndex {
         .flatMap { case (_, ls) =>
           ls.iterator.flatMap(_._2.iterator).find(_.getLen > 0)
         }
-      fmt.inferSchema(spark, Map("mergeSchema" -> "true"), samples).map {
-        dataSchema =>
-          val index = new ManifestFileIndex(spark, leaves, basePaths, fileStats)
-          val rel = HadoopFsRelation(index, index.partitionSchema, dataSchema,
-            None, fmt, Map.empty)(spark)
-          spark.baseRelationToDataFrame(rel)
+      GraftFooterSchema.merged(spark, samples).map { dataSchema =>
+        val index = new ManifestFileIndex(spark, leaves, basePaths, fileStats)
+        val rel = HadoopFsRelation(index, index.partitionSchema, dataSchema,
+          None, new ParquetFileFormat(), Map.empty)(spark)
+        spark.baseRelationToDataFrame(rel)
       }
     } catch {
       case scala.util.control.NonFatal(e) =>

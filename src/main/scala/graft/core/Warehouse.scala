@@ -3,6 +3,7 @@ package graft.core
 import java.util.UUID
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.GraftFooterSchema
 import org.apache.spark.sql.functions.{concat, expr, lit, raise_error, when}
 import org.apache.spark.sql.types.StructType
 
@@ -781,53 +782,88 @@ final class Warehouse(val spark: SparkSession, val root: String) {
         acc ++ m.map { case (k, v) => s"${d.getName}/$k" -> v })
     }
 
-  /** Read the just-written parquet footers under `vdir` and persist their
-    * per-file column ranges as the dir's `_graft_stats` sidecar (see
-    * [[FileStats]]). Runs BEFORE the manifest commit, so the sidecar is
-    * immutable alongside its data and travels through commits, time
-    * travel, and GC with the dir. Best-effort: any failure costs
-    * file-skipping on later reads, never the write itself. Past the
-    * parallel-listing threshold the footer reads run as a Spark job —
-    * the write may have produced thousands of files, and a driver loop
-    * over object-store footers is the same sequential-round-trip trap as
-    * driver-side listing. Session confs: `graft.stats.enabled` (default
-    * true), `graft.stats.maxCols` (cap on recorded columns, default 32).
+  /** The one after-write step of every data commit: list the fresh
+    * version dir `vdir` once and open each parquet footer once, then feed
+    * three consumers from that pass, all BEFORE the manifest commit (so
+    * the sidecars are immutable alongside their data and travel through
+    * commits, time travel and GC with the dir):
+    *  - the `_graft_stats` sidecar ([[FileStats]]) of per-file column
+    *    ranges — `graft.stats.enabled` (default true) and
+    *    `graft.stats.maxCols` (cap on recorded columns, default 32);
+    *  - the opt-in `_graft_bloom` sidecar ([[BloomStats]]), sized from
+    *    the footers' record counts;
+    *  - the result: the commit's entry paths — the written leaf
+    *    partition paths `depth` levels below `vdir`, or the whole dir
+    *    (`""`) when `depth` is 0.
+    * Both sidecars are best-effort: a failure costs skipping, never the
+    * write.
     */
-  private def writeStatsSidecar(vdir: Path): Unit =
-    if (!spark.conf.getOption("graft.stats.enabled").contains("false")) try {
-      val maxCols = intConf("graft.stats.maxCols", 32)
-      def parquets(d: Path): Seq[FileStatus] = {
-        val st = fs.listStatus(d).toSeq
-        st.filter(s => s.isFile && s.getPath.getName.endsWith(".parquet")) ++
-          st.filter(_.isDirectory).flatMap(s => parquets(s.getPath))
+  private def afterWrite(vdir: Path, depth: Int,
+                         bloomCols: Seq[String] = Nil): Seq[String] = {
+    val files = filesUnder(vdir).filter(_.getPath.getName.endsWith(".parquet"))
+    val statsOn = !spark.conf.getOption("graft.stats.enabled").contains("false")
+    // bloomCols = per-write request (e.g. snapshot key columns) — an
+    // explicit parameter, not a session-conf toggle, so concurrent
+    // writes of other relations on the same session are unaffected
+    val cols =
+      if (spark.conf.getOption("graft.bloom.enabled").contains("false")) Nil
+      else (spark.conf.getOption("graft.bloom.cols")
+        .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+        .getOrElse(Nil) ++ bloomCols).distinct
+    if (statsOn || cols.nonEmpty) {
+      val footers =
+        try footersOf(files, if (statsOn) intConf("graft.stats.maxCols", 32) else 0)
+        catch { case scala.util.control.NonFatal(_) => Nil }
+      if (statsOn) try {
+        FileStats.write(fs, vdir, footers.collect {
+          case (st, _, c) if c.nonEmpty => FileStats.relKey(vdir, st.getPath) -> c
+        }.toMap)
+      } catch { case scala.util.control.NonFatal(_) => () }
+      writeBloomSidecar(vdir, files, footers.map(_._2).sum, cols)
+    }
+    if (depth == 0) Seq("")
+    else files.map(f => FileStats.relKey(vdir, f.getPath.getParent)).distinct
+      .filter { p =>
+        val segs = p.split("/")
+        segs.length == depth && segs.forall(_.contains("="))
+      }.sorted
+  }
+
+  /** Each parquet file's footer record count and column ranges (none
+    * when `maxCols` is 0; see [[FileStats.footer]]). Footers are O(KB)
+    * metadata regardless of file size. Up to
+    * `graft.footer.parallelThreshold` files (default 64) the driver opens
+    * them in a loop; past it the opens run as one Spark job — each open
+    * is its own metadata round trip, so a 100k-file table on an object
+    * store would cost the driver minutes of sequential round trips where
+    * executors do it in seconds (the same escape hatch as the parallel
+    * manifest listing above). Throws when a footer cannot be read.
+    */
+  private def footersOf(files: Seq[FileStatus], maxCols: Int)
+      : Seq[(FileStatus, Long, Map[String, FileStats.Col])] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    if (files.size <= intConf("graft.footer.parallelThreshold", 64))
+      files.map { st =>
+        val (n, c) = FileStats.footer(conf, st, maxCols)
+        (st, n, c)
       }
-      val files = parquets(vdir)
-      val threshold = intConf("graft.manifest.parallelListThreshold", 64)
-      val stats: FileStats.PerFile =
-        if (files.size <= threshold)
-          FileStats.collect(spark.sparkContext.hadoopConfiguration, files,
-            maxCols, vdir)
-        else {
-          val confBc = spark.sparkContext.broadcast(
-            new org.apache.spark.SerializableWritable(
-              spark.sparkContext.hadoopConfiguration))
-          try {
-            val work = files.map(f =>
-              (f.getPath.toString, f.getLen, f.getModificationTime))
-            val slices = math.min(work.size, 256)
-            val base = vdir.toString
-            spark.sparkContext.parallelize(work, slices).mapPartitions { it =>
-              val conf = confBc.value.value
-              it.map { case (p, len, mtime) =>
-                FileStats.collect(conf,
-                  Seq(new FileStatus(len, false, 1, 0, mtime, new Path(p))),
-                  maxCols, new Path(base))
-              }
-            }.collect().foldLeft(Map.empty: FileStats.PerFile)(_ ++ _)
-          } finally confBc.destroy()
-        }
-      FileStats.write(fs, vdir, stats)
-    } catch { case scala.util.control.NonFatal(_) => () }
+    else {
+      val confBc = spark.sparkContext.broadcast(
+        new org.apache.spark.SerializableWritable(conf))
+      try {
+        val byPath = files.map(f => f.getPath.toString -> f).toMap
+        val work = files.map(f =>
+          (f.getPath.toString, f.getLen, f.getModificationTime))
+        spark.sparkContext.parallelize(work, math.min(work.size, 256))
+          .map { case (p, len, mtime) =>
+            val (n, c) = FileStats.footer(confBc.value.value,
+              new FileStatus(len, false, 1, 0, mtime, new Path(p)), maxCols)
+            (p, n, c)
+          }
+          .collect().toSeq.map { case (p, n, c) => (byPath(p), n, c) }
+      } finally confBc.destroy()
+    }
+  }
 
   /** Per-entry leaf dirs + their parquet files. A whole-dir entry
     * (`part == ""`) of a PARTITIONED write is expanded to its physical
@@ -914,39 +950,25 @@ final class Warehouse(val spark: SparkSession, val root: String) {
         s"session conf $name must be a number, got '$v'"))
     }.getOrElse(default)
 
-  /** Opt-in point-lookup sidecar ([[BloomStats]]): when
-    * `graft.bloom.cols` names columns, one extra pass over the freshly
-    * written dir builds a per-column Bloom filter sized to the dir's
-    * rows (capped by `graft.bloom.maxItems`, fpp `graft.bloom.fpp`).
-    * Best-effort like the range sidecar: failure costs skipping, never
-    * the write. Runs BEFORE the manifest commit, so the bloom is
-    * immutable alongside its dir.
+  /** Opt-in point-lookup sidecar ([[BloomStats]]) of [[afterWrite]]:
+    * when `cols` is non-empty, one extra scan of the freshly written
+    * `files` — planned through [[ManifestFileIndex.relation]], so no
+    * schema-inference job — builds a per-column Bloom filter sized to
+    * the dir's `rows` (capped by `graft.bloom.maxItems`, fpp
+    * `graft.bloom.fpp`). Best-effort like the range sidecar.
     */
-  private def writeBloomSidecar(vdir: Path,
-                                extraCols: Seq[String] = Nil): Unit =
-    if (!spark.conf.getOption("graft.bloom.enabled").contains("false")) try {
-      // extraCols = per-write request (e.g. snapshot key columns) — an
-      // explicit parameter, not a session-conf toggle, so concurrent
-      // writes of other relations on the same session are unaffected
-      val cols = (spark.conf.getOption("graft.bloom.cols")
-        .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-        .getOrElse(Nil) ++ extraCols).distinct
-      if (cols.nonEmpty) {
-        // size the bloom from the just-written footers' record counts —
-        // pure metadata, no count() job over the data
-        def parquets(d: Path): Seq[FileStatus] = {
-          val st = fs.listStatus(d).toSeq
-          st.filter(s => s.isFile && s.getPath.getName.endsWith(".parquet")) ++
-            st.filter(_.isDirectory).flatMap(s => parquets(s.getPath))
+  private def writeBloomSidecar(vdir: Path, files: Seq[FileStatus],
+                                rows: Long, cols: Seq[String]): Unit =
+    if (cols.nonEmpty && rows > 0) try {
+      val cap = intConf("graft.bloom.maxItems", 4000000).toLong
+      ManifestFileIndex.relation(spark,
+          files.groupBy(_.getPath.getParent).toSeq.map { case (d, fls) =>
+            (d, fls.toArray) },
+          Set(vdir))
+        .foreach { df =>
+          BloomStats.write(fs, vdir, BloomStats.build(df, cols,
+            math.min(rows, cap), doubleConf("graft.bloom.fpp", 0.05)))
         }
-        val rows = footerRowsOf(parquets(vdir))
-        if (rows > 0) {
-          val cap = intConf("graft.bloom.maxItems", 4000000).toLong
-          val blooms = BloomStats.build(spark.read.parquet(vdir.toString),
-            cols, math.min(rows, cap), doubleConf("graft.bloom.fpp", 0.05))
-          BloomStats.write(fs, vdir, blooms)
-        }
-      }
     } catch { case scala.util.control.NonFatal(_) => () }
 
   /** Legacy union-shaped read, one parquet relation per version group —
@@ -1343,10 +1365,7 @@ final class Warehouse(val spark: SparkSession, val root: String) {
              else writer
     w2.parquet(vdir.toString)
     Warehouse.faultPoint("mf.overwrite.data-written")
-    writeStatsSidecar(vdir); writeBloomSidecar(vdir, bloomCols)
-    val parts =
-      if (partitionCols.isEmpty) Seq("")
-      else leafDirs(vdir, partitionCols.length)
+    val parts = afterWrite(vdir, partitionCols.length, bloomCols)
     val entries = (if (parts.isEmpty) Seq("") else parts)
       .map(p => (vdir.getName, p))
     // stamp the REBUILD instant: `hours_to_expiration` measures from the
@@ -1454,10 +1473,7 @@ final class Warehouse(val spark: SparkSession, val root: String) {
              else writer
     w2.parquet(vdir.toString)
     Warehouse.faultPoint("mf.append.data-written")
-    writeStatsSidecar(vdir); writeBloomSidecar(vdir, bloomCols)
-    val parts =
-      if (partitionCols.isEmpty) Seq("")
-      else leafDirs(vdir, partitionCols.length)
+    val parts = afterWrite(vdir, partitionCols.length, bloomCols)
     val entries = (if (parts.isEmpty) Nil else parts)
       .map(p => (vdir.getName, p))
     commitEntries(rel, metaF)(_ ++ entries)
@@ -1736,7 +1752,7 @@ final class Warehouse(val spark: SparkSession, val root: String) {
         clusteredWriter(readEntries(rel, cur), Nil, Nil, zorderCols)
           .write.mode("overwrite").parquet(vdir.toString)
         Warehouse.faultPoint("mf.compact.data-written")
-        writeStatsSidecar(vdir); writeBloomSidecar(vdir)
+        afterWrite(vdir, 0)
         commitEntries(rel)(_ => Seq((vdir.getName, "")))
         true
       }
@@ -1839,27 +1855,78 @@ final class Warehouse(val spark: SparkSession, val root: String) {
     * pointer-resolved temp views: a manifest-committed relation under ANY
     * warehouse root (this one, a --defer state root, a cross-project
     * upstream) reads its current committed version, and a durable view
-    * of another root reads its definition. Other paths (sources, legacy
-    * plain-layout dirs, missing relations) pass through untouched.
-    * Compiled SQL stays path-addressed on disk — the stable,
+    * of another root reads its definition. A single parquet FILE (a
+    * declared source) resolves to a temp view over that file with its
+    * footer schema pinned ([[sourceFileView]]). Other paths (directory
+    * sources, legacy plain-layout dirs, missing paths) pass through
+    * untouched. Compiled SQL stays path-addressed on disk — the stable,
     * engine-agnostic form — and the pointer is chased at EXECUTION time,
     * in the executing session, so a view compiled yesterday reads today's
     * committed version instead of a GC'd version dir.
     */
   def resolveSql(sqlText: String): String =
     Warehouse.PathRelation.replaceAllIn(sqlText, m =>
-      scala.util.matching.Regex.quoteReplacement(
-        relationAt(m.group(1)).flatMap { case (w, rel) =>
-          w.tempViewOf(rel, viewsToo = w ne this)
-        }.getOrElse(m.matched)))
+      scala.util.matching.Regex.quoteReplacement({
+        val p = m.group(1)
+        plainFile(p) match {
+          case Some(st) => sourceFileView(p, st)
+          case None => relationAt(p).flatMap { case (w, rel) =>
+            w.tempViewOf(rel, viewsToo = w ne this)
+          }
+        }
+      }.getOrElse(m.matched)))
 
-  /** The warehouse and relation a `root/db/schema/id` path names. */
+  /** `p`'s status when it names an existing plain file. */
+  private def plainFile(p: String): Option[FileStatus] =
+    try {
+      val path = new Path(p)
+      Some(path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .getFileStatus(path)).filter(_.isFile)
+    } catch { case _: java.io.FileNotFoundException => None }
+
+  /** A parquet source file as a temp view. Analysing ``parquet.`file` ``
+    * infers the file's schema with a Spark job on every analysis; the
+    * view instead reads the file with the schema of its footer, read once
+    * on the driver, pinned. The view's frame is cached per path and
+    * reused while the file's length and mtime stay the same, so a source
+    * rewritten in place is re-read with its new schema; the view name
+    * carries path, length and mtime, so a name never stands for two
+    * versions of a file. None when the footer yields no schema or cannot
+    * be read — the path then passes through, and Spark reports the bad
+    * file.
+    */
+  private def sourceFileView(p: String, st: FileStatus): Option[String] = {
+    val stamp = (st.getLen, st.getModificationTime)
+    val vn = Warehouse.tempViewName(s"graft_file_${st.getPath.getName}",
+      s"$p\u0000${stamp._1}\u0000${stamp._2}")
+    val hit = sourceViews.get(p)
+    if (hit != null && hit._1 == stamp) {
+      if (spark.sessionState.catalog.getTempView(vn).isEmpty)
+        hit._2.createOrReplaceTempView(vn)
+      Some("`" + vn + "`")
+    } else
+      scala.util.Try(GraftFooterSchema.merged(spark, Seq(st))).toOption
+        .flatten.map { schema =>
+          val d = spark.read.schema(schema).parquet(p)
+          d.createOrReplaceTempView(vn)
+          sourceViews.put(p, (stamp, d))
+          "`" + vn + "`"
+        }
+  }
+
+  private val sourceViews =
+    new java.util.concurrent.ConcurrentHashMap[String, ((Long, Long), DataFrame)]
+
+  /** The warehouse and relation a `root/db/schema/id` path names (a
+    * three-segment absolute path has an empty root and names none).
+    */
   private def relationAt(p: String): Option[(Warehouse, Relation)] =
     p.split("/", -1) match {
       case segs if segs.length >= 4 && !segs.takeRight(3).exists(_.isEmpty) =>
         val Array(db, sch, id) = segs.takeRight(3)
         val r = segs.dropRight(3).mkString("/")
-        Some((if (r == root) this else at(r), Relation(db, sch, id)))
+        Option.when(r.nonEmpty)(
+          (if (r == root) this else at(r), Relation(db, sch, id)))
       case _ => None
     }
 
@@ -1949,41 +2016,10 @@ final class Warehouse(val spark: SparkSession, val root: String) {
     }
   }
 
-  /** Sum of the parquet footer record counts of `files` (footers are
-    * O(KB) metadata regardless of file size). Below the threshold
-    * (`graft.footer.parallelThreshold`, default 64) the driver opens
-    * footers in a loop; past it the opens run as a Spark job — each open
-    * is its own metadata round trip, so a 100k-file table on an object
-    * store would cost the driver minutes of sequential round trips where
-    * executors do it in seconds (the same escape hatch as the parallel
-    * manifest listing above).
-    */
-  private def footerRowsOf(files: Seq[FileStatus]): Long = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    val pq = files.filter(st => st.getPath.getName.endsWith(".parquet"))
-    val conf = spark.sparkContext.hadoopConfiguration
-    if (pq.size <= intConf("graft.footer.parallelThreshold", 64))
-      pq.map { st =>
-        val rd = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
-        try rd.getRecordCount finally rd.close()
-      }.sum
-    else {
-      val confBc = spark.sparkContext.broadcast(
-        new org.apache.spark.SerializableWritable(conf))
-      try {
-        val paths = pq.map(_.getPath.toString)
-        spark.sparkContext
-          .parallelize(paths, math.min(paths.size, 256))
-          .map { p =>
-            val rd = ParquetFileReader.open(
-              HadoopInputFile.fromPath(new Path(p), confBc.value.value))
-            try rd.getRecordCount finally rd.close()
-          }
-          .fold(0L)(_ + _)
-      } finally confBc.destroy()
-    }
-  }
+  /** Sum of the parquet footer record counts of `files` ([[footersOf]]). */
+  private def footerRowsOf(files: Seq[FileStatus]): Long =
+    footersOf(files.filter(_.getPath.getName.endsWith(".parquet")), 0)
+      .map(_._2).sum
 
   /** Row count of a relation (or one of its partition subtrees) from
     * parquet footers — metadata IO only, no data scan. Sizing decisions
@@ -2063,8 +2099,7 @@ final class Warehouse(val spark: SparkSession, val root: String) {
     clusteredWriter(df, pcols, clusterCols, zorderCols, layoutWhen)
       .write.mode("overwrite").partitionBy(pcols: _*).parquet(vdir.toString)
     Warehouse.faultPoint("mf.replace.data-written")
-    writeStatsSidecar(vdir); writeBloomSidecar(vdir, bloomCols)
-    val written = leafDirs(vdir, pcols.length)
+    val written = afterWrite(vdir, pcols.length, bloomCols)
     val writtenSet = written.toSet
     val writtenVals = written
       .map(d => Warehouse.unescapePathName(d.substring(d.indexOf('=') + 1)))

@@ -1,6 +1,6 @@
 package graft.materialize
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core._
 
@@ -187,11 +187,7 @@ final class Snapshotter(wh: Warehouse, subBuckets: Option[Int] = None) {
     // than one Spark action (leaf discovery, then the write), and a raw
     // current_timestamp() would re-evaluate per action — closings and
     // insertions must carry the SAME stamp, as in dbt's run-start time.
-    val nowLit: Column = {
-      val v = source.sparkSession.range(1)
-        .select(now.cast("timestamp")).head().getTimestamp(0)
-      lit(v)
-    }
+    val nowLit: Column = lit(Snapshotter.clock(source.sparkSession, now))
     val updatedAt: Column = strategy match {
       case SnapshotStrategy.Timestamp(c) => col(c)
       case SnapshotStrategy.Check(_) => nowLit
@@ -505,4 +501,13 @@ object Snapshotter {
   val SUB = "graft_scd_sub"
   /** Bucket value of open rows (`dbt_valid_to IS NULL`). */
   val CURRENT = "current"
+
+  /** A snapshot run's transaction time: `now` evaluated once over a
+    * one-row local relation. The optimizer folds the projection into the
+    * local rows and Spark collects them on the driver — no Spark job.
+    */
+  private[graft] def clock(spark: SparkSession, now: Column): java.sql.Timestamp = {
+    import spark.implicits._
+    Seq(0).toDF().select(now.cast("timestamp")).head().getTimestamp(0)
+  }
 }

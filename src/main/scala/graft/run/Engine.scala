@@ -341,10 +341,12 @@ final class Engine(spark: SparkSession, project0: Project, target: Target) {
     spark.read.format(sd.format).options(sd.options).load(sd.path)
 
   /** SQL relation text for a source: parquet-without-options compiles to
-    * the direct path relation (filter/column pushdown reaches the scan);
-    * other formats / optioned readers register a reader-backed temp
-    * view (pushdown still applies through the view — it is the same
-    * DataSource scan node).
+    * the direct path relation (filter/column pushdown reaches the scan),
+    * which [[Warehouse.resolveSql]] resolves when the SQL runs — a plain
+    * parquet file to a view over it with its footer schema pinned, so
+    * analysis launches no schema-inference job; other formats / optioned
+    * readers register a reader-backed temp view (pushdown still applies
+    * through the view — it is the same DataSource scan node).
     */
   private def sourceText(s: String, t: String): String = {
     val sd = sourceDef(s, t)

@@ -276,8 +276,6 @@ object StreamingJobs {
             math.ceil(bytes.toDouble / math.max(1L, chunk)).toInt)))
         } catch { case _: Throwable => None }
       })
-    stateParts.foreach(n =>
-      spark.conf.set("spark.sql.shuffle.partitions", n.toString))
     // foreachBatch is at-least-once: a recovered query re-delivers the
     // last batch. The memory sink this replaced deduped replays by
     // batchId; preserve that contract — skip any batchId already
@@ -294,21 +292,25 @@ object StreamingJobs {
     // the sink for an sf1+ run so it isn't single-threaded per trigger.
     val sinkParts = spark.conf.getOption("graft.stream.sinkPartitions")
       .map(_.toInt).getOrElse(1)
-    val q = df.writeStream.outputMode(mode)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (batchId > lastBatchId) {
-          batch.repartition(sinkParts).write.mode(writeMode).parquet(outDir)
-          lastBatchId = batchId
-        }
-        ()
-      }
-      .queryName(name).start()
-    try q.processAllAvailable()
-    finally {
-      try q.stop()
-      finally if (stateParts.isDefined)
+    // the state width is set for start() (which pins it) and restored
+    // whatever happens from there on, a failing start() included
+    stateParts.foreach(n =>
+      spark.conf.set("spark.sql.shuffle.partitions", n.toString))
+    val q =
+      try {
+        val started = df.writeStream.outputMode(mode)
+          .foreachBatch { (batch: DataFrame, batchId: Long) =>
+            if (batchId > lastBatchId) {
+              batch.repartition(sinkParts).write.mode(writeMode).parquet(outDir)
+              lastBatchId = batchId
+            }
+            ()
+          }
+          .queryName(name).start()
+        try started.processAllAvailable() finally started.stop()
+        started
+      } finally if (stateParts.isDefined)
         spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-    }
     replayKey.foreach { k =>
       val wallS = (System.nanoTime() - t0) / 1e9
       val dataAddS = q.recentProgress.iterator

@@ -122,12 +122,12 @@ class FileStatsSpec extends AnyFunSuite {
       .coalesce(1).write.mode("overwrite").parquet(dir)
     val files = localFs.listStatus(new Path(dir))
       .filter(_.getPath.getName.endsWith(".parquet")).toSeq
-    val stats = FileStats.collect(
-      spark.sparkContext.hadoopConfiguration, files, maxCols = 2,
-      new Path(dir))
-    assert(stats.size == 1)
-    assert(stats.head._2.keySet == Set("a", "b"))
-    val a = stats.head._2("a")
+    assert(files.size == 1)
+    val (rows, stats) = FileStats.footer(
+      spark.sparkContext.hadoopConfiguration, files.head, maxCols = 2)
+    assert(rows == 10L)
+    assert(stats.keySet == Set("a", "b"))
+    val a = stats("a")
     assert(a.min.contains("0") && a.max.contains("9"))
   }
 
