@@ -23,12 +23,13 @@ import org.apache.spark.util.sketch.BloomFilter
   * cost bounded by the retained dir count, and matches the access
   * pattern this layer exists for: append/stream/CDC ingestion where each
   * dir is one batch and the question is "which batches ever saw key K".
-  * [[Warehouse.compactTable]] keeps the dir count itself bounded.
+  * [[Warehouse.compactTable]] keeps the dir count itself bounded, and
+  * re-blooms the columns its input dirs carried.
   *
   * Sidecar `_graft_bloom` at the version dir root, trailer-guarded like
   * the stats sidecar; torn or missing = no skipping, never wrong
-  * results. Build is opt-in per column (`graft.bloom.cols`) because it
-  * costs one extra scan of the just-written data; that scan is planned
+  * results. Build is opt-in per column (the writer's `bloomCols`) because
+  * it costs one extra scan of the just-written data; that scan is planned
   * from the files the write step already listed, with no inference job,
   * and sized from the footers it already read. Supported column
   * types: integral (hashed as long) and string (hashed as UTF-8 bytes)

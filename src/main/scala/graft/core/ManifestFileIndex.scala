@@ -153,7 +153,7 @@ final class ManifestFileIndex(
       if (dataFilters.isEmpty || fileStats.isEmpty) partPruned
       else {
         val resolver = spark.sessionState.conf.resolver
-        val pruned = partPruned.map { pd =>
+        partPruned.map { pd =>
           PartitionDirectory(pd.values, pd.files.filter { f =>
             // compound key <versionDirName>/<dir-relative path> — the
             // same construction as the read-side sidecar merge; a bare
@@ -166,11 +166,6 @@ final class ManifestFileIndex(
               dataFilters.forall(df => FileStats.mayContain(cols, df, resolver)))
           })
         }
-        val (before, after) =
-          (partPruned.map(_.files.size).sum, pruned.map(_.files.size).sum)
-        if (after < before)
-          logSkip(s"file-stats skipping planned $after of $before files")
-        pruned
       }
     bloomPrune(statsPruned, dataFilters)
   }
@@ -194,18 +189,11 @@ final class ManifestFileIndex(
     val absent = qualified.filter(g =>
       bloomFor(g).exists(bl => BloomStats.provesAbsent(bl, conj, resolver)))
     if (absent.isEmpty) dirs
-    else {
-      val pruned = dirs.map { pd =>
-        PartitionDirectory(pd.values, pd.files.filter { f =>
-          !absent.contains(ManifestFileIndex.versionGroupOf(
-            f.getPath.getParent, qualified))
-        })
-      }
-      val (before, after) = (dirs.map(_.files.size).sum, pruned.map(_.files.size).sum)
-      if (after < before)
-        logSkip(s"bloom skipping planned $after of $before files " +
-          s"(${absent.size} dirs proven absent)")
-      pruned
+    else dirs.map { pd =>
+      PartitionDirectory(pd.values, pd.files.filter { f =>
+        !absent.contains(ManifestFileIndex.versionGroupOf(
+          f.getPath.getParent, qualified))
+      })
     }
   }
 
@@ -217,11 +205,6 @@ final class ManifestFileIndex(
   private def bloomFor(g: Path): Option[Map[String, org.apache.spark.util.sketch.BloomFilter]] =
     bloomCache.getOrElseUpdate(g,
       BloomStats.read(g.getFileSystem(spark.sessionState.newHadoopConf()), g))
-
-  // via stderr not log4j: the bench and specs watch this channel
-  private def logSkip(msg: String): Unit =
-    if (spark.conf.getOption("graft.stats.logSkips").contains("true"))
-      System.err.println(s"[graft] $msg")
 
   override def inputFiles: Array[String] =
     partDirs.flatMap(_.files.map(_.getPath.toString)).toArray
@@ -283,6 +266,9 @@ object ManifestFileIndex {
         }
       GraftFooterSchema.merged(spark, samples).map { dataSchema =>
         val index = new ManifestFileIndex(spark, leaves, basePaths, fileStats)
+        // dataSchema is all-nullable: a column only the newer version
+        // groups carry is null in the older files, and a non-nullable
+        // one would fail the vectorized reader on them
         val rel = HadoopFsRelation(index, index.partitionSchema, dataSchema,
           None, new ParquetFileFormat(), Map.empty)(spark)
         spark.baseRelationToDataFrame(rel)

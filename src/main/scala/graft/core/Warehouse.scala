@@ -6,6 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.GraftFooterSchema
 import org.apache.spark.sql.functions.{concat, expr, lit, raise_error, when}
 import org.apache.spark.sql.types.StructType
+import scala.reflect.ClassTag
 
 /** Path-addressed parquet warehouse with a manifest commit protocol.
   *
@@ -788,10 +789,10 @@ final class Warehouse(val spark: SparkSession, val root: String) {
     * the sidecars are immutable alongside their data and travel through
     * commits, time travel and GC with the dir):
     *  - the `_graft_stats` sidecar ([[FileStats]]) of per-file column
-    *    ranges — `graft.stats.enabled` (default true) and
-    *    `graft.stats.maxCols` (cap on recorded columns, default 32);
-    *  - the opt-in `_graft_bloom` sidecar ([[BloomStats]]), sized from
-    *    the footers' record counts;
+    *    ranges — `graft.stats.enabled` (default true), at most
+    *    [[Warehouse.StatsMaxCols]] columns;
+    *  - the `_graft_bloom` sidecar ([[BloomStats]]) on the writer's
+    *    `bloomCols`, sized from the footers' record counts;
     *  - the result: the commit's entry paths — the written leaf
     *    partition paths `depth` levels below `vdir`, or the whole dir
     *    (`""`) when `depth` is 0.
@@ -807,12 +808,10 @@ final class Warehouse(val spark: SparkSession, val root: String) {
     // writes of other relations on the same session are unaffected
     val cols =
       if (spark.conf.getOption("graft.bloom.enabled").contains("false")) Nil
-      else (spark.conf.getOption("graft.bloom.cols")
-        .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-        .getOrElse(Nil) ++ bloomCols).distinct
+      else bloomCols.distinct
     if (statsOn || cols.nonEmpty) {
       val footers =
-        try footersOf(files, if (statsOn) intConf("graft.stats.maxCols", 32) else 0)
+        try footersOf(files, if (statsOn) Warehouse.StatsMaxCols else 0)
         catch { case scala.util.control.NonFatal(_) => Nil }
       if (statsOn) try {
         FileStats.write(fs, vdir, footers.collect {
@@ -831,61 +830,31 @@ final class Warehouse(val spark: SparkSession, val root: String) {
 
   /** Each parquet file's footer record count and column ranges (none
     * when `maxCols` is 0; see [[FileStats.footer]]). Footers are O(KB)
-    * metadata regardless of file size. Up to
-    * `graft.footer.parallelThreshold` files (default 64) the driver opens
-    * them in a loop; past it the opens run as one Spark job — each open
-    * is its own metadata round trip, so a 100k-file table on an object
-    * store would cost the driver minutes of sequential round trips where
-    * executors do it in seconds (the same escape hatch as the parallel
-    * manifest listing above). Throws when a footer cannot be read.
+    * metadata regardless of file size; one open per file, through
+    * [[metadataFanOut]]. Throws when a footer cannot be read.
     */
   private def footersOf(files: Seq[FileStatus], maxCols: Int)
-      : Seq[(FileStatus, Long, Map[String, FileStats.Col])] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    if (files.size <= intConf("graft.footer.parallelThreshold", 64))
-      files.map { st =>
-        val (n, c) = FileStats.footer(conf, st, maxCols)
-        (st, n, c)
-      }
-    else {
-      val confBc = spark.sparkContext.broadcast(
-        new org.apache.spark.SerializableWritable(conf))
-      try {
-        val byPath = files.map(f => f.getPath.toString -> f).toMap
-        val work = files.map(f =>
-          (f.getPath.toString, f.getLen, f.getModificationTime))
-        spark.sparkContext.parallelize(work, math.min(work.size, 256))
-          .map { case (p, len, mtime) =>
-            val (n, c) = FileStats.footer(confBc.value.value,
-              new FileStatus(len, false, 1, 0, mtime, new Path(p)), maxCols)
-            (p, n, c)
-          }
-          .collect().toSeq.map { case (p, n, c) => (byPath(p), n, c) }
-      } finally confBc.destroy()
-    }
-  }
+      : Seq[(FileStatus, Long, Map[String, FileStats.Col])] =
+    files.zip(metadataFanOut(files.map(Warehouse.statusWire)) { (conf, w) =>
+      FileStats.footer(conf, Warehouse.statusOf(w), maxCols)
+    }).map { case (st, (n, c)) => (st, n, c) }
 
   /** Per-entry leaf dirs + their parquet files. A whole-dir entry
     * (`part == ""`) of a PARTITIONED write is expanded to its physical
     * leaf dirs first: manifests legitimately mix whole-dir entries (full
     * refresh) with per-partition entries (later scoped merges), and
-    * partition discovery needs uniform leaf depth.
-    *
-    * Listing is one filesystem round trip per entry, so past a threshold
-    * it runs as a Spark job (the same escape hatch as Spark's own
-    * parallel partition discovery): a driver looping 36,500 leaf listings
-    * against an object store is minutes of sequential round trips; 32
-    * executor threads make it seconds. Threshold conf
-    * `graft.manifest.parallelListThreshold` (session), default 64.
+    * partition discovery needs uniform leaf depth. One listing per
+    * entry, through [[metadataFanOut]].
     */
   private def listEntries(rel: Relation,
                           entries: Seq[(String, String)]): Seq[(Path, Array[FileStatus])] = {
     val relName = rel.fqName
-    def expandAndList(fsys: org.apache.hadoop.fs.FileSystem, dir: Path,
-                      wholeDir: Boolean): Seq[(Path, Array[FileStatus])] = {
+    val work = entries.map(e => (entryPath(rel, e).toString, e._2.isEmpty))
+    metadataFanOut(work) { case (conf, (dirStr, wholeDir)) =>
+      val dir = new Path(dirStr)
+      val fsys = dir.getFileSystem(conf)
       def expand(d: Path): Seq[Path] = {
-        val st = fsys.listStatus(d)
-        val parts = st.filter(s =>
+        val parts = fsys.listStatus(d).filter(s =>
           s.isDirectory && s.getPath.getName.contains("="))
         if (parts.isEmpty) Seq(d)
         else parts.toSeq.flatMap(s => expand(s.getPath))
@@ -898,40 +867,38 @@ final class Warehouse(val spark: SparkSession, val root: String) {
         throw new IllegalStateException(
           s"manifest of $relName references missing version dir $dir — " +
             "GC race or corrupted layout; refusing a silent partial read")
-      val dirs = if (wholeDir) expand(dir) else Seq(dir)
-      dirs.map { d =>
-        (d, fsys.listStatus(d).filter(st =>
-          st.isFile && st.getPath.getName.endsWith(".parquet")))
+      (if (wholeDir) expand(dir) else Seq(dir)).map { d =>
+        (d.toString, fsys.listStatus(d).filter(st =>
+          st.isFile && st.getPath.getName.endsWith(".parquet"))
+          .map(Warehouse.statusWire))
       }
+    }.flatten.map { case (leaf, files) =>
+      (new Path(leaf), files.map(Warehouse.statusOf))
     }
-    val threshold = intConf("graft.manifest.parallelListThreshold", 64)
-    if (entries.size <= threshold)
-      entries.flatMap(e => expandAndList(fs, entryPath(rel, e), e._2.isEmpty))
+  }
+
+  /** The one fan-out of per-item metadata IO (entry listings, footer
+    * opens): `f` runs once per item with a Hadoop conf. Up to
+    * `graft.metadata.parallelThreshold` items (default 64) the driver
+    * loops; past it the items run as one Spark job (the escape hatch of
+    * Spark's own parallel partition discovery) — each item is its own
+    * metadata round trip, so a driver looping 36,500 leaf listings or
+    * 100k footer opens against an object store is minutes of sequential
+    * round trips where executors take seconds. Items and results cross
+    * the job boundary as plain values ([[Warehouse.statusWire]] for file
+    * statuses); results keep the order of `items`.
+    */
+  private def metadataFanOut[A: ClassTag, B: ClassTag](items: Seq[A])(
+      f: (org.apache.hadoop.conf.Configuration, A) => B): Seq[B] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    if (items.size <= intConf("graft.metadata.parallelThreshold", 64))
+      items.map(f(conf, _))
     else {
-      // FileStatus/Path are not kryo-friendly across this boundary; ship
-      // strings + (len, mtime) and rebuild driver-side
-      val work = entries.map(e => (entryPath(rel, e).toString, e._2.isEmpty))
       val confBc = spark.sparkContext.broadcast(
-        new org.apache.spark.SerializableWritable(
-          spark.sparkContext.hadoopConfiguration))
-      try {
-        val slices = math.min(work.size, 256)
-        val listed = spark.sparkContext.parallelize(work, slices).map {
-          case (dirStr, whole) =>
-            val d = new Path(dirStr)
-            val f = d.getFileSystem(confBc.value.value)
-            expandAndList(f, d, whole).map { case (leaf, files) =>
-              (leaf.toString,
-                files.map(s => (s.getPath.toString, s.getLen,
-                  s.getModificationTime)))
-            }
-        }.collect().toSeq.flatten
-        listed.map { case (leaf, files) =>
-          (new Path(leaf), files.map { case (p, len, mtime) =>
-            new FileStatus(len, false, 1, 0, mtime, new Path(p))
-          })
-        }
-      } finally confBc.destroy() // uncached reads must not leak broadcasts
+        new org.apache.spark.SerializableWritable(conf))
+      try spark.sparkContext.parallelize(items, math.min(items.size, 256))
+        .map(f(confBc.value.value, _)).collect().toSeq
+      finally confBc.destroy() // uncached reads must not leak broadcasts
     }
   }
 
@@ -954,20 +921,20 @@ final class Warehouse(val spark: SparkSession, val root: String) {
     * when `cols` is non-empty, one extra scan of the freshly written
     * `files` — planned through [[ManifestFileIndex.relation]], so no
     * schema-inference job — builds a per-column Bloom filter sized to
-    * the dir's `rows` (capped by `graft.bloom.maxItems`, fpp
+    * the dir's `rows` (capped at [[Warehouse.BloomMaxItems]], fpp
     * `graft.bloom.fpp`). Best-effort like the range sidecar.
     */
   private def writeBloomSidecar(vdir: Path, files: Seq[FileStatus],
                                 rows: Long, cols: Seq[String]): Unit =
     if (cols.nonEmpty && rows > 0) try {
-      val cap = intConf("graft.bloom.maxItems", 4000000).toLong
       ManifestFileIndex.relation(spark,
           files.groupBy(_.getPath.getParent).toSeq.map { case (d, fls) =>
             (d, fls.toArray) },
           Set(vdir))
         .foreach { df =>
           BloomStats.write(fs, vdir, BloomStats.build(df, cols,
-            math.min(rows, cap), doubleConf("graft.bloom.fpp", 0.05)))
+            math.min(rows, Warehouse.BloomMaxItems),
+            doubleConf("graft.bloom.fpp", 0.05)))
         }
     } catch { case scala.util.control.NonFatal(_) => () }
 
@@ -1232,13 +1199,10 @@ final class Warehouse(val spark: SparkSession, val root: String) {
     * local data, many-tiny-file scans). A frame already ENDING in an
     * explicit distribution (repartition/repartitionByRange/coalesce,
     * optionally under a partition-local sort) is the caller declaring its
-    * own layout and is never touched. `graft.write.rebalance=false` opts
-    * out; `=always` restores the unconditional hint.
+    * own layout and is never touched.
     */
   private def sizedForWrite(df: DataFrame): DataFrame = {
     import org.apache.spark.sql.catalyst.plans.logical._
-    val mode = spark.conf.getOption("graft.write.rebalance").getOrElse("auto")
-    if (mode == "false") return df
     val opt = df.queryExecution.optimizedPlan
     def explicitlyDistributed(p: LogicalPlan): Boolean = p match {
       case _: RepartitionOperation => true
@@ -1248,10 +1212,10 @@ final class Warehouse(val spark: SparkSession, val root: String) {
       case _ => false
     }
     if (explicitlyDistributed(df.queryExecution.logical)) return df
-    // Never reorder a frame that carries FLOATING-POINT columns, in ANY
-    // mode (`always` widens the rebalance's SCOPE; it is a perf knob and
-    // must not become a correctness trade): a rebalance changes row
-    // order, and the only way row order can reach an observable result
+    // Never reorder a frame that carries FLOATING-POINT columns (the
+    // rebalance is a perf measure and must not become a correctness
+    // trade): a rebalance changes row order, and the only way row order
+    // can reach an observable result
     // in this engine is through an order-sensitive float accumulation
     // downstream — the r18 10× sweep caught round(sum(double),2)
     // flipping a last-ulp rounding boundary when a staged table's rows
@@ -1275,7 +1239,6 @@ final class Warehouse(val spark: SparkSession, val root: String) {
       }
     }
     if (df.schema.fields.exists(f => hasFloat(f.dataType))) return df
-    if (mode == "always") return df.hint("rebalance")
     val shuffles = opt.exists {
       case _: Aggregate | _: Join | _: Window | _: Distinct => true
       case s: Sort => s.global
@@ -1752,7 +1715,7 @@ final class Warehouse(val spark: SparkSession, val root: String) {
         clusteredWriter(readEntries(rel, cur), Nil, Nil, zorderCols)
           .write.mode("overwrite").parquet(vdir.toString)
         Warehouse.faultPoint("mf.compact.data-written")
-        afterWrite(vdir, 0)
+        afterWrite(vdir, 0, sharedBloomCols(rel, dataEntries(cur).map(_._1)))
         commitEntries(rel)(_ => Seq((vdir.getName, "")))
         true
       }
@@ -1941,10 +1904,25 @@ final class Warehouse(val spark: SparkSession, val root: String) {
     df.map { d =>
       val vn = Warehouse.tempViewName(
         s"graft_mf_${rel.database}_${rel.schema}_${rel.identifier}", path(rel))
-      d.createOrReplaceTempView(vn)
+      // each registration is a command the planner runs: register only
+      // when the view is absent, stands for another frame (a new commit),
+      // or was replaced behind this warehouse's back
+      val catalog = spark.sessionState.catalog
+      val mine = mfViews.get(vn)
+      if (mine == null || (mine._1 ne d) ||
+          !catalog.getRawTempView(vn).exists(_ eq mine._2)) {
+        d.createOrReplaceTempView(vn)
+        catalog.getRawTempView(vn).foreach(v => mfViews.put(vn, (d, v)))
+      }
       "`" + vn + "`"
     }
   }
+
+  /** View name -> the frame this warehouse registered under it and the
+    * catalog entry that registration made ([[tempViewOf]]).
+    */
+  private val mfViews = new java.util.concurrent.ConcurrentHashMap[
+    String, (DataFrame, org.apache.spark.sql.catalyst.catalog.TemporaryViewRelation)]
 
   /** The warehouse at another root (a --defer/clone state root, a
     * cross-project upstream) on this session — one per root, so each
@@ -2181,10 +2159,28 @@ final class Warehouse(val spark: SparkSession, val root: String) {
       // would survive positioned before the delete entries and
       // normalizeEntries could never retire them — the relation would be
       // stuck on the delete-masked read path (and un-exportable) forever
-      replacePartitions(payload, rel, pcols, alsoDropPaths = toRewrite)
+      val rewritten = toRewrite.toSet
+      val fromDirs = latestManifest(rel).map(_._2).getOrElse(Nil)
+        .collect { case (d, part) if rewritten(part) => d }
+      replacePartitions(payload, rel, pcols, alsoDropPaths = toRewrite,
+        bloomCols = sharedBloomCols(rel, fromDirs))
     }
     toRewrite
   }
+
+  /** The columns that EVERY one of the version dirs `vdirNames` carries
+    * a `_graft_bloom` filter for — what a compaction re-blooms, so the
+    * rewrite keeps the point-lookup skipping its inputs already had
+    * (a snapshot's key blooms, an appender's `bloomCols`). A column some
+    * input dir was written without is not added: the rewrite keeps the
+    * blooms the data has, it does not choose new ones.
+    */
+  private def sharedBloomCols(rel: Relation,
+                              vdirNames: Seq[String]): Seq[String] =
+    vdirNames.distinct
+      .map(d => BloomStats.read(fs, new Path(mfDir(rel), d))
+        .fold(Set.empty[String])(_.keySet))
+      .reduceOption(_ intersect _).fold(Seq.empty[String])(_.toSeq.sorted)
 
   /** Age-based sweep of ORPHANED version dirs: a writer that crashed
     * after its data write but before its manifest commit leaves an
@@ -2365,6 +2361,23 @@ final class Warehouse(val spark: SparkSession, val root: String) {
 object Warehouse {
   /** A path-addressed parquet relation in SQL text: parquet.`path`. */
   private val PathRelation = "parquet\\.`([^`]+)`".r
+
+  /** Columns whose ranges one `_graft_stats` sidecar records per file. */
+  private val StatsMaxCols = 32
+
+  /** Expected-item cap of one `_graft_bloom` filter: a version dir with
+    * more rows gets a filter sized for this many (a higher false-positive
+    * rate, never a wrong answer).
+    */
+  private val BloomMaxItems: Long = 4000000L
+
+  /** A file status as plain values (path, length, mtime) — what crosses
+    * the `metadataFanOut` job boundary — and back.
+    */
+  private def statusWire(st: FileStatus): (String, Long, Long) =
+    (st.getPath.toString, st.getLen, st.getModificationTime)
+  private def statusOf(w: (String, Long, Long)): FileStatus =
+    new FileStatus(w._2, false, 1, 0, w._3, new Path(w._1))
 
   /** Collision-proof temp-view name: sanitization alone can collapse
     * distinct names ('team-a'/'x' and 'team'/'a_x' both flatten to

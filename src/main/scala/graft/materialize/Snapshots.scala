@@ -33,7 +33,7 @@ import graft.core._
   */
 final class Snapshotter(wh: Warehouse, subBuckets: Option[Int] = None) {
 
-  import Snapshotter.{BUCKET, CURRENT, SUB}
+  import Snapshotter.{BUCKET, CURRENT, StagingPersistMinRows, SUB}
 
   private val META = Seq("dbt_scd_id", "dbt_updated_at", "dbt_valid_from", "dbt_valid_to")
   /** dbt 1.9 `hard_deletes: new_record` tracking flag (string
@@ -121,8 +121,7 @@ final class Snapshotter(wh: Warehouse, subBuckets: Option[Int] = None) {
   // would leak onto concurrent node writes of other relations):
   // ManifestFileIndex then skips each leaf whose bloom proves the probed
   // key absent — the complement of the in-leaf sort, for keys that
-  // DON'T sort near the probe. Session-conf `graft.bloom.cols` still
-  // composes (the sidecar unions both sources).
+  // DON'T sort near the probe.
 
   /** Validity/change columns for the `check` strategy need a transaction
     * time; the engine passes the wall clock, tests/oracles pin a literal.
@@ -316,9 +315,7 @@ final class Snapshotter(wh: Warehouse, subBuckets: Option[Int] = None) {
       // the tracking row is inserted once (dbt-adapters#317 semantics)
       else if (newRecord) inCur && !inSrc && col(s"c.$DEL") =!= "True"
       else inCur && !inSrc
-    val persistStaging = curRows >= source.sparkSession.conf
-      .getOption("graft.snapshot.stagingPersistMinRows")
-      .map(_.toLong).getOrElse(8L << 20)
+    val persistStaging = curRows >= StagingPersistMinRows
     // new_record: a hard-deleted key's source columns are NULL on the s
     // side — the deletion-tracking row carries the CURRENT row's
     // last-known values instead
@@ -501,6 +498,10 @@ object Snapshotter {
   val SUB = "graft_scd_sub"
   /** Bucket value of open rows (`dbt_valid_to IS NULL`). */
   val CURRENT = "current"
+  /** Current-row count from which a run's change-detection staging frame
+    * is persisted rather than recomputed per consumer (8M rows).
+    */
+  private val StagingPersistMinRows = 8L << 20
 
   /** A snapshot run's transaction time: `now` evaluated once over a
     * one-row local relation. The optimizer folds the projection into the

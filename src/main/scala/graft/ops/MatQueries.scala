@@ -485,14 +485,12 @@ object MatQueries {
   def xBloomLookup(s: SparkSession, d: String): DataFrame = {
     val wh = freshWarehouse(s)
     val r = rel("orders_bloomed")
-    s.conf.set("graft.bloom.cols", "o_orderkey")
-    try {
-      val o = orders(s, d)
-      (0 to 3).foreach(k => wh.append(o.filter(col("o_orderkey") % 4 === k), r))
-      wh.read(r)
-        .filter(col("o_orderkey").isin(1L, 7L, 33L, 5000L, 65123L))
-        .select(col("o_orderkey"), col("o_totalprice"))
-    } finally s.conf.unset("graft.bloom.cols")
+    val o = orders(s, d)
+    (0 to 3).foreach(k => wh.append(o.filter(col("o_orderkey") % 4 === k), r,
+      bloomCols = Seq("o_orderkey")))
+    wh.read(r)
+      .filter(col("o_orderkey").isin(1L, 7L, 33L, 5000L, 65123L))
+      .select(col("o_orderkey"), col("o_totalprice"))
   }
   val xBloomLookupSql: String =
     """SELECT o_orderkey, o_totalprice FROM orders

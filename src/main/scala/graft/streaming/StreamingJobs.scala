@@ -282,16 +282,6 @@ object StreamingJobs {
     // written (ids are monotone per query, and foreachBatch runs on
     // the driver, so a plain volatile suffices).
     @volatile var lastBatchId = -1L
-    // sink files per micro-batch (default 1): the batch inherits the
-    // stateful plan's shuffle parallelism, which writes dozens of
-    // near-empty files per trigger (AQE cannot coalesce inside a
-    // streaming plan). The equivalence harness runs a BOUNDED corpus, so
-    // a single sink file per batch is the right sizing; production-scale
-    // ingestion goes through the warehouse appender (appendStreamBatch),
-    // which sizes its own output. `graft.stream.sinkPartitions` widens
-    // the sink for an sf1+ run so it isn't single-threaded per trigger.
-    val sinkParts = spark.conf.getOption("graft.stream.sinkPartitions")
-      .map(_.toInt).getOrElse(1)
     // the state width is set for start() (which pins it) and restored
     // whatever happens from there on, a failing start() included
     stateParts.foreach(n =>
@@ -301,7 +291,14 @@ object StreamingJobs {
         val started = df.writeStream.outputMode(mode)
           .foreachBatch { (batch: DataFrame, batchId: Long) =>
             if (batchId > lastBatchId) {
-              batch.repartition(sinkParts).write.mode(writeMode).parquet(outDir)
+              // one sink file per micro-batch: the batch inherits the
+              // stateful plan's shuffle parallelism, which writes dozens
+              // of near-empty files per trigger (AQE cannot coalesce
+              // inside a streaming plan). The harness runs a BOUNDED
+              // corpus, so one file per batch is the right sizing;
+              // production-scale ingestion goes through the warehouse
+              // appender (appendStreamBatch), which sizes its own output.
+              batch.repartition(1).write.mode(writeMode).parquet(outDir)
               lastBatchId = batchId
             }
             ()

@@ -17,6 +17,8 @@ object GraftFooterSchema {
   /** The Spark schema of each file's footer, merged left to right in
     * `files` order — the order decides column order: a column first seen
     * in a later file is appended after every earlier file's columns.
+    * Every field is nullable, as Spark's own `DataSource` reads files: a
+    * column that only later files carry is null in the earlier ones.
     * None when `files` is empty (or every footer is skipped as corrupt
     * under `spark.sql.files.ignoreCorruptFiles`). Throws when two
     * footers disagree on a column's type, like the merge it mirrors.
@@ -28,5 +30,6 @@ object GraftFooterSchema {
         spark.sessionState.newHadoopConf(), files, conf.ignoreCorruptFiles)
       .map(ParquetFileFormat.readSchemaFromFooter(_, converter))
       .reduceLeftOption(_.merge(_, conf.caseSensitiveAnalysis))
+      .map(_.asNullable)
   }
 }

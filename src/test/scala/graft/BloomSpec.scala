@@ -86,7 +86,6 @@ class BloomSpec extends AnyFunSuite {
   test("point lookups plan only bloom-positive dirs; ranges alone cannot prune here") {
     val root = Files.createTempDirectory("graft_bloom_wh").toString
     val s = spark; import s.implicits._
-    spark.conf.set("graft.bloom.cols", "id,name")
     spark.conf.set("graft.bloom.fpp", "0.001")
     try {
       val wh = new Warehouse(spark, root)
@@ -95,7 +94,8 @@ class BloomSpec extends AnyFunSuite {
       // whole [k, 495+k] range — min/max stats are structurally blind
       (0 to 4).foreach { k =>
         wh.append((0L to 499L).filter(_ % 5 == k)
-          .map(i => (i, s"key_$i")).toDF("id", "name").coalesce(1), r)
+          .map(i => (i, s"key_$i")).toDF("id", "name").coalesce(1), r,
+          bloomCols = Seq("id", "name"))
       }
       val one = scanOf(wh.read(r).filter($"id" === 7L))
       assert(one.metrics("numFiles").value == 1,
@@ -123,29 +123,31 @@ class BloomSpec extends AnyFunSuite {
       } finally spark.conf.unset("graft.bloom.enabled")
       assert(wh.read(r).filter($"id" === 7L).count() == 1)
       assert(wh.read(r).filter($"id".isin(7L, 103L)).count() == 2)
-    } finally {
-      spark.conf.unset("graft.bloom.cols")
-      spark.conf.unset("graft.bloom.fpp")
-    }
+    } finally spark.conf.unset("graft.bloom.fpp")
   }
 
   test("compaction rebuilds the bloom for the merged dir") {
+    // no session conf: the appends ask for the bloom, and compaction
+    // must keep it on the dir that replaces theirs
     val root = Files.createTempDirectory("graft_bloom_cmp").toString
     val s = spark; import s.implicits._
-    spark.conf.set("graft.bloom.cols", "id")
-    try {
-      val wh = new Warehouse(spark, root)
-      val r = Relation("db", "sch", "t_bloom_cmp")
-      (0 to 4).foreach { k =>
-        wh.append((0L to 99L).filter(_ % 5 == k).map(i => (i, i)).toDF("id", "v"), r)
-      }
-      assert(wh.compactTable(r, maxEntries = 2))
-      val hit = scanOf(wh.read(r).filter($"id" === 7L))
-      assert(hit.metrics("numFiles").value >= 1)
-      assert(wh.read(r).filter($"id" === 7L).count() == 1)
-      val miss = scanOf(wh.read(r).filter($"id" === 12345L))
-      assert(miss.metrics("numFiles").value == 0,
-        "the compacted dir must carry a fresh bloom")
-    } finally spark.conf.unset("graft.bloom.cols")
+    val wh = new Warehouse(spark, root)
+    val r = Relation("db", "sch", "t_bloom_cmp")
+    // even ids only: an odd id is absent but inside every range, so
+    // only the bloom can prune its probe
+    (0 to 4).foreach { k =>
+      wh.append((0L to 99L).filter(_ % 5 == k).map(i => (2 * i, i)).toDF("id", "v"), r,
+        bloomCols = Seq("id"))
+    }
+    assert(wh.compactTable(r, maxEntries = 2))
+    assert(wh.bloomsFor(r, "id").exists(_.size == 1),
+      "the compacted dir must carry a fresh bloom")
+    val hit = scanOf(wh.read(r).filter($"id" === 14L))
+    assert(hit.metrics("numFiles").value >= 1)
+    assert(wh.read(r).filter($"id" === 14L).count() == 1)
+    val miss = scanOf(wh.read(r).filter($"id" === 77L))
+    assert(miss.metrics("numFiles").value == 0,
+      "an absent in-range key must be pruned by the compacted dir's bloom")
+    assert(wh.read(r).filter($"id" === 77L).count() == 0)
   }
 }

@@ -351,7 +351,7 @@ class ManifestCommitSpec extends AnyFunSuite {
     }
     val serial = wh.read(r).collect()
       .map(x => (x.getAs[Long]("id"), x.getAs[String]("name"))).toSet
-    spark.conf.set("graft.manifest.parallelListThreshold", "2")
+    spark.conf.set("graft.metadata.parallelThreshold", "2")
     try {
       // fresh Warehouse: wh's per-seq read cache would otherwise serve
       // the serially-constructed DataFrame and skip the parallel path
@@ -365,11 +365,11 @@ class ManifestCommitSpec extends AnyFunSuite {
       val scan = pruned.queryExecution.executedPlan.collect {
         case s: org.apache.spark.sql.execution.FileSourceScanExec => s }.head
       assert(scan.metrics("numFiles").value == 1)
-    } finally spark.conf.unset("graft.manifest.parallelListThreshold")
+    } finally spark.conf.unset("graft.metadata.parallelThreshold")
   }
 
   test("parallel footer stats equal the serial path (rows, bytes, partitions)") {
-    // past graft.footer.parallelThreshold the footer opens run as a Spark
+    // past graft.metadata.parallelThreshold the footer opens run as a Spark
     // job (a 100k-file table costs the driver minutes of sequential
     // metadata round trips on an object store); both paths must agree
     val wh = freshWh(); val m = new Materializer(wh); val r = rel("t_fstat")
@@ -378,11 +378,11 @@ class ManifestCommitSpec extends AnyFunSuite {
     (1 to 5).foreach { i =>
       m.incremental(df(Seq((i.toLong, s"p$i", i.toDouble))), r, cfg)
     }
-    spark.conf.set("graft.footer.parallelThreshold", Int.MaxValue.toString)
+    spark.conf.set("graft.metadata.parallelThreshold", Int.MaxValue.toString)
     val serialRows = wh.footerRows(r)
     val serialSub = wh.footerRows(r, "name=p3")
     val serialCat = wh.catalogInfo("db", "sch")
-    spark.conf.set("graft.footer.parallelThreshold", "0")
+    spark.conf.set("graft.metadata.parallelThreshold", "0")
     try {
       assert(wh.footerRows(r) == serialRows, "footerRows paths disagree")
       assert(wh.footerRows(r, "name=p3") == serialSub,
@@ -390,7 +390,7 @@ class ManifestCommitSpec extends AnyFunSuite {
       assert(wh.catalogInfo("db", "sch") == serialCat,
         "catalogInfo paths disagree")
       assert(serialRows == 5L && serialSub == 1L)
-    } finally spark.conf.unset("graft.footer.parallelThreshold")
+    } finally spark.conf.unset("graft.metadata.parallelThreshold")
   }
 
   test("read cache never serves stale data across drop + recreate") {

@@ -499,4 +499,34 @@ class SnapshotSpec extends AnyFunSuite {
     // the non-NULL key stayed single-current and unchanged
     assert(wh.read(r).filter(col("id") === 1).count() == 1)
   }
+
+  test("compactPartitions keeps the snapshot's key blooms: a point probe still prunes") {
+    // no session conf: the snapshot writes ask for the key blooms, and
+    // the compaction rewrite must keep them on its merged dir
+    val wh = freshWh(); val snap = new Snapshotter(wh, subBuckets = Some(2))
+    val r = Relation("db", "s", "snap_cmp")
+    val strat = SnapshotStrategy.Timestamp("updated_at")
+    // even keys only: an odd key is absent yet inside every file's range
+    def rows(ks: Seq[Int], month: Int, tag: String) =
+      src(ks.map(k => (2L * k, s"$tag$k", ts(f"2024-$month%02d-01 00:00:00"))))
+    snap.snapshot(rows(1 to 100, 1, "a"), r, Seq("id"), strat)
+    snap.snapshot(rows(1 to 40, 2, "b"), r, Seq("id"), strat)
+    snap.snapshot(rows(41 to 80, 3, "c"), r, Seq("id"), strat)
+    assert(wh.bloomsFor(r, "id").isDefined)
+    val pcols = Seq(Snapshotter.BUCKET, Snapshotter.SUB)
+    assert(wh.compactPartitions(r, pcols, maxFiles = 0).nonEmpty)
+    assert(wh.bloomsFor(r, "id").isDefined,
+      "compaction left the merged dir without the key bloom")
+    assertInvariants(wh, r)
+    def plannedFiles(df: org.apache.spark.sql.DataFrame): Long = {
+      df.collect()
+      df.queryExecution.executedPlan.collect {
+        case sc: org.apache.spark.sql.execution.FileSourceScanExec =>
+          sc.metrics("numFiles").value }.sum
+    }
+    assert(plannedFiles(snap.read(r)) > 0)
+    assert(plannedFiles(snap.read(r).filter(col("id") === 77L)) == 0,
+      "the absent key's probe was not pruned by the bloom")
+    assert(snap.read(r).filter(col("id") === 60L).count() == 2)
+  }
 }

@@ -145,6 +145,42 @@ class ZeroJobPlanningSpec extends AnyFunSuite {
     val rows = read.collect().map(x =>
       (x.getAs[Long]("id"), Option(x.getAs[String]("extra")))).toSet
     assert(rows == Set((1L, None), (2L, Some("bx"))))
+    // a NON-nullable added column (a literal): the older files lack it,
+    // so the read must take it as nullable or the vectorized reader
+    // refuses the older files
+    val rn = Relation("db", "sch", "evo_nn")
+    w.writeAtomic(df(Seq((1L, "a", 1.0))), rn)
+    w.append(df(Seq((2L, "b", 2.0))).withColumn("extra", lit("x")), rn)
+    val readNn = new Warehouse(spark, root).read(rn)
+    assert(readNn.columns.toSeq == Seq("id", "name", "score", "extra"))
+    assert(readNn.collect().map(x =>
+      (x.getAs[Long]("id"), Option(x.getAs[String]("extra")))).toSet ==
+      Set((1L, None), (2L, Some("x"))))
+  }
+
+  test("resolveSql registers a relation's view once per committed version") {
+    val root = tmp("graft_zj_view")
+    val r = Relation("db", "sch", "tv")
+    val w = new Warehouse(spark, root)
+    w.writeAtomic(df(Seq((1L, "a", 1.0))), r)
+    val sql = s"SELECT * FROM parquet.`${w.path(r)}`"
+    val resolved = w.resolveSql(sql)
+    assert(resolved != sql, "the relation was not resolved to a view")
+    val vn = resolved.substring(resolved.indexOf('`') + 1, resolved.lastIndexOf('`'))
+    val catalog = spark.sessionState.catalog
+    val first = catalog.getRawTempView(vn).get
+    assert(w.resolveSql(sql) == resolved)
+    assert(catalog.getRawTempView(vn).get eq first,
+      "an unchanged relation was registered again")
+    w.append(df(Seq((2L, "b", 2.0))), r)
+    assert(w.resolveSql(sql) == resolved)
+    val second = catalog.getRawTempView(vn).get
+    assert(!(second eq first), "a new commit was not registered")
+    assert(spark.sql(resolved).count() == 2)
+    // a registration made behind the warehouse's back is replaced
+    spark.range(1).createOrReplaceTempView(vn)
+    w.resolveSql(sql)
+    assert(spark.sql(resolved).count() == 2)
   }
 
   test("a source rewritten in place with a new column is re-read by the next build") {
