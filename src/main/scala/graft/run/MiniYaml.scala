@@ -1,33 +1,29 @@
 package graft.run
 
-/** Minimal YAML-subset parser for dbt project files (`dbt_project.yml`,
-  * `schema.yml`/`sources.yml`, `packages.yml`, `selectors.yml`,
-  * `profiles.yml`).
-  *
-  * Deliberately NOT a YAML implementation — it parses the block-style
-  * subset those files actually use (reference: the .yml files at the
-  * repo root of `/root/reference` and under its `models` dir, plus the
-  * anchor-merge idiom real-world profiles.yml files lean on):
-  *   - `key: value` scalars (plain, single- or double-quoted; quotes may
-  *     wrap Jinja like `"{{ env_var('X') }}"`),
-  *   - `key:` opening a nested mapping or sequence at deeper indent,
-  *   - `- item` sequence entries: scalar items, or mapping items whose
-  *     first field rides the dash line (`- name: x`) and whose remaining
-  *     fields align under it,
-  *   - `[a, b]` / `['a', 'b']` flow sequences as scalar-list values,
-  *   - `{}` / `[]` empties, `#` comments, blank lines,
-  *   - `&anchor` on a value or block, `*alias` references, and
-  *     `<<: *anchor` merge keys (own keys win, earlier merges win —
-  *     the YAML merge-key spec),
-  *   - `|` / `>` block scalars with optional `-` chomping (`|+` keep
-  *     mode is refused — nothing in a dbt tree needs trailing blank
-  *     lines preserved).
-  * Multi-doc streams and tabs stay out of scope and fail loudly — a
-  * dbt project using them deserves a clear error, not silent
-  * misparsing.
+import java.nio.file.{Files, Path}
+import java.util.{Collections, IdentityHashMap}
+import scala.jdk.CollectionConverters._
+import org.yaml.snakeyaml.LoaderOptions
+import org.yaml.snakeyaml.composer.Composer
+import org.yaml.snakeyaml.error.{Mark, MarkedYAMLException, YAMLException}
+import org.yaml.snakeyaml.nodes.{MappingNode, ScalarNode, SequenceNode, Tag}
+import org.yaml.snakeyaml.parser.ParserImpl
+import org.yaml.snakeyaml.reader.StreamReader
+import org.yaml.snakeyaml.resolver.Resolver
+
+/** The dbt project files (`dbt_project.yml`, `schema.yml`, `packages.yml`,
+  * `selectors.yml`, `dependencies.yml`, `profiles.yml`) read as YAML 1.1,
+  * the dialect of dbt's PyYAML, from SnakeYAML's node graph (`compose`).
+  * Scalars stay raw strings (`on`, `yes`, `1.10`, `~` are not coerced;
+  * `key:` is `Scalar("")`), mappings keep document order and `Obj.get`
+  * returns the first match. Anchors resolve in the composer; `<<` merge
+  * keys flatten here (own keys win, earlier merge sources win). A file is
+  * one document with a mapping on top; an empty one is `Obj(Nil)`. Input
+  * is bounded (50 aliases to collections, no recursive keys, no alias
+  * cycles), and every error is an IllegalArgumentException with the line
+  * and column.
   */
 object MiniYaml {
-
   sealed trait Node
   final case class Scalar(value: String) extends Node
   final case class Arr(items: Seq[Node]) extends Node
@@ -50,372 +46,64 @@ object MiniYaml {
     case _ => Nil
   }
 
-  private final case class Line(indent: Int, text: String, lineNo: Int)
+  def parse(text: String): Obj = read(text, "yaml")
 
-  // parse-scoped state: anchor bindings (document order — an alias may
-  // only reference an anchor defined ABOVE it, as in YAML), plus the raw
-  // un-stripped lines for block-scalar content (comments and blank lines
-  // inside a block scalar are CONTENT, so the pre-stripped Line stream
-  // cannot serve them)
-  private final class Ctx(val raw: Array[String]) {
-    val anchors = scala.collection.mutable.Map.empty[String, Node]
-  }
+  /** [[parse]] of a file; an error message starts with its path. */
+  def parseFile(p: Path): Obj = read(Files.readString(p), p.toString)
 
-  def parse(text: String): Obj = {
-    val raw = text.split("\n", -1)
-    val lines = raw.iterator.zipWithIndex.flatMap {
-      case (rawLine, i) =>
-        require(!rawLine.contains("\t"),
-          s"yaml line ${i + 1}: tabs are not supported, use spaces")
-        val noComment = stripComment(rawLine)
-        val t = noComment.trim
-        if (t.isEmpty || t == "---") None
-        else Some(Line(noComment.takeWhile(_ == ' ').length, t, i + 1))
-    }.toIndexedSeq
-    if (lines.isEmpty) return Obj(Nil)
-    val ctx = new Ctx(raw)
-    val (node, next) = parseBlock(lines, 0, lines.head.indent, ctx)
-    require(next == lines.length,
-      s"yaml line ${lines(next).lineNo}: unexpected indentation " +
-        s"('${lines(next).text}')")
-    node match {
-      case o: Obj => o
-      case other => throw new IllegalArgumentException(
-        s"yaml: expected a top-level mapping, got $other")
+  private type YNode = org.yaml.snakeyaml.nodes.Node
+
+  private def read(text: String, where: String): Obj = {
+    def fail(m: Mark, msg: String): Nothing = throw new IllegalArgumentException(
+      s"$where line ${m.getLine + 1}, column ${m.getColumn + 1}: $msg")
+    val opts = new LoaderOptions
+    opts.setAllowRecursiveKeys(false)
+    val root = try {
+      new Composer(new ParserImpl(new StreamReader(text), opts), new Resolver,
+        opts).getSingleNode
+    } catch {
+      case e: MarkedYAMLException if e.getProblemMark != null =>
+        fail(e.getProblemMark,
+          Option(e.getContext).fold("")(_ + ": ") + e.getProblem)
+      case e: YAMLException =>
+        throw new IllegalArgumentException(s"$where: ${e.getMessage}", e)
     }
-  }
-
-  /** Strip a trailing comment, respecting quoted spans. */
-  private def stripComment(l: String): String = {
-    var q: Char = 0
-    var i = 0
-    while (i < l.length) {
-      val c = l.charAt(i)
-      if (q != 0) { if (c == q) q = 0 }
-      else if (c == '\'' || c == '"') q = c
-      else if (c == '#' && (i == 0 || l.charAt(i - 1).isWhitespace))
-        return l.substring(0, i)
-      i += 1
-    }
-    l
-  }
-
-  private def unq(v0: String): String = {
-    val v = v0.trim
-    if (v.length >= 2 && ((v.startsWith("'") && v.endsWith("'")) ||
-        (v.startsWith("\"") && v.endsWith("\""))))
-      v.substring(1, v.length - 1)
-    else v
-  }
-
-  private val anchorRe = """^&([A-Za-z0-9_-]+)(?:\s+(.*))?$""".r
-  private val aliasRe = """^\*([A-Za-z0-9_-]+)$""".r
-  private val blockScalarRe = """^([|>])([+-])?$""".r
-
-  private def aliasLookup(name: String, lineNo: Int, ctx: Ctx): Node =
-    ctx.anchors.getOrElse(name, throw new IllegalArgumentException(
-      s"yaml line $lineNo: alias '*$name' references no anchor defined " +
-        s"above it (defined: ${ctx.anchors.keys.toSeq.sorted.mkString(", ")})"))
-
-  /** A scalar value, a `[a, b]` flow list, `{}`/`[]` empties, or an
-    * `*alias` reference.
-    */
-  private def parseValue(v0: String, lineNo: Int, ctx: Ctx): Node = {
-    val v = v0.trim
-    v match {
-      case aliasRe(name) => return aliasLookup(name, lineNo, ctx)
-      case _ => ()
-    }
-    if (v == "[]") Arr(Nil)
-    else if (v == "{}") Obj(Nil)
-    else if (v.startsWith("[") && v.endsWith("]")) {
-      val inner = v.substring(1, v.length - 1).trim
-      if (inner.isEmpty) Arr(Nil)
-      else Arr(splitFlow(inner).map {
-        case aliasRe(name) => aliasLookup(name, lineNo, ctx)
-        case x => Scalar(unq(x))
-      })
-    }
-    else if (v.startsWith("{") && v.endsWith("}")) {
-      // tiny flow mapping: {col: type, col2: type2}
-      val inner = v.substring(1, v.length - 1).trim
-      if (inner.isEmpty) Obj(Nil)
-      else Obj(splitFlow(inner).map { kv =>
-        val i = kv.indexOf(':')
-        require(i > 0, s"yaml line $lineNo: bad flow-mapping entry '$kv'")
-        unq(kv.substring(0, i)) -> Scalar(unq(kv.substring(i + 1)))
-      })
-    }
-    else Scalar(unq(v))
-  }
-
-  /** Split flow-list content at top-level commas (quotes protect). */
-  private def splitFlow(s: String): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    val sb = new StringBuilder
-    var q: Char = 0
-    s.foreach {
-      case c @ ('\'' | '"') =>
-        if (q == 0) q = c else if (q == c) q = 0
-        sb.append(c)
-      case ',' if q == 0 => out += sb.result().trim; sb.clear()
-      case c => sb.append(c)
-    }
-    val last = sb.result().trim
-    if (last.nonEmpty) out += last
-    out.result()
-  }
-
-  /** `key` / `key: value` split at the first un-quoted colon followed by
-    * a space or end-of-line (URLs like `https://…` stay whole values).
-    */
-  private def keyValue(t: String, lineNo: Int): Option[(String, String)] = {
-    var q: Char = 0
-    var i = 0
-    while (i < t.length) {
-      val c = t.charAt(i)
-      if (q != 0) { if (c == q) q = 0 }
-      else if (c == '\'' || c == '"') q = c
-      else if (c == ':' && (i == t.length - 1 || t.charAt(i + 1) == ' '))
-        return Some((unq(t.substring(0, i)), t.substring(i + 1).trim))
-      i += 1
-    }
-    None
-  }
-
-  /** Consume a `|`/`>` block scalar's content from the RAW lines
-    * (comments and blanks inside it are content). Returns the text and
-    * the 1-based line number of the last consumed raw line.
-    */
-  private def blockScalar(style: String, chomp: String, keyIndent: Int,
-      lineNo: Int, ctx: Ctx): (Scalar, Int) = {
-    require(chomp != "+",
-      s"yaml line $lineNo: '$style+' keep-chomping is not supported")
-    // content: subsequent raw lines until a NON-BLANK line at indent <=
-    // the key's own indent (blank lines inside belong to the block)
-    var i = lineNo // rawLines is 0-based; lineNo is 1-based = next line
-    val taken = Seq.newBuilder[String]
-    var contentIndent = -1
-    var lastContent = lineNo
-    var done = false
-    while (!done && i < ctx.raw.length) {
-      val l = ctx.raw(i)
-      if (l.trim.isEmpty) { taken += ""; i += 1 }
-      else {
-        val ind = l.takeWhile(_ == ' ').length
-        if (ind <= keyIndent) done = true
-        else {
-          if (contentIndent < 0) contentIndent = ind
-          require(ind >= contentIndent,
-            s"yaml line ${i + 1}: block-scalar line is indented left of " +
-              "the block's first line")
-          taken += l.substring(contentIndent)
-          lastContent = i + 1
-          i += 1
-        }
+    // converted nodes by identity: an aliased subtree converts once, and a
+    // node met again while it is still open is an alias cycle
+    val done = new IdentityHashMap[YNode, Node]
+    val open = Collections.newSetFromMap(new IdentityHashMap[YNode, java.lang.Boolean])
+    def conv(n: YNode): Node = Option(done.get(n)).getOrElse {
+      if (!open.add(n)) fail(n.getStartMark,
+        s"alias '*${n.getAnchor}' refers to a node that contains it")
+      val out = n match {
+        case s: ScalarNode => Scalar(s.getValue)
+        case s: SequenceNode => Arr(s.getValue.asScala.toSeq.map(conv))
+        case m: MappingNode =>
+          val (merges, own) =
+            m.getValue.asScala.toSeq.partition(_.getKeyNode.getTag == Tag.MERGE)
+          val ownEntries = own.map(t => t.getKeyNode match {
+            case k: ScalarNode => k.getValue -> conv(t.getValueNode)
+            case k => fail(k.getStartMark, "mapping keys must be scalars")
+          })
+          val merged = merges.map(_.getValueNode).flatMap(v => conv(v) match {
+            case o: Obj => o.entries
+            case Arr(os) if os.forall(_.isInstanceOf[Obj]) =>
+              os.collect { case o: Obj => o.entries }.flatten
+            case _ => fail(v.getStartMark, "'<<' takes a mapping or a list of them")
+          })
+          val seen = scala.collection.mutable.Set(ownEntries.map(_._1): _*)
+          Obj(ownEntries ++ merged.filter(e => seen.add(e._1)))
       }
+      open.remove(n)
+      done.put(n, out)
+      out
     }
-    require(contentIndent >= 0,
-      s"yaml line $lineNo: block scalar '$style' has no content lines")
-    // trailing blanks past the last content line belong to the parent
-    val body = taken.result().take(
-      taken.result().lastIndexWhere(_.nonEmpty) + 1)
-    val text = style match {
-      case "|" => body.mkString("\n")
-      case _ =>
-        // ">" folding: a single newline between content lines -> space;
-        // a run of n blank lines -> exactly n newlines (the break ENDING
-        // the previous content line is consumed by the fold, so it is n,
-        // not n+1: 'a\nb\n\nc' folds to 'a b\nc')
-        val sb = new StringBuilder
-        var blanks = 0
-        var first = true
-        for (l <- body) {
-          if (l.isEmpty) blanks += 1
-          else {
-            if (blanks > 0) sb.append("\n" * blanks)
-            else if (!first) sb.append(' ')
-            sb.append(l); first = false; blanks = 0
-          }
-        }
-        sb.toString
+    root match {
+      case null => Obj(Nil)
+      case s: ScalarNode if s.getTag == Tag.NULL => Obj(Nil) // `---` alone
+      case m: MappingNode => conv(m).asInstanceOf[Obj]
+      case n => fail(n.getStartMark,
+        s"expected a top-level mapping, got a ${n.getNodeId}")
     }
-    (Scalar(if (chomp == "-") text else text + "\n"), lastContent)
-  }
-
-  private def parseBlock(lines: IndexedSeq[Line], start: Int,
-                         indent: Int, ctx: Ctx): (Node, Int) =
-    if (lines(start).text.startsWith("- ") || lines(start).text == "-")
-      parseSeq(lines, start, indent, ctx)
-    else parseMap(lines, start, indent, ctx)
-
-  /** Resolve a map entry's value text, handling `&anchor`, `*alias`, and
-    * `|`/`>` block scalars. Returns (node, nextLineIdx) where node=None
-    * means the value opens a nested block (possibly anchored) that the
-    * caller parses.
-    */
-  private def parseMap(lines: IndexedSeq[Line], start: Int,
-                       indent: Int, ctx: Ctx): (Node, Int) = {
-    val own = Seq.newBuilder[(String, Node)]
-    val merged = Seq.newBuilder[(String, Node)]
-    var i = start
-    while (i < lines.length && lines(i).indent == indent &&
-        !lines(i).text.startsWith("- ")) {
-      val l = lines(i)
-      keyValue(l.text, l.lineNo) match {
-        case Some((k, v0)) =>
-          // `&anchor` prefix: remember the parsed node under the name
-          val (anchor, v) = v0 match {
-            case anchorRe(name, rest) => (Some(name), Option(rest).getOrElse(""))
-            case _ => (None, v0)
-          }
-          def bind(n: Node): Node = { anchor.foreach(ctx.anchors(_) = n); n }
-          def addEntry(n: Node): Unit =
-            if (k == "<<") n match {
-              // merge key: earlier sources win among themselves; the
-              // map's own keys win over all of them (YAML merge spec)
-              case o: Obj => merged ++= o.entries
-              case Arr(items) => items.foreach {
-                case o: Obj => merged ++= o.entries
-                case other => throw new IllegalArgumentException(
-                  s"yaml line ${l.lineNo}: '<<:' merge sources must be " +
-                    s"mappings, got $other")
-              }
-              case other => throw new IllegalArgumentException(
-                s"yaml line ${l.lineNo}: '<<:' merge value must be a " +
-                  s"mapping alias or list of them, got $other")
-            } else own += k -> n
-          v match {
-            case blockScalarRe(style, chomp) =>
-              val (scalar, lastRaw) = blockScalar(style,
-                Option(chomp).getOrElse(""), l.indent, l.lineNo, ctx)
-              addEntry(bind(scalar))
-              i += 1
-              while (i < lines.length && lines(i).lineNo <= lastRaw) i += 1
-            case nonEmpty if nonEmpty.nonEmpty =>
-              addEntry(bind(parseValue(nonEmpty, l.lineNo, ctx)))
-              i += 1
-            case _ => // `key:` (or `key: &a`) — nested block or empty
-              if (i + 1 < lines.length && lines(i + 1).indent > indent) {
-                val (child, next) =
-                  parseBlock(lines, i + 1, lines(i + 1).indent, ctx)
-                addEntry(bind(child))
-                i = next
-              } else if (i + 1 < lines.length &&
-                  lines(i + 1).indent == indent &&
-                  lines(i + 1).text.startsWith("- ")) {
-                // sequence items aligned AT the key's own indent (valid yaml)
-                val (child, next) = parseSeq(lines, i + 1, indent, ctx)
-                addEntry(bind(child))
-                i = next
-              } else {
-                addEntry(bind(Scalar("")))
-                i += 1
-              }
-          }
-        case None => throw new IllegalArgumentException(
-          s"yaml line ${l.lineNo}: expected 'key:' or 'key: value', " +
-            s"got '${l.text}'")
-      }
-    }
-    // merge-key resolution: own entries first (Obj.get is first-match,
-    // so own keys shadow merged ones), then merged entries deduped
-    // first-wins among themselves and filtered against own keys
-    val ownEntries = own.result()
-    val ownKeys = ownEntries.map(_._1).toSet
-    val seen = scala.collection.mutable.Set.empty[String]
-    val mergedEntries = merged.result().filter { case (k, _) =>
-      !ownKeys.contains(k) && seen.add(k)
-    }
-    (Obj(ownEntries ++ mergedEntries), i)
-  }
-
-  private def parseSeq(lines: IndexedSeq[Line], start: Int,
-                       indent: Int, ctx: Ctx): (Node, Int) = {
-    val items = Seq.newBuilder[Node]
-    var i = start
-    while (i < lines.length && lines(i).indent == indent &&
-        (lines(i).text.startsWith("- ") || lines(i).text == "-")) {
-      val l = lines(i)
-      val rest0 = l.text.drop(1).trim
-      // `- &a …` item anchor
-      val (itemAnchor, rest) = rest0 match {
-        case anchorRe(name, r) => (Some(name), Option(r).getOrElse(""))
-        case _ => (None, rest0)
-      }
-      def bind(n: Node): Node = { itemAnchor.foreach(ctx.anchors(_) = n); n }
-      if (rest.isEmpty) {
-        // `-` alone: nested node on the following deeper lines
-        require(i + 1 < lines.length && lines(i + 1).indent > indent,
-          s"yaml line ${l.lineNo}: empty sequence item")
-        val (child, next) = parseBlock(lines, i + 1, lines(i + 1).indent, ctx)
-        items += bind(child)
-        i = next
-      } else if (rest.startsWith("{") || rest.startsWith("[")) {
-        // `- {id: 1, name: x}` / `- [a, b]` flow items — parseValue,
-        // never keyValue (the colon inside braces is not a mapping key)
-        items += bind(parseValue(rest, l.lineNo, ctx))
-        i += 1
-      } else keyValue(rest, l.lineNo) match {
-        case Some((k, v0)) =>
-          // mapping item: first field on the dash line, the rest under
-          // it at the FIRST field's actual column (usually dash + 2,
-          // but any number of spaces after the dash is valid yaml)
-          val fieldIndent =
-            indent + 1 + l.text.drop(1).takeWhile(_ == ' ').length
-          // `&anchor` on the head-field VALUE (`- name: &a foo`, a real
-          // schema.yml idiom) — same extraction parseMap does for its
-          // values; without it the `&a` would silently parse as part of
-          // the scalar text and the anchor never register
-          val (headAnchor, v) = v0 match {
-            case anchorRe(name, r) => (Some(name), Option(r).getOrElse(""))
-            case _ => (None, v0)
-          }
-          def bindHead(n: Node): Node =
-            { headAnchor.foreach(ctx.anchors(_) = n); n }
-          val head: (String, Node) = v match {
-            case blockScalarRe(style, chomp) =>
-              // the block ends at the FIELD's column (the item's later
-              // fields sit there), not the dash's
-              val (scalar, lastRaw) = blockScalar(style,
-                Option(chomp).getOrElse(""), fieldIndent, l.lineNo, ctx)
-              while (i + 1 < lines.length && lines(i + 1).lineNo <= lastRaw)
-                i += 1
-              k -> bindHead(scalar)
-            case _ =>
-            if (v.nonEmpty) k -> bindHead(parseValue(v, l.lineNo, ctx))
-            else if (i + 1 < lines.length &&
-                lines(i + 1).indent > fieldIndent) {
-              val (child, next) =
-                parseBlock(lines, i + 1, lines(i + 1).indent, ctx)
-              i = next - 1 // consumed; adjusted below
-              k -> bindHead(child)
-            } else if (i + 1 < lines.length &&
-                lines(i + 1).indent == fieldIndent &&
-                (lines(i + 1).text.startsWith("- ") ||
-                  lines(i + 1).text == "-")) {
-              // `key:` with its sequence items AT the field indent —
-              // valid yaml, same shape parseMap accepts at map level
-              val (child, next) = parseSeq(lines, i + 1, fieldIndent, ctx)
-              i = next - 1
-              k -> bindHead(child)
-            } else k -> bindHead(Scalar(""))
-          }
-          var entries = Seq(head)
-          i += 1
-          if (lines.isDefinedAt(i) && lines(i).indent == fieldIndent &&
-              !lines(i).text.startsWith("- ")) {
-            val (Obj(more), next) =
-              parseMap(lines, i, fieldIndent, ctx): @unchecked
-            entries ++= more
-            i = next
-          }
-          items += bind(Obj(entries))
-        case None =>
-          items += bind(parseValue(rest, l.lineNo, ctx))
-          i += 1
-      }
-    }
-    (Arr(items.result()), i)
   }
 }

@@ -60,7 +60,7 @@ object ProjectLoader {
 
   def load(rootDir: String): (Project, Map[String, String]) = {
     val root = Paths.get(rootDir)
-    val py = MiniYaml.parse(Files.readString(root.resolve("dbt_project.yml")))
+    val py = MiniYaml.parseFile(root.resolve("dbt_project.yml"))
     val name = py.scalar("name").getOrElse(throw new IllegalArgumentException(
       s"$rootDir/dbt_project.yml: 'name' is required"))
 
@@ -231,7 +231,7 @@ object ProjectLoader {
     val ymlDocs: Seq[Obj] = modelDirs
       .flatMap(d => listRec(d, ".yml") ++ listRec(d, ".yaml"))
       .filterNot(_.getFileName.toString == "dbt_project.yml")
-      .map(p => MiniYaml.parse(Files.readString(p)))
+      .map(MiniYaml.parseFile)
 
     def objScalar(o: Obj, keys: String*): Option[String] =
       keys.iterator.flatMap(o.scalar).nextOption()
@@ -736,7 +736,7 @@ object ProjectLoader {
     val dependencies = {
       val f = root.resolve("dependencies.yml")
       if (!Files.exists(f)) Nil
-      else MiniYaml.parse(Files.readString(f)).arr("projects").map {
+      else MiniYaml.parseFile(f).arr("projects").map {
         case d: Obj =>
           val dName = d.scalar("name").getOrElse(throw new
               IllegalArgumentException(
@@ -950,7 +950,7 @@ object ProjectLoader {
     // layout silently loads zero snapshots.
     val snapYmlDocs: Seq[Obj] = snapDirs
       .flatMap(d => listRec(d, ".yml") ++ listRec(d, ".yaml"))
-      .map(p => MiniYaml.parse(Files.readString(p)))
+      .map(MiniYaml.parseFile)
     val ymlSnapshots = (ymlDocs ++ snapYmlDocs)
       .flatMap(_.arr("snapshots")).collect {
       case sn: Obj if sn.scalar("relation").isDefined =>
@@ -1081,7 +1081,7 @@ object ProjectLoader {
     val selectors = {
       val f = root.resolve("selectors.yml")
       if (!Files.exists(f)) Nil
-      else MiniYaml.parse(Files.readString(f)).arr("selectors").collect {
+      else MiniYaml.parseFile(f).arr("selectors").collect {
         case s: Obj =>
           val n = s.scalar("name").getOrElse(throw new
               IllegalArgumentException("selectors.yml: entry needs a name"))
@@ -1162,29 +1162,34 @@ object ProjectLoader {
       val ymlPath = root.resolve("packages.yml")
       val declared: Seq[(String, Path)] =
         if (!Files.exists(ymlPath)) Nil
-        else {
-          val entryRe = """^-\s*(local|package|git|hub|tarball)\s*:\s*(.+?)\s*$""".r
-          readLines(ymlPath).flatMap {
-            case entryRe("local", dir0) =>
-              val p0 = Paths.get(unquote(dir0))
+        else MiniYaml.parseFile(ymlPath).arr("packages").map {
+          case item: Obj => item.entries.collectFirst {
+            case (k @ ("local" | "package" | "git" | "hub" | "tarball"),
+                Scalar(v)) => k -> v
+          } match {
+            case Some(("local", d)) =>
+              val p0 = Paths.get(d)
               val dir = if (p0.isAbsolute) p0 else root.resolve(p0)
               require(Files.isDirectory(dir),
                 s"packages.yml: local package directory not found: $dir")
               val name = dir.getFileName.toString.replaceAll("\\W", "_")
-              Some(name -> dir)
-            case entryRe(kind, what0) =>
-              val what = unquote(what0)
+              name -> dir
+            case Some((kind, what)) =>
               val base = what.split("/").last.stripSuffix(".git")
                 .replaceAll("\\W", "_")
               val mirror = root.resolve("packages").resolve(base)
-              if (Files.isDirectory(mirror)) Some(base -> mirror)
+              if (Files.isDirectory(mirror)) base -> mirror
               else throw new IllegalArgumentException(
                 s"packages.yml: '$kind: $what' needs network access to " +
                   s"fetch and no vendored mirror exists — either vendor " +
                   s"the package at $mirror (the packages/ mirror " +
                   "convention) or declare it with 'local:'")
-            case _ => None // top-level `packages:` key, version/rev lines
+            case None => throw new IllegalArgumentException(
+              "packages.yml: an entry needs one of local/package/git/" +
+                s"hub/tarball: ${item.entries.map(_._1).mkString(", ")}")
           }
+          case bad => throw new IllegalArgumentException(
+            s"packages.yml: packages entries must be mappings, got $bad")
         }
       if (declared.nonEmpty) declared
       else if (Files.isDirectory(root.resolve("packages")))
@@ -1216,14 +1221,4 @@ object ProjectLoader {
     bareFromPkgs ++
       pkgMacroDefs.map { case (p, d) => s"$p.${d.name}" -> d }.toMap
   }
-
-  /** Strip one level of single quotes and unescape `''` → `'`. */
-  private def unquote(v: String): String =
-    if (v.length >= 2 && v.startsWith("'") && v.endsWith("'"))
-      v.substring(1, v.length - 1).replace("''", "'")
-    else v
-
-  private def readLines(p: Path): Seq[String] =
-    Files.readAllLines(p).asScala.toSeq.map(_.trim)
-      .filter(l => l.nonEmpty && !l.startsWith("#"))
 }

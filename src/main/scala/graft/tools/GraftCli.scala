@@ -666,7 +666,7 @@ object GraftCli {
     val file = (profilesDir.toSeq :+ projectDir)
       .map(d => Paths.get(d, "profiles.yml")).find(Files.exists(_))
     file.fold(Map.empty[String, String]) { f =>
-      val y = MiniYaml.parse(Files.readString(f))
+      val y = MiniYaml.parseFile(f)
       // only mappings WITH an outputs: block are profiles — dbt's
       // top-level `config:` (and any other metadata mapping) must not
       // shadow the single real profile in the no-name auto-selection

@@ -4,9 +4,10 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.run.MiniYaml
 import graft.run.MiniYaml.{Arr, Obj, Scalar}
 
-/** The YAML-subset parser behind dbt-native project ingestion — pinned
-  * against the reference project's own files (verbatim copies below) and
-  * the block/flow shapes dbt docs use.
+/** The YAML reader behind dbt-native project ingestion — pinned against
+  * the reference project's own files (verbatim copies below), the
+  * block/flow shapes dbt docs use, YAML 1.1 comment/escape/document
+  * rules, and the guards on outside input.
   */
 class MiniYamlSpec extends AnyFunSuite {
 
@@ -207,7 +208,7 @@ class MiniYamlSpec extends AnyFunSuite {
     assert(y.scalar("two_blanks").contains("a\n\nc\n"))
   }
 
-  test("literal | block scalars keep newlines; > folds; - chomps") {
+  test("literal | block scalars keep newlines; > folds; - chomps; + keeps") {
     val y = MiniYaml.parse(
       """description: |
         |  line one
@@ -229,8 +230,8 @@ class MiniYamlSpec extends AnyFunSuite {
     // a # inside a block scalar is CONTENT, not a comment
     val c = MiniYaml.parse("q: |\n  select 1 -- x\n  # not a comment\n")
     assert(c.scalar("q").contains("select 1 -- x\n# not a comment\n"))
-    // |+ keep mode is refused loudly
-    intercept[IllegalArgumentException](MiniYaml.parse("a: |+\n  x\n"))
+    // |+ keeps the trailing blank lines
+    assert(MiniYaml.parse("a: |+\n  x\n\nb: 1").scalar("a").contains("x\n\n"))
   }
 
   test("block scalar on a sequence item's dash line") {
@@ -244,5 +245,62 @@ class MiniYamlSpec extends AnyFunSuite {
     val Seq(m: Obj) = y.arr("models"): @unchecked
     assert(m.scalar("description").contains("first\nsecond\n"))
     assert(m.scalar("name").contains("m1"))
+  }
+
+  test("a second document in one file is refused, not merged") {
+    val e = intercept[IllegalArgumentException](
+      MiniYaml.parse("a: 1\n---\nb: 2\n"))
+    assert(e.getMessage.contains("single document"), e.getMessage)
+  }
+
+  test("an apostrophe in a plain scalar does not hide a trailing comment") {
+    val y = MiniYaml.parse("description: don't  # note\n")
+    assert(y.scalar("description").contains("don't"))
+  }
+
+  test("quoted scalars unescape '' and backslash escapes") {
+    val y = MiniYaml.parse("s: 'it''s'\nd: \"a\\\"b\"\n")
+    assert(y.scalar("s").contains("it's"))
+    assert(y.scalar("d").contains("a\"b"))
+  }
+
+  test("multi-line plain scalars and nested flow collections parse") {
+    val y = MiniYaml.parse(
+      """d: this is
+        |  continued
+        |a: {b: [1, 2], c: 3}
+        |""".stripMargin)
+    assert(y.scalar("d").contains("this is continued"))
+    val a = y.obj("a").get
+    assert(MiniYaml.scalars(a.get("b").get) == Seq("1", "2"))
+    assert(a.scalar("c").contains("3"))
+  }
+
+  test("scalars stay raw strings: no YAML 1.1 coercion") {
+    val y = MiniYaml.parse("a: on\nb: yes\nc: 1.10\nd: ~\ne:\n")
+    assert(Seq("a", "b", "c", "d", "e").map(y.scalar(_).get)
+      == Seq("on", "yes", "1.10", "~", ""))
+    assert(MiniYaml.parse("# only a comment\n") == Obj(Nil))
+    assert(MiniYaml.parse("") == Obj(Nil))
+  }
+
+  test("a self-referencing alias is refused, not expanded") {
+    val e = intercept[IllegalArgumentException](MiniYaml.parse("a: &x [*x]\n"))
+    assert(e.getMessage.contains("line 1"), e.getMessage)
+  }
+
+  test("a billion-laughs document is refused at the alias limit") {
+    // 9 levels, each a list of 10 aliases of the level below: 10^9 leaves
+    val levels = (1 to 9).map(i =>
+      s"l$i: &l$i [${Seq.fill(10)(s"*l${i - 1}").mkString(", ")}]")
+    val doc = ("l0: &l0 [lol]" +: levels).mkString("\n")
+    val e = intercept[IllegalArgumentException](MiniYaml.parse(doc))
+    assert(e.getMessage.contains("aliases"), e.getMessage)
+    // under the limit, 25 levels of 2 aliases (2^25 leaves) still convert
+    // each node once: both items of a level are the same converted node
+    val chain = (1 to 25).map(i => s"l$i: &l$i [*l${i - 1}, *l${i - 1}]")
+    val y = MiniYaml.parse(("l0: &l0 [lol]" +: chain).mkString("\n"))
+    val Seq(x1, x2) = y.arr("l25"): @unchecked
+    assert(x1 eq x2)
   }
 }

@@ -456,6 +456,32 @@ class ProjectLoaderSpec extends AnyFunSuite {
     val err = intercept[IllegalArgumentException](
       ProjectLoader.load(dir.toString))
     assert(err.getMessage.contains("packages/other_pkg"), err.getMessage)
+    // the entry's kind key need not come first in its mapping
+    put(dir, "packages.yml", "packages:\n  - version: 1.1.1\n" +
+      "    package: other-org/other_pkg\n")
+    val err2 = intercept[IllegalArgumentException](
+      ProjectLoader.load(dir.toString))
+    assert(err2.getMessage.contains("packages/other_pkg"), err2.getMessage)
+    // a trailing comment is not part of a local path
+    put(dir, "models/m.sql", "SELECT {{ vendored.tag() }} AS a")
+    put(dir, "vendor/vendored/macros/v.sql",
+      "{% macro tag() %}'local'{% endmacro %}")
+    put(dir, "packages.yml",
+      "packages:\n  - local: vendor/vendored  # pinned\n")
+    assert(ProjectLoader.load(dir.toString)._1.macros
+      .contains("vendored.tag"))
+  }
+
+  test("yaml errors name their file and line") {
+    val dir = Files.createTempDirectory("graft_yamlerr")
+    put(dir, "dbt_project.yml", "name: yamlerr\n")
+    put(dir, "models/m.sql", "SELECT 1 AS a")
+    put(dir, "models/schema.yml",
+      "version: 2\nmodels:\n  - name: m\n   description: bad indent\n")
+    val err = intercept[IllegalArgumentException](
+      ProjectLoader.load(dir.toString))
+    assert("""schema\.yml line \d+""".r.findFirstIn(err.getMessage).isDefined,
+      err.getMessage)
   }
 
   test("docs blocks: {% docs %} markdown feeds doc() description sites") {
