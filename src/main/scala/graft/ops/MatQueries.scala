@@ -16,7 +16,7 @@ object MatQueries {
   import TData._
 
   private def freshWarehouse(s: SparkSession): Warehouse =
-    new Warehouse(s, Files.createTempDirectory("graft_wh").toString)
+    new Warehouse(s, Scratch.dir("graft_wh").toString)
   private def rel(name: String) = Relation("wh", "main", name)
 
   // ---------------------------------------------------------------- B1 table
@@ -289,7 +289,7 @@ object MatQueries {
   def b18Seed(s: SparkSession, d: String): DataFrame = {
     val wh = freshWarehouse(s)
     val m = new Materializer(wh)
-    val csv = Files.createTempFile("graft_seed", ".csv")
+    val csv = Scratch.dir("graft_seed").resolve("seed.csv")
     Files.writeString(csv,
       "id,name,score\n1,alpha,1.5\n2,beta,2.25\n3,gamma,-3.75\n")
     m.seed(s, csv.toString, rel("seed_demo"),
@@ -309,7 +309,7 @@ object MatQueries {
   def bSeedAgateTypes(s: SparkSession, d: String): DataFrame = {
     val wh = freshWarehouse(s)
     val m = new Materializer(wh)
-    val csv = Files.createTempFile("graft_seed_agate", ".csv")
+    val csv = Scratch.dir("graft_seed_agate").resolve("seed.csv")
     Files.writeString(csv,
       "id,active,flag,joined,seen_at,label\n" +
         "1,t,True,2024-01-02,2024-01-02 03:04:05,yes it is\n" +

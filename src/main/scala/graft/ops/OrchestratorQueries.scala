@@ -13,7 +13,7 @@ import graft.run._
 object OrchestratorQueries {
 
   private def freshRoot(): String =
-    Files.createTempDirectory("graft_engine_wh").toString
+    Scratch.dir("graft_engine_wh").toString
 
   /** A `sources.yml` declaring one TPC-H table of corpus `d` as source
     * `tpch.<table>`.
@@ -244,7 +244,7 @@ object OrchestratorQueries {
     * `$.macros` prefixes `macro.dbt.` / `macro.dbt_bigquery.`).
     */
   def packageMacros(s: SparkSession, d: String): DataFrame = {
-    val proj = Files.createTempDirectory("graft_pkg_proj")
+    val proj = Scratch.dir("graft_pkg_proj")
     Files.writeString(proj.resolve("dbt_project.yml"), "name: pkg_demo\n")
     Files.createDirectories(proj.resolve("models"))
     Files.writeString(proj.resolve("models").resolve("sources.yml"),
@@ -435,7 +435,7 @@ object OrchestratorQueries {
     * packages (dbt-utils ships exactly this default__/adapter__ shape).
     */
   def adapterDispatch(s: SparkSession, d: String): DataFrame = {
-    val proj = Files.createTempDirectory("graft_dispatch_proj")
+    val proj = Scratch.dir("graft_dispatch_proj")
     Files.writeString(proj.resolve("dbt_project.yml"), "name: dispatch_demo\n")
     Files.createDirectories(proj.resolve("models"))
     Files.writeString(proj.resolve("models").resolve("sources.yml"),
@@ -927,7 +927,7 @@ object OrchestratorQueries {
     * going wrong changes the hash.
     */
   def modelVersions(s: SparkSession, d: String): DataFrame = {
-    val proj = Files.createTempDirectory("graft_model_versions")
+    val proj = Scratch.dir("graft_model_versions")
     def put(name: String, text: String): Unit = {
       val p = proj.resolve(name)
       Files.createDirectories(p.getParent)
@@ -1024,7 +1024,7 @@ object OrchestratorQueries {
     * evaluation path.
     */
   def genericTest(s: SparkSession, d: String): DataFrame = {
-    val proj = Files.createTempDirectory("graft_generic_test")
+    val proj = Scratch.dir("graft_generic_test")
     def put(name: String, text: String): Unit = {
       val p = proj.resolve(name)
       Files.createDirectories(p.getParent)
@@ -1079,7 +1079,7 @@ object OrchestratorQueries {
     * (tree default), refs inline across them.
     */
   def dbtNativeProject(s: SparkSession, d: String): DataFrame = {
-    val proj = Files.createTempDirectory("graft_dbt_native")
+    val proj = Scratch.dir("graft_dbt_native")
     def put(name: String, text: String): Unit = {
       val p = proj.resolve(name)
       Files.createDirectories(p.getParent)
@@ -1565,7 +1565,7 @@ object OrchestratorQueries {
     */
   def sourceFormats(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.functions.col
-    val stage = Files.createTempDirectory("graft_srcfmt").toString
+    val stage = Scratch.dir("graft_srcfmt").toString
     s.read.parquet(s"$d/nation.parquet")
       .coalesce(1).write.mode("overwrite").json(s"$stage/nation_json")
     s.read.parquet(s"$d/region.parquet")

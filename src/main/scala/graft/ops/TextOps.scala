@@ -364,7 +364,7 @@ object TextOps {
     // synthetic split: extras (doc_id ≥ 1000000) are the new batch
     val idx = fuzzyIndexes.computeIfAbsent(s"${s.hashCode()}:$d", _ => {
       val wh = new graft.core.Warehouse(s,
-        java.nio.file.Files.createTempDirectory("graft_fuzzy_idx").toString)
+        Scratch.dir("graft_fuzzy_idx").toString)
       val i = new FuzzyIndex(wh, "docs")
       i.build(corpus(s, d).filter(col("doc_id") < 1000000))
       i

@@ -2153,24 +2153,6 @@ final class Engine(spark: SparkSession, project0: Project, target: Target) {
       : (Seq[Dag.NodeResult], Seq[TestResult]) =
     build(Some(retrySelection(runResultsPath)), deferRoot, fullRefresh)
 
-  /** Point-in-time DDL for EXTERNAL engines/sessions — closes the
-    * path-addressed warehouse's discoverability gap: `CREATE OR REPLACE
-    * VIEW` statements (ANSI-ish Spark SQL) over the CURRENT committed
-    * state, so any Spark session (or an engine with parquet path
-    * tables) registers the warehouse without knowing graft's layout.
-    * Tables expand to their committed (version, partition) slices with
-    * partition values re-attached as literals CAST to the reader
-    * schema's types — replaced partitions and multi-version appends
-    * read exactly like graft's own reader. Durable view models re-emit
-    * their compiled SQL with intra-warehouse path references rewritten
-    * to the exported names (a raw `.view.sql` over a manifest table
-    * root would read every version). Returns (statements, skipped):
-    * not exportable — reported, never silent — are relations with
-    * pending row-delete entries (positional masks; compact retires
-    * them) and materialized_view models (their stored shape is internal
-    * partials). This is an EXPORT, not a live pointer: re-run after
-    * builds.
-    */
   /** `graft vacuum`: enforce the declared bigquery_options TTLs
     * (reference @15210) against the warehouse's committed state.
     * `hours_to_expiration` drops the WHOLE relation once its newest
@@ -2209,6 +2191,24 @@ final class Engine(spark: SparkSession, project0: Project, target: Target) {
     out.result()
   }
 
+  /** Point-in-time DDL for EXTERNAL engines/sessions — closes the
+    * path-addressed warehouse's discoverability gap: `CREATE OR REPLACE
+    * VIEW` statements (ANSI-ish Spark SQL) over the CURRENT committed
+    * state, so any Spark session (or an engine with parquet path
+    * tables) registers the warehouse without knowing graft's layout.
+    * Tables expand to their committed (version, partition) slices with
+    * partition values re-attached as literals CAST to the reader
+    * schema's types — replaced partitions and multi-version appends
+    * read exactly like graft's own reader. Durable view models re-emit
+    * their compiled SQL with intra-warehouse path references rewritten
+    * to the exported names (a raw `.view.sql` over a manifest table
+    * root would read every version). Returns (statements, skipped):
+    * not exportable — reported, never silent — are relations with
+    * pending row-delete entries (positional masks; compact retires
+    * them) and materialized_view models (their stored shape is internal
+    * partials). This is an EXPORT, not a live pointer: re-run after
+    * builds.
+    */
   def catalogDdl(): (Seq[String], Seq[String]) = {
     val stmts = Seq.newBuilder[String]
     val skipped = Seq.newBuilder[String]
@@ -2322,108 +2322,12 @@ final class Engine(spark: SparkSession, project0: Project, target: Target) {
     (stmts.result(), skipped.result())
   }
 
-  /** `dbt docs generate` artifact: the catalog.json analogue — one entry
-    * per materialized relation in the target schema with row count, byte
-    * size, partition layout, and column schema, plus every durable view
-    * with its compiled definition. Stats come from parquet FOOTERS via
-    * [[Warehouse.catalogInfo]] (never a table scan — docs generation on
-    * a 100 TB warehouse stays a metadata pass) and columns from the
-    * parquet schema.
-    */
-  def writeCatalog(path: String): Unit = {
-    // full JSON escape incl. control chars — view DEFINITIONS are
-    // multi-line compiled SQL, which a simple quote-escape corrupts
-    import Js.q
-    def desc(key: String): String =
-      project.descriptions.get(key)
-        .map(d => s", ${q("description")}: ${q(d)}").getOrElse("")
-    // declared retention/grants surface in the catalog artifact (vacuum
-    // enforces the TTLs; the DDL export emits the GRANTs)
-    val propsOf: Map[String, String] = project.models.flatMap { m =>
-      val c = effectiveConfig(m)
-      val kvs =
-        c.hoursToExpiration
-          .map(h => s"${q("hours_to_expiration")}: $h").toSeq ++
-        c.partitionExpirationDays
-          .map(dd => s"${q("partition_expiration_days")}: $dd").toSeq ++
-        (if (c.grants.isEmpty) Nil
-         else Seq(s"${q("grants")}: {" + c.grants.map { case (p, gs) =>
-           s"${q(p)}: [${gs.map(q).mkString(", ")}]" }.mkString(", ") + "}")) ++
-        (if (c.labels.isEmpty) Nil
-         else Seq(s"${q("labels")}: {" + c.labels.map { case (k, v) =>
-           s"${q(k)}: ${q(v)}" }.mkString(", ") + "}")) ++
-        c.kmsKeyName.map(k => s"${q("kms_key_name")}: ${q(k)}").toSeq
-      if (kvs.isEmpty) None
-      else Some(relationFor(m.name).identifier -> kvs.mkString("{", ", ", "}"))
-    }.toMap
-    def props(rel: Relation): String =
-      propsOf.get(rel.identifier)
-        .map(p => s", ${q("properties")}: $p").getOrElse("")
-    val tables = warehouse.catalogInfo(target.database, target.resolvedSchema)
-      .map { case (rel, rows, bytes, parts) =>
-        val cols = warehouse.schemaOf(rel).fields.map(f =>
-          s"{${q("name")}: ${q(f.name)}, ${q("type")}: ${q(f.dataType.sql)}" +
-            s"${desc(s"${rel.identifier}.${f.name}")}}")
-        s"{${q("name")}: ${q(rel.identifier)}, ${q("kind")}: ${q("table")}, " +
-          s"${q("rows")}: $rows, ${q("bytes")}: $bytes, " +
-          s"${q("partitions")}: [${parts.map(q).mkString(", ")}], " +
-          s"${q("columns")}: [${cols.mkString(", ")}]" +
-          s"${props(rel)}${desc(rel.identifier)}}"
-      }
-    val views = warehouse.listViews(target.database, target.resolvedSchema)
-      .flatMap(rel => warehouse.readViewDef(rel).map(defn =>
-        s"{${q("name")}: ${q(rel.identifier)}, ${q("kind")}: ${q("view")}, " +
-          s"${q("definition")}: ${q(defn)}${props(rel)}${desc(rel.identifier)}}"))
-    Files.writeString(Paths.get(path),
-      s"""{"schema": ${q(target.resolvedSchema)}, "relations": [${(tables ++ views).mkString(", ")}]}""")
-    ()
-  }
-
-  // ------------------------------------------------------------- manifest
-  /** `dbt compile` (SURVEY §3.3): emit the state manifest without running. */
-  def writeManifest(path: String): Unit = {
-    def q(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-    val parents = parentsOf
-    val entries = (project.models.map(m =>
-        (m.name, Compiler.checksum(m.rawSql + "|" + effectiveConfig(m).toString))) ++
-      project.seeds.map(s => (s.name,
-        Compiler.checksum(Files.readString(Paths.get(s.csvPath))))) ++
-      project.snapshots.map(s => (s.name, Compiler.checksum(s.rawSql))))
-      .map { case (n, ck) =>
-        val deps = parents.getOrElse(n, Nil).map(q).mkString("[", ",", "]")
-        s"${q(n)}: {${q("checksum")}: ${q(ck)}, ${q("deps")}: $deps}"
-      }
-    val exposures = project.exposures.map { e =>
-      val deps = e.dependsOn.map(q).mkString("[", ",", "]")
-      s"${q(e.name)}: {${q("deps")}: $deps, ${q("owner")}: ${q(e.owner)}, ${q("url")}: ${q(e.url)}}"
-    }
-    Files.writeString(Paths.get(path),
-      s"""{"project": ${q(project.name)}, "nodes": {${entries.mkString(", ")}}, """ +
-        s""""exposures": {${exposures.mkString(", ")}}}""")
-    ()
-  }
-
-  // ------------------------------------------ dbt artifact-schema emitters
-  // The graft-internal manifest above is the slim-CI state format; these
-  // two emit dbt's PUBLISHED artifact shapes (field names from dbt's
-  // public schemas at schemas.getdbt.com — manifest v12, catalog v1) so
-  // external dbt tooling (docs UI, CI scripts keyed on unique_ids) can
-  // read `graft docs` output directly.
-
-  private object Js {
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    def obj(kvs: (String, String)*): String =
-      kvs.map { case (k, v) => s"${q(k)}: $v" }.mkString("{", ", ", "}")
-    def arr(xs: Seq[String]): String = xs.mkString("[", ", ", "]")
-  }
+  // ------------------------------------------------------ dbt artifacts
+  // dbt's PUBLISHED artifact shapes (field names from dbt's public
+  // schemas at schemas.getdbt.com — manifest v12, catalog v1,
+  // run_results v6, sources v3): external dbt tooling (docs UI, CI
+  // scripts keyed on unique_ids) reads graft's output directly, and slim
+  // CI diffs the same manifest dbt commits as its state.
 
   /** dbt unique_id for a project node (models/seeds/snapshots get their
     * resource-type prefix; sources the 4-part source id).
@@ -2447,24 +2351,31 @@ final class Engine(spark: SparkSession, project0: Project, target: Target) {
       "adapter_type" -> q("spark"))
   }
 
-  /** `manifest.json` in dbt's published v12 shape: `nodes` keyed by
-    * unique_id with resource_type/package_name/checksum/config/
-    * depends_on/raw_code, `sources`, `macros`, `exposures`, and the
-    * parent/child maps dbt tooling navigates by.
+  /** `manifest.json` in dbt's published v12 shape — the `dbt compile`
+    * artifact (SURVEY §3.3) and the slim-CI state [[StateSelector]]
+    * diffs: `nodes` keyed by unique_id with resource_type/package_name/
+    * checksum/config/depends_on/raw_code, `sources`, `macros`,
+    * `exposures`, and the parent/child maps dbt tooling navigates by.
+    * A model's `config` is its whole resolved [[ModelConfig]]
+    * ([[Js.config]]), so a config-only change is a state change.
     */
-  def writeDbtManifest(path: String): Unit = {
+  def writeManifest(path: String): Unit = {
     import Js._
+    val parents = parentsOf
+    val allNames = (project.models.map(_.name) ++ project.seeds.map(_.name)
+      ++ project.snapshots.map(_.name))
+    // parents as unique_ids: ref()'d nodes, then the sources read
+    val rawOf = (project.models.map(m => m.name -> m.rawSql) ++
+      project.snapshots.map(s => s.name -> s.rawSql)).toMap
+    val parentIds: Map[String, Seq[String]] = allNames.map { n =>
+      n -> (parents.getOrElse(n, Nil).map(uniqueIdOf) ++
+        rawOf.get(n).toSeq.flatMap(sql => Compiler.dependencies(sql)._2.map {
+          case (s, t) => s"source.${project.name}.$s.$t" })).distinct
+    }.toMap
     def nodeEntry(name: String, resourceType: String, rawCode: String,
-                  materialized: String, checksum: String,
-                  tags: Set[String],
-                  grants: Seq[(String, Seq[String])] = Nil): (String, String) = {
+                  cfg: ModelConfig, checksum: String): (String, String) = {
       val uid = s"$resourceType.${project.name}.$name"
       val rel = relationFor(name)
-      val (refDeps, srcDeps) = Compiler.dependencies(rawCode)
-      val depIds = refDeps.filter(r => project.models.exists(_.name == r) ||
-          project.seeds.exists(_.name == r) ||
-          project.snapshots.exists(_.name == r)).map(uniqueIdOf) ++
-        srcDeps.map { case (s, t) => s"source.${project.name}.$s.$t" }
       uid -> obj(
         "unique_id" -> q(uid),
         "name" -> q(name),
@@ -2477,30 +2388,21 @@ final class Engine(spark: SparkSession, project0: Project, target: Target) {
         "alias" -> q(rel.identifier),
         "fqn" -> arr(Seq(q(project.name), q(name))),
         "checksum" -> obj("name" -> q("sha256"), "checksum" -> q(checksum)),
-        "config" -> obj(
-          "enabled" -> "true",
-          "materialized" -> q(materialized),
-          "tags" -> arr(tags.toSeq.sorted.map(q)),
-          // dbt manifest v12 carries config.grants on every node; the
-          // ledger the DDL export's GRANT statements are derived from
-          "grants" -> ("{" + grants.map { case (p, gs) =>
-            s"${q(p)}: ${arr(gs.map(q))}" }.mkString(", ") + "}")),
-        "tags" -> arr(tags.toSeq.sorted.map(q)),
+        "config" -> config(cfg),
+        "tags" -> value(cfg.tags),
         "depends_on" -> obj(
           "macros" -> "[]",
-          "nodes" -> arr(depIds.distinct.map(q))),
+          "nodes" -> arr(parentIds(name).map(q))),
         "raw_code" -> q(rawCode))
     }
     val nodes =
       project.models.map(m => nodeEntry(m.name, "model", m.rawSql,
-        effectiveConfig(m).materialized,
-        Compiler.checksum(m.rawSql), effectiveConfig(m).tags,
-        effectiveConfig(m).grants)) ++
-      project.seeds.map(s => nodeEntry(s.name, "seed",
-        "", "seed", Compiler.checksum(Files.readString(Paths.get(s.csvPath))),
-        Set.empty)) ++
+        effectiveConfig(m), Compiler.checksum(m.rawSql))) ++
+      project.seeds.map(s => nodeEntry(s.name, "seed", "",
+        ModelConfig(materialized = "seed"),
+        Compiler.checksum(Files.readString(Paths.get(s.csvPath))))) ++
       project.snapshots.map(s => nodeEntry(s.name, "snapshot", s.rawSql,
-        "snapshot", Compiler.checksum(s.rawSql), Set.empty))
+        ModelConfig(materialized = "snapshot"), Compiler.checksum(s.rawSql)))
     val sources = project.sources.map { s =>
       val uid = s"source.${project.name}.${s.sourceName}.${s.tableName}"
       uid -> obj(
@@ -2536,33 +2438,22 @@ final class Engine(spark: SparkSession, project0: Project, target: Target) {
           "nodes" -> arr(e.dependsOn.map(d => q(uniqueIdOf(d))))))
     }
     // parent/child maps over node+source unique_ids (dbt tooling walks
-    // lineage through these, not depends_on)
-    val parents = parentsOf
-    val allNames = (project.models.map(_.name) ++ project.seeds.map(_.name)
-      ++ project.snapshots.map(_.name))
-    val parentMap = allNames.map { n =>
-      val m = project.models.find(_.name == n)
-      val srcIds = m.map(mm => Compiler.dependencies(mm.rawSql)._2.map {
-        case (s, t) => s"source.${project.name}.$s.$t" }).getOrElse(Nil)
-      q(uniqueIdOf(n)) ->
-        arr((parents.getOrElse(n, Nil).map(uniqueIdOf) ++ srcIds).distinct.map(q))
-    }
+    // lineage through these, not depends_on; `state:modified+` walks
+    // child_map)
+    val parentMap = allNames.map(n => uniqueIdOf(n) -> arr(parentIds(n).map(q)))
     val childMap = allNames.map { n =>
-      q(uniqueIdOf(n)) -> arr(allNames.filter(c =>
+      uniqueIdOf(n) -> arr(allNames.filter(c =>
         parents.getOrElse(c, Nil).contains(n)).map(c => q(uniqueIdOf(c))))
     }
-    def section(entries: Seq[(String, String)]): String =
-      entries.map { case (k, v) =>
-        s"${if (k.startsWith("\"")) k else q(k)}: $v" }.mkString("{", ", ", "}")
     Files.writeString(Paths.get(path), obj(
       "metadata" -> artifactMetadata(
         "https://schemas.getdbt.com/dbt/manifest/v12.json"),
-      "nodes" -> section(nodes),
-      "sources" -> section(sources),
-      "macros" -> section(macros),
-      "exposures" -> section(exposures),
-      "parent_map" -> section(parentMap),
-      "child_map" -> section(childMap)))
+      "nodes" -> obj(nodes: _*),
+      "sources" -> obj(sources: _*),
+      "macros" -> obj(macros: _*),
+      "exposures" -> obj(exposures: _*),
+      "parent_map" -> obj(parentMap: _*),
+      "child_map" -> obj(childMap: _*)))
     ()
   }
 
@@ -2682,16 +2573,20 @@ final class Engine(spark: SparkSession, project0: Project, target: Target) {
       relationFor(m.name).identifier -> m.name).toMap ++
       project.seeds.map(s => relationFor(s.name).identifier -> s.name) ++
       project.snapshots.map(s => relationFor(s.name).identifier -> s.name)
-    def entry(rel: Relation, kind: String, rows: Long, bytes: Long): Option[(String, String)] =
+    // a table carries its columns and footer stats (rows, bytes); a
+    // view is listed with neither
+    def entry(rel: Relation, kind: String,
+              stats: Option[(Long, Long)]): Option[(String, String)] =
       byIdentifier.get(rel.identifier).map { name =>
         val uid = uniqueIdOf(name)
-        val cols = warehouse.schemaOf(rel).fields.zipWithIndex.map {
-          case (f, i) => q(f.name) -> obj(
-            "type" -> q(f.dataType.sql),
-            "index" -> (i + 1).toString,
-            "name" -> q(f.name),
-            "comment" -> comment(s"${rel.identifier}.${f.name}"))
-        }
+        val cols = if (stats.isEmpty) Nil
+          else warehouse.schemaOf(rel).fields.toSeq.zipWithIndex.map {
+            case (f, i) => f.name -> obj(
+              "type" -> q(f.dataType.sql),
+              "index" -> (i + 1).toString,
+              "name" -> q(f.name),
+              "comment" -> comment(s"${rel.identifier}.${f.name}"))
+          }
         uid -> obj(
           "unique_id" -> q(uid),
           "metadata" -> obj(
@@ -2701,77 +2596,138 @@ final class Engine(spark: SparkSession, project0: Project, target: Target) {
             "database" -> q(rel.database),
             "comment" -> comment(rel.identifier),
             "owner" -> "null"),
-          "columns" -> cols.map { case (k, v) => s"$k: $v" }
-            .mkString("{", ", ", "}"),
-          "stats" -> Seq(
-            stat("has_stats", "Has Stats?", "true", include = false),
-            stat("row_count", "Row Count", rows.toString, include = true),
-            stat("bytes", "Approximate Size", bytes.toString, include = true))
-            .map { case (k, v) => s"${q(k)}: $v" }.mkString("{", ", ", "}"))
+          "columns" -> obj(cols: _*),
+          "stats" -> obj(
+            stat("has_stats", "Has Stats?", stats.isDefined.toString,
+              include = false) +:
+            stats.toSeq.flatMap { case (rows, bytes) => Seq(
+              stat("row_count", "Row Count", rows.toString, include = true),
+              stat("bytes", "Approximate Size", bytes.toString,
+                include = true)) }: _*))
       }
     val tables = warehouse.catalogInfo(target.database, target.resolvedSchema)
-      .flatMap { case (rel, rows, bytes, _) => entry(rel, "table", rows, bytes) }
+      .flatMap { case (rel, rows, bytes, _) =>
+        entry(rel, "table", Some((rows, bytes))) }
     val views = warehouse.listViews(target.database, target.resolvedSchema)
-      .flatMap(rel => byIdentifier.get(rel.identifier).map { name =>
-        val uid = uniqueIdOf(name)
-        uid -> obj(
-          "unique_id" -> q(uid),
-          "metadata" -> obj(
-            "type" -> q("view"),
-            "schema" -> q(rel.schema),
-            "name" -> q(rel.identifier),
-            "database" -> q(rel.database),
-            "comment" -> comment(rel.identifier),
-            "owner" -> "null"),
-          "columns" -> "{}",
-          "stats" -> Seq(stat("has_stats", "Has Stats?", "false",
-            include = false))
-            .map { case (k, v) => s"${q(k)}: $v" }.mkString("{", ", ", "}"))
-      })
+      .flatMap(entry(_, "view", None))
     Files.writeString(Paths.get(path), obj(
       "metadata" -> artifactMetadata(
         "https://schemas.getdbt.com/dbt/catalog/v1.json"),
-      "nodes" -> (tables ++ views).map { case (k, v) => s"${q(k)}: $v" }
-        .mkString("{", ", ", "}"),
+      "nodes" -> obj(tables ++ views: _*),
       "sources" -> "{}",
       "errors" -> "null"))
     ()
   }
 }
 
-/** Slim-CI state selection (SURVEY §3.2): diff two manifests, select
-  * modified nodes and (for `state:modified+`) their downstream closure.
+/** The JSON writer of the dbt artifacts and of `graft.Verify`'s
+  * `oracle_sql.json`.
   */
-object StateSelector {
-  private val nodeRe =
-    """"([^"]+)": \{"checksum": "([^"]+)", "deps": \[([^\]]*)\]\}""".r
+private[graft] object Js {
+  /** A JSON string literal. Escapes quote, backslash and EVERY control
+    * char (< 0x20): multi-line SQL stays valid on one line.
+    */
+  def q(s: String): String = "\"" + s.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+  def obj(kvs: (String, String)*): String =
+    kvs.map { case (k, v) => s"${q(k)}: $v" }.mkString("{", ", ", "}")
+  def arr(xs: Seq[String]): String = xs.mkString("[", ", ", "]")
 
-  def parseManifest(path: String): Map[String, (String, Seq[String])] =
-    nodeRe.findAllMatchIn(Files.readString(Paths.get(path))).map { m =>
-      val deps = m.group(3).split(",").map(_.trim.stripPrefix("\"")
-        .stripSuffix("\"")).filter(_.nonEmpty).toSeq
-      m.group(1) -> ((m.group(2), deps))
-    }.toMap
+  private def snake(s: String): String =
+    s.replaceAll("(?<=[a-z0-9])(?=[A-Z])", "_").toLowerCase
 
-  /** Nodes whose checksum changed or that are new vs the previous state. */
-  def modified(currentPath: String, previousPath: String): Set[String] = {
-    val cur = parseManifest(currentPath)
-    val prev = parseManifest(previousPath)
-    cur.collect { case (n, (ck, _)) if !prev.get(n).map(_._1).contains(ck) => n }.toSet
+  /** A Scala config value as JSON: options unwrap to the value or null,
+    * sets are sorted arrays, case objects their snake_cased names.
+    */
+  def value(v: Any): String = v match {
+    case s: String => q(s)
+    case None => "null"
+    case Some(x) => value(x)
+    case xs: Set[_] => arr(xs.toSeq.map(value).sorted)
+    case xs: Seq[_] => arr(xs.map(value))
+    case p: Product => q(snake(p.productPrefix))
+    case x => x.toString
   }
 
-  /** `state:modified+`: include all transitive children of modified nodes. */
+  // key/value-list fields (labels, grants, contract) are objects in
+  // dbt's config even when empty, so their shape comes from the type
+  private val pairFields: Set[String] = classOf[ModelConfig].getDeclaredFields
+    .filter(_.getGenericType.getTypeName.contains("scala.Tuple2"))
+    .map(_.getName).toSet
+
+  /** Manifest v12 node `config`: every [[ModelConfig]] field under its
+    * snake_cased name. A change to any field is a `state:modified`
+    * change, like dbt's `modified.configs`.
+    */
+  def config(c: ModelConfig): String =
+    obj(c.productElementNames.zip(c.productIterator).map {
+      case (k, kvs: Seq[_]) if pairFields(k) => snake(k) -> obj(kvs.map {
+        case (key, v) => key.toString -> value(v) }: _*)
+      case (k, v) => snake(k) -> value(v)
+    }.toSeq: _*)
+}
+
+/** Slim-CI state selection (SURVEY §3.2): diff two v12 manifests
+  * ([[Engine.writeManifest]]) and select modified nodes and, for
+  * `state:modified+`, their downstream closure. A node is modified when
+  * it is new, or its body checksum or its `config` differs — dbt's
+  * `modified.body` plus `modified.configs`.
+  */
+object StateSelector {
+  import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+  import scala.jdk.CollectionConverters._
+
+  /** A dbt manifest. Anything else — a run_results file, `{}` — is
+    * refused rather than read as "no previous state", which would select
+    * every node.
+    */
+  private def read(path: String): JsonNode = {
+    val root = new ObjectMapper().readTree(new java.io.File(path))
+    if (!root.path("metadata").path("dbt_schema_version").asText
+        .contains("/manifest/") || !root.path("nodes").isObject)
+      throw new IllegalArgumentException(
+        s"$path is not a dbt manifest: it needs a manifest " +
+          "metadata.dbt_schema_version and a nodes object")
+    root
+  }
+
+  /** unique_ids of the nodes new or changed vs the previous state. */
+  private def changed(cur: JsonNode, prev: JsonNode): Set[String] =
+    cur.path("nodes").fields.asScala.filter { e =>
+      val p = prev.path("nodes").path(e.getKey)
+      p.isMissingNode ||
+        p.path("checksum").path("checksum") != e.getValue.path("checksum").path("checksum") ||
+        p.path("config") != e.getValue.path("config")
+    }.map(_.getKey).toSet
+
+  private def names(cur: JsonNode, ids: Set[String]): Set[String] =
+    ids.map(cur.path("nodes").path(_).path("name").asText)
+
+  def modified(currentPath: String, previousPath: String): Set[String] = {
+    val cur = read(currentPath)
+    names(cur, changed(cur, read(previousPath)))
+  }
+
+  /** `state:modified+`: the modified nodes and every node downstream of
+    * them along the current manifest's `child_map`.
+    */
   def modifiedPlus(currentPath: String, previousPath: String): Set[String] = {
-    val cur = parseManifest(currentPath)
-    val mod = modified(currentPath, previousPath)
-    val childrenOf = cur.keys.map(n =>
-      n -> cur.collect { case (c, (_, deps)) if deps.contains(n) => c }.toSeq).toMap
+    val cur = read(currentPath)
     def expand(frontier: Set[String], acc: Set[String]): Set[String] =
       if (frontier.isEmpty) acc
       else {
-        val next = frontier.flatMap(childrenOf.getOrElse(_, Nil)) -- acc
+        val next = frontier.flatMap(id => cur.path("child_map").path(id)
+          .elements.asScala.map(_.asText)) -- acc
         expand(next, acc ++ next)
       }
-    expand(mod, mod)
+    val mod = changed(cur, read(previousPath))
+    names(cur, expand(mod, mod))
   }
 }

@@ -459,7 +459,7 @@ object StreamingJobs {
     */
   def streamJoinEquiv(spark: SparkSession, d: String): DataFrame = {
     import java.nio.file.{Files, Paths, StandardCopyOption}
-    val dir = Files.createTempDirectory("graft_stream_join")
+    val dir = graft.ops.Scratch.dir("graft_stream_join")
     Files.copy(Paths.get(s"$d/events.parquet"),
       dir.resolve("part-0-events.parquet"), StandardCopyOption.REPLACE_EXISTING)
     val src = readEvents(spark, dir.toString)
@@ -485,7 +485,7 @@ object StreamingJobs {
     */
   def dedupEquiv(spark: SparkSession, d: String): DataFrame = {
     import java.nio.file.{Files, Paths, StandardCopyOption}
-    val dir = Files.createTempDirectory("graft_dedup_equiv")
+    val dir = graft.ops.Scratch.dir("graft_dedup_equiv")
     Files.copy(Paths.get(s"$d/events.parquet"),
       dir.resolve("part-0-events.parquet"), StandardCopyOption.REPLACE_EXISTING)
     Files.copy(Paths.get(s"$d/events.parquet"),
@@ -508,7 +508,7 @@ object StreamingJobs {
   def sessionizeEquiv(spark: SparkSession, d: String): DataFrame = {
     import java.nio.file.{Files, Paths, StandardCopyOption}
     import scala.jdk.CollectionConverters._
-    val dir = Files.createTempDirectory("graft_stream_equiv")
+    val dir = graft.ops.Scratch.dir("graft_stream_equiv")
     Files.copy(Paths.get(s"$d/events.parquet"),
       dir.resolve("part-0-events.parquet"), StandardCopyOption.REPLACE_EXISTING)
     // sentinel in the same physical ts shape as the staged corpus file

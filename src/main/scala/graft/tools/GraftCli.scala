@@ -24,8 +24,8 @@ import graft.run.{Engine, ProjectLoader, StateSelector, Target}
   *                    (--select m | --inline 'SELECT ...'; --limit N)
   *   export           write a built model in another format
   *                    (--select m --out path [--format csv|json|parquet])
-  *   docs             write the catalog.json artifact (--out p; footer
-  *                    stats + view definitions, no table scans)
+  *   docs             write dbt's catalog.json v1 (--out p; footer stats,
+  *                    no table scans) and manifest.json v12 beside it
   *   list             print (selected) nodes with kind/materialization/tags
   *   lineage          Graphviz DOT of the (selected) lineage graph
   *   debug            resolved config + source-path/warehouse checks
@@ -33,7 +33,8 @@ import graft.run.{Engine, ProjectLoader, StateSelector, Target}
   *   ddl              print CREATE VIEW DDL registering the warehouse's
   *                    current committed state in an EXTERNAL engine/session
   *                    (point-in-time export; skips report to stderr)
-  *   compile          emit the state manifest (no execution)
+  *   compile          emit dbt's manifest.json v12, the slim-CI state
+  *                    (no execution)
   *   test             only the declared tests
   *   freshness        source freshness vs thresholds
   *   catalog          tables (footer row counts, bytes, partitions) + durable views
@@ -75,6 +76,7 @@ import graft.run.{Engine, ProjectLoader, StateSelector, Target}
   *   --exclude <sel>    subtract these nodes from the selection (same
   *                      grammar; applies to --state selection too)
   *   --state <manifest> slim CI: select state:modified+ vs that manifest
+  *                      (v12, as compile writes it)
   *   --defer <root>     resolve unselected upstream refs to this warehouse
   *   --full-refresh     rebuild incrementals from scratch
   *   --fail-fast        stop scheduling new nodes after the first error
@@ -167,9 +169,11 @@ object GraftCli {
 
     val select: Option[Set[String]] =
       flags.get("state").flatMap(_.headOption).map { prev =>
-        val cur = Files.createTempFile("graft_manifest", ".json").toString
-        engine.writeManifest(cur)
-        val sel = StateSelector.modifiedPlus(cur, prev)
+        val cur = Files.createTempFile("graft_manifest", ".json")
+        val sel = try {
+          engine.writeManifest(cur.toString)
+          StateSelector.modifiedPlus(cur.toString, prev)
+        } finally Files.delete(cur)
         println(s"state:modified+ selected: ${sel.toSeq.sorted.mkString(", ")}")
         sel
       }.orElse(flags.get("selector").flatMap(_.headOption).map { name =>
@@ -359,20 +363,14 @@ object GraftCli {
         stmts.foreach(s => println(s + ";\n"))
         skipped.foreach(r => System.err.println(s"[graft] ddl skipped: $r"))
       case "docs" =>
-        // `dbt docs generate`: the catalog artifact (footer stats only)
-        val out = flags.get("out").flatMap(_.headOption)
-          .getOrElse(s"$whRoot/catalog.json")
-        engine.writeCatalog(out)
-        println(s"catalog written: $out")
-        // dbt's PUBLISHED artifact shapes alongside (catalog v1 +
-        // manifest v12, schemas.getdbt.com) — readable by external dbt
-        // tooling; the graft-shaped artifacts above stay the slim-CI
-        // state format
-        val dbtDir = java.nio.file.Paths.get(out).toAbsolutePath.getParent
-        engine.writeDbtCatalog(s"$dbtDir/dbt_catalog.json")
-        engine.writeDbtManifest(s"$dbtDir/dbt_manifest.json")
-        println(s"dbt-schema artifacts written: $dbtDir/dbt_catalog.json, " +
-          s"$dbtDir/dbt_manifest.json")
+        // `dbt docs generate`: catalog v1 (footer stats only) at --out,
+        // manifest v12 beside it
+        val out = java.nio.file.Paths.get(flags.get("out").flatMap(_.headOption)
+          .getOrElse(s"$whRoot/catalog.json")).toAbsolutePath
+        val manifest = out.resolveSibling("manifest.json")
+        engine.writeDbtCatalog(out.toString)
+        engine.writeManifest(manifest.toString)
+        println(s"docs written: $out, $manifest")
       case "compile" =>
         val out = flags.get("manifest").flatMap(_.headOption)
           .getOrElse(s"$whRoot/manifest.json")

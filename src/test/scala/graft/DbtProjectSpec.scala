@@ -1153,8 +1153,8 @@ class DbtProjectSpec extends AnyFunSuite {
   test("bigquery_options labels + kms_key_name load, export, catalog") {
     // reference bigquery_options (manifest.json:1 @15210): labels and
     // kms_key_name are inert in a parquet warehouse but a ported project
-    // carrying them must NOT silently drop them — they ride catalog.json
-    // properties and the DDL export as TBLPROPERTIES, like the TTLs
+    // carrying them must NOT silently drop them — they ride the manifest's
+    // node config and the DDL export as TBLPROPERTIES, like the TTLs
     val proj = Files.createTempDirectory("graft_labels_proj")
     put(proj, "dbt_project.yml",
       """name: lb_demo
@@ -1198,19 +1198,14 @@ class DbtProjectSpec extends AnyFunSuite {
       "'kms_key_name'='projects/p/locations/l/keyRings/r/cryptoKeys/k'"),
       tagDdl)
     // tree-level labels reach models that declare none of their own
-    e.writeCatalog(s"$dir/catalog.json")
+    e.writeManifest(s"$dir/manifest.json")
     val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    val cat = om.readTree(new java.io.File(s"$dir/catalog.json"))
-    val rels = cat.path("relations")
-    val tg = (0 until rels.size).map(rels.get)
-      .find(_.path("name").asText == "tagged").get
-    assert(tg.path("properties").path("labels").path("cost_center")
-      .asText == "ml-421")
-    assert(tg.path("properties").path("kms_key_name").asText
-      .endsWith("cryptoKeys/k"))
-    val bs = (0 until rels.size).map(rels.get)
-      .find(_.path("name").asText == "base").get
-    assert(bs.path("properties").path("labels").path("owner")
-      .asText == "data-eng")
+    val nodes = om.readTree(new java.io.File(s"$dir/manifest.json"))
+      .path("nodes")
+    val tg = nodes.path("model.lb_demo.tagged").path("config")
+    assert(tg.path("labels").path("cost_center").asText == "ml-421")
+    assert(tg.path("kms_key_name").asText.endsWith("cryptoKeys/k"))
+    val bs = nodes.path("model.lb_demo.base").path("config")
+    assert(bs.path("labels").path("owner").asText == "data-eng")
   }
 }

@@ -455,27 +455,36 @@ class OrchestratorSpec extends AnyFunSuite {
           |SELECT n_name
           |FROM {{ ref('nations') }}""".stripMargin),
       descriptions = Map("nations" -> "Nation dim",
-        "nations.n_name" -> "Nation name", "nations_v" -> "Names only"))
+        "nations.n_name" -> "Nation name",
+        "nations_v" -> "Names only,\none per nation"))
     val e = new Engine(spark, p, Target(root()))
     assert(e.build()._1.forall(_.status == "success"))
     val out = java.nio.file.Files.createTempFile("graft_cat", ".json").toString
-    e.writeCatalog(out)
+    e.writeDbtCatalog(out)
     val json = java.nio.file.Files.readString(java.nio.file.Paths.get(out))
-    // tables carry rows/bytes/columns; the view carries its definition
-    assert(json.contains("\"name\": \"nations\""))
-    assert(json.contains("\"rows\": 25"))
-    assert(json.contains("\"name\": \"n_nationkey\""))
-    assert(json.contains("\"name\": \"nations_v\""))
-    assert(json.contains("\"kind\": \"view\""))
-    assert(json.contains("\"definition\""))
-    // descriptions.conf docs surface at relation AND column level
-    assert(json.contains("\"description\": \"Nation dim\""))
-    assert(json.contains("\"description\": \"Nation name\""))
-    assert(json.contains("\"description\": \"Names only\""))
+    val nodes = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(json).path("nodes")
+    // tables carry rows/bytes/columns; the view is listed, and its
+    // definition stays durable beside it
+    val nations = nodes.path("model.p.nations")
+    assert(nations.path("metadata").path("name").asText == "nations")
+    assert(nations.path("stats").path("row_count").path("value").asLong == 25L)
+    assert(nations.path("columns").path("n_nationkey").path("name").asText
+      == "n_nationkey")
+    val view = nodes.path("model.p.nations_v")
+    assert(view.path("metadata").path("name").asText == "nations_v")
+    assert(view.path("metadata").path("type").asText == "view")
+    assert(e.warehouse.readViewDef(e.relationFor("nations_v")).isDefined)
+    // descriptions surface at relation AND column level
+    assert(nations.path("metadata").path("comment").asText == "Nation dim")
+    assert(nations.path("columns").path("n_name").path("comment").asText
+      == "Nation name")
+    assert(view.path("metadata").path("comment").asText ==
+      "Names only,\none per nation")
     // single-line artifact: a raw (unescaped) newline from a multi-line
-    // view definition would corrupt the JSON — the escaper must catch it
+    // description would corrupt the JSON — the escaper must catch it
     assert(!json.trim.contains('\n'))
-    assert(json.contains("\\n"), "the multi-line view def must appear escaped")
+    assert(json.contains("\\n"), "the multi-line description must appear escaped")
     assert(json.trim.startsWith("{") && json.trim.endsWith("}"))
   }
 
@@ -589,8 +598,13 @@ class OrchestratorSpec extends AnyFunSuite {
     // untouched by the extra section
     val mf = java.nio.file.Files.createTempFile("graft_mf", ".json").toString
     e.writeManifest(mf)
-    val json = java.nio.file.Files.readString(java.nio.file.Paths.get(mf))
-    assert(json.contains("\"weekly_dash\"") && json.contains("dash.example"))
+    val exp = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(new java.io.File(mf)).path("exposures")
+      .path("exposure.p.weekly_dash")
+    assert(exp.path("name").asText == "weekly_dash")
+    assert(exp.path("url").asText.contains("dash.example"))
+    assert(exp.path("depends_on").path("nodes").toString
+      .contains("model.p.by_region"))
     assert(StateSelector.modified(mf, mf).isEmpty)
   }
 
@@ -804,6 +818,41 @@ class OrchestratorSpec extends AnyFunSuite {
     assert(StateSelector.modifiedPlus(m2, m1) == Set("nations", "by_region"))
     // unchanged project → empty selection
     assert(StateSelector.modifiedPlus(m1, m1).isEmpty)
+
+    // a config-only change (the SQL is untouched) selects the node, as
+    // dbt's state:modified.configs does
+    val reconfigured = baseProject.copy(models = baseProject.models.map {
+      case m if m.name == "nations" =>
+        m.copy(config = m.config.copy(uniqueKey = Seq("n_nationkey")))
+      case m => m
+    })
+    val m3 = Files.createTempFile("manifest3", ".json").toString
+    new Engine(spark, reconfigured, Target(root())).writeManifest(m3)
+    assert(StateSelector.modified(m3, m1) == Set("nations"))
+    assert(StateSelector.modifiedPlus(m3, m1) == Set("nations", "by_region"))
+
+    // an edited seed CSV selects the seed
+    val csv = Files.createTempFile("graft_state_seed", ".csv")
+    Files.writeString(csv, "k,v\n1,a\n")
+    val seeded = baseProject.copy(seeds = Seq(SeedDef("s1", csv.toString)))
+    val m4 = Files.createTempFile("manifest4", ".json").toString
+    new Engine(spark, seeded, Target(root())).writeManifest(m4)
+    Files.writeString(csv, "k,v\n1,a\n2,b\n")
+    val m5 = Files.createTempFile("manifest5", ".json").toString
+    new Engine(spark, seeded, Target(root())).writeManifest(m5)
+    assert(StateSelector.modified(m5, m4) == Set("s1"))
+
+    // a --state file that is not a manifest (a v6 run_results, `{}`) is
+    // refused, never read as "no previous state", which selects all
+    val runResults = Files.createTempFile("run_results", ".json").toString
+    e1.writeDbtRunResults(runResults, Nil, Nil)
+    val empty = Files.createTempFile("empty_state", ".json")
+    Files.writeString(empty, "{}")
+    Seq(runResults, empty.toString).foreach { bad =>
+      val err = intercept[IllegalArgumentException](
+        StateSelector.modifiedPlus(m2, bad))
+      assert(err.getMessage.contains(bad))
+    }
   }
 
   test("defer resolves unselected upstream refs to the prod warehouse") {
@@ -1162,7 +1211,7 @@ class OrchestratorSpec extends AnyFunSuite {
     val e = new Engine(spark, p, Target(root()))
     assert(e.build()._1.forall(_.status == "success"))
     val dir = Files.createTempDirectory("graft_artifacts")
-    e.writeDbtManifest(s"$dir/manifest.json")
+    e.writeManifest(s"$dir/manifest.json")
     e.writeDbtCatalog(s"$dir/catalog.json")
     val om = new com.fasterxml.jackson.databind.ObjectMapper()
     val man = om.readTree(new java.io.File(s"$dir/manifest.json"))
@@ -1284,19 +1333,15 @@ class OrchestratorSpec extends AnyFunSuite {
     val rel = e.relationFor("nations_part")
     assert(e.warehouse.listPartitions(rel).size == 5)
 
-    // declared properties surface in catalog.json…
-    e.writeCatalog(s"$dir/catalog.json")
+    // declared properties surface in the manifest's node config…
+    e.writeManifest(s"$dir/manifest.json")
     val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    val cat = om.readTree(new java.io.File(s"$dir/catalog.json"))
-    val rels = cat.path("relations")
-    val np = (0 until rels.size).map(rels.get)
-      .find(_.path("name").asText == "nations_part").get
-    assert(np.path("properties").path("partition_expiration_days").asDouble == 7.0)
-    assert(np.path("properties").path("grants").path("select").toString
-      .contains("analyst"))
-    val sl = (0 until rels.size).map(rels.get)
-      .find(_.path("name").asText == "short_lived").get
-    assert(sl.path("properties").path("hours_to_expiration").asDouble == 24.0)
+    val man = om.readTree(new java.io.File(s"$dir/manifest.json"))
+    val np = man.path("nodes").path("model.p.nations_part").path("config")
+    assert(np.path("partition_expiration_days").asDouble == 7.0)
+    assert(np.path("grants").path("select").toString.contains("analyst"))
+    val sl = man.path("nodes").path("model.p.short_lived").path("config")
+    assert(sl.path("hours_to_expiration").asDouble == 24.0)
     // …and in the external DDL export (TBLPROPERTIES + GRANT ledger)
     val (stmts, _) = e.catalogDdl()
     val npDdl = stmts.find(_.contains("CREATE OR REPLACE VIEW `nations_part`")).get
@@ -1307,10 +1352,7 @@ class OrchestratorSpec extends AnyFunSuite {
     assert(stmts.find(_.contains("VIEW `short_lived`")).get
       .contains("'hours_to_expiration'='24'"))
     // grants ride the dbt manifest as node config metadata
-    e.writeDbtManifest(s"$dir/manifest.json")
-    val man = om.readTree(new java.io.File(s"$dir/manifest.json"))
-    assert(man.path("nodes").path("model.p.nations_part")
-      .path("config").path("grants").path("select").toString.contains("ml_team"))
+    assert(np.path("grants").path("select").toString.contains("ml_team"))
 
     // freshen ONE partition after a real mtime gap: a later stream append
     // to n_regionkey=0 (also plants the exactly-once watermark metadata
@@ -1772,9 +1814,13 @@ class OrchestratorSpec extends AnyFunSuite {
     val e = new Engine(spark, p, Target(root(), threads = 1))
     val manifest = Files.createTempFile("graft_manifest", ".json").toString
     e.writeManifest(manifest)
-    val text = Files.readString(java.nio.file.Paths.get(manifest))
-    assert(text.contains("\"probe_c\"") && text.contains("stg_c"),
-      s"probe model or its run_query DAG edge missing from manifest: $text")
+    val probe = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(new java.io.File(manifest)).path("nodes")
+      .path("model.pcompile.probe_c")
+    assert(probe.path("name").asText == "probe_c" &&
+      probe.path("depends_on").path("nodes").toString
+        .contains("model.pcompile.stg_c"),
+      s"probe model or its run_query DAG edge missing from manifest: $probe")
   }
 
   test("compiledModels render in parse-phase mode: execute guards close, probes never run") {

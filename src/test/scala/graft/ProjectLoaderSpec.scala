@@ -348,10 +348,9 @@ class ProjectLoaderSpec extends AnyFunSuite {
       .contains("target:    database=analytics schema=pr_7 threads=2"))
     cli(demo, wh, "docs", "--out", s"$wh/catalog.json")
     assert(om.readTree(new java.io.File(s"$wh/catalog.json"))
-      .path("relations").isArray)
-    assert(om.readTree(new java.io.File(s"$wh/dbt_catalog.json"))
       .path("metadata").path("dbt_schema_version").asText.contains("catalog/v1"))
-    val man = om.readTree(new java.io.File(s"$wh/dbt_manifest.json"))
+    assert(!Files.exists(Paths.get(s"$wh/dbt_catalog.json")))
+    val man = om.readTree(new java.io.File(s"$wh/manifest.json"))
     assert(man.path("metadata").path("dbt_schema_version").asText
       .contains("manifest/v12"))
     assert(man.path("nodes").size() > 0 && man.path("macros").size() > 0)
