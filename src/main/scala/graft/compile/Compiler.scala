@@ -1060,8 +1060,12 @@ object Compiler {
     * fn; values are literal strings/idents/numbers — the subset dbt models
     * use in-file).
     */
-  def parseInlineConfig(rawSql: String, base: ModelConfig): ModelConfig =
-    applyConfigKv(inlineConfigKvs(rawSql), base)
+  def parseInlineConfig(rawSql: String, base: ModelConfig): ModelConfig = {
+    val cfg = applyConfigKv(inlineConfigKvs(rawSql), base)
+    // dbt adds the tags of every config level together; other keys of
+    // the in-file config() replace the YAML's
+    cfg.copy(tags = base.tags ++ cfg.tags)
+  }
 
   // dbt accepts both spellings in config()/yml (`pre_hook` in-file,
   // `pre-hook` in dbt_project.yml trees)

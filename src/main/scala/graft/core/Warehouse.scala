@@ -1,8 +1,8 @@
 package graft.core
 
 import java.util.UUID
-import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Row, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.GraftFooterSchema
 import org.apache.spark.sql.functions.{concat, expr, lit, raise_error, when}
 import org.apache.spark.sql.types.StructType
@@ -41,11 +41,44 @@ import scala.reflect.ClassTag
   * the driver only issues metadata operations. `partitionBy`/`clusterBy`
   * map to directory partitioning + `sortWithinPartitions` so downstream
   * reads get partition pruning and row-group skipping.
+  *
+  * Local IO: on a `file:` root, Hadoop's stock local filesystem starts an
+  * OS process per file it creates (`chmod`) and per file status whose
+  * permission it reads (`ls -ld`, e.g. every `listFiles` entry) when no
+  * native `libhadoop` is loaded — milliseconds each, on the driver
+  * between jobs and in the write tasks. So the warehouse's own IO and its
+  * write jobs run on [[NioLocalFileSystem]], the same filesystem with
+  * those two steps done in process; the files, bytes and modes written
+  * are the same. A session that registers its own `fs.file.impl` keeps it.
   */
 final class Warehouse(val spark: SparkSession, val root: String) {
 
-  private def fs = new Path(root).getFileSystem(
-    spark.sparkContext.hadoopConfiguration)
+  /** The filesystem of every driver-side IO of this warehouse: the
+    * session's own for a non-`file` root or a registered `fs.file.impl`,
+    * else one [[NioLocalFileSystem]] (see the class doc).
+    */
+  private[graft] def fs: FileSystem =
+    if (localIoOptions.isEmpty)
+      new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    else localFs
+
+  private lazy val localFs: FileSystem = {
+    val f = new NioLocalFileSystem
+    f.initialize(java.net.URI.create("file:///"),
+      spark.sparkContext.hadoopConfiguration)
+    f
+  }
+
+  private def localIoOptions: Map[String, String] =
+    Warehouse.localIoOptions(spark, root)
+
+  /** The parquet write of a fresh version dir — every data write of the
+    * warehouse goes through here. The [[localIoOptions]] reach the job's
+    * Hadoop conf, so its tasks, parquet's output files and the output
+    * committer run on the same filesystem as the driver side.
+    */
+  private def writeVersionDir(w: DataFrameWriter[Row], vdir: Path): Unit =
+    w.options(localIoOptions).parquet(vdir.toString)
 
   def path(rel: Relation): String = rel.pathUnder(root)
 
@@ -1326,7 +1359,7 @@ final class Warehouse(val spark: SparkSession, val root: String) {
       .write.mode("overwrite")
     val w2 = if (partitionCols.nonEmpty) writer.partitionBy(partitionCols: _*)
              else writer
-    w2.parquet(vdir.toString)
+    writeVersionDir(w2, vdir)
     Warehouse.faultPoint("mf.overwrite.data-written")
     val parts = afterWrite(vdir, partitionCols.length, bloomCols)
     val entries = (if (parts.isEmpty) Seq("") else parts)
@@ -1434,7 +1467,7 @@ final class Warehouse(val spark: SparkSession, val root: String) {
     val writer = sized.write.mode("overwrite")
     val w2 = if (partitionCols.nonEmpty) writer.partitionBy(partitionCols: _*)
              else writer
-    w2.parquet(vdir.toString)
+    writeVersionDir(w2, vdir)
     Warehouse.faultPoint("mf.append.data-written")
     val parts = afterWrite(vdir, partitionCols.length, bloomCols)
     val entries = (if (parts.isEmpty) Nil else parts)
@@ -1654,7 +1687,7 @@ final class Warehouse(val spark: SparkSession, val root: String) {
     val distinctKeys = keys.distinct()
     val vdir = newVersionDir(rel,
       manifestsDescending(rel).headOption.map(_._1).getOrElse(0L) + 1)
-    distinctKeys.write.mode("overwrite").parquet(vdir.toString)
+    writeVersionDir(distinctKeys.write.mode("overwrite"), vdir)
     Warehouse.faultPoint("mf.delete.keys-written")
     val n = footerRowsOf(filesUnder(vdir))
     if (n == 0L) { fs.delete(vdir, true); 0L }
@@ -1712,8 +1745,9 @@ final class Warehouse(val spark: SparkSession, val root: String) {
           manifestsDescending(rel).headOption.map(_._1).getOrElse(0L) + 1)
         // readEntries applies any delete entries, so the rewrite
         // MATERIALIZES them — the sole entry below carries no deletes
-        clusteredWriter(readEntries(rel, cur), Nil, Nil, zorderCols)
-          .write.mode("overwrite").parquet(vdir.toString)
+        writeVersionDir(
+          clusteredWriter(readEntries(rel, cur), Nil, Nil, zorderCols)
+            .write.mode("overwrite"), vdir)
         Warehouse.faultPoint("mf.compact.data-written")
         afterWrite(vdir, 0, sharedBloomCols(rel, dataEntries(cur).map(_._1)))
         commitEntries(rel)(_ => Seq((vdir.getName, "")))
@@ -2074,8 +2108,9 @@ final class Warehouse(val spark: SparkSession, val root: String) {
       "alsoDropValues (static insert_overwrite) is single-column")
     val vdir = newVersionDir(rel,
       manifestsDescending(rel).headOption.map(_._1).getOrElse(0L) + 1)
-    clusteredWriter(df, pcols, clusterCols, zorderCols, layoutWhen)
-      .write.mode("overwrite").partitionBy(pcols: _*).parquet(vdir.toString)
+    writeVersionDir(
+      clusteredWriter(df, pcols, clusterCols, zorderCols, layoutWhen)
+        .write.mode("overwrite").partitionBy(pcols: _*), vdir)
     Warehouse.faultPoint("mf.replace.data-written")
     val written = afterWrite(vdir, pcols.length, bloomCols)
     val writtenSet = written.toSet
@@ -2370,6 +2405,27 @@ object Warehouse {
     * rate, never a wrong answer).
     */
   private val BloomMaxItems: Long = 4000000L
+
+  /** The write options that put a job's file IO on [[NioLocalFileSystem]]
+    * (uncached, since Hadoop caches filesystems by scheme, not by conf):
+    * for a `file:` root whose session registered no `fs.file.impl` of
+    * its own, in the Spark context's Hadoop conf or the session conf.
+    * Empty otherwise, which leaves every other scheme and a registered
+    * implementation as they are.
+    */
+  private[graft] def localIoOptions(spark: SparkSession,
+                                    root: String): Map[String, String] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val scheme = Option(new Path(root).toUri.getScheme)
+      .getOrElse(FileSystem.getDefaultUri(conf).getScheme)
+    if (scheme != "file" || conf.get("fs.file.impl") != null ||
+        spark.conf.getOption("fs.file.impl").isDefined) Map.empty
+    else LocalIoOptions
+  }
+
+  private val LocalIoOptions = Map(
+    "fs.file.impl" -> classOf[NioLocalFileSystem].getName,
+    "fs.file.impl.disable.cache" -> "true")
 
   /** A file status as plain values (path, length, mtime) — what crosses
     * the `metadataFanOut` job boundary — and back.

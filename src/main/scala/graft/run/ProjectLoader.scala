@@ -185,9 +185,23 @@ object ProjectLoader {
         s"labels: '$k' expects a scalar value")
     }.mkString("|")
 
+    // a YAML tag list in the pipe form applyConfigKv splits
+    def tagList(items: Seq[MiniYaml.Node]): String = items.map {
+      case Scalar(v) if v.trim.nonEmpty && !v.contains("|") => v.trim
+      case bad => throw new IllegalArgumentException(
+        s"tags: entries must be non-empty names without '|', got $bad")
+    }.mkString("|")
+    // dbt adds the tags of every config level together (project tree
+    // levels, schema.yml); every other key of a deeper level replaces
+    def mergeKv(base: Map[String, String],
+                over: Map[String, String]): Map[String, String] =
+      base ++ over ++ (for (a <- base.get("tags"); b <- over.get("tags"))
+        yield "tags" -> s"$a|$b")
+
     // ------------------------- models + the dbt_project.yml config tree
     def plusKv(o: Obj): Map[String, String] = o.entries.collect {
       case (k, Scalar(v)) if k.startsWith("+") => k.drop(1) -> v
+      case ("+tags", Arr(items)) => "tags" -> tagList(items)
       // hook configs may be yml LISTS of SQL statements — encode them
       // HookSep-joined, the multi-hook convention applyConfigKv decodes
       // (`|`/`,` occur in real SQL,  cannot)
@@ -208,7 +222,7 @@ object ProjectLoader {
       var node = tree
       steps.foreach { s =>
         node = node.flatMap(_.obj(s))
-        node.foreach(o => acc = acc ++ plusKv(o))
+        node.foreach(o => acc = mergeKv(acc, plusKv(o)))
       }
       acc
     }
@@ -579,6 +593,7 @@ object ProjectLoader {
             m.obj("config").foreach(c =>
               ymlCfg += owner -> c.entries.collect {
                 case (k, Scalar(v)) => k -> v
+                case ("tags", Arr(items)) => "tags" -> tagList(items)
                 // hook lists / dict-form hooks, HookSep-joined (see plusKv)
                 case (k, Arr(items)) if Compiler.hookKeys.contains(k) =>
                   k -> items.map(hookSql(_, s"$mName.$k"))
@@ -664,7 +679,7 @@ object ProjectLoader {
 
     val models = modelFiles.map { case (_, p) =>
       val nm = fileRename.getOrElse(stem(p), stem(p))
-      val kv = treeCfg(stem(p)) ++ ymlCfgMap.getOrElse(nm, Map.empty)
+      val kv = mergeKv(treeCfg(stem(p)), ymlCfgMap.getOrElse(nm, Map.empty))
       ModelDef(nm, rewriteVersionedRefs(Files.readString(p)),
         Compiler.applyConfigKv(kv, ModelConfig()))
     }

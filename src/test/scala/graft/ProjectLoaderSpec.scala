@@ -4,7 +4,7 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import graft.run.{DependencyDef, Engine, ProjectLoader, Target}
+import graft.run.{DependencyDef, Engine, ProjectLoader, StateSelector, Target}
 import graft.tools.GraftCli
 
 /** The on-disk demo project must load and build end-to-end — this is the
@@ -631,6 +631,38 @@ class ProjectLoaderSpec extends AnyFunSuite {
     put(down, "dependencies.yml", "projects:\n  - name: up\n")
     val err = intercept[IllegalArgumentException](ProjectLoader.load(down.toString))
     assert(err.getMessage.contains("warehouse_root"), err.getMessage)
+  }
+
+  test("tags add up over dbt_project.yml, schema.yml and in-file config()") {
+    val dir = Files.createTempDirectory("graft_demo_tags")
+    val walk = Files.walk(Paths.get(demo))
+    try walk.iterator().asScala.foreach { p =>
+      val to = dir.resolve(Paths.get(demo).relativize(p).toString)
+      if (Files.isDirectory(p)) Files.createDirectories(to)
+      else Files.copy(p, to)
+    } finally walk.close()
+    val schema = dir.resolve("models/schema.yml")
+    val stg = "  - name: stg_nations\n"
+    put(dir, "models/schema.yml", Files.readString(schema)
+      .replace(stg, stg + "    config:\n      tags: [ci]\n"))
+    val root = Files.createTempDirectory("graft_demo_tags_wh").toString
+    def engine(d: String) = new Engine(spark, ProjectLoader.load(d)._1, Target(root))
+    val edited = engine(dir.toString)
+    // stg_nations.sql declares config(tags='staging')
+    assert(edited.selectNodes("tag:ci") == Set("stg_nations"))
+    assert(edited.selectNodes("tag:staging") == Set("stg_nations"))
+    val (before, after) = (s"$dir/before.json", s"$dir/after.json")
+    engine(demo).writeManifest(before)
+    edited.writeManifest(after)
+    assert(StateSelector.modifiedPlus(after, before).contains("stg_nations"))
+    assert(StateSelector.modified(after, before) == Set("stg_nations"))
+    // a project-level tag joins both
+    put(dir, "dbt_project.yml", Files.readString(dir.resolve("dbt_project.yml")) +
+      "models:\n  demo_ci_spark:\n    +tags: [nightly]\n")
+    val tree = engine(dir.toString)
+    Seq("tag:ci", "tag:staging").foreach(t =>
+      assert(tree.selectNodes(t) == Set("stg_nations"), t))
+    assert(tree.selectNodes("tag:nightly").contains("stg_nations"))
   }
 
   test("src/main loads one project format: no .conf file, no second loader") {
