@@ -2,7 +2,8 @@ package graft.materialize
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StructField, StructType}
+import org.apache.spark.sql.execution.datasources.csv.GraftCsvInference
+import org.apache.spark.sql.types.{DataType, StructField, StructType}
 import graft.core._
 
 /** Schema-evolution policies for incremental models (reference
@@ -23,7 +24,6 @@ import graft.core._
   * policy.
   */
 object SchemaEvolution {
-  import org.apache.spark.sql.types.DataType
   import org.apache.spark.sql.catalyst.analysis.TypeCoercion
 
   final case class Diff(sourceNotInTarget: Seq[StructField],
@@ -268,57 +268,45 @@ final class Materializer(wh: Warehouse) {
   /** B18 `seed`: CSV load with per-column type overrides
     * (`default__create_csv_table` @68626 `column_types` config; inference
     * otherwise mirrors `adapter.convert_type`).
+    *
+    * Types are inferred on the driver: [[GraftCsvInference]] reads the
+    * file once through Spark's own CSV inference, so the schema is the one
+    * `inferSchema` would give, without its two jobs. Seeds are small by
+    * dbt's contract (agate holds them in memory), and a load is one Spark
+    * job, its write.
     */
   def seed(spark: SparkSession, csvPath: String, rel: Relation,
            columnTypes: Map[String, String] = Map.empty): DataFrame = {
-    import org.apache.spark.sql.types.{DataType, StructField, StructType}
     val base = spark.read.option("header", "true")
-    // header-only read (no inferSchema): just the column names
-    val header = base.csv(csvPath).schema.fieldNames.toIndexedSeq
+    val inferred = GraftCsvInference.infer(spark, csvPath)
+    val header = inferred.schema.fieldNames
     val byLower = columnTypes.map { case (k, v) => k.toLowerCase -> v }
     val typed =
       if (header.nonEmpty && header.forall(c => byLower.contains(c.toLowerCase))) {
-        // overrides cover every column: build the schema explicitly and
-        // read the data ONCE — inference would both cost a full extra
-        // pass and can destroy values before the cast ("007" inferred as
-        // int 7 casts to the string "7", not "007")
+        // overrides cover every column: read the data AS DECLARED —
+        // reading it with the inferred types first can destroy values
+        // before the cast ("007" inferred as int 7 casts to the string
+        // "7", not "007")
         val schema = StructType(header.map(c =>
           StructField(c, DataType.fromDDL(byLower(c.toLowerCase)))))
         base.schema(schema).csv(csvPath)
       } else {
-        val inferred = base.option("inferSchema", "true").csv(csvPath)
         // agate-parity refinement (dbt's seed loader is agate): agate's
         // Boolean accepts t/f/yes/no/y/n spellings that Spark's csv
         // inference leaves as string, while ISO dates/timestamps already
         // infer identically (DateType/TimestampType — probed on this
-        // Spark). One bounded pass collects each leftover string
-        // column's distinct lowercased values and upgrades all-boolean
-        // columns — seeds are small by dbt contract (agate loads them
-        // fully in memory), so the extra pass is control-plane-sized.
-        // columns with an explicit column_types override are read AS
-        // DECLARED (agate's text-override semantics): the upgrade must
+        // Spark). Columns with an explicit column_types override are read
+        // AS DECLARED (agate's text-override semantics): the upgrade must
         // not run first — boolean-upgrading a 't' then casting to the
         // declared string would store 'true', destroying the raw value
-        val strCols = inferred.schema.fields
-          .filter(_.dataType == org.apache.spark.sql.types.StringType)
-          .map(_.name).filterNot(c => byLower.contains(c.toLowerCase))
-          .toIndexedSeq
-        val refined =
-          if (strCols.isEmpty) inferred
-          else {
-            val trueV = Set("true", "t", "yes", "y")
-            val falseV = Set("false", "f", "no", "n")
-            val distincts = inferred.select(strCols.map(c =>
-              collect_set(lower(trim(col(c)))).as(c)): _*).head()
-            val boolCols = strCols.filter { c =>
-              val vs = distincts.getAs[scala.collection.Seq[String]](c).toSet
-              vs.nonEmpty && vs.subsetOf(trueV ++ falseV)
-            }
-            boolCols.foldLeft(inferred) { (df, c) =>
-              df.withColumn(c, when(col(c).isNull, lit(null).cast("boolean"))
-                .otherwise(lower(trim(col(c))).isin(trueV.toSeq: _*)))
-            }
-          }
+        val boolCols = inferred.schema.fieldNames
+          .filter(inferred.agateBooleans)
+          .filterNot(c => byLower.contains(c.toLowerCase))
+        val refined = boolCols.foldLeft(base.schema(inferred.schema).csv(csvPath)) {
+          (df, c) =>
+            df.withColumn(c, when(col(c).isNull, lit(null).cast("boolean"))
+              .otherwise(lower(trim(col(c))).isin(GraftCsvInference.AgateTrue.toSeq: _*)))
+        }
         columnTypes.foldLeft(refined) { case (df, (c, t)) =>
           df.withColumn(c, col(c).cast(t))
         }

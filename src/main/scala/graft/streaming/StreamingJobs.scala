@@ -242,6 +242,8 @@ object StreamingJobs {
     val t0 = System.nanoTime()
     val outDir = java.nio.file.Files
       .createTempDirectory(sinkRoot, s"sink_$name").toString
+    // the sink's files and dirs are made in process, like a warehouse write
+    val ioOpts = graft.core.Warehouse.localIoOptions(spark, outDir)
     val schema = df.schema // empty-result reads need it declared
     val writeMode =
       if (mode == OutputMode.Complete()) "overwrite" else "append"
@@ -298,7 +300,8 @@ object StreamingJobs {
               // corpus, so one file per batch is the right sizing;
               // production-scale ingestion goes through the warehouse
               // appender (appendStreamBatch), which sizes its own output.
-              batch.repartition(1).write.mode(writeMode).parquet(outDir)
+              batch.repartition(1).write.options(ioOpts).mode(writeMode)
+                .parquet(outDir)
               lastBatchId = batchId
             }
             ()
@@ -519,7 +522,9 @@ object StreamingJobs {
     graft.ops.TData.events(spark, d).limit(1)
       .select(col("event_id"), sentinelTs,
         lit(-1L).as("user_id"), col("event_type"), col("value"), col("props"))
-      .coalesce(1).write.parquet(dir.resolve("stage").toString)
+      .coalesce(1).write
+      .options(graft.core.Warehouse.localIoOptions(spark, dir.toString))
+      .parquet(dir.resolve("stage").toString)
     val f = Files.list(dir.resolve("stage")).iterator().asScala
       .find(_.toString.endsWith(".parquet")).get
     Files.move(f, dir.resolve("part-9-sentinel.parquet"))

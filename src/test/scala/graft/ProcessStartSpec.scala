@@ -8,18 +8,21 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.hadoop.io.nativeio.NativeIO
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 import graft.core._
 import graft.materialize._
+import graft.streaming.StreamingJobs
 
-/** The warehouse's local IO starts no OS process. Hadoop's stock local
-  * filesystem forks `chmod` per created file and `ls -ld` per permission
-  * read when no native library is loaded; the JDK's own flight recorder
-  * records every process start (`jdk.ProcessStart`) with its command
-  * line. Commands carry the path they act on, so the assertion looks
-  * only at commands that name this spec's warehouse root — process
-  * starts of other code in the JVM cannot make it fail.
+/** The warehouse's local IO and a streaming sink's writes start no OS
+  * process. Hadoop's stock local filesystem forks `chmod` per created
+  * file and `ls -ld` per permission read when no native library is
+  * loaded; the JDK's own flight recorder records every process start
+  * (`jdk.ProcessStart`) with its command line. Commands carry the path
+  * they act on, so each assertion looks only at commands that name the
+  * dir under test — process starts of other code in the JVM cannot make
+  * it fail.
   */
 class ProcessStartSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSession.builder()
@@ -87,5 +90,21 @@ class ProcessStartSpec extends AnyFunSuite {
     assert(underRoot.isEmpty,
       s"${underRoot.size} process starts name the warehouse root, e.g. " +
         underRoot.take(3).mkString("; "))
+  }
+
+  test("a streaming sink's per-batch parquet writes fork nothing under the sink") {
+    val src = Files.createTempDirectory("graft_ps_stream").resolve("in").toString
+    spark.range(20).selectExpr("id", "id % 3 AS k").write.parquet(src)
+    val stream = spark.readStream.schema("id BIGINT, k BIGINT").parquet(src)
+    var rows = 0L
+    val cmds = processStarts {
+      rows = StreamingJobs.runToMemory(spark, stream, "ps_sink", OutputMode.Append())
+        .count()
+    }
+    assert(rows == 20L)
+    val underSink = cmds.filter(_.contains("sink_ps_sink"))
+    assert(underSink.isEmpty,
+      s"${underSink.size} process starts name the sink dir, e.g. " +
+        underSink.take(3).mkString("; "))
   }
 }

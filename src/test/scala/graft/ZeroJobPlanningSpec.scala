@@ -1,8 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
@@ -15,9 +13,7 @@ import graft.streaming.StreamingJobs
 /** Planning a scan launches no Spark job: manifest reads take their
   * schema from driver-read footers, plain parquet sources resolve to
   * views with their footer schema pinned, and the snapshot clock is
-  * collected from a local relation. Jobs are counted with a listener
-  * drained by a marker job — the listener bus is asynchronous and FIFO,
-  * so once the marker's end arrives, every earlier event has too.
+  * collected from a local relation. Jobs are counted by [[SparkJobs]].
   */
 class ZeroJobPlanningSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSession.builder()
@@ -36,34 +32,7 @@ class ZeroJobPlanningSpec extends AnyFunSuite {
     rows.toDF("id", "name", "score")
   }
 
-  /** Spark jobs `body` launches, and its result. */
-  private def jobsDuring[T](body: => T): (Int, T) = {
-    val marker = "zero-job-spec-drain"
-    val jobs = new AtomicInteger
-    val markerIds = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    val drained = new AtomicBoolean
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == marker))
-          markerIds.add(e.jobId)
-        else jobs.incrementAndGet()
-        ()
-      }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        if (markerIds.remove(e.jobId)) drained.set(true)
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      val out = body
-      sc.setJobGroup(marker, marker)
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30000000000L
-      while (!drained.get && System.nanoTime() < deadline) Thread.sleep(2)
-      assert(drained.get, "listener bus did not drain within 30 s")
-      (jobs.get, out)
-    } finally sc.removeSparkListener(listener)
-  }
+  private def jobsDuring[T](body: => T): (Int, T) = SparkJobs.during(spark)(body)
 
   /** A single parquet file at `<dir>/<name>` holding `data`. */
   private def parquetFile(data: DataFrame, dir: String, name: String): String = {
