@@ -88,12 +88,19 @@ object FileStats {
     * per-column row group stats merged into one range per column (at most
     * `maxCols` columns, none when it is 0; unsupported or stat-less
     * columns are absent). Throws when the footer cannot be read.
+    *
+    * The read options are built from `conf`, the caller's conf. Parquet's
+    * one-argument `open` builds default options, and those parse a fresh
+    * Hadoop `Configuration` from the classpath XML on every call: that
+    * parse, not the footer read, is most of an open's cost.
     */
   def footer(conf: Configuration, st: FileStatus,
              maxCols: Int): (Long, Map[String, Col]) = {
+    import org.apache.parquet.HadoopReadOptions
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
-    val rd = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+    val rd = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf),
+      HadoopReadOptions.builder(conf).build())
     try (rd.getRecordCount,
       if (maxCols <= 0) Map.empty[String, Col]
       else collectFooter(rd.getFooter, maxCols))

@@ -6,7 +6,6 @@ import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Row, SparkSessi
 import org.apache.spark.sql.execution.datasources.parquet.GraftFooterSchema
 import org.apache.spark.sql.functions.{concat, expr, lit, raise_error, when}
 import org.apache.spark.sql.types.StructType
-import scala.reflect.ClassTag
 
 /** Path-addressed parquet warehouse with a manifest commit protocol.
   *
@@ -862,87 +861,56 @@ final class Warehouse(val spark: SparkSession, val root: String) {
   }
 
   /** Each parquet file's footer record count and column ranges (none
-    * when `maxCols` is 0; see [[FileStats.footer]]). Footers are O(KB)
-    * metadata regardless of file size; one open per file, through
-    * [[metadataFanOut]]. Throws when a footer cannot be read.
+    * when `maxCols` is 0; see [[FileStats.footer]]), in the order of
+    * `files`. Footers are O(KB) metadata regardless of file size: one
+    * open per file, in a loop on the driver, with the session's Hadoop
+    * conf. No Spark job at any file count: with the read options built
+    * from that conf an open costs under a millisecond on the local
+    * filesystem, less than a job's scheduling would add per file.
+    * Throws when a footer cannot be read.
     */
   private def footersOf(files: Seq[FileStatus], maxCols: Int)
-      : Seq[(FileStatus, Long, Map[String, FileStats.Col])] =
-    files.zip(metadataFanOut(files.map(Warehouse.statusWire)) { (conf, w) =>
-      FileStats.footer(conf, Warehouse.statusOf(w), maxCols)
-    }).map { case (st, (n, c)) => (st, n, c) }
+      : Seq[(FileStatus, Long, Map[String, FileStats.Col])] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    files.map { st =>
+      val (n, c) = FileStats.footer(conf, st, maxCols)
+      (st, n, c)
+    }
+  }
 
-  /** Per-entry leaf dirs + their parquet files. A whole-dir entry
-    * (`part == ""`) of a PARTITIONED write is expanded to its physical
-    * leaf dirs first: manifests legitimately mix whole-dir entries (full
-    * refresh) with per-partition entries (later scoped merges), and
-    * partition discovery needs uniform leaf depth. One listing per
-    * entry, through [[metadataFanOut]].
+  /** Per-entry leaf dirs + their parquet files, in entry order. A
+    * whole-dir entry (`part == ""`) of a PARTITIONED write is expanded to
+    * its physical leaf dirs first: manifests legitimately mix whole-dir
+    * entries (full refresh) with per-partition entries (later scoped
+    * merges), and partition discovery needs uniform leaf depth. One
+    * listing per leaf, on the driver: a local listing costs well under a
+    * millisecond, far less than the Spark job that would carry it.
     */
   private def listEntries(rel: Relation,
                           entries: Seq[(String, String)]): Seq[(Path, Array[FileStatus])] = {
-    val relName = rel.fqName
-    val work = entries.map(e => (entryPath(rel, e).toString, e._2.isEmpty))
-    metadataFanOut(work) { case (conf, (dirStr, wholeDir)) =>
-      val dir = new Path(dirStr)
-      val fsys = dir.getFileSystem(conf)
-      def expand(d: Path): Seq[Path] = {
-        val parts = fsys.listStatus(d).filter(s =>
-          s.isDirectory && s.getPath.getName.contains("="))
-        if (parts.isEmpty) Seq(d)
-        else parts.toSeq.flatMap(s => expand(s.getPath))
-      }
+    val fsys = fs
+    def expand(d: Path): Seq[Path] = {
+      val parts = fsys.listStatus(d).filter(s =>
+        s.isDirectory && s.getPath.getName.contains("="))
+      if (parts.isEmpty) Seq(d)
+      else parts.toSeq.flatMap(s => expand(s.getPath))
+    }
+    entries.flatMap { e =>
+      val dir = entryPath(rel, e)
       // A committed manifest entry whose version dir is GONE is
       // corruption (GC race, external deletion) — FAIL, never silently
       // read the relation minus those rows. A partial committed read
       // served as complete is strictly worse than an error.
       if (!fsys.exists(dir))
         throw new IllegalStateException(
-          s"manifest of $relName references missing version dir $dir — " +
+          s"manifest of ${rel.fqName} references missing version dir $dir — " +
             "GC race or corrupted layout; refusing a silent partial read")
-      (if (wholeDir) expand(dir) else Seq(dir)).map { d =>
-        (d.toString, fsys.listStatus(d).filter(st =>
-          st.isFile && st.getPath.getName.endsWith(".parquet"))
-          .map(Warehouse.statusWire))
+      (if (e._2.isEmpty) expand(dir) else Seq(dir)).map { d =>
+        (d, fsys.listStatus(d).filter(st =>
+          st.isFile && st.getPath.getName.endsWith(".parquet")))
       }
-    }.flatten.map { case (leaf, files) =>
-      (new Path(leaf), files.map(Warehouse.statusOf))
     }
   }
-
-  /** The one fan-out of per-item metadata IO (entry listings, footer
-    * opens): `f` runs once per item with a Hadoop conf. Up to
-    * `graft.metadata.parallelThreshold` items (default 64) the driver
-    * loops; past it the items run as one Spark job (the escape hatch of
-    * Spark's own parallel partition discovery) — each item is its own
-    * metadata round trip, so a driver looping 36,500 leaf listings or
-    * 100k footer opens against an object store is minutes of sequential
-    * round trips where executors take seconds. Items and results cross
-    * the job boundary as plain values ([[Warehouse.statusWire]] for file
-    * statuses); results keep the order of `items`.
-    */
-  private def metadataFanOut[A: ClassTag, B: ClassTag](items: Seq[A])(
-      f: (org.apache.hadoop.conf.Configuration, A) => B): Seq[B] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    if (items.size <= intConf("graft.metadata.parallelThreshold", 64))
-      items.map(f(conf, _))
-    else {
-      val confBc = spark.sparkContext.broadcast(
-        new org.apache.spark.SerializableWritable(conf))
-      try spark.sparkContext.parallelize(items, math.min(items.size, 256))
-        .map(f(confBc.value.value, _)).collect().toSeq
-      finally confBc.destroy() // uncached reads must not leak broadcasts
-    }
-  }
-
-  /** Defensive integer session-conf read: a malformed value fails with
-    * the conf NAME, not a bare NumberFormatException at read time.
-    */
-  private def intConf(name: String, default: Int): Int =
-    spark.conf.getOption(name).map { v =>
-      v.toIntOption.getOrElse(throw new IllegalArgumentException(
-        s"session conf $name must be an integer, got '$v'"))
-    }.getOrElse(default)
 
   private def doubleConf(name: String, default: Double): Double =
     spark.conf.getOption(name).map { v =>
@@ -2426,14 +2394,6 @@ object Warehouse {
   private val LocalIoOptions = Map(
     "fs.file.impl" -> classOf[NioLocalFileSystem].getName,
     "fs.file.impl.disable.cache" -> "true")
-
-  /** A file status as plain values (path, length, mtime) — what crosses
-    * the `metadataFanOut` job boundary — and back.
-    */
-  private def statusWire(st: FileStatus): (String, Long, Long) =
-    (st.getPath.toString, st.getLen, st.getModificationTime)
-  private def statusOf(w: (String, Long, Long)): FileStatus =
-    new FileStatus(w._2, false, 1, 0, w._3, new Path(w._1))
 
   /** Collision-proof temp-view name: sanitization alone can collapse
     * distinct names ('team-a'/'x' and 'team'/'a_x' both flatten to

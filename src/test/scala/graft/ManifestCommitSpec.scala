@@ -339,58 +339,98 @@ class ManifestCommitSpec extends AnyFunSuite {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBjt)
   }
 
-  test("parallel entry listing (many entries) reads identically to serial") {
-    // past the threshold, leaf listing runs as a Spark job (one driver
-    // round trip per leaf is minutes at object-store lat× 10^4 leaves);
-    // both paths must produce the same relation
-    val wh = freshWh(); val m = new Materializer(wh); val r = rel("t_plist")
+  /** A relation partitioned on `name` with one row and one
+    * per-partition manifest entry for each of `n` leaves `name=p1..pn`:
+    * a first incremental build, then a partition-scoped merge of
+    * `p1..p3`, so the entries span two version dirs.
+    */
+  private def leafRelation(wh: Warehouse, r: Relation, n: Int): Set[(Long, String)] = {
+    val m = new Materializer(wh)
     val cfg = ModelConfig(materialized = "incremental", uniqueKey = Seq("id"),
       partitionBy = Seq("name"), partitionKeysStable = true)
-    (1 to 5).foreach { i =>
-      m.incremental(df(Seq((i.toLong, s"p$i", i.toDouble))), r, cfg)
-    }
-    val serial = wh.read(r).collect()
-      .map(x => (x.getAs[Long]("id"), x.getAs[String]("name"))).toSet
-    spark.conf.set("graft.metadata.parallelThreshold", "2")
-    try {
+    m.incremental(df((1 to n).map(i => (i.toLong, s"p$i", i.toDouble))), r, cfg)
+    m.incremental(df((1 to 3).map(i => (i.toLong, s"p$i", -i.toDouble))), r, cfg)
+    val entries = wh.manifestEntries(r).get
+    assert(entries.size == n && entries.forall(_._2.startsWith("name=")), entries)
+    assert(entries.map(_._1).distinct.size == 2, entries)
+    (1 to n).map(i => (i.toLong, s"p$i")).toSet
+  }
+
+  /** The leaf dirs of `r`'s latest manifest, one per entry. */
+  private def leafDirs(wh: Warehouse, r: Relation): Seq[String] =
+    wh.manifestEntries(r).get.map { case (v, part) =>
+      mfDir(wh, r).resolve(v).resolve(part).toString }
+
+  test("parallel entry listing (many entries) reads identically to serial") {
+    // the warehouse lists its entries serially on the driver; Spark's own
+    // file index lists past spark.sql.sources.parallelPartitionDiscovery
+    // .threshold (32) paths in a Spark job. At 5 and 70 entries (70 is
+    // past the 64 at which the warehouse once moved its own listing to a
+    // job) both listings must read the same rows
+    Seq(5, 70).foreach { n =>
+      val wh = freshWh(); val r = rel(s"t_plist$n")
+      val expected = leafRelation(wh, r, n)
       // fresh Warehouse: wh's per-seq read cache would otherwise serve
-      // the serially-constructed DataFrame and skip the parallel path
+      // the frame the merge built and skip the listing
       val wh2 = new Warehouse(spark, wh.root)
-      val parallel = wh2.read(r).collect()
-        .map(x => (x.getAs[Long]("id"), x.getAs[String]("name"))).toSet
-      assert(parallel == serial, "parallel listing changed the data")
-      // and pruning still works through the rebuilt FileStatuses
+      val serial = wh2.read(r).collect()
+        .map(x => (x.getAs[Long]("id"), x.getAs[String]("name"), x.getAs[Double]("score")))
+        .toSet
+      assert(serial.map(t => (t._1, t._2)) == expected)
+      // an explicit schema keeps schema inference out of the job count:
+      // the only job left is the listing itself
+      val (jobs, byIndex) = SparkJobs.during(spark)(
+        spark.read.schema("id long, score double").parquet(leafDirs(wh, r): _*))
+      assert(jobs == (if (n > 32) 1 else 0), s"$jobs listing jobs for $n entries")
+      val parallel = byIndex
+        .withColumn("name", regexp_extract(input_file_name(), "/name=([^/]+)/", 1))
+        .collect()
+        .map(x => (x.getAs[Long]("id"), x.getAs[String]("name"), x.getAs[Double]("score")))
+        .toSet
+      assert(parallel == serial, "the two listings read different rows")
+      // pruning still works through the listed FileStatuses
       val pruned = wh2.read(r).filter(col("name") === "p2")
       assert(pruned.collect().map(_.getAs[Long]("id")).toSeq == Seq(2L))
       val scan = pruned.queryExecution.executedPlan.collect {
         case s: org.apache.spark.sql.execution.FileSourceScanExec => s }.head
       assert(scan.metrics("numFiles").value == 1)
-    } finally spark.conf.unset("graft.metadata.parallelThreshold")
+    }
   }
 
   test("parallel footer stats equal the serial path (rows, bytes, partitions)") {
-    // past graft.metadata.parallelThreshold the footer opens run as a Spark
-    // job (a 100k-file table costs the driver minutes of sequential
-    // metadata round trips on an object store); both paths must agree
-    val wh = freshWh(); val m = new Materializer(wh); val r = rel("t_fstat")
-    val cfg = ModelConfig(materialized = "incremental", uniqueKey = Seq("id"),
-      partitionBy = Seq("name"), partitionKeysStable = true)
-    (1 to 5).foreach { i =>
-      m.incremental(df(Seq((i.toLong, s"p$i", i.toDouble))), r, cfg)
+    // footer stats are read serially on the driver; the rows they report
+    // must equal what a Spark job counts over the same relation, the
+    // bytes the sizes of its files, the partitions its leaves
+    Seq(5, 70).foreach { n =>
+      val wh = freshWh(); val r = rel(s"t_fstat$n")
+      leafRelation(wh, r, n)
+      val data = new Warehouse(spark, wh.root).read(r)
+      val rows = wh.footerRows(r)
+      assert(rows == data.count() && rows == n.toLong, "footerRows of the relation")
+      val sub = wh.footerRows(r, "name=p3")
+      assert(sub == data.filter(col("name") === "p3").count() && sub == 1L,
+        "footerRows of one subtree")
+      val files = leafDirs(wh, r).flatMap { d =>
+        val s = Files.list(Paths.get(d))
+        // the `.crc` checksum sidecars are hidden from Hadoop listings
+        try s.iterator().asScala().filter(f =>
+          Files.isRegularFile(f) && !f.getFileName.toString.startsWith(".")).toList
+        finally s.close()
+      }
+      val cat = wh.catalogInfo("db", "sch")
+      assert(cat.map(t => (t._1.identifier, t._2)) == Seq((r.identifier, rows)))
+      assert(cat.head._3 == files.map(Files.size).sum, cat)
+      assert(cat.head._4 == (1 to n).map(i => s"name=p$i").sorted, cat)
     }
-    spark.conf.set("graft.metadata.parallelThreshold", Int.MaxValue.toString)
-    val serialRows = wh.footerRows(r)
-    val serialSub = wh.footerRows(r, "name=p3")
-    val serialCat = wh.catalogInfo("db", "sch")
-    spark.conf.set("graft.metadata.parallelThreshold", "0")
-    try {
-      assert(wh.footerRows(r) == serialRows, "footerRows paths disagree")
-      assert(wh.footerRows(r, "name=p3") == serialSub,
-        "subtree footerRows paths disagree")
-      assert(wh.catalogInfo("db", "sch") == serialCat,
-        "catalogInfo paths disagree")
-      assert(serialRows == 5L && serialSub == 1L)
-    } finally spark.conf.unset("graft.metadata.parallelThreshold")
+  }
+
+  test("planning a read of 70 per-partition entries launches no Spark job") {
+    val wh = freshWh(); val r = rel("t_plan70")
+    leafRelation(wh, r, 70)
+    // a fresh instance: its read cache is cold, so the relation is built
+    val (jobs, schema) = SparkJobs.during(spark)(new Warehouse(spark, wh.root).read(r).schema)
+    assert(jobs == 0, s"$jobs jobs to plan a read of 70 entries")
+    assert(schema.fieldNames.toSet == Set("id", "name", "score"))
   }
 
   test("read cache never serves stale data across drop + recreate") {

@@ -561,11 +561,14 @@ class MaterializeSpec extends AnyFunSuite {
     val wh = freshWh(); val m = new Materializer(wh)
     m.table(df((1L to 57L).map(i => (i, s"n$i", i.toDouble))), rel("cat1"))
     m.table(df(Seq((1L, "a", 1.0))), rel("cat2"))
+    // 70 files, past the 64 at which footer opens once ran as a job
+    wh.writeAtomic(df((1L to 70L).map(i => (i, s"n$i", i.toDouble))), rel("cat3"),
+      partitionCols = Seq("name"))
     spark.sparkContext.setJobGroup("catalog_info_check", "catalog stats")
     val info = wh.catalogInfo("db", "sch")
     spark.sparkContext.clearJobGroup()
     val byName = info.map(t => t._1.identifier -> t._2).toMap
-    assert(byName == Map("cat1" -> 57L, "cat2" -> 1L))
+    assert(byName == Map("cat1" -> 57L, "cat2" -> 1L, "cat3" -> 70L))
     assert(info.forall(_._3 > 0L)) // byte size from filesystem
     Thread.sleep(500) // listener bus drain
     assert(spark.sparkContext.statusTracker

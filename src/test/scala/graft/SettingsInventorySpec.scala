@@ -42,7 +42,7 @@ class SettingsInventorySpec extends AnyFunSuite {
       s"read in src/main but missing from README: ${(inCode -- inTable).toSeq.sorted}")
     assert((inTable -- inCode).isEmpty,
       s"in README but read nowhere in src/main: ${(inTable -- inCode).toSeq.sorted}")
-    assert(inCode.size == 13, inCode.toSeq.sorted)
+    assert(inCode.size == 12, inCode.toSeq.sorted)
   }
 
   test("src/main/scala/graft/tools holds only GraftCli and Explain") {
