@@ -234,9 +234,9 @@ object ManifestFileIndex {
   }
 
   /** Build the single-relation DataFrame for a manifest's entries.
-    * Returns None when no entry holds a readable parquet file (nothing to
-    * infer a schema from) or when the layout defeats single-relation
-    * construction — the caller falls back to its per-version-group union.
+    * Fails, naming the relation `name`, when no entry holds a parquet file
+    * with a footer: there is no schema to read, and Spark's own error
+    * ("unable to infer schema") would name neither the relation nor why.
     *
     * Data schema = parquet footers of one sample file per VERSION GROUP,
     * merged in ascending group order (schema evolution rewrites the whole
@@ -250,34 +250,30 @@ object ManifestFileIndex {
     * job.
     */
   def relation(spark: SparkSession,
+               name: String,
                leaves: Seq[(Path, Array[FileStatus])],
                basePaths: Set[Path],
-               fileStats: FileStats.PerFile = Map.empty): Option[DataFrame] =
-    try {
-      val qBases = qualifyAll(spark, basePaths)
-      // one non-empty sample file per version group, ascending dir order
-      val samples = leaves
-        .groupBy { case (d, _) =>
-          versionGroupOf(qualifyOne(spark, d), qBases)
-        }
-        .toSeq.sortBy(_._1.getName)
-        .flatMap { case (_, ls) =>
-          ls.iterator.flatMap(_._2.iterator).find(_.getLen > 0)
-        }
-      GraftFooterSchema.merged(spark, samples).map { dataSchema =>
-        val index = new ManifestFileIndex(spark, leaves, basePaths, fileStats)
-        // dataSchema is all-nullable: a column only the newer version
-        // groups carry is null in the older files, and a non-nullable
-        // one would fail the vectorized reader on them
-        val rel = HadoopFsRelation(index, index.partitionSchema, dataSchema,
-          None, new ParquetFileFormat(), Map.empty)(spark)
-        spark.baseRelationToDataFrame(rel)
+               fileStats: FileStats.PerFile = Map.empty): DataFrame = {
+    val qBases = qualifyAll(spark, basePaths)
+    // one non-empty sample file per version group, ascending dir order
+    val samples = leaves
+      .groupBy { case (d, _) =>
+        versionGroupOf(qualifyOne(spark, d), qBases)
       }
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        // never trade read AVAILABILITY for plan shape
-        System.err.println(
-          s"[graft] manifest file index fell back to union read: $e")
-        None
-    }
+      .toSeq.sortBy(_._1.getName)
+      .flatMap { case (_, ls) =>
+        ls.iterator.flatMap(_._2.iterator).find(_.getLen > 0)
+      }
+    val dataSchema = GraftFooterSchema.merged(spark, samples).getOrElse(
+      throw new IllegalStateException(s"$name: none of its ${leaves.size} " +
+        "manifest entry dirs holds a parquet file with a footer, so it has " +
+        "no schema to read"))
+    val index = new ManifestFileIndex(spark, leaves, basePaths, fileStats)
+    // dataSchema is all-nullable: a column only the newer version
+    // groups carry is null in the older files, and a non-nullable
+    // one would fail the vectorized reader on them
+    val rel = HadoopFsRelation(index, index.partitionSchema, dataSchema,
+      None, new ParquetFileFormat(), Map.empty)(spark)
+    spark.baseRelationToDataFrame(rel)
+  }
 }

@@ -24,11 +24,12 @@ import org.apache.spark.sql.types.StructType
   * untouched entries still point at their old version directories, so a
   * daily merge never copies years of history.
   *
-  * Relations written by older releases as plain parquet directories (no
-  * `_graft/`) stay readable: reads fall back to the directory itself
-  * until the first write commits a manifest, which readers see from then
-  * on. That first write must be a full rebuild; any other write refuses
-  * rather than hide the legacy rows.
+  * Every table this warehouse serves has a manifest. A relation dir that
+  * an older release wrote as plain parquet (no `_graft/`) is served only
+  * after [[adopt]] commits a first manifest whose entries point at its
+  * own files in place. Until then [[exists]] still reports it, so an
+  * incremental build does not rebuild over its rows; [[read]] refuses,
+  * and so does every write but a full rebuild.
   *
   * Concurrency: every mutating operation takes a per-relation lock file
   * (atomic create-if-absent, stale-broken by age), and manifest commits
@@ -83,9 +84,28 @@ final class Warehouse(val spark: SparkSession, val root: String) {
 
   def exists(rel: Relation): Boolean =
     // a dir holding only uncommitted version dirs (crashed write) is NOT
-    // a table; a committed manifest or legacy plain-layout data is
+    // a table; a committed manifest or not-yet-adopted plain data is
     fs.exists(new Path(path(rel))) &&
       (latestManifest(rel).isDefined || legacyHasData(rel))
+
+  /** Fails as [[read]] does when `rel` is a plain-layout dir not yet
+    * adopted: for a layout-driven choice between a rebuild and a scoped
+    * replace, which must not take the missing manifest for an empty table
+    * and rebuild over its rows.
+    */
+  private[graft] def refuseUnadopted(rel: Relation): Unit =
+    if (latestManifest(rel).isEmpty && exists(rel)) throw noTable(rel)
+
+  /** The failure for a relation with no complete manifest: a plain-layout
+    * dir awaiting [[adopt]], or nothing at all.
+    */
+  private def noTable(rel: Relation): IllegalStateException =
+    new IllegalStateException(
+      if (legacyHasData(rel)) s"${rel.fqName} holds plain parquet written " +
+        "by an older release and no manifest. Run `adopt` to serve those " +
+        "files in place (no copy), or rebuild the relation once with " +
+        "--full-refresh"
+      else s"${rel.fqName}: no table at ${path(rel)}")
 
   /** Committed manifest data is IMMUTABLE per manifest, so the
     * constructed read DataFrame (file listings + partition parsing +
@@ -139,19 +159,12 @@ final class Warehouse(val spark: SparkSession, val root: String) {
           .map(dataEntries)
           .find(_.nonEmpty)
           .map(e => readDataEntries(rel, e).limit(0))
-          .getOrElse {
-            // no retained manifest carries a data entry: a legacy
-            // flat-file dir can still serve the schema, but an empty
-            // version-managed dir must refuse LOUDLY — the bare parquet
-            // read would throw Spark's opaque 'unable to infer schema'
-            if (rawHasFlatFiles(rel)) spark.read.parquet(path(rel))
-            else throw new IllegalStateException(
-              s"${rel.fqName}: every data entry was dropped/expired and " +
-                "no retained manifest still carries one — the schema is " +
-                "unrecoverable. Rebuild the relation (or read a version " +
-                "via readAt before the expiry commit aged out).")
-          }
-      case None => spark.read.parquet(path(rel)) // legacy plain-layout dir
+          .getOrElse(throw new IllegalStateException(
+            s"${rel.fqName}: every data entry was dropped/expired and " +
+              "no retained manifest still carries one — the schema is " +
+              "unrecoverable. Rebuild the relation (or read a version " +
+              "via readAt before the expiry commit aged out)."))
+      case None => throw noTable(rel)
     }
 
   def schemaOf(rel: Relation): StructType = read(rel).schema
@@ -160,7 +173,8 @@ final class Warehouse(val spark: SparkSession, val root: String) {
     * relation's CURRENT data entries — `Some(filters)` only when EVERY
     * contributing version dir carries a bloom for the column (an
     * absence proof over a partial set proves nothing), `Some(Nil)` for
-    * an empty table, `None` otherwise (legacy layout, pre-bloom writes).
+    * an empty table, `None` otherwise (no manifest, pre-bloom writes,
+    * adopted files).
     * A value absent from every filter is PROVABLY not stored; a hit is
     * only a candidate (delete entries and bloom fpp both
     * over-approximate) — verify candidates with an exact probe. Used by
@@ -258,6 +272,10 @@ final class Warehouse(val spark: SparkSession, val root: String) {
     * (listRelations, partition discovery fallbacks) never see it.
     */
   private val MfDir = "_graft"
+  /** The version dir of an [[adopt]]ed relation's entries: entry dirs
+    * resolve against `_graft/`, so this is the relation dir itself.
+    */
+  private val AdoptedDir = ".."
   private val ManifestName = """m(\d{12})\.manifest""".r
   private val VersionName = """v(\d{12})-.*""".r
   /** Committed manifests retained for in-flight readers (and the version
@@ -335,8 +353,8 @@ final class Warehouse(val spark: SparkSession, val root: String) {
     }.toMap)
 
   /** Committed (versionDir, partitionPath) entries of the current
-    * manifest — observability for tests and ops tooling; None for a
-    * legacy or absent relation.
+    * manifest — observability for tests and ops tooling; None when the
+    * relation has no complete manifest.
     */
   def manifestEntries(rel: Relation): Option[Seq[(String, String)]] =
     latestManifest(rel).map(_._2)
@@ -344,8 +362,8 @@ final class Warehouse(val spark: SparkSession, val root: String) {
   /** Time travel: the retained, complete commits of a relation, oldest
     * first — each is a seq a [[readAt]] can resolve. Retention is
     * [[KeepManifests]] deep (commit-time GC prunes beyond it), so this is
-    * a bounded undo window, not unbounded history. A legacy relation has
-    * no history: empty.
+    * a bounded undo window, not unbounded history. A relation with no
+    * manifest has no history: empty.
     */
   def listVersions(rel: Relation): Seq[Long] =
     manifestsDescending(rel)
@@ -479,28 +497,74 @@ final class Warehouse(val spark: SparkSession, val root: String) {
     *    `VACUUM`-breaks-shallow-clones caveat Delta has. Re-clone or
     *    deep-copy (`writeAtomic(read)`) to outlive the source.
     *
-    * A legacy plain-layout source has no manifest to point through —
-    * falls back to a deep copy, still atomic.
+    * An adopted source clones the same way: its entries resolve to its
+    * relation dir. A source with no manifest fails as [[read]] does.
     */
   def cloneFrom(srcWh: Warehouse, src: Relation, dst: Relation): Unit =
     withRelationLock(dst) {
-      require(srcWh.exists(src), s"clone source ${src.fqName} does not exist")
-      srcWh.latestManifest(src) match {
-        case Some((_, entries)) =>
-          val absolute = entries.map { case (v, p) =>
-            (new Path(srcWh.mfDir(src), v).toString, p)
-          }
-          commitEntries(dst, rebuild = true)(_ => absolute)
-          invalidateRead(dst)
-        case None => writeAtomic(srcWh.read(src), dst)
+      val entries = srcWh.latestManifest(src).map(_._2)
+        .getOrElse(throw srcWh.noTable(src))
+      val absolute = entries.map { case (v, p) =>
+        (new Path(srcWh.mfDir(src), v).toString, p)
       }
+      commitEntries(dst, rebuild = true)(_ => absolute)
+      invalidateRead(dst)
     }
+
+  /** Adopt a relation dir that an older release wrote as plain parquet:
+    * one manifest commit whose entries point at the dir's own files in
+    * place — `("..", "")` for a flat dir, one `("..", "k=v/…")` per leaf
+    * of a partitioned one. Entries resolve against `_graft/`, so `..` is
+    * the relation dir itself, and [[rename]] and [[cloneFrom]] carry them
+    * like any other entry. No data file is copied, renamed or rewritten.
+    * The commit stamps `built_at_ms` with the dir's modification time, so
+    * the TTL clock ([[lastCommitMs]]) keeps the value it had before.
+    *
+    * Returns false, committing nothing, when the relation already has a
+    * manifest or holds no plain data. A dir that mixes flat parquet files
+    * with `k=v` dirs, or whose leaves sit at different depths, is refused:
+    * no one read can serve both shapes.
+    */
+  def adopt(rel: Relation): Boolean = withRelationLock(rel) {
+    if (latestManifest(rel).isDefined || !legacyHasData(rel)) false
+    else {
+      val dir = new Path(path(rel))
+      val builtAt = fs.getFileStatus(dir).getModificationTime
+      def refuse(why: String) =
+        throw new IllegalStateException(s"${rel.fqName}: cannot adopt: $why")
+      def leaves(d: Path, part: String): Seq[String] = {
+        val kids = fs.listStatus(d).toSeq
+        val dirs = kids.filter(st =>
+          st.isDirectory && st.getPath.getName.contains("="))
+        if (dirs.isEmpty) Seq(part)
+        else if (kids.exists(st =>
+            st.isFile && st.getPath.getName.endsWith(".parquet")))
+          refuse(s"$d holds both parquet files and k=v partition dirs")
+        else dirs.flatMap { st =>
+          val n = st.getPath.getName
+          leaves(st.getPath, if (part.isEmpty) n else s"$part/$n")
+        }
+      }
+      val parts = leaves(dir, "").sorted
+      if (parts.map(_.count(_ == '/')).distinct.size > 1)
+        refuse(s"its partition leaves sit at different depths: " +
+          parts.mkString(", "))
+      commitEntries(rel, _ + ("built_at_ms" -> builtAt.toString),
+        rebuild = true)(_ => parts.map((AdoptedDir, _)))
+      invalidateRead(rel)
+      true
+    }
+  }
 
   /** Newest COMPLETE manifest: (seq, entries). */
   private def latestManifest(rel: Relation): Option[(Long, Seq[(String, String)])] =
     manifestsDescending(rel).iterator
       .flatMap { case (seq, p) => parseManifest(p).map((seq, _)) }
       .nextOption()
+
+  /** The entry list of the newest complete manifest; empty for none. */
+  private def currentEntries(rel: Relation): Seq[(String, String)] =
+    latestManifest(rel).map(_._2).getOrElse(Nil)
 
   /** (seq, qualified version dirs of the current manifest's DATA entries)
     * — the scan identity [[graft.plans.AggViewRewrite]] matches against.
@@ -662,10 +726,10 @@ final class Warehouse(val spark: SparkSession, val root: String) {
     * swapping `<rel>__dbt_tmp`/`<rel>__dbt_backup`/`<rel>__dbt_pbackup`
     * siblings. A commit that keeps prior entries (append, merge, delete,
     * metadata) would publish a manifest without the legacy rows and hide
-    * them from every reader; only a full rebuild may upgrade such a
-    * relation. A swap sibling left by an interrupted older-release write
-    * may hold the only copy of some rows, so it blocks every commit until
-    * someone moves it back or deletes it.
+    * them from every reader; only [[adopt]] or a full rebuild may give
+    * such a relation its first manifest. A swap sibling left by an
+    * interrupted older-release write may hold the only copy of some rows,
+    * so it blocks every commit until someone moves it back or deletes it.
     */
   private def refuseHidingLegacyRows(rel: Relation, rebuild: Boolean): Unit = {
     val leftovers = Seq("__dbt_backup", "__dbt_pbackup")
@@ -675,10 +739,7 @@ final class Warehouse(val spark: SparkSession, val root: String) {
         "interrupted swap of an older release, may hold the only copy of " +
         s"some rows; move them back into ${path(rel)} or delete the " +
         "leftover, then retry")
-    if (!rebuild && legacyHasData(rel)) throw new IllegalStateException(
-      s"${rel.fqName} holds plain-layout data written by an older release " +
-        "and no manifest; this write would hide those rows. Rebuild it " +
-        "once with --full-refresh, which upgrades it to the manifest layout")
+    if (!rebuild && legacyHasData(rel)) throw noTable(rel)
   }
 
   /** New immutable data dir for a write that intends to commit at about
@@ -733,10 +794,6 @@ final class Warehouse(val spark: SparkSession, val root: String) {
     * Spark's own multi-basePath discovery, so partition pruning and file
     * skipping behave exactly like a plain directory read no matter how
     * many versions the data straddles.
-    *
-    * Fallback (no readable parquet footer anywhere — cannot happen for
-    * data committed by this warehouse, which always writes ≥1 footer):
-    * the legacy per-version-group union.
     */
   private def readEntries(rel: Relation, entries: Seq[(String, String)]): DataFrame =
     if (!entries.exists(isDeleteEntry)) readDataEntries(rel, entries)
@@ -746,8 +803,7 @@ final class Warehouse(val spark: SparkSession, val root: String) {
     val leaves = listEntries(rel, entries)
     val basePaths = entries.map(e => new Path(mfDir(rel), e._1)).toSet
     val stats = readStats(entries.map(_._1).distinct.map(d => new Path(mfDir(rel), d)))
-    ManifestFileIndex.relation(spark, leaves, basePaths, stats)
-      .getOrElse(readEntriesUnion(rel, entries))
+    ManifestFileIndex.relation(spark, rel.fqName, leaves, basePaths, stats)
   }
 
   /** Entry-list position gives delete ordering: a delete entry subtracts
@@ -928,33 +984,17 @@ final class Warehouse(val spark: SparkSession, val root: String) {
   private def writeBloomSidecar(vdir: Path, files: Seq[FileStatus],
                                 rows: Long, cols: Seq[String]): Unit =
     if (cols.nonEmpty && rows > 0) try {
-      ManifestFileIndex.relation(spark,
-          files.groupBy(_.getPath.getParent).toSeq.map { case (d, fls) =>
-            (d, fls.toArray) },
-          Set(vdir))
-        .foreach { df =>
-          BloomStats.write(fs, vdir, BloomStats.build(df, cols,
-            math.min(rows, Warehouse.BloomMaxItems),
-            doubleConf("graft.bloom.fpp", 0.05)))
-        }
+      val df = ManifestFileIndex.relation(spark, vdir.toString,
+        files.groupBy(_.getPath.getParent).toSeq.map { case (d, fls) =>
+          (d, fls.toArray) },
+        Set(vdir))
+      BloomStats.write(fs, vdir, BloomStats.build(df, cols,
+        math.min(rows, Warehouse.BloomMaxItems),
+        doubleConf("graft.bloom.fpp", 0.05)))
     } catch { case scala.util.control.NonFatal(_) => () }
 
-  /** Legacy union-shaped read, one parquet relation per version group —
-    * kept only as [[readEntries]]' no-footer fallback.
-    */
-  private def readEntriesUnion(rel: Relation, entries: Seq[(String, String)]): DataFrame = {
-    val groups = entries.groupBy(_._1).toSeq.sortBy(_._1)
-    groups.map { case (dir, es) =>
-      val base = new Path(mfDir(rel), dir).toString
-      val parts = es.map(_._2)
-      if (parts.contains("")) spark.read.parquet(base)
-      else spark.read.option("basePath", base)
-        .parquet(parts.map(base + "/" + _): _*)
-    }.reduce(_.unionByName(_, allowMissingColumns = true))
-  }
-
-  /** Legacy plain-layout data present at the relation root (a table
-    * written before the manifest protocol, read until its next write).
+  /** Plain-layout data at the relation root: a table an older release
+    * wrote before the manifest protocol, served once [[adopt]]ed.
     */
   private def legacyHasData(rel: Relation): Boolean = {
     val p = new Path(path(rel))
@@ -1701,7 +1741,7 @@ final class Warehouse(val spark: SparkSession, val root: String) {
   def compactTable(rel: Relation, maxEntries: Int = 8,
                    zorderCols: Seq[String] = Nil): Boolean =
     withRelationLock(rel) {
-      val cur = latestManifest(rel).map(_._2).getOrElse(Nil)
+      val cur = currentEntries(rel)
       // delete entries force a rewrite regardless of dir count: compaction
       // is also how equality deletes get physically materialized
       if (cur.map(_._1).distinct.size <= maxEntries &&
@@ -1823,11 +1863,12 @@ final class Warehouse(val spark: SparkSession, val root: String) {
     * of another root reads its definition. A single parquet FILE (a
     * declared source) resolves to a temp view over that file with its
     * footer schema pinned ([[sourceFileView]]). Other paths (directory
-    * sources, legacy plain-layout dirs, missing paths) pass through
-    * untouched. Compiled SQL stays path-addressed on disk — the stable,
-    * engine-agnostic form — and the pointer is chased at EXECUTION time,
-    * in the executing session, so a view compiled yesterday reads today's
-    * committed version instead of a GC'd version dir.
+    * sources, plain-layout dirs not yet [[adopt]]ed, missing paths) pass
+    * through untouched, for Spark to read as it finds them. Compiled SQL
+    * stays path-addressed on disk — the stable, engine-agnostic form —
+    * and the pointer is chased at EXECUTION time, in the executing
+    * session, so a view compiled yesterday reads today's committed
+    * version instead of a GC'd version dir.
     */
   def resolveSql(sqlText: String): String =
     Warehouse.PathRelation.replaceAllIn(sqlText, m =>
@@ -1951,37 +1992,30 @@ final class Warehouse(val spark: SparkSession, val root: String) {
         st.getPath.getName.stripSuffix(".view.sql")))
   }
 
-  /** Reference `create_schema` @161298 / `drop_schema` @162682 /
-    * `check_schema_exists` @188106.
-    */
-  def createSchema(database: String, schema: String): Unit = {
-    fs.mkdirs(new Path(s"$root/$database/$schema")); ()
-  }
-  def dropSchema(database: String, schema: String): Unit = {
-    val p = new Path(s"$root/$database/$schema")
-    if (fs.exists(p)) { fs.delete(p, true); () }
-  }
-  def schemaExists(database: String, schema: String): Boolean =
-    fs.exists(new Path(s"$root/$database/$schema"))
-
   /** Catalog stats (reference `bigquery__get_catalog` @3102: per-table
     * row counts, byte sizes, partition info from information_schema; here
     * from parquet footers + filesystem). Pure metadata reads — the row
     * count comes from each file's footer record count, so NO Spark job
     * scans table data (the reference reads `__TABLES__` stats for the
     * same reason: a catalog listing must not cost a full scan per table).
-    * Only the CURRENT version's files count.
+    * Only the CURRENT version's parquet files count, listed as reads
+    * list them; a relation with no manifest reports no rows.
     */
   def catalogInfo(database: String, schema: String)
       : Seq[(Relation, Long, Long, Seq[String])] =
     listRelations(database, schema).map { rel =>
-      val files = latestManifest(rel) match {
-        case Some((_, entries)) =>
-          dataEntries(entries).flatMap(e => filesUnder(entryPath(rel, e)))
-        case None => filesUnder(new Path(path(rel)))
-      }
+      val files = entryFiles(rel, dataEntries(currentEntries(rel)))
       (rel, footerRowsOf(files), files.map(_.getLen).sum, listPartitions(rel))
     }
+
+  /** The parquet files of `entries`, from the reads' own leaf listing
+    * ([[listEntries]]) — not a recursive walk, which would count an
+    * adopted flat entry's `_graft/` version dirs under the relation dir
+    * a second time.
+    */
+  private def entryFiles(rel: Relation,
+                         entries: Seq[(String, String)]): Seq[FileStatus] =
+    listEntries(rel, entries).flatMap(_._2)
 
   /** Recursive file listing under a dir — driver-side metadata IO. An
     * absent dir lists empty (stats callers tolerate an empty relation).
@@ -2007,30 +2041,16 @@ final class Warehouse(val spark: SparkSession, val root: String) {
     * count() scan.
     */
   def footerRows(rel: Relation, subdir: String = ""): Long =
-    latestManifest(rel) match {
-      case Some((_, entries)) =>
-        footerRowsOf(dataEntries(entries) // delete-key rows are not data
-          .filter(e => subdir.isEmpty || e._2 == subdir ||
-            e._2.startsWith(subdir + "/"))
-          .flatMap(e => filesUnder(entryPath(rel, e))))
-      case None => footerRowsOf(filesUnder(
-        if (subdir.isEmpty) new Path(path(rel)) else new Path(path(rel), subdir)))
-    }
+    footerRowsOf(entryFiles(rel,
+      dataEntries(currentEntries(rel)) // delete-key rows are not data
+        .filter(e => subdir.isEmpty || e._2 == subdir ||
+          e._2.startsWith(subdir + "/"))))
 
   /** True when the relation holds flat (non-partition-dir) parquet data —
     * i.e. it was written unpartitioned.
     */
   def hasFlatFiles(rel: Relation): Boolean =
-    latestManifest(rel) match {
-      case Some((_, entries)) => entries.exists(_._2.isEmpty)
-      case None => rawHasFlatFiles(rel)
-    }
-
-  private def rawHasFlatFiles(rel: Relation): Boolean = {
-    val p = new Path(path(rel))
-    fs.exists(p) && fs.listStatus(p).exists(st =>
-      st.isFile && st.getPath.getName.endsWith(".parquet"))
-  }
+    currentEntries(rel).exists(_._2.isEmpty)
 
   /** Drop the partition directories whose (unescaped) value is in
     * `values` — the delete half of static insert_overwrite: listed
@@ -2163,7 +2183,7 @@ final class Warehouse(val spark: SparkSession, val root: String) {
       // normalizeEntries could never retire them — the relation would be
       // stuck on the delete-masked read path (and un-exportable) forever
       val rewritten = toRewrite.toSet
-      val fromDirs = latestManifest(rel).map(_._2).getOrElse(Nil)
+      val fromDirs = currentEntries(rel)
         .collect { case (d, part) if rewritten(part) => d }
       replacePartitions(payload, rel, pcols, alsoDropPaths = toRewrite,
         bloomCols = sharedBloomCols(rel, fromDirs))
@@ -2221,29 +2241,17 @@ final class Warehouse(val spark: SparkSession, val root: String) {
     }
 
   /** Physical directories holding a leaf partition's rows: every version
-    * dir the manifest maps the leaf to (>1 after appends), or the single
-    * in-place dir of a legacy plain-layout relation.
+    * dir the manifest maps the leaf to (>1 after appends).
     */
   private def physicalPartDirs(rel: Relation, part: String): Seq[Path] =
-    latestManifest(rel) match {
-      case Some((_, entries)) =>
-        entries.filter(_._2 == part).map(e => entryPath(rel, e))
-      case None => Seq(new Path(path(rel), part))
-    }
+    currentEntries(rel).filter(_._2 == part).map(e => entryPath(rel, e))
 
   /** Partition directory names of a partitioned relation (reference
     * `get_partitions_metadata` @12518).
     */
   def listPartitions(rel: Relation): Seq[String] =
-    latestManifest(rel) match {
-      case Some((_, entries)) =>
-        entries.map(_._2.takeWhile(_ != '/')).filter(_.contains("=")).distinct.sorted
-      case None =>
-        val p = new Path(path(rel))
-        if (!fs.exists(p)) Nil
-        else fs.listStatus(p).toSeq.filter(_.isDirectory).map(_.getPath.getName)
-          .filter(_.contains("="))
-    }
+    currentEntries(rel).map(_._2.takeWhile(_ != '/'))
+      .filter(_.contains("=")).distinct.sorted
 
   /** Epoch ms of the relation's last REBUILD — the timestamp table TTLs
     * (`hours_to_expiration`) measure from. Prefers the
@@ -2251,17 +2259,16 @@ final class Warehouse(val spark: SparkSession, val root: String) {
     * carried forward by appends/expiry/meta commits (BigQuery resets
     * expiration_timestamp on CREATE OR REPLACE; DML never extends it —
     * using the newest manifest's mtime here would let a daily vacuum or
-    * stream append keep an expired table alive forever). Pre-stamp
-    * manifests fall back to the newest manifest file's mtime, legacy
-    * relations to the relation dir's mtime.
+    * stream append keep an expired table alive forever; [[adopt]] stamps
+    * the adopted dir's mtime). Pre-stamp manifests fall back to the
+    * newest manifest file's mtime. None when the relation has no
+    * manifest.
     */
   def lastCommitMs(rel: Relation): Option[Long] =
-    latestMeta(rel).get("built_at_ms").flatMap(_.toLongOption).orElse {
-      val newest = manifestsDescending(rel)
+    latestMeta(rel).get("built_at_ms").flatMap(_.toLongOption).orElse(
+      manifestsDescending(rel)
         .collectFirst { case (_, p) if parseManifest(p).isDefined => p }
-      newest.orElse(Some(new Path(path(rel))).filter(fs.exists))
-        .map(p => fs.getFileStatus(p).getModificationTime)
-    }
+        .map(p => fs.getFileStatus(p).getModificationTime))
 
   /** Partition TTL sweep (`partition_expiration_days`, reference
     * bigquery_options @15210): drop every partition whose NEWEST covering
@@ -2272,9 +2279,9 @@ final class Warehouse(val spark: SparkSession, val root: String) {
     * entries: carried-forward metadata means stream watermarks and
     * checkpoints survive, [[normalizeEntries]] retires delete entries the
     * drop leaves dead, and commit-time GC ages out the unreferenced
-    * version dirs. A legacy plain-layout relation has no per-version
-    * timestamps and expires nothing until its next write commits a
-    * manifest. Returns the dropped partition paths.
+    * version dirs. An adopted partition ages by its leaf dir's mtime
+    * like any entry; a relation with no manifest expires nothing.
+    * Returns the dropped partition paths.
     */
   def expirePartitions(rel: Relation, ttlMs: Long, asOfMs: Long): Seq[String] =
     if (latestManifest(rel).isEmpty) Nil
@@ -2293,7 +2300,7 @@ final class Warehouse(val spark: SparkSession, val root: String) {
             part -> es.map(e => fs.getFileStatus(entryPath(rel, e))
               .getModificationTime).max
           }.filter(_._2 < cutoff).keySet
-      var expired = expiredOf(latestManifest(rel).map(_._2).getOrElse(Nil))
+      var expired = expiredOf(currentEntries(rel))
       if (expired.nonEmpty) {
         Warehouse.faultPoint("ttl.pre-commit")
         commitEntries(rel) { cur =>
@@ -2308,57 +2315,21 @@ final class Warehouse(val spark: SparkSession, val root: String) {
   /** All partition key columns of a relation in layout order, derived
     * from FULL leaf paths — every `k=v` segment, not just the first
     * directory level, so multi-column layouts (`dt=…/region=…`) report
-    * every key. Committed relations read the manifest's partition paths;
-    * legacy plain layouts walk the `k=v` directory tree.
+    * every key, read from the manifest's partition paths.
     */
-  def partitionColumns(rel: Relation): Seq[String] = {
-    val leafPaths: Seq[String] = latestManifest(rel) match {
-      case Some((_, entries)) =>
-        dataEntries(entries).map(_._2).filter(_.contains("="))
-      case None =>
-        def go(p: Path, prefix: String): Seq[String] = {
-          val kids =
-            if (!fs.exists(p)) Nil
-            else fs.listStatus(p).toSeq.filter(st =>
-              st.isDirectory && st.getPath.getName.contains("="))
-          if (kids.isEmpty) { if (prefix.isEmpty) Nil else Seq(prefix) }
-          else kids.flatMap { st =>
-            val next =
-              if (prefix.isEmpty) st.getPath.getName
-              else prefix + "/" + st.getPath.getName
-            go(st.getPath, next)
-          }
-        }
-        go(new Path(path(rel)), "")
-    }
-    leafPaths.flatMap(_.split("/").toSeq.filter(_.contains("="))
-      .map(_.takeWhile(_ != '='))).distinct
-  }
+  def partitionColumns(rel: Relation): Seq[String] =
+    dataEntries(currentEntries(rel)).map(_._2)
+      .flatMap(_.split("/").toSeq.filter(_.contains("="))
+        .map(_.takeWhile(_ != '='))).distinct
 
   /** Relative `k=v[/k2=v2…]` paths of the partition dirs exactly `depth`
     * levels below a relation root — the leaf dirs of a `depth`-column
     * partitioned layout.
     */
   def listPartitionPaths(rel: Relation, depth: Int): Seq[String] =
-    latestManifest(rel) match {
-      case Some((_, entries)) =>
-        dataEntries(entries).map(_._2)
-          .filter(p => p.nonEmpty && p.split("/").length == depth)
-          .distinct.sorted
-      case None => leafDirs(new Path(path(rel)), depth)
-    }
-
-  private def leafDirs(rootDir: Path, depth: Int): Seq[String] = {
-    def go(p: Path, d: Int): Seq[String] =
-      if (!fs.exists(p)) Nil
-      else fs.listStatus(p).toSeq
-        .filter(st => st.isDirectory && st.getPath.getName.contains("="))
-        .flatMap { st =>
-          if (d == 1) Seq(st.getPath.getName)
-          else go(st.getPath, d - 1).map(st.getPath.getName + "/" + _)
-        }
-    go(rootDir, depth)
-  }
+    dataEntries(currentEntries(rel)).map(_._2)
+      .filter(p => p.nonEmpty && p.split("/").length == depth)
+      .distinct.sorted
 }
 
 object Warehouse {

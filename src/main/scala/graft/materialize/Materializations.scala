@@ -526,7 +526,10 @@ final class Materializer(wh: Warehouse) {
     val beginP = trunc(parseDt(cfg.begin))
     // an EMPTY SHELL (flat zero-row table from an all-empty refresh) has
     // no period partitions — treat it as initial so the next run rebuilds
-    // from begin instead of replacePartitions-ing over a flat layout
+    // from begin instead of replacePartitions-ing over a flat layout. A
+    // plain-layout dir not yet adopted has none either, but rebuilding
+    // over its rows unasked would drop them: it refuses instead
+    if (!fullRefresh) wh.refuseUnadopted(rel)
     val initial = !wh.exists(rel) || fullRefresh ||
       wh.listPartitions(rel).isEmpty
 
@@ -726,6 +729,9 @@ final class Materializer(wh: Warehouse) {
       s"${rel.fqName}: [DBT__PARTITION_DATE] model needs a partitions list " +
         "(reference: config(partitions=partition_range(...)))")
     wh.withRelationLock(rel) {
+      // a plain-layout dir not yet adopted lists no partitions, and the
+      // layout mismatch below would rebuild over its rows
+      wh.refuseUnadopted(rel)
       val existingSpec = wh.listPartitions(rel).map(_.takeWhile(_ != '=')).distinct
       val create = !wh.exists(rel) || existingSpec != Seq(dateCol)
       dates.zipWithIndex.foreach { case (date, i) =>

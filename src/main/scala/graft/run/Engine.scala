@@ -334,8 +334,6 @@ final class Engine(spark: SparkSession, project0: Project, target: Target) {
     project.sources.find(x => x.sourceName == s && x.tableName == t)
       .getOrElse(throw new IllegalArgumentException(s"unknown source $s.$t"))
 
-  private def sourcePath(s: String, t: String): String = sourceDef(s, t).path
-
   /** Read a declared source with its format + reader options. */
   private def readSource(sd: SourceDef): DataFrame =
     spark.read.format(sd.format).options(sd.options).load(sd.path)

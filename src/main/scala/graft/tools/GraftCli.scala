@@ -42,6 +42,9 @@ import graft.run.{Engine, ProjectLoader, StateSelector, Target}
   *                    (--max-files N, default 8; --zorder c1,c2 re-clusters
   *                    an unpartitioned table on the interleaved key)
   *   expire-snapshots drop closed history months < --keep-from yyyy-MM
+  *   adopt            serve the target schema's plain-parquet dirs that
+  *                    an older release wrote: one zero-copy manifest
+  *                    commit each, pointing at the files in place
   *   gc               sweep crashed writers' orphaned uncommitted version
   *                    dirs (--older-than 7d / 12h / 90m)
   *   vacuum           enforce declared bigquery_options TTLs: drop tables
@@ -468,6 +471,14 @@ object GraftCli {
             engine.relationFor(sn.name), keepFrom)
           if (dropped.nonEmpty)
             println(s"EXPIRED  ${sn.name}: ${dropped.sorted.mkString(", ")}")
+        }
+      case "adopt" =>
+        // nothing adopts implicitly: a read or a non-rebuild write of a
+        // plain-layout dir refuses until this commits its first manifest
+        val (db, sch) = (target.database, target.resolvedSchema)
+        engine.warehouse.listRelations(db, sch).foreach { rel =>
+          if (engine.warehouse.adopt(rel))
+            println(s"ADOPTED  ${rel.identifier}")
         }
       case "gc" =>
         // retention sweep for crashed writers: an uncommitted version dir

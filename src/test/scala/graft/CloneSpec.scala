@@ -8,8 +8,8 @@ import graft.core._
 /** Zero-copy clone (`dbt clone` / Delta shallow clone): the manifest-
   * pointer mechanics the o_clone lifecycle query can't isolate —
   * zero data files written, pinning against later source commits,
-  * independent evolution, clone-of-clone, and the deep-copy fallback
-  * for a legacy plain-layout source.
+  * independent evolution, clone-of-clone, and an adopted plain-layout
+  * source, whose entries point into its relation dir.
   */
 class CloneSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSession.builder()
@@ -74,14 +74,20 @@ class CloneSpec extends AnyFunSuite {
     assert(c.read(r).filter($"k" === "x").count() == 2)
   }
 
-  test("legacy plain-layout source deep-copies (and survives a source drop)") {
+  test("an adopted plain-layout source clones as pointers: zero files written, pinned") {
     val src = wh(); val dst = wh()
     val r = Relation("wh", "main", "t")
     // a relation written before the manifest protocol: bare parquet files
     Seq((1L, "a")).toDF("id", "s").write.parquet(src.path(r))
+    // no manifest to point through: refused, naming the way out
+    val e = intercept[IllegalStateException](dst.cloneFrom(src, r, r))
+    assert(e.getMessage.contains("`adopt`"), e.getMessage)
+    assert(src.adopt(r))
     dst.cloneFrom(src, r, r)
-    assert(parquetFilesUnder(dst.root).nonEmpty) // a real copy
-    src.drop(r)
+    assert(parquetFilesUnder(dst.root).isEmpty)
+    assert(dst.manifestEntries(r).contains(Seq((src.path(r), ""))))
+    assert(dst.read(r).as[(Long, String)].collect().toSet == Set((1L, "a")))
+    src.append(Seq((2L, "b")).toDF("id", "s"), r)
     assert(dst.read(r).as[(Long, String)].collect().toSet == Set((1L, "a")))
   }
 }

@@ -269,6 +269,35 @@ class FaultInjectionSpec extends AnyFunSuite {
       mayNotExist = true))
   }
 
+  test("adopt: a crash before its manifest lands leaves the dir un-adopted; a rerun adopts it") {
+    // a plain-layout dir is not readable before adopt, so the sweep's
+    // read-the-pre-state check does not apply: each crash must leave
+    // either the un-adopted dir (files intact, reads refused) or the
+    // adopted relation, and a rerun must adopt it
+    def plain(wh: Warehouse): Unit =
+      df(1, 2).write.parquet(wh.path(R))
+    val root0 = Files.createTempDirectory("graft_fi_adopt_t").toString
+    val wh0 = mkWh(root0); plain(wh0)
+    val points = trace { wh0.adopt(R); () }
+    assert(points.contains("commit.claim"), points)
+    for (i <- points.indices) {
+      val root = Files.createTempDirectory(s"graft_fi_adopt_$i").toString
+      val wh = mkWh(root); plain(wh)
+      val at = crashAt(i, "adopt") { wh.adopt(R); () }
+      val cold = mkWh(root)
+      assert(cold.exists(R), s"adopt @$at#$i: the dir vanished")
+      if (cold.manifestEntries(R).isEmpty) {
+        val e = intercept[IllegalStateException](cold.read(R))
+        assert(e.getMessage.contains("`adopt`"), e.getMessage)
+        assert(spark.read.parquet(wh.path(R)).count() == 2)
+      } else assert(ids(cold) == Seq(1L, 2L), s"adopt @$at#$i: torn read")
+      val retry = mkWh(root)
+      retry.adopt(R)
+      assert(ids(retry) == Seq(1L, 2L), s"adopt @$at#$i: rerun diverged")
+      assertReferencedExist(retry, s"adopt @$at#$i (post-retry)")
+    }
+  }
+
   test("manifest: TTL expiry survives a crash at every point") {
     def stale(wh: Warehouse): Unit = {
       wh.writeAtomic(pdf((1L, "old"), (2L, "new")), R, partitionCols = Seq("dt"))

@@ -188,45 +188,149 @@ class ManifestCommitSpec extends AnyFunSuite {
     assert(out.filter(col("id") === 1L).select("extra").collect().head.isNullAt(0))
   }
 
-  test("legacy rename-layout relation is readable by a manifest warehouse") {
-    val tmp = Files.createTempDirectory("graft_mf_legacy").toString
-    val r = rel("t_leg")
-    // the layout older releases wrote: bare parquet files, no _graft/
-    df(Seq((1L, "a", 1.0))).write.parquet(r.pathUnder(tmp))
-    val mfWh = new Warehouse(spark, tmp)
-    assert(mfWh.exists(r))
-    assert(mfWh.read(r).count() == 1)
-    assert(mfWh.footerRows(r) == 1L)
+  /** The parquet files under `dir`, recursively (`_graft/` included). */
+  private def parquetUnder(dir: String): Seq[java.nio.file.Path] = {
+    val s = Files.walk(Paths.get(dir))
+    try s.iterator().asScala().filter(_.toString.endsWith(".parquet"))
+      .toList.sortBy(_.toString)
+    finally s.close()
   }
 
-  test("first write to a legacy plain-layout relation: only a rebuild commits") {
-    val tmp = Files.createTempDirectory("graft_mf_legacy_w").toString
-    val wh = new Warehouse(spark, tmp); val m = new Materializer(wh)
+  /** A flat and a partitioned dir in the plain layout older releases
+    * wrote: bare parquet files or `k=v` dirs, no `_graft/`.
+    */
+  private def plainDirs(wh: Warehouse): (Relation, Relation) = {
     val flat = rel("t_flat"); val parted = rel("t_parted")
     df(Seq((1L, "a", 1.0), (2L, "b", 2.0))).write.parquet(wh.path(flat))
     df(Seq((1L, "a", 1.0), (2L, "b", 2.0))).write.partitionBy("name")
       .parquet(wh.path(parted))
-    def ids(r: Relation) = wh.read(r).collect().map(_.getAs[Long]("id")).toSet
-    def refused(body: => Unit) = {
-      val e = intercept[IllegalStateException](body)
-      assert(e.getMessage.contains("--full-refresh"), e.getMessage)
+    (flat, parted)
+  }
+
+  private def refusedNamingAdopt(body: => Any): Unit = {
+    val e = intercept[IllegalStateException](body)
+    assert(e.getMessage.contains("`adopt`") &&
+      e.getMessage.contains("--full-refresh"), e.getMessage)
+  }
+
+  test("a plain-layout dir reads only after adopt, as spark.read.parquet does") {
+    val wh = freshWh(); val (flat, parted) = plainDirs(wh)
+    Seq(flat, parted).foreach { r =>
+      assert(wh.exists(r)) // an incremental build must not rebuild over it
+      refusedNamingAdopt(wh.read(r))
+      val files = parquetUnder(wh.path(r))
+      // the TTL clock keeps the dir's mtime, the value it had before
+      assert(wh.lastCommitMs(r).isEmpty)
+      val mtime = Files.getLastModifiedTime(Paths.get(wh.path(r))).toMillis
+      assert(wh.adopt(r))
+      assert(wh.lastCommitMs(r).contains(mtime))
+      // zero-copy: the same data files, nothing new under _graft/
+      assert(parquetUnder(wh.path(r)) == files)
+      val plain = spark.read.parquet(wh.path(r))
+      val cold = new Warehouse(spark, wh.root)
+      assert(cold.read(r).schema == plain.schema)
+      assert(cold.read(r).collect().toSeq.map(_.toString).sorted ==
+        plain.collect().toSeq.map(_.toString).sorted)
+      // adopting again is a no-op: no second commit
+      assert(!wh.adopt(r))
+      assert(wh.listVersions(r) == Seq(1L))
     }
-    // append strategy (merge, no unique key) and a partitioned merge would
-    // each commit a manifest without the legacy rows
-    refused(m.incremental(df(Seq((3L, "c", 3.0))), flat, ModelConfig(
-      materialized = "incremental")))
-    refused(m.incremental(df(Seq((3L, "b", 3.0))), parted, ModelConfig(
-      materialized = "incremental", uniqueKey = Seq("id"),
-      partitionBy = Seq("name"), partitionKeysStable = true)))
-    refused(wh.dropPartitions(parted, "name", Seq("a")))
-    refused(wh.deleteKeys(flat, df(Seq((1L, "a", 1.0))).select("id")))
-    assert(ids(flat) == Set(1L, 2L) && ids(parted) == Set(1L, 2L))
-    // a full refresh upgrades the relation; incremental writes then commit
-    m.incremental(wh.read(flat), flat, ModelConfig(materialized = "incremental"),
+    assert(wh.manifestEntries(flat).contains(Seq(("..", ""))))
+    assert(wh.manifestEntries(parted).contains(
+      Seq(("..", "name=a"), ("..", "name=b"))))
+    assert(wh.listPartitions(parted) == Seq("name=a", "name=b"))
+    assert(wh.partitionColumns(parted) == Seq("name"))
+    // nothing to adopt: an absent relation, or one with a manifest
+    assert(!wh.adopt(rel("t_absent")) && !wh.exists(rel("t_absent")))
+  }
+
+  test("plain-layout dir: non-rebuild writes only after adopt, keeping its rows") {
+    val wh = freshWh(); val m = new Materializer(wh)
+    val (flat, parted) = plainDirs(wh)
+    def ids(r: Relation) = wh.read(r).collect().map(_.getAs[Long]("id")).toSet
+    val appendCfg = ModelConfig(materialized = "incremental")
+    val mergeCfg = ModelConfig(materialized = "incremental",
+      uniqueKey = Seq("id"), partitionBy = Seq("name"),
+      partitionKeysStable = true)
+    // append strategy (merge, no unique key) and a partitioned merge
+    // would each commit a manifest without the plain rows
+    refusedNamingAdopt(m.incremental(df(Seq((3L, "c", 3.0))), flat, appendCfg))
+    refusedNamingAdopt(m.incremental(df(Seq((3L, "b", 3.0))), parted, mergeCfg))
+    refusedNamingAdopt(wh.dropPartitions(parted, "name", Seq("a")))
+    refusedNamingAdopt(wh.deleteKeys(flat, df(Seq((1L, "a", 1.0))).select("id")))
+    // materializations that choose between a rebuild and a scoped
+    // replace by layout: no manifest must not read as "empty, rebuild"
+    refusedNamingAdopt(m.incremental(df(Nil), parted, ModelConfig(
+      materialized = "incremental",
+      incrementalStrategy = IncrementalStrategy.Microbatch,
+      eventTime = "id", batchSize = "day", begin = "2024-01-01")))
+    refusedNamingAdopt(m.datePartitionedTable(spark,
+      "SELECT 1L AS id, 'a' AS name, 1.0D AS score", flat,
+      ModelConfig(materialized = "table"), Seq("20240101")))
+    assert(wh.manifestEntries(flat).isEmpty && wh.manifestEntries(parted).isEmpty)
+    assert(wh.adopt(flat) && wh.adopt(parted))
+    m.incremental(df(Seq((3L, "c", 3.0))), flat, appendCfg)
+    m.incremental(df(Seq((3L, "b", 3.0))), parted, mergeCfg)
+    wh.dropPartitions(parted, "name", Seq("a"))
+    wh.deleteKeys(flat, df(Seq((1L, "a", 1.0))).select("id"))
+    assert(ids(flat) == Set(2L, 3L))   // 1 deleted, 3 appended
+    assert(ids(parted) == Set(2L, 3L)) // name=a dropped, 3 merged into b
+    // the untouched plain files are still the ones the entries point at
+    assert(wh.manifestEntries(flat).get.head == ("..", ""))
+    // a full refresh still gives a plain dir its first manifest too
+    val fr = rel("t_flat_fr")
+    df(Seq((1L, "a", 1.0))).write.parquet(wh.path(fr))
+    m.incremental(spark.read.parquet(wh.path(fr)), fr, appendCfg,
       fullRefresh = true)
-    m.incremental(df(Seq((3L, "c", 3.0))), flat,
-      ModelConfig(materialized = "incremental"))
-    assert(ids(flat) == Set(1L, 2L, 3L))
+    m.incremental(df(Seq((3L, "c", 3.0))), fr, appendCfg)
+    assert(ids(fr) == Set(1L, 3L))
+  }
+
+  test("an adopted relation survives rename") {
+    val wh = freshWh(); val (flat, parted) = plainDirs(wh)
+    Seq(flat, parted).foreach { r =>
+      wh.adopt(r)
+      wh.append(df(Seq((3L, "c", 3.0))), r,
+        partitionCols = if (r == parted) Seq("name") else Nil)
+      val moved = r.suffixed("_moved")
+      wh.rename(r, moved)
+      assert(!wh.exists(r))
+      assert(new Warehouse(spark, wh.root).read(moved)
+        .collect().map(_.getAs[Long]("id")).toSet == Set(1L, 2L, 3L))
+    }
+  }
+
+  test("footer stats list an adopted flat dir as reads do: no _graft/ double count") {
+    val wh = freshWh(); val r = rel("t_flat")
+    df(Seq((1L, "a", 1.0), (2L, "b", 2.0))).write.parquet(wh.path(r))
+    wh.adopt(r)
+    wh.append(df(Seq((3L, "c", 3.0))), r)
+    // the adopted entry is the relation dir, which holds _graft/: a
+    // recursive walk would count the appended file twice (4 rows)
+    assert(wh.footerRows(r) == 3L)
+    val cat = wh.catalogInfo("db", "sch")
+    assert(cat.map(t => (t._1.identifier, t._2)) == Seq((r.identifier, 3L)))
+    assert(cat.head._3 == parquetUnder(wh.path(r)).map(Files.size).sum)
+  }
+
+  test("adopt refuses a dir mixing flat files with partition dirs") {
+    val wh = freshWh(); val r = rel("t_mixed")
+    df(Seq((1L, "a", 1.0))).write.parquet(wh.path(r))
+    df(Seq((2L, "b", 2.0))).write.parquet(wh.path(r) + "/name=b")
+    val e = intercept[IllegalStateException](wh.adopt(r))
+    assert(e.getMessage.contains("cannot adopt") &&
+      e.getMessage.contains("both parquet files and k=v"), e.getMessage)
+    assert(wh.manifestEntries(r).isEmpty)
+  }
+
+  test("a manifest entry with no readable footer fails naming the relation") {
+    val wh = freshWh(); val r = rel("t_nofooter")
+    wh.writeAtomic(df(Seq((1L, "a", 1.0))), r)
+    parquetUnder(wh.path(r)).foreach(Files.delete)
+    val e = intercept[IllegalStateException](
+      new Warehouse(spark, wh.root).read(r))
+    assert(e.getMessage.contains(r.fqName) &&
+      e.getMessage.contains("no schema to read"), e.getMessage)
   }
 
   test("a swap sibling an older release left behind blocks every write") {

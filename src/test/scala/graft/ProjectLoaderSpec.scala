@@ -354,6 +354,15 @@ class ProjectLoaderSpec extends AnyFunSuite {
     assert(man.path("metadata").path("dbt_schema_version").asText
       .contains("manifest/v12"))
     assert(man.path("nodes").size() > 0 && man.path("macros").size() > 0)
+    // adopt serves the target schema's plain-parquet dirs in place; the
+    // relations the build committed already have manifests
+    spark.range(3).write.parquet(s"$wh/analytics/main/plain_t")
+    def adopted() = cli(demo, wh, "adopt").linesIterator
+      .filter(_.startsWith("ADOPTED")).toSeq
+    assert(adopted() == Seq("ADOPTED  plain_t"))
+    assert(adopted().isEmpty)
+    assert(cli(demo, wh, "catalog").linesIterator.exists(l =>
+      l.contains("plain_t") && l.contains(" 3 rows")))
   }
 
   test("package imports: namespacing, bare aliases, shadowing, ambiguity") {
